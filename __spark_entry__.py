@@ -45,14 +45,11 @@ def entry(spark: SparkSession) -> DataFrame:
     CustomerShape over all rdf:type targets."""
     from shaclex_spark.shapes import SchemaDict
     from shaclex_spark.sources.kg import kg_triples
-    from shaclex_spark.triggers import target_focus
     from shaclex_spark.validation import ValidationEngine
 
     triples = kg_triples(spark, SF0001)
     schema = SchemaDict.from_json(CUSTOMER_SHAPES)
-    engine = ValidationEngine(spark, schema, triples)
-    focus = target_focus(spark, schema, triples)
-    res = engine.validate(focus)
+    res = ValidationEngine(spark, schema, triples).validate()
     return res.conformance.orderBy("node")
 
 

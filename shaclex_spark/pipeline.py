@@ -82,21 +82,10 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
     plain = triples.select("subj", "pred", "obj_kind", "obj_value",
                            "obj_dt", "obj_lang")
     engine = ValidationEngine(spark, schema, plain)
-    # one-pass target fast path only when the focus is the schema's own
-    # unfiltered target selection (shape maps / incremental filters
-    # subset it, so they stay on the general path)
-    native = shape_map is None and focus_filter is None
-    if native:
-        # callable focus: for all-fast-path schemas the focus relation
-        # only backs the lazy report, so its plan construction is
-        # deferred off the conformance path entirely
-        focus = lambda: target_focus(spark, schema, plain)  # noqa: E731
-        return engine.validate(focus, targets_native=True)
-    if shape_map:
-        focus = shape_map_focus(spark, plain, shape_map)
-    else:
-        focus = target_focus(spark, schema, plain)
+    focus = shape_map_focus(spark, plain, shape_map) if shape_map else None
     if focus_filter is not None:
+        if focus is None:
+            focus = target_focus(spark, schema, plain)
         focus = focus.join(focus_filter.select("node").distinct(),
                            on="node", how="left_semi")
     return engine.validate(focus)

@@ -12,9 +12,13 @@ values with columns sorted by name).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .meta import FIXTURE as SHACL_META_FIXTURE
 from .shapes import SchemaDict
+from .shex_suite import SUITE_ROOT
 from .sources.kg import KG_TRIPLES_SQL, kg_triples
 from .triggers import target_focus
 from .validation import ValidationEngine
@@ -26,27 +30,39 @@ XSD_DECIMAL = "http://www.w3.org/2001/XMLSchema#decimal"
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
+CORPORA: dict[str, str] = {}  # query name → external corpus file it reads
 
 
-def query(name: str, oracle=None):
+def query(name: str, oracle=None, corpus: str | None = None):
     """Register a query; ``oracle`` is the equivalent DuckDB SQL — a
     string, or a zero-arg callable resolved lazily at oracle_sql()
     time (so an oracle that reads a manifest from disk doesn't run as
-    an import side effect of this module)."""
+    an import side effect of this module). ``corpus``: the external
+    corpus file the query or its oracle reads (see missing_corpus)."""
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if corpus is not None:
+            CORPORA[name] = corpus
         return fn
     return deco
 
 
+def missing_corpus(name: str) -> str | None:
+    """The external corpus file entry ``name`` reads, if it is absent."""
+    path = CORPORA.get(name)
+    return path if path is not None and not os.path.exists(path) else None
+
+
 def resolve_oracles() -> dict[str, str]:
-    """ORACLES with callables resolved (and cached back) to SQL text."""
+    """ORACLES with callables resolved (and cached back) to SQL text,
+    per entry: an entry whose corpus is absent is left out, so one
+    missing input fails only the checks that need it."""
     for k, v in list(ORACLES.items()):
-        if callable(v):
+        if callable(v) and missing_corpus(k) is None:
             ORACLES[k] = v()
-    return dict(ORACLES)
+    return {k: v for k, v in ORACLES.items() if not callable(v)}
 
 
 # live caches of the most recent _validate call: the result DataFrames
@@ -141,15 +157,7 @@ def _validate(spark: SparkSession, sf_dir: str, shapes: list[dict],
     schema = SchemaDict.from_json(shapes)
     engine = ValidationEngine(spark, schema, triples)
     _LIVE_CACHES.append(engine)
-    # targets_native: focus IS the unfiltered target_focus of this
-    # schema — eligible shapes take the one-pass fast path (r6 opt).
-    # Callable focus: for all-fast-path schemas the focus relation only
-    # backs the lazy report, so its whole plan construction (including
-    # the targetClass membership sub-plan) is deferred off the
-    # conformance path (guide §1.2 driver serial term) — same contract
-    # pipeline.validate_kg uses.
-    return engine.validate(lambda: target_focus(spark, schema, triples),
-                           targets_native=True)
+    return engine.validate()
 
 
 # ---------------------------------------------------------------------------
@@ -480,7 +488,8 @@ SELECT * FROM (VALUES
 """
 
 
-@query("shex_suite_scorecard", oracle=_scorecard_oracle_sql)
+@query("shex_suite_scorecard", oracle=_scorecard_oracle_sql,
+       corpus=os.path.join(SUITE_ROOT, "validation", "manifest.ttl"))
 def shex_suite_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shex_suite import run_suite_mp, scorecard
 
@@ -567,7 +576,8 @@ def kg_status_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query("kg_shacl_meta", oracle="SELECT CAST(0 AS BIGINT) AS n_violations")
+@query("kg_shacl_meta", oracle="SELECT CAST(0 AS BIGINT) AS n_violations",
+       corpus=SHACL_META_FIXTURE)
 def kg_shacl_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .meta import shacl_shacl_violations
 

@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory (MemTotal), clamped to 1-56 GB:
+    a heap larger than the host gets the JVM OOM-killed mid-session."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh
+                      if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "56g"
+    return f"{max(1, min(56, kb // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "shaclex_spark",
     parallelism: int | None = None,
@@ -41,7 +53,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "56g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # local mode: big heaps GC rarely, so ContextCleaner (which
         # piggybacks on GC) never reclaims old shuffle/block state —

@@ -14,20 +14,70 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .model import FOCUS_SCHEMA, RDF_TYPE
-from .shapes import SchemaDict
+from .shapes import SchemaDict, Target
+
+
+def _subject_rows(df: DataFrame, col: str) -> DataFrame:
+    """Node-id column → focus-term rows; the kind follows the '_:'
+    bnode prefix convention."""
+    c = F.col(col)
+    kind = F.when(c.startswith("_:"), F.lit("bnode")).otherwise(F.lit("iri"))
+    null_s = F.lit(None).cast("string")
+    return df.select(kind.alias("f_kind"), c.alias("f_value"),
+                     null_s.alias("f_dt"), null_s.alias("f_lang"))
+
+
+def _assoc(rows: DataFrame, shape: str, selector: str) -> DataFrame:
+    """Focus-term rows → FOCUS_SCHEMA rows of one association."""
+    return rows.select(F.col("f_value").alias("node"),
+                       F.lit(shape).alias("shape"),
+                       F.lit(selector).alias("selector"),
+                       F.col("f_kind").alias("node_kind"),
+                       F.col("f_dt").alias("node_dt"),
+                       F.col("f_lang").alias("node_lang"))
 
 
 def _mk(df: DataFrame, shape: str, selector: str) -> DataFrame:
-    kind = F.when(F.col(df.columns[0]).startswith("_:"), F.lit("bnode")) \
-        .otherwise(F.lit("iri"))
-    return df.select(
-        F.col(df.columns[0]).alias("node"),
-        F.lit(shape).alias("shape"),
-        F.lit(selector).alias("selector"),
-        kind.alias("node_kind"),
-        F.lit(None).cast("string").alias("node_dt"),
-        F.lit(None).cast("string").alias("node_lang"),
-    )
+    return _assoc(_subject_rows(df, df.columns[0]), shape, selector)
+
+
+def target_rows(triples: DataFrame, tgt: Target,
+                membership: DataFrame | None = None) -> DataFrame:
+    """One target declaration's focus terms as (f_kind, f_value, f_dt,
+    f_lang) rows — one pred-filter projection, NOT deduplicated.
+    ``membership`` is the (inst, cls) class-membership relation
+    targetClass selects from; None reads the rdf:type arcs directly,
+    which is exact for a graph without rdfs:subClassOf arcs.
+
+    Shared by target_focus (which dedupes the union) and the
+    validation engine's target-driven focus markers (whose grouped
+    is-focus flag dedupes for free)."""
+    if tgt.kind == "targetNode":
+        # target may be any RDF term (literal targets in the W3C
+        # corpus): carry the full term identity
+        term_kind = "bnode" if tgt.value.startswith("_:") else tgt.term_kind
+        return triples.sparkSession.createDataFrame(
+            [(term_kind, tgt.value, tgt.dt, tgt.lang)],
+            "f_kind string, f_value string, f_dt string, f_lang string")
+    if tgt.kind == "targetClass":
+        if membership is None:
+            return _subject_rows(
+                triples.filter((F.col("pred") == RDF_TYPE)
+                               & (F.col("obj_kind") == "iri")
+                               & (F.col("obj_value") == tgt.value)), "subj")
+        return _subject_rows(
+            membership.filter(F.col("cls") == tgt.value), "inst")
+    if tgt.kind == "targetSubjectsOf":
+        return _subject_rows(
+            triples.filter(F.col("pred") == tgt.value), "subj")
+    if tgt.kind == "targetObjectsOf":
+        # objects may be literal terms: carry full term identity
+        return (triples.filter(F.col("pred") == tgt.value)
+                .select(F.col("obj_kind").alias("f_kind"),
+                        F.col("obj_value").alias("f_value"),
+                        F.col("obj_dt").alias("f_dt"),
+                        F.col("obj_lang").alias("f_lang")))
+    raise ValueError(f"unknown target kind {tgt.kind}")
 
 
 def target_focus(spark: SparkSession, schema: SchemaDict,
@@ -37,48 +87,21 @@ def target_focus(spark: SparkSession, schema: SchemaDict,
     membership = None  # lazy: only built when a targetClass exists
     for lbl, sh in schema.shapes.items():
         for t in sh.targets:
-            if t.kind == "targetNode":
-                # target may be any RDF term (literal targets in the
-                # W3C corpus): carry the full term identity
-                term_kind = ("bnode" if t.value.startswith("_:")
-                             else t.term_kind)
-                row = spark.createDataFrame(
-                    [(t.value, lbl, "targetNode", term_kind, t.dt, t.lang)],
-                    "node string, shape string, selector string, "
-                    "node_kind string, node_dt string, node_lang string")
-                pieces.append(row)
-            elif t.kind == "targetClass":
+            if t.kind == "targetClass" and membership is None:
                 # includes instances of rdfs:subClassOf* subclasses;
                 # membership_for reuses session-shared derived state /
                 # the pre-answered subclass probe instead of running
                 # class_membership's eager full-scan isEmpty here
-                if membership is None:
-                    from .validation import membership_for
-                    membership = membership_for(triples)
-                # no per-branch distinct: the single final distinct()
-                # below dedupes the whole union in ONE exchange (its
-                # partial aggregate dedupes map-side), where per-branch
-                # distincts cost one exchange each (serial stage
-                # latency on the conformance job's critical path)
-                sel = membership.filter(F.col("cls") == t.value).select("inst")
-                pieces.append(_mk(sel, lbl, "targetClass"))
-            elif t.kind == "targetSubjectsOf":
-                sel = triples.filter(F.col("pred") == t.value).select("subj")
-                pieces.append(_mk(sel, lbl, "targetSubjectsOf"))
-            elif t.kind == "targetObjectsOf":
-                # objects may be literal terms: carry full term identity
-                sel = (triples.filter(F.col("pred") == t.value)
-                       .select(F.col("obj_value").alias("node"),
-                               F.lit(lbl).alias("shape"),
-                               F.lit("targetObjectsOf").alias("selector"),
-                               F.col("obj_kind").alias("node_kind"),
-                               F.col("obj_dt").alias("node_dt"),
-                               F.col("obj_lang").alias("node_lang")))
-                pieces.append(sel)
-            else:
-                raise ValueError(f"unknown target kind {t.kind}")
+                from .validation import membership_for
+                membership = membership_for(triples)
+            pieces.append(_assoc(target_rows(triples, t, membership),
+                                 lbl, t.kind))
     if not pieces:
         return spark.createDataFrame([], FOCUS_SCHEMA)
+    # no per-branch distinct: the single final distinct() dedupes the
+    # whole union in ONE exchange (its partial aggregate dedupes
+    # map-side), where per-branch distincts cost one exchange each
+    # (serial stage latency on the conformance job's critical path)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

@@ -9,14 +9,19 @@ own ASP encoding spells out (SLang2Clingo.scala:148-181):
     countPropShape(X,P,S,C) :- #count{V: arcWithShape(...)}  -- groupBy
     hasShape(X, qa(PP,S,Min,Max)) :- Min <= C <= Max.        -- filter
 
-Physical shape (SURVEY.md §4.3): per shape, ONE left join
-candidates ⋈ triples on subj (left so zero-arc nodes still count 0 —
-SLang2Clingo.scala:164-168 makes the 0-case explicit), then ONE
-groupBy(candidate) with fused conditional aggregates for every
+Physical shape (SURVEY.md §4.3): the focus is a ROW SOURCE, not a
+second evaluator. Each shape gets focus-marker rows keyed by the full
+term — from its own target declarations, or from a candidate relation
+(shape map, filtered focus, ref-propagated candidates, closed shapes).
+Per shape, ONE union(constraint arcs keyed by subject, marker rows) →
+ONE groupBy(term) with fused conditional aggregates for every
 constraint sharing the simple-predicate path family (the FlatShape
-constraint-fusion idea, FlatShapeConversion.scala:27-87). Complex
-paths / sibling-path joins (equals, lessThan) run as separate
-sub-aggregations joined back on the candidate key.
+constraint-fusion idea, FlatShapeConversion.scala:27-87) →
+filter(is-focus); a marker row alone makes a zero-arc node count 0
+(SLang2Clingo.scala:164-168 makes the 0-case explicit). Each complex
+path runs the same union → groupBy over its path pairs. Sibling-path
+joins (equals, lessThan), group blocks and repeat partitions run as
+separate sub-aggregations joined back on the candidate key.
 
 Recursion: stratified SCC order; cyclic strata run a greatest-fixpoint
 loop starting from all-conforming — the co-inductive Unknown-counts-
@@ -43,6 +48,7 @@ from .model import (
 )
 from .paths import path_pairs
 from .shapes import NodeExpr, PropertyConstraint, SchemaDict, Shape, ValueSpec
+from .triggers import target_focus, target_rows
 
 MAX_FIXPOINT_ROUNDS = 50
 
@@ -79,14 +85,44 @@ def focus_to_candidates(focus: DataFrame) -> DataFrame:
     else:
         kind, dt, lang = inferred, F.lit(None).cast("string"), \
             F.lit(None).cast("string")
-    return focus.select(
+    return _with_key(focus.select(
         F.col("shape"),
         kind.alias("f_kind"),
         F.col("node").alias("f_value"),
         dt.alias("f_dt"),
         lang.alias("f_lang"),
-    ).withColumn(KEY, node_key_col(F.col("f_kind"), F.col("f_value"),
-                                   F.col("f_dt"), F.col("f_lang"))).distinct()
+    )).distinct()
+
+
+def _subject_of(cand: DataFrame, node: Column) -> Column:
+    """Join condition: ``node`` (a subject / path-source id) is the
+    candidate term. Literals are never subjects, so a literal candidate
+    must not inherit the arcs of an IRI with the same spelling."""
+    return (cand["f_kind"] != "literal") & (cand["f_value"] == node)
+
+
+def _with_key(df: DataFrame) -> DataFrame:
+    return df.withColumn(KEY, node_key_col(F.col("f_kind"), F.col("f_value"),
+                                           F.col("f_dt"), F.col("f_lang")))
+
+
+@dataclass
+class FocusRows:
+    """Row source of one shape's focus terms:
+
+    targets: the shape's own target declarations (target-driven
+             validation) — marker rows come from triggers.target_rows;
+             None when the focus is a candidate relation;
+    cand:    the candidate relation (KEY, *FCOLS, distinct) — a shape
+             map, a filtered focus, ref-propagated candidates. For a
+             target-driven shape it is built from the targets on first
+             use (ValidationEngine._cand).
+
+    Every evaluator reads the focus only as marker rows, so the trigger
+    decides WHICH (node, shape) pairs are checked and never HOW."""
+
+    targets: list | None = None
+    cand: DataFrame | None = None
 
 
 # --------------------------------------------------------------------------
@@ -487,6 +523,7 @@ class ValidationEngine:
 
     Usage::
         engine = ValidationEngine(spark, schema, triples)
+        result = engine.validate()           # the schema's own targets
         result = engine.validate(focus_df)   # focus: (node, shape)
     """
 
@@ -619,14 +656,12 @@ class ValidationEngine:
                  .select(F.col("f_value").alias("n"))
         # dedup=False: every consumer dropDuplicates([KEY]) right after
         pairs = path_pairs(self.triples, pc.path, srcs, dedup=False)
-        return pairs.select(
+        return _with_key(pairs.select(
             F.col("v_kind").alias("f_kind"),
             F.col("v_value").alias("f_value"),
             F.col("v_dt").alias("f_dt"),
             F.col("v_lang").alias("f_lang"),
-        ).withColumn(KEY, node_key_col(
-            F.col("f_kind"), F.col("f_value"),
-            F.col("f_dt"), F.col("f_lang"))).select(KEY, *FCOLS)
+        )).select(KEY, *FCOLS)
 
     def _propagate_candidates(self, focus: DataFrame) -> dict[str, DataFrame]:
         """cand[S]: every term whose conformance to S is needed —
@@ -724,7 +759,7 @@ class ValidationEngine:
             ref_cols=ref_cols, cls_cols=cls_cols,
         )
 
-    def _evaluate_shape(self, shape: Shape, cand: DataFrame,
+    def _evaluate_shape(self, shape: Shape, rows: FocusRows,
                         conf: dict[str, DataFrame]
                         ) -> tuple[DataFrame, list[DataFrame]]:
         """Returns (conformance DF keyed by node_key, [report piece DFs]).
@@ -742,15 +777,15 @@ class ValidationEngine:
                                  and not shape.group_blocks
                                  and not shape.repeat_alts
                                  and not shape.closed):
-            return cand.withColumn("conforms", F.lit(True)), reports
+            return self._cand(rows).withColumn("conforms", F.lit(True)), \
+                reports
 
         ok_flags: list[tuple[str, DataFrame]] = []  # (flag column name, keyed DF)
-        # flag name → DF that ALREADY carries (KEY, *FCOLS, flag): when a
-        # shape has exactly one such flag, it IS the conformance relation
-        # and the join-back onto cand is skipped (one exchange + join off
-        # the critical path — r6, guide §2.4)
-        full_flags: dict[str, DataFrame] = {}
-        agg_df: DataFrame | None = None  # fused simple-pred aggregate
+        # flags whose DF ALREADY carries (KEY, *FCOLS, flag), one row per
+        # focus term: when a shape has exactly one such flag, its DF IS
+        # the conformance relation and the join-back onto cand is
+        # skipped (one exchange + join off the critical path)
+        full_flags: set[str] = set()
 
         # ---- 1. focus-level node constraints -----------------------------
         self_ok: Column | None = None
@@ -761,7 +796,7 @@ class ValidationEngine:
                 refs |= _collect_refs(ne)
                 classes |= _collect_classes(ne)
             df, ref_cols, cls_cols = self._join_term_bools(
-                cand, "f_", refs, classes, conf)
+                self._cand(rows), "f_", refs, classes, conf)
             tc = self._term_cols("f_", ref_cols, cls_cols)
             conjuncts: list[tuple[NodeExpr, Column]] = []
             for ne in shape.node_constraints:
@@ -771,7 +806,7 @@ class ValidationEngine:
             for _, c in conjuncts[1:]:
                 ok_all = ok_all & c
             node_conf = df.select(KEY, *FCOLS, ok_all.alias("__self_ok"))
-            full_flags["__self_ok"] = node_conf
+            full_flags.add("__self_ok")
             # report rows per failing conjunct (thunked: report pieces
             # are built only when the report relation is consumed)
             for cj, col in conjuncts:
@@ -787,38 +822,23 @@ class ValidationEngine:
                         msg.alias("message"),
                     )
                 )
-            ok_flags.append(("__self_ok", node_conf.select(KEY, "__self_ok")))
+            ok_flags.append(("__self_ok", node_conf))
 
         # ---- 2. property constraints --------------------------------------
         simple = [pc for pc in shape.properties if pc.path.is_simple_pred]
         complexp = [pc for pc in shape.properties if not pc.path.is_simple_pred]
-        pairwise = [pc for pc in shape.properties
-                    if pc.equals or pc.disjoint or pc.less_than
-                    or pc.less_than_or_equals]
 
         if simple or shape.closed:
-            agg_df = self._eval_simple_props(shape, cand, conf, simple, reports)
-            if (not shape.node_constraints and not complexp
-                    and not shape.one_of and not shape.group_blocks
-                    and not shape.repeat_alts and not pairwise):
-                # pure fused-aggregate shape (the overwhelmingly common
-                # case: every constraint is a simple forward predicate):
-                # the grouped aggregate already has exactly one row per
-                # candidate (the left join preserves every cand row and
-                # KEY is unique within cand) and carries the full term
-                # columns through the groupBy, so it IS the conformance
-                # relation — skip the join-back onto cand (one exchange
-                # + sort-merge join per shape on the critical path).
-                return (agg_df.select(KEY, *FCOLS,
-                                      F.col("__props_ok").alias("conforms")),
-                        reports)
-            ok_flags.append(("__props_ok", agg_df.select(KEY, "__props_ok")))
+            flag = "__props_ok"
+            dfp = self._eval_simple(shape, simple, rows, conf, flag, reports)
+            full_flags.add(flag)
+            ok_flags.append((flag, dfp))
 
         for i, pc in enumerate(complexp):
             flag = f"__cpath_{i}_ok"
-            dfp = self._eval_one_property(shape, cand, conf, pc, flag, reports)
-            full_flags[flag] = dfp
-            ok_flags.append((flag, dfp.select(KEY, flag)))
+            dfp = self._eval_cpath(shape, pc, rows, conf, flag, reports)
+            full_flags.add(flag)
+            ok_flags.append((flag, dfp))
 
         # ShEx OneOf: evaluate each group independently (inner reports
         # discarded — the OneOf reports as a whole), then exactly-one.
@@ -841,19 +861,13 @@ class ValidationEngine:
                     proxy = _dc_replace(shape, closed=False, one_of=[],
                                         node_constraints=[],
                                         properties=list(simple_g))
-                    sub_reports: list[DataFrame] = []
-                    gdf = self._eval_simple_props(
-                        proxy, cand, conf, simple_g, sub_reports)
-                    member_flags.append(
-                        gdf.select(KEY, F.col("__props_ok").alias("__m")))
-                for ci, pcx in enumerate(complex_g):
-                    sub_reports = []
-                    fl = f"__oneof_{gi}_c{ci}"
-                    dfp = self._eval_one_property(
-                        shape, cand, conf, pcx, fl, sub_reports)
-                    member_flags.append(
-                        dfp.select(KEY, F.col(fl).alias("__m")))
-                gmerged = cand.select(KEY)
+                    gdf = self._eval_simple(proxy, simple_g, rows, conf,
+                                            "__m", [])
+                    member_flags.append(gdf.select(KEY, "__m"))
+                for pcx in complex_g:
+                    dfp = self._eval_cpath(shape, pcx, rows, conf, "__m", [])
+                    member_flags.append(dfp.select(KEY, "__m"))
+                gmerged = self._cand(rows).select(KEY)
                 gcol = F.lit(True)
                 for mi, mdf in enumerate(member_flags):
                     mdf = mdf.withColumnRenamed("__m", f"__m_{mi}")
@@ -861,7 +875,7 @@ class ValidationEngine:
                     gcol = gcol & F.coalesce(F.col(f"__m_{mi}"), F.lit(False))
                 group_flags.append(
                     gmerged.select(KEY, gcol.alias(gname)))
-            merged = cand.select(KEY, "f_value")
+            merged = self._cand(rows).select(KEY, "f_value")
             total = F.lit(0)
             for gi, gdf in enumerate(group_flags):
                 merged = merged.join(gdf, on=KEY, how="left")
@@ -885,12 +899,13 @@ class ValidationEngine:
         # ShEx group-cardinality blocks ( TC... ){m,n}
         for bi, blk in enumerate(shape.group_blocks):
             flag = f"__grp_{bi}_ok"
-            dfg = self._eval_group_block(shape, cand, conf, blk, flag, reports)
+            dfg = self._eval_group_block(shape, self._cand(rows), conf, blk,
+                                         flag, reports)
             ok_flags.append((flag, dfg))
 
         # ShEx repeated-predicate partition semantics (RepeatAlts)
         if shape.repeat_alts:
-            dfr = self._eval_repeat_alts(shape, cand, conf,
+            dfr = self._eval_repeat_alts(shape, self._cand(rows), conf,
                                          "__repeat_ok", reports)
             ok_flags.append(("__repeat_ok", dfr))
 
@@ -898,53 +913,130 @@ class ValidationEngine:
         for i, pc in enumerate(shape.properties):
             if pc.equals or pc.disjoint or pc.less_than or pc.less_than_or_equals:
                 flag = f"__pair_{i}_ok"
-                dfp = self._eval_pairwise(shape, cand, pc, flag, reports)
-                full_flags[flag] = dfp
-                ok_flags.append((flag, dfp.select(KEY, flag)))
+                dfp = self._eval_pairwise(shape, self._cand(rows), pc, flag,
+                                          reports)
+                full_flags.add(flag)
+                ok_flags.append((flag, dfp))
 
         # ---- 3. combine -----------------------------------------------------
         if len(ok_flags) == 1 and ok_flags[0][0] in full_flags:
-            # single-flag shape whose flag relation was built FROM cand
-            # (one row per candidate, full term columns): it IS the
+            # single-flag shape whose flag relation has one row per
+            # focus term and the full term columns: it IS the
             # conformance relation — skip the join-back onto cand.
-            flag = ok_flags[0][0]
-            out = full_flags[flag].select(
+            flag, out = ok_flags[0]
+            out = out.select(
                 KEY, *FCOLS,
                 F.coalesce(F.col(flag), F.lit(True)).alias("conforms"))
             return out, reports
-        out = cand
+        out = self._cand(rows)
         final_ok = F.lit(True)
         for flag, dfk in ok_flags:
-            out = out.join(dfk, on=KEY, how="left")
+            out = out.join(dfk.select(KEY, flag), on=KEY, how="left")
             final_ok = final_ok & F.coalesce(F.col(flag), F.lit(True))
         out = out.select(KEY, *FCOLS, final_ok.alias("conforms"))
         return out, reports
 
-    # -- fused simple-predicate aggregation --------------------------------
+    # -- focus row sources --------------------------------------------------
 
-    def _eval_simple_props(self, shape: Shape, cand: DataFrame,
-                           conf: dict[str, DataFrame],
-                           props: list[PropertyConstraint],
-                           reports: list[DataFrame]) -> DataFrame:
-        """ONE left join cand ⋈ T(subj) + ONE groupBy with conditional
-        aggregates for every simple-pred constraint + CLOSED residue.
-        This is the §4.3 physical plan."""
-        ts = self._constraint_arcs(shape, props)
-        arcs = cand.join(ts, on=cand["f_value"] == ts["subj"], how="left").drop("subj")
-        grouped, ok = self._fused_agg(shape, arcs, conf, props, reports,
-                                      group_cols=[KEY, *FCOLS])
-        return grouped.select(KEY, *FCOLS, ok.alias("__props_ok"))
+    def _marker_rows(self, targets: list) -> DataFrame:
+        """Focus-marker rows (f_kind, f_value, f_dt, f_lang) of target
+        declarations: one triggers.target_rows projection per target,
+        NOT deduplicated (the grouped max-flag dedupes for free)."""
+        if not targets:
+            return self.spark.createDataFrame(
+                [], ", ".join(f"{c} string" for c in FCOLS))
+        membership = (self._type_arcs
+                      if any(t.kind == "targetClass" for t in targets)
+                      and self._has_subclass else None)
+        pieces = [target_rows(self.triples, t, membership) for t in targets]
+        out = pieces[0]
+        for p in pieces[1:]:
+            out = out.unionByName(p)
+        return out
 
-    def _constraint_arcs(self, shape: Shape,
-                         props: list[PropertyConstraint]) -> DataFrame:
-        """Pred-filtered arc relation feeding the fused aggregate."""
-        t = self.triples
+    def _cand(self, rows: FocusRows) -> DataFrame:
+        """The distinct candidate relation (KEY, *FCOLS) — the join-back
+        base of the families evaluated per candidate (node constraints,
+        OneOf, group blocks, repeat partitions, pairwise). Built from the
+        target markers on first use for target-driven shapes."""
+        if rows.cand is None:
+            rows.cand = self._maybe_persist(
+                _with_key(self._marker_rows(rows.targets)).distinct())
+        return rows.cand
+
+    # -- fused simple-predicate evaluator ----------------------------------
+
+    def _eval_simple(self, shape: Shape, props: list[PropertyConstraint],
+                     rows: FocusRows, conf: dict[str, DataFrame], flag: str,
+                     reports: list[DataFrame]) -> DataFrame:
+        """(KEY, *FCOLS, flag), one row per focus term, in ONE grouped
+        pass: union(pred-filtered constraint arcs keyed by subject,
+        focus-marker rows keyed by term) → ONE groupBy(term) with
+        conditional aggregates for every simple-pred constraint + CLOSED
+        residue → filter(is-focus). Focus terms without arcs group from
+        their marker row alone and count 0; a literal focus term never
+        meets the subject-keyed arcs of an IRI with the same spelling.
+
+        Target-driven rows fold subject-keyed targets (targetSubjectsOf;
+        targetClass when the graph has no subClassOf arcs) into the arc
+        scan as a flag on the row itself: they group by the SAME term as
+        the constraint arcs, so the cached triple relation is read once
+        per shape, and a row that is both marker and arc counts once and
+        flags once. Term-keyed targets (targetObjectsOf,
+        targetNode, subclass-closed targetClass) union marker rows.
+
+        Candidate rows — and always closed shapes, whose arc scan is the
+        UNFILTERED graph — left-semi-join the arc scan to the candidates'
+        non-literal terms first, so only the focus set's arcs shuffle
+        (the 100-TB-safe shape for sh:closed)."""
         preds = {pc.path.iri for pc in props}
-        if not shape.closed:
-            # predicate pushdown: only arcs we actually inspect
-            t = t.filter(F.col("pred").isin(list(preds))) if preds else t.limit(0)
-        return t.select("subj", "pred", "obj_kind", "obj_value",
-                        "obj_dt", "obj_lang")
+        null_s = F.lit(None).cast("string")
+        subj_kind = F.when(F.col("subj").startswith("_:"), F.lit("bnode")) \
+            .otherwise(F.lit("iri"))
+        arc_cond = F.col("pred").isin(list(preds)) if preds else F.lit(False)
+        marker_cond = None
+        if rows.targets is not None and not shape.closed:
+            term_targets: list = []
+            for tgt in rows.targets:
+                if tgt.kind == "targetSubjectsOf":
+                    c = F.col("pred") == tgt.value
+                elif tgt.kind == "targetClass" and not self._has_subclass:
+                    c = ((F.col("pred") == RDF_TYPE)
+                         & (F.col("obj_kind") == "iri")
+                         & (F.col("obj_value") == tgt.value))
+                else:
+                    term_targets.append(tgt)
+                    continue
+                marker_cond = c if marker_cond is None else (marker_cond | c)
+            scan = self.triples.filter(
+                arc_cond if marker_cond is None else (arc_cond | marker_cond))
+            markers = self._marker_rows(term_targets) if term_targets else None
+        else:
+            cand = self._cand(rows)
+            scan = (self.triples if shape.closed
+                    else self.triples.filter(arc_cond))
+            scan = scan.join(cand.filter(F.col("f_kind") != "literal")
+                             .select(F.col("f_value").alias("subj")),
+                             on="subj", how="left_semi")
+            markers = cand.select(*FCOLS)
+        arcs = scan.select(
+            subj_kind.alias("f_kind"), F.col("subj").alias("f_value"),
+            null_s.alias("f_dt"), null_s.alias("f_lang"),
+            "pred", "obj_kind", "obj_value", "obj_dt", "obj_lang",
+            (F.lit(False) if marker_cond is None else marker_cond)
+            .alias("__tgt"))
+        if markers is not None:
+            arcs = arcs.unionByName(markers.select(
+                *FCOLS, null_s.alias("pred"), null_s.alias("obj_kind"),
+                null_s.alias("obj_value"), null_s.alias("obj_dt"),
+                null_s.alias("obj_lang"), F.lit(True).alias("__tgt")))
+        grouped, ok = self._fused_agg(
+            shape, _with_key(arcs), conf, props, reports,
+            group_cols=[KEY, *FCOLS],
+            extra_aggs=(F.max("__tgt").alias("__is_focus"),),
+            focus_flag="__is_focus")
+        return grouped.filter(F.col("__is_focus")) \
+            .select(KEY, *FCOLS, ok.alias(flag))
 
     def _fused_agg(self, shape: Shape, arcs: DataFrame,
                    conf: dict[str, DataFrame],
@@ -955,11 +1047,9 @@ class ValidationEngine:
                    focus_flag: str | None = None) -> tuple[DataFrame, Column]:
         """Shared fused-aggregate builder: conditional aggregates + ok
         expression + report pieces over an arc relation that carries
-        f_* focus-term columns and pred/obj_* arc columns. Used by the
-        cand-join path (_eval_simple_props) and the one-pass target
-        fast path (_eval_shape_onepass). ``focus_flag`` (one-pass):
-        column in the grouped relation restricting card-reports to
-        focus rows."""
+        f_* focus-term columns and pred/obj_* arc columns (built by
+        _eval_simple). ``focus_flag``: column in the grouped relation
+        restricting card-reports to focus rows."""
         refs: set[str] = set()
         classes: set[str] = set()
         for pc in props:
@@ -1090,51 +1180,6 @@ class ValidationEngine:
             self._card_reports(reports, report_grouped, shape, pc, names)
         return grouped, ok
 
-    # -- one-pass target fast path -----------------------------------------
-
-    _FAST_TARGET_KINDS = frozenset(
-        {"targetSubjectsOf", "targetObjectsOf", "targetClass"})
-
-    def _fast_target_eligible(self, shape: Shape) -> bool:
-        """True when the shape's conformance can be computed in ONE
-        grouped pass over pred-filtered arcs + target-marker rows —
-        no focus distinct, no cand ⋈ arcs join (guide §2.4 'remove
-        shuffles outright'). Requires: every target derivable from a
-        predicate filter, and every constraint in the fused simple-pred
-        aggregate family. Refs are excluded by the caller (ref-free
-        schemas only)."""
-        return (self._fast_target_base(shape)
-                and all(pc.path.is_simple_pred
-                        and not (pc.equals or pc.disjoint or pc.less_than
-                                 or pc.less_than_or_equals)
-                        for pc in shape.properties))
-
-    def _fast_target_base(self, shape: Shape) -> bool:
-        # closed shapes are EXCLUDED (r6): their constraint-arc relation
-        # is the UNFILTERED graph, and the one-pass union would shuffle
-        # every arc of every subject instead of only the focus set's —
-        # the cand-join path's left join restricts to candidates first,
-        # which is the 100-TB-safe shape for sh:closed.
-        return (bool(shape.targets)
-                and all(t.kind in self._FAST_TARGET_KINDS
-                        for t in shape.targets)
-                and not shape.deactivated and not shape.closed
-                and not shape.node_constraints and not shape.one_of
-                and not shape.group_blocks and not shape.repeat_alts)
-
-    def _fast_target_cpath_eligible(self, shape: Shape) -> bool:
-        """One-pass eligibility for a single COMPLEX-path shape
-        (sequence / inverse / alternative / closure paths): same target
-        conditions as the simple fast path, exactly one plain property
-        whose path is not a simple predicate."""
-        if not (self._fast_target_base(shape)
-                and len(shape.properties) == 1):
-            return False
-        pc = shape.properties[0]
-        return (not pc.path.is_simple_pred
-                and not (pc.equals or pc.disjoint or pc.less_than
-                         or pc.less_than_or_equals))
-
     @property
     def _has_subclass(self) -> bool:
         """Does the graph carry any rdfs:subClassOf arc? Decides
@@ -1161,224 +1206,6 @@ class ValidationEngine:
             except Exception:
                 pass
         return self._has_subclass_memo
-
-    def _target_markers(self, shape: Shape,
-                        targets: list | None = None) -> DataFrame:
-        """Focus-term marker rows (f_kind, f_value, f_dt, f_lang) for
-        the one-pass fast path — one pred-filter projection per target,
-        NOT deduplicated (the grouped max-flag dedupes for free)."""
-        t = self.triples
-        null_s = F.lit(None).cast("string")
-
-        def _subj_rows(sel: DataFrame, col: str) -> DataFrame:
-            c = F.col(col)
-            kind = F.when(c.startswith("_:"), F.lit("bnode")) \
-                .otherwise(F.lit("iri"))
-            return sel.select(kind.alias("f_kind"), c.alias("f_value"),
-                              null_s.alias("f_dt"), null_s.alias("f_lang"))
-
-        pieces: list[DataFrame] = []
-        for tgt in (shape.targets if targets is None else targets):
-            if tgt.kind == "targetSubjectsOf":
-                pieces.append(_subj_rows(
-                    t.filter(F.col("pred") == tgt.value), "subj"))
-            elif tgt.kind == "targetClass":
-                if self._has_subclass:
-                    pieces.append(_subj_rows(
-                        self._type_arcs.filter(F.col("cls") == tgt.value),
-                        "inst"))
-                else:
-                    pieces.append(_subj_rows(
-                        t.filter((F.col("pred") == RDF_TYPE)
-                                 & (F.col("obj_kind") == "iri")
-                                 & (F.col("obj_value") == tgt.value)),
-                        "subj"))
-            else:  # targetObjectsOf — objects may be full literal terms
-                pieces.append(
-                    t.filter(F.col("pred") == tgt.value)
-                    .select(F.col("obj_kind").alias("f_kind"),
-                            F.col("obj_value").alias("f_value"),
-                            F.col("obj_dt").alias("f_dt"),
-                            F.col("obj_lang").alias("f_lang")))
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _eval_shape_onepass(self, shape: Shape,
-                            conf: dict[str, DataFrame]
-                            ) -> tuple[DataFrame, list[DataFrame]]:
-        """Conformance for a _fast_target_eligible shape in ONE grouped
-        pass: union(pred-filtered constraint arcs keyed by subject,
-        target marker rows keyed by focus term) → one groupBy(term) →
-        filter(is-focus). Replaces [target scan + focus distinct +
-        cand ⋈ arcs join + groupBy] with [scan-union + groupBy]: at any
-        scale this removes two shuffles of data-sized relations and the
-        join; the aggregate/report semantics are byte-identical to the
-        cand-join path (same _fused_agg)."""
-        reports: list[DataFrame] = []
-        props = list(shape.properties)
-        preds = {pc.path.iri for pc in props}
-        null_s = F.lit(None).cast("string")
-        subj_kind = F.when(F.col("subj").startswith("_:"), F.lit("bnode")) \
-            .otherwise(F.lit("iri"))
-        # Subject-keyed targets (targetSubjectsOf; targetClass when the
-        # graph has no subClassOf arcs) group by the SAME term as the
-        # constraint arcs — their marker condition folds into the arc
-        # scan as a flag on the row itself instead of a second full
-        # scan unioned in (r6, guide §2.4: the one-pass union read the
-        # cached triple relation twice per shape; a row that is both
-        # marker and arc — e.g. a target predicate that is also
-        # constrained — counts once and flags once, exactly what the
-        # two-row union aggregated to). Term-keyed targets
-        # (targetObjectsOf, subclass-closed targetClass) still union
-        # marker rows keyed by their own term.
-        subj_conds: list[Column] = []
-        term_targets: list = []
-        for tgt in shape.targets:
-            if tgt.kind == "targetSubjectsOf":
-                subj_conds.append(F.col("pred") == tgt.value)
-            elif tgt.kind == "targetClass" and not self._has_subclass:
-                subj_conds.append((F.col("pred") == RDF_TYPE)
-                                  & (F.col("obj_kind") == "iri")
-                                  & (F.col("obj_value") == tgt.value))
-            else:
-                term_targets.append(tgt)
-        marker_cond = None
-        for c in subj_conds:
-            marker_cond = c if marker_cond is None else (marker_cond | c)
-        arc_cond = F.col("pred").isin(list(preds)) if preds else F.lit(False)
-        scan_cond = arc_cond if marker_cond is None \
-            else (arc_cond | marker_cond)
-        arcs = self.triples.filter(scan_cond).select(
-            subj_kind.alias("f_kind"), F.col("subj").alias("f_value"),
-            null_s.alias("f_dt"), null_s.alias("f_lang"),
-            "pred", "obj_kind", "obj_value", "obj_dt", "obj_lang",
-            (F.lit(False) if marker_cond is None else marker_cond)
-            .alias("__tgt"))
-        if term_targets:
-            markers = self._target_markers(shape, term_targets).select(
-                "f_kind", "f_value", "f_dt", "f_lang",
-                null_s.alias("pred"), null_s.alias("obj_kind"),
-                null_s.alias("obj_value"), null_s.alias("obj_dt"),
-                null_s.alias("obj_lang"), F.lit(True).alias("__tgt"))
-            arcs = arcs.unionByName(markers)
-        arcs = arcs.withColumn(
-            KEY, node_key_col(F.col("f_kind"), F.col("f_value"),
-                              F.col("f_dt"), F.col("f_lang")))
-        grouped, ok = self._fused_agg(
-            shape, arcs, conf, props, reports,
-            group_cols=[KEY, *FCOLS],
-            extra_aggs=(F.max("__tgt").alias("__is_focus"),),
-            focus_flag="__is_focus")
-        out = grouped.filter(F.col("__is_focus")) \
-            .select(KEY, *FCOLS, ok.alias("conforms"))
-        return out, reports
-
-    def _eval_shape_onepass_cpath(self, shape: Shape,
-                                  conf: dict[str, DataFrame]
-                                  ) -> tuple[DataFrame, list[DataFrame]]:
-        """One-pass conformance for a single complex-path shape
-        (_fast_target_cpath_eligible): union(per-pair value-checked
-        rows keyed by source node, target-marker rows) → ONE
-        groupBy(term) → filter(is-focus). Replaces the generic path's
-        [target-union distinct + candidate distinct + persist +
-        groupBy(src) + cand ⋈ agg join-back (2 exchanges + SMJ)] with
-        [path pairs + one union-groupBy] (guide §2.4 — the same trick
-        _eval_shape_onepass plays for fused simple predicates). The
-        path computation itself keeps the focus semi-join restriction
-        (path_pairs srcs), so at scale the chain still only expands the
-        focus neighborhood. Aggregate semantics are identical to
-        _eval_one_property: zero-pair focus nodes group from their
-        marker row alone and count 0."""
-        reports: list[DataFrame] = []
-        pc = shape.properties[0]
-        markers = self._target_markers(shape)
-        srcs = markers.filter(F.col("f_kind") != "literal") \
-            .select(F.col("f_value").alias("n"))
-        dedup_free = pc.min_count <= 1 and pc.max_count is None
-        pairs = path_pairs(self.triples, pc.path, srcs,
-                           dedup=not dedup_free)
-        refs = _collect_refs(pc.node)
-        classes = _collect_classes(pc.node)
-        pairs, ref_cols, cls_cols = self._join_term_bools(
-            pairs, "v_", refs, classes, conf)
-        tc = self._term_cols("v_", ref_cols, cls_cols)
-        report_pairs = (pairs.dropDuplicates(["src", "v_kind", "v_value",
-                                              "v_dt", "v_lang"])
-                        if dedup_free else pairs)
-        conjs = _top_conjuncts(pc.node)
-        per_value = [c for c in conjs if c.kind != "hasValue"]
-        existential = [c for c in conjs if c.kind == "hasValue"]
-        v_ok = F.lit(True)
-        for c in per_value:
-            v_ok = v_ok & compile_expr(c, tc)
-        for cj in per_value:
-            if (pc.qualified or cj.kind == "true"
-                    or self._is_transparent_ref(cj)):
-                continue
-            comp = COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent")
-            reports.append(
-                lambda cj=cj, comp=comp, report_pairs=report_pairs, tc=tc,
-                pc=pc: report_pairs.filter(~compile_expr(cj, tc)).select(
-                    F.col("src").alias("focus_node"),
-                    F.lit(shape.label).alias("source_shape"),
-                    F.lit(comp).alias("component"),
-                    F.lit(pc.severity).alias("severity"),
-                    F.col("v_value").alias("value"),
-                    F.lit(pc.path.describe()).alias("path"),
-                    F.lit(pc.message or shape.message).cast("string")
-                    .alias("message"),
-                ))
-        null_s = F.lit(None).cast("string")
-        null_b = F.lit(None).cast("boolean")
-        src_kind = F.when(F.col("src").startswith("_:"), F.lit("bnode")) \
-            .otherwise(F.lit("iri"))
-        hit_names = [f"__hit_{j}" for j in range(len(existential))]
-        pair_rows = pairs.select(
-            src_kind.alias("f_kind"), F.col("src").alias("f_value"),
-            null_s.alias("f_dt"), null_s.alias("f_lang"),
-            v_ok.alias("__vok"),
-            *[_value_match(ex.values[0], tc).alias(nm)
-              for nm, ex in zip(hit_names, existential)],
-            F.lit(False).alias("__tgt"))
-        marker_rows = markers.select(
-            "f_kind", "f_value", "f_dt", "f_lang",
-            null_b.alias("__vok"),
-            *[null_b.alias(nm) for nm in hit_names],
-            F.lit(True).alias("__tgt"))
-        un = pair_rows.unionByName(marker_rows).withColumn(
-            KEY, node_key_col(F.col("f_kind"), F.col("f_value"),
-                              F.col("f_dt"), F.col("f_lang")))
-        is_pair = ~F.col("__tgt")
-        aggs = [
-            F.count(F.when(is_pair, F.lit(1))).alias("__n"),
-            F.count(F.when(is_pair & F.col("__vok"), F.lit(1)))
-            .alias("__ok_n"),
-            F.count(F.when(is_pair & ~F.col("__vok"), F.lit(1)))
-            .alias("__bad_n"),
-            F.max("__tgt").alias("__is_focus"),
-        ]
-        for nm in hit_names:
-            aggs.append(F.count(F.when(is_pair & F.col(nm), F.lit(1)))
-                        .alias(nm.replace("__hit_", "__has_")))
-        grouped = un.groupBy(KEY, *FCOLS).agg(*aggs)
-        focus_g = grouped.filter(F.col("__is_focus"))
-        card = F.col("__ok_n") if (pc.qualified or pc.exclusive) \
-            else F.col("__n")
-        ok = card >= pc.min_count
-        if pc.max_count is not None:
-            ok = ok & (card <= pc.max_count)
-        if not pc.qualified:
-            ok = ok & (F.col("__bad_n") == 0)
-        for j in range(len(existential)):
-            ok = ok & (F.col(f"__has_{j}") >= 1)
-        names = {"total": "__n", "ok": "__ok_n", "bad": "__bad_n"}
-        for j in range(len(existential)):
-            names[f"has_{j}"] = f"__has_{j}"
-        self._card_reports(reports, focus_g, shape, pc, names)
-        out = focus_g.select(KEY, *FCOLS, ok.alias("conforms"))
-        return out, reports
 
     def _card_reports(self, reports: list, grouped: DataFrame,
                       shape: Shape, pc: PropertyConstraint, names: dict) -> None:
@@ -1435,7 +1262,7 @@ class ValidationEngine:
         ts = (self.triples.filter(F.col("pred").isin(preds))
               .select("subj", "pred", "obj_kind", "obj_value",
                       "obj_dt", "obj_lang"))
-        arcs = cand.join(ts, on=cand["f_value"] == ts["subj"], how="left") \
+        arcs = cand.join(ts, on=_subject_of(cand, ts["subj"]), how="left") \
                    .drop("subj")
         refs: set[str] = set()
         classes: set[str] = set()
@@ -1519,7 +1346,7 @@ class ValidationEngine:
         ts = (self.triples.filter(F.col("pred").isin(preds))
               .select("subj", "pred", "obj_kind", "obj_value",
                       "obj_dt", "obj_lang"))
-        arcs = cand.join(ts, on=cand["f_value"] == ts["subj"],
+        arcs = cand.join(ts, on=_subject_of(cand, ts["subj"]),
                          how="left").drop("subj")
         refs: set[str] = set()
         classes: set[str] = set()
@@ -1608,13 +1435,22 @@ class ValidationEngine:
         ))
         return grouped.select(KEY, feasible_any.alias(flag))
 
-    # -- complex-path property ------------------------------------------------
+    # -- complex-path evaluator ---------------------------------------------
 
-    def _eval_one_property(self, shape: Shape, cand: DataFrame,
-                           conf: dict[str, DataFrame], pc: PropertyConstraint,
-                           flag: str, reports: list[DataFrame]) -> DataFrame:
-        srcs = cand.filter(F.col("f_kind") != "literal") \
-                   .select(F.col("f_value").alias("n"))
+    def _eval_cpath(self, shape: Shape, pc: PropertyConstraint,
+                    rows: FocusRows, conf: dict[str, DataFrame], flag: str,
+                    reports: list[DataFrame]) -> DataFrame:
+        """(KEY, *FCOLS, flag), one row per focus term, for one complex
+        path (sequence / inverse / alternative / closure): union(per-pair
+        value-checked rows keyed by source node, focus-marker rows) →
+        ONE groupBy(term) → filter(is-focus). The path computation keeps
+        the focus semi-join restriction (path_pairs srcs), so at scale
+        the chain only expands the focus neighborhood; zero-pair focus
+        terms group from their marker row alone and count 0."""
+        markers = (rows.cand.select(*FCOLS) if rows.targets is None
+                   else self._marker_rows(rows.targets))
+        srcs = markers.filter(F.col("f_kind") != "literal") \
+            .select(F.col("f_value").alias("n"))
         # Multiplicity-insensitive thresholds (minCount ≤ 1, no
         # maxCount: the aggregate only tests exists / none) let the
         # aggregate run on NON-deduped pairs — one exchange less on the
@@ -1654,45 +1490,55 @@ class ValidationEngine:
                     F.lit(pc.message or shape.message).cast("string")
                     .alias("message"),
                 ))
+        null_s = F.lit(None).cast("string")
+        null_b = F.lit(None).cast("boolean")
+        src_kind = F.when(F.col("src").startswith("_:"), F.lit("bnode")) \
+            .otherwise(F.lit("iri"))
+        hit_names = [f"__hit_{j}" for j in range(len(existential))]
+        pair_rows = pairs.select(
+            src_kind.alias("f_kind"), F.col("src").alias("f_value"),
+            null_s.alias("f_dt"), null_s.alias("f_lang"),
+            v_ok.alias("__vok"),
+            *[_value_match(ex.values[0], tc).alias(nm)
+              for nm, ex in zip(hit_names, existential)],
+            F.lit(False).alias("__tgt"))
+        marker_rows = markers.select(
+            "f_kind", "f_value", "f_dt", "f_lang",
+            null_b.alias("__vok"),
+            *[null_b.alias(nm) for nm in hit_names],
+            F.lit(True).alias("__tgt"))
+        un = _with_key(pair_rows.unionByName(marker_rows))
+        is_pair = ~F.col("__tgt")
         aggs = [
-            F.count(F.lit(1)).alias("__n"),
-            F.count(F.when(v_ok, F.lit(1))).alias("__ok_n"),
-            F.count(F.when(~v_ok, F.lit(1))).alias("__bad_n"),
+            F.count(F.when(is_pair, F.lit(1))).alias("__n"),
+            F.count(F.when(is_pair & F.col("__vok"), F.lit(1)))
+            .alias("__ok_n"),
+            F.count(F.when(is_pair & ~F.col("__vok"), F.lit(1)))
+            .alias("__bad_n"),
+            F.max("__tgt").alias("__is_focus"),
         ]
-        for j, ex in enumerate(existential):
-            aggs.append(F.count(F.when(_value_match(ex.values[0], tc), F.lit(1)))
-                        .alias(f"__has_{j}"))
-        g = pairs.groupBy("src").agg(*aggs)
-        # LEFT join from candidates so zero-value nodes count 0
-        joined = cand.join(g, on=cand["f_value"] == g["src"], how="left").drop("src")
-        card = F.coalesce(
-            F.col("__ok_n") if (pc.qualified or pc.exclusive) else F.col("__n"),
-            F.lit(0))
+        for nm in hit_names:
+            aggs.append(F.count(F.when(is_pair & F.col(nm), F.lit(1)))
+                        .alias(nm.replace("__hit_", "__has_")))
+        grouped = un.groupBy(KEY, *FCOLS).agg(*aggs)
+        focus_g = grouped.filter(F.col("__is_focus"))
+        card = F.col("__ok_n") if (pc.qualified or pc.exclusive) \
+            else F.col("__n")
         ok = card >= pc.min_count
         if pc.max_count is not None:
             ok = ok & (card <= pc.max_count)
         if not pc.qualified:
-            ok = ok & (F.coalesce(F.col("__bad_n"), F.lit(0)) == 0)
+            ok = ok & (F.col("__bad_n") == 0)
         for j in range(len(existential)):
-            ok = ok & (F.coalesce(F.col(f"__has_{j}"), F.lit(0)) >= 1)
+            ok = ok & (F.col(f"__has_{j}") >= 1)
         # cardinality + hasValue reports (hasValue over a complex path:
-        # zero-pair focus nodes coalesce to count 0 and must report —
-        # W3C path-complex-001 targets nodes absent from the data)
+        # zero-pair focus terms count 0 and must report — W3C
+        # path-complex-001 targets nodes absent from the data)
         names = {"total": "__n", "ok": "__ok_n", "bad": "__bad_n"}
-        has_cols = []
         for j in range(len(existential)):
             names[f"has_{j}"] = f"__has_{j}"
-            has_cols.append(
-                F.coalesce(F.col(f"__has_{j}"), F.lit(0)).alias(f"__has_{j}"))
-        grouped_for_reports = joined.select(
-            KEY, "f_value",
-            F.coalesce(F.col("__n"), F.lit(0)).alias("__n"),
-            F.coalesce(F.col("__ok_n"), F.lit(0)).alias("__ok_n"),
-            F.coalesce(F.col("__bad_n"), F.lit(0)).alias("__bad_n"),
-            *has_cols,
-        )
-        self._card_reports(reports, grouped_for_reports, shape, pc, names)
-        return joined.select(KEY, *FCOLS, ok.alias(flag))
+        self._card_reports(reports, focus_g, shape, pc, names)
+        return focus_g.select(KEY, *FCOLS, ok.alias(flag))
 
     # -- pairwise sibling-path constraints ------------------------------------
 
@@ -1751,14 +1597,15 @@ class ValidationEngine:
             F.lit(pc.message or shape.message).cast("string").alias("message"),
         ))
         bad_srcs = viol_vals.select("src").distinct().withColumn("__pair_bad", F.lit(True))
-        joined = cand.join(bad_srcs, on=cand["f_value"] == bad_srcs["src"], how="left")
+        joined = cand.join(bad_srcs, on=_subject_of(cand, bad_srcs["src"]),
+                           how="left")
         return joined.select(
             KEY, *FCOLS,
             (~F.coalesce(F.col("__pair_bad"), F.lit(False))).alias(flag))
 
     # -- public entry ---------------------------------------------------------
 
-    def _run_fixpoint(self, scc: list[str], cands: dict, conf: dict,
+    def _run_fixpoint(self, scc: list[str], rows: dict, conf: dict,
                       start: bool) -> dict[str, list[DataFrame]]:
         """Iterate a recursive SCC to a fixpoint from the given start
         value, mutating conf[lbl] for the SCC's labels in place.
@@ -1769,8 +1616,8 @@ class ValidationEngine:
         4-valued lattice: decided only by the starting assumption).
         Returns the final round's report pieces per label."""
         for lbl in scc:
-            conf[lbl] = cands[lbl].withColumn("conforms", F.lit(start)) \
-                                  .localCheckpoint(eager=True)
+            conf[lbl] = rows[lbl].cand.withColumn("conforms", F.lit(start)) \
+                                      .localCheckpoint(eager=True)
         # Convergence detection by per-label conforms COUNTS is sound
         # only because negated reference cycles are rejected up front
         # (SchemaDict.check_well_formed): within an SCC every operator
@@ -1784,7 +1631,7 @@ class ValidationEngine:
             changed = False
             for lbl in scc:
                 c, reps = self._evaluate_shape(
-                    self.schema.shapes[lbl], cands[lbl], conf)
+                    self.schema.shapes[lbl], rows[lbl], conf)
                 c = c.localCheckpoint(eager=True)
                 n = c.filter("conforms").count()
                 last_reports[lbl] = reps
@@ -1796,11 +1643,24 @@ class ValidationEngine:
                 break
         return last_reports
 
-    def validate(self, focus: DataFrame,
+    def validate(self, focus: DataFrame | None = None,
                  full_terms: bool = False,
-                 with_status: bool = False,
-                 targets_native: bool = False) -> ValidationResult:
-        """full_terms=True adds node_kind/node_dt/node_lang columns to
+                 with_status: bool = False) -> ValidationResult:
+        """Conformance + lazy report for the (node, shape) pairs the
+        trigger selects. The trigger decides only WHICH pairs are
+        checked: every shape runs the same evaluators over focus-marker
+        rows keyed by the full term (see FocusRows), whatever their
+        source.
+
+        ``focus=None`` validates the schema's own target declarations.
+        For ref-free schemas each shape then reads its marker rows
+        straight from its targets, and the target_focus relation is
+        built only if the report is read; schemas with shape refs seed
+        candidate propagation with it. A ``focus`` relation (node,
+        shape[, node_kind, node_dt, node_lang]) — a shape map, a
+        filtered target selection — is the candidate relation instead.
+
+        full_terms=True adds node_kind/node_dt/node_lang columns to
         the conformance relation — needed when literal focus terms can
         share a lexical value but differ in datatype/language (the ShEx
         suite's "ab"^^dt1 vs "ab"^^dt2 entries).
@@ -1812,62 +1672,36 @@ class ValidationEngine:
         fixpoints (i.e. decided only by the co-inductive starting
         assumption) surface as 'unknown' instead of silently adopting
         the co-inductive answer. The boolean ``conforms`` stays the
-        greatest-fixpoint verdict for backward compatibility.
-
-        targets_native=True asserts that ``focus`` is EXACTLY the
-        unfiltered target_focus(...) of this schema over these triples
-        — enabling the one-pass target fast path for eligible shapes
-        (callers that filter/subset the focus must leave it False).
-
-        ``focus`` may be a zero-arg callable returning the focus
-        DataFrame: for all-fast-path schemas the focus relation is
-        only consumed by the (lazy) report assembly, so a callable
-        defers its whole plan construction off the conformance path
-        (guide §1.2 driver serial term)."""
-        _focus_memo: list = []
+        greatest-fixpoint verdict for backward compatibility."""
+        focus_df = focus
 
         def _focus() -> DataFrame:
-            if not _focus_memo:
-                _focus_memo.append(focus() if callable(focus) else focus)
-            return _focus_memo[0]
+            nonlocal focus_df
+            if focus_df is None:
+                focus_df = target_focus(self.spark, self.schema,
+                                        self.triples)
+            return focus_df
 
         ref_free = not self._ref_edges()
-        fast_lbls: set[str] = set()
-        cfast_lbls: set[str] = set()
-        if ref_free and targets_native:
-            fast_lbls = {lbl for lbl, sh in self.schema.shapes.items()
-                         if self._fast_target_eligible(sh)}
-            cfast_lbls = {lbl for lbl, sh in self.schema.shapes.items()
-                          if lbl not in fast_lbls
-                          and self._fast_target_cpath_eligible(sh)}
-            fast_lbls |= cfast_lbls
-        if ref_free:
+        if ref_free and focus is None:
+            rows = {lbl: FocusRows(targets=sh.targets)
+                    for lbl, sh in self.schema.shapes.items()}
+        elif ref_free:
             # no shape references: every candidate comes straight from
             # the focus relation, so ONE shared cache over the focus
             # candidates replaces k per-shape caches — the focus
-            # sub-plan (union of target distincts over the full triple
-            # relation) materializes once instead of once per shape,
-            # and each shape's candidate set is a filter over the
-            # cache. At 2M-conv bench scale this removes two full
-            # focus recomputations from the conformance job's critical
-            # path (Amdahl serial term, BASELINE.md round-5 notes).
-            slow_lbls = [lbl for lbl in self.schema.shapes
-                         if lbl not in fast_lbls]
-            if slow_lbls:
-                focus_slow = (_focus() if not fast_lbls else
-                              _focus().filter(F.col("shape").isin(slow_lbls)))
-                base = self._maybe_persist(focus_to_candidates(focus_slow))
-                cands = {lbl: base.filter(F.col("shape") == lbl).drop("shape")
-                         for lbl in slow_lbls}
-            else:
-                cands = {}
+            # sub-plan materializes once instead of once per shape, and
+            # each shape's candidate set is a filter over the cache.
+            base = self._maybe_persist(focus_to_candidates(focus))
+            rows = {lbl: FocusRows(cand=base.filter(F.col("shape") == lbl)
+                                   .drop("shape"))
+                    for lbl in self.schema.shapes}
         else:
-            cands = self._propagate_candidates(_focus())
             # candidate sets are reused by every constraint sub-plan of
             # a shape (fused agg, complex paths, pairwise, reports):
             # persist lazily so each materializes at most once.
-            for lbl in cands:
-                cands[lbl] = self._maybe_persist(cands[lbl])
+            rows = {lbl: FocusRows(cand=self._maybe_persist(c))
+                    for lbl, c in self._propagate_candidates(_focus()).items()}
         conf: dict[str, DataFrame] = {}
         lfp_conf: dict[str, DataFrame] = {}  # per-label least-fixpoint verdicts
         all_reports: list[DataFrame] = []
@@ -1875,30 +1709,24 @@ class ValidationEngine:
         for scc in self.schema.strata():
             if not self.schema.is_recursive(scc):
                 lbl = scc[0]
-                if lbl in fast_lbls:
-                    # one-pass target fast path: no cand relation, no
-                    # persist (ref-free ⇒ conformance is consumed once)
-                    evaluator = (self._eval_shape_onepass_cpath
-                                 if lbl in cfast_lbls
-                                 else self._eval_shape_onepass)
-                    c, reps = evaluator(self.schema.shapes[lbl], conf)
-                    conf[lbl] = c
-                    all_reports.extend(reps)
-                    continue
-                c, reps = self._evaluate_shape(self.schema.shapes[lbl], cands[lbl], conf)
-                # lazy persist: materialized on first action, reused by
-                # every ref join — no eager driver-side job per shape
-                conf[lbl] = self._maybe_persist(self._maybe_flatten(c))
+                c, reps = self._evaluate_shape(self.schema.shapes[lbl],
+                                               rows[lbl], conf)
+                if not ref_free:
+                    # lazy persist: materialized on first action, reused
+                    # by every ref join — no eager driver-side job per
+                    # shape (ref-free conformance is consumed once)
+                    c = self._maybe_persist(self._maybe_flatten(c))
+                conf[lbl] = c
                 all_reports.extend(reps)
             else:
                 if with_status:
                     # least fixpoint first (into a scratch dict seeded
                     # with the dependencies' final verdicts)
                     scratch = dict(conf)
-                    self._run_fixpoint(scc, cands, scratch, start=False)
+                    self._run_fixpoint(scc, rows, scratch, start=False)
                     for lbl in scc:
                         lfp_conf[lbl] = scratch[lbl]
-                last_reports = self._run_fixpoint(scc, cands, conf, start=True)
+                last_reports = self._run_fixpoint(scc, rows, conf, start=True)
                 for reps in last_reports.values():
                     all_reports.extend(reps)
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from shaclex_spark.session import get_spark
@@ -11,6 +13,14 @@ def spark():
     # because fixture data is tiny (at scale these come from config).
     s = get_spark("shaclex_spark_tests", parallelism=4, shuffle_partitions=4)
     yield s
+
+
+def needs_corpus(path: str):
+    """Skip marker for a test that reads an external shaclex corpus
+    file or directory: an absent corpus is a named, counted skip, not a
+    FileNotFoundError."""
+    return pytest.mark.skipif(not os.path.exists(path),
+                              reason=f"external shaclex corpus absent: {path}")
 
 
 def triples_df(spark, rows):

@@ -11,7 +11,10 @@ from shaclex_spark.convert import (
 from shaclex_spark.shacl_reader import schema_from_turtle
 from shaclex_spark.shexc import parse_shexc
 
+from conftest import needs_corpus
+
 PAPER = "/root/reference/examples/clingo/paper.shex"
+pytestmark = needs_corpus(PAPER)
 
 
 def test_shex_to_shacl_roundtrip():

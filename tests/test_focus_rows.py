@@ -1,0 +1,107 @@
+"""The focus is a row source, not a second evaluator: validating the
+schema's own targets (engine.validate(), marker rows read from the
+target declarations) and validating the same pairs as an explicit
+candidate relation (engine.validate(target_focus(...))) must give equal
+conformance and report multisets."""
+
+from __future__ import annotations
+
+from collections import Counter
+
+import pytest
+
+from shaclex_spark import queries as Q
+from shaclex_spark.shapes import SchemaDict
+from shaclex_spark.triggers import target_focus
+from shaclex_spark.validation import ValidationEngine
+
+from test_oracle_parity import SF_DIR
+
+
+def _assert_sources_agree(spark, shapes, triples):
+    schema = SchemaDict.from_json(shapes)
+    by_targets = ValidationEngine(spark, schema, triples)
+    by_cand = ValidationEngine(spark, schema, triples)
+    a = by_targets.validate()
+    b = by_cand.validate(target_focus(spark, schema, triples))
+    try:
+        conf_a = Counter(a.conformance.collect())
+        assert conf_a, "no focus nodes: the comparison would be vacuous"
+        assert conf_a == Counter(b.conformance.collect())
+        assert Counter(a.report.collect()) == Counter(b.report.collect())
+    finally:
+        by_targets.unpersist_all()
+        by_cand.unpersist_all()
+
+
+@pytest.mark.parametrize("name", ["CUSTOMER_SHAPES", "ORDER_REGION",
+                                  "ACTIVE_CUSTOMER", "CLOSED_NATION",
+                                  "ORDER_REF_SHAPES"])
+def test_registry_shapes(spark, name):
+    _assert_sources_agree(spark, getattr(Q, name),
+                          Q._kg_cached(spark, SF_DIR))
+
+
+def test_pipeline_default_shapes(spark):
+    from shaclex_spark import pipeline
+    from shaclex_spark.transcripts import synth_transcripts
+
+    transcripts, _ = synth_transcripts(spark, 30)
+    kg, _ = pipeline.build_kg(spark, transcripts)
+    plain = kg.select("subj", "pred", "obj_kind", "obj_value", "obj_dt",
+                      "obj_lang")
+    _assert_sources_agree(spark, pipeline.DEFAULT_SHAPES, plain)
+
+
+def test_term_keyed_targets(spark):
+    """Targets whose focus terms are not the arc subjects' own rows:
+    subclass-closed targetClass, targetObjectsOf (literal objects
+    too) and targetNode, on every evaluator, a closed shape included."""
+    from shaclex_spark.model import RDF_TYPE, RDFS, XSD_STRING
+
+    from conftest import triples_df
+
+    ex = "http://example.org/"
+    rows = [
+        (ex + "Child", RDFS + "subClassOf", "iri", ex + "Parent", None, None),
+        (ex + "a", RDF_TYPE, "iri", ex + "Child", None, None),
+        (ex + "a", ex + "name", "literal", "A", XSD_STRING, None),
+        (ex + "b", RDF_TYPE, "iri", ex + "Parent", None, None),
+        (ex + "c", ex + "knows", "iri", ex + "d", None, None),
+        (ex + "c", ex + "knows", "literal", "lit", XSD_STRING, None),
+        (ex + "d", ex + "name", "literal", "D", XSD_STRING, None),
+        (ex + "d", ex + "age", "literal", "9", XSD_STRING, None),
+    ]
+    name = {"path": ex + "name", "minCount": 1}
+    shapes = [
+        {"label": "ByClass",
+         "targets": [{"kind": "targetClass", "value": ex + "Parent"}],
+         "constraints": [name]},
+        {"label": "ByObject",
+         "targets": [{"kind": "targetObjectsOf", "value": ex + "knows"}],
+         "constraints": [name]},
+        {"label": "ByNode",
+         "targets": [{"kind": "targetNode", "value": ex + "d"},
+                     {"kind": "targetNode", "value": ex + "c"}],
+         "closed": True, "ignored": [ex + "knows"],
+         "constraints": [name]},
+        {"label": "Inverse",
+         "targets": [{"kind": "targetObjectsOf", "value": ex + "knows"}],
+         "constraints": [{"path": {"kind": "inverse", "iri": ex + "knows"},
+                          "minCount": 1, "maxCount": 1}]},
+    ]
+    triples = triples_df(spark, rows)
+    _assert_sources_agree(spark, shapes, triples)
+    res = ValidationEngine(spark, SchemaDict.from_json(shapes),
+                           triples).validate()
+    got = {(r["node"], r["shape"]): r["conforms"]
+           for r in res.conformance.collect()}
+    expected = {
+        (ex + "a", "ByClass"): True, (ex + "b", "ByClass"): False,
+        (ex + "d", "ByObject"): True, ("lit", "ByObject"): False,
+        (ex + "d", "ByNode"): False,            # ex:age is not allowed
+        (ex + "c", "ByNode"): False,            # no ex:name
+        (ex + "d", "Inverse"): True,
+    }
+    assert len(got) == len(expected) + 1        # + ("lit", "Inverse")
+    assert {k: got[k] for k in expected} == expected

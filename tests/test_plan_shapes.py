@@ -66,3 +66,38 @@ def test_documents_scan_prunes_columns(spark):
     read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read, "no parquet scan found"
     assert "url" not in read[0] and "quality" not in read[0], read[0]
+
+
+
+def _own_nodes(df) -> list[str]:
+    """Node names of a query's own physical plan (the adaptive plan's
+    initial plan), not descending into cached relations: a persisted
+    input's build plan, and whether it has run yet, is not part of the
+    query's plan shape."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.initialPlan()
+    names, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_target_driven_plans_stay_flat(spark):
+    """Target-driven validation plans: no sort-merge join, and no more
+    exchanges than the one-pass plans had when pinned (fixture session,
+    parallelism 4): the fused simple-predicate pass shuffles once and
+    broadcasts the class relation; the sequence path adds its step
+    joins."""
+    for name, max_exchanges in (("kg_conformance_customer", 2),
+                                ("kg_sequence_path", 6)):
+        df = E.queries()[name](spark, SF)
+        assert "SortMergeJoin" not in \
+            df._jdf.queryExecution().executedPlan().toString(), name
+        nodes = _own_nodes(df)
+        assert "SortMergeJoin" not in nodes, name
+        assert sum("Exchange" in n for n in nodes) <= max_exchanges, \
+            (name, nodes)

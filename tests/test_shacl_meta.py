@@ -11,7 +11,12 @@ import os
 import subprocess
 import sys
 
+from shaclex_spark.meta import FIXTURE
 
+from conftest import needs_corpus
+
+
+@needs_corpus(FIXTURE)
 def test_shacl_shacl_self_validation():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)

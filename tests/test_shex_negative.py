@@ -21,6 +21,8 @@ import os
 
 import pytest
 
+from conftest import needs_corpus
+
 ROOT = "/root/reference/src/test/resources/shexTest"
 
 NEG_SYNTAX = sorted(glob.glob(os.path.join(ROOT, "negativeSyntax", "*.shex")))
@@ -28,6 +30,7 @@ NEG_STRUCTURE = sorted(
     glob.glob(os.path.join(ROOT, "negativeStructure", "*.shex")))
 
 
+@needs_corpus(ROOT)
 def test_corpora_present():
     assert len(NEG_SYNTAX) == 99
     assert len(NEG_STRUCTURE) == 14

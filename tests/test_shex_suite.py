@@ -12,12 +12,20 @@ semantics), never result-based.
 
 from __future__ import annotations
 
+import os
+
 from shaclex_spark.shex_suite import (
+    SUITE_ROOT,
     load_manifest,
     load_schema,
     run_suite_mp,
     scorecard,
 )
+
+from conftest import needs_corpus
+
+pytestmark = needs_corpus(os.path.join(SUITE_ROOT, "validation",
+                                       "manifest.ttl"))
 
 ATTEMPTED_FLOOR = 1064
 

@@ -8,9 +8,10 @@ from shaclex_spark.sources.turtle import turtle_to_rows
 from shaclex_spark.triggers import shape_map_focus
 from shaclex_spark.validation import ValidationEngine
 
-from conftest import triples_df
+from conftest import needs_corpus, triples_df
 
 REF = "/root/reference/examples/clingo"
+pytestmark = needs_corpus(REF)
 
 
 def test_parse_paper_shex(spark):

@@ -14,6 +14,8 @@ import os
 
 from shaclex_spark.shexc2j import ShExCError, shexc_to_shexj
 
+from conftest import needs_corpus
+
 SCHEMAS = "/root/reference/src/test/resources/shexTest/schemas"
 BASE = "https://raw.githubusercontent.com/shexSpec/shexTest/master/schemas/"
 
@@ -32,6 +34,7 @@ def _norm(x):
     return x
 
 
+@needs_corpus(SCHEMAS)
 def test_every_suite_schema_parses():
     files = sorted(glob.glob(os.path.join(SCHEMAS, "*.shex")))
     assert len(files) >= 410
@@ -40,6 +43,7 @@ def test_every_suite_schema_parses():
                        base=BASE + os.path.basename(f))
 
 
+@needs_corpus(SCHEMAS)
 def test_twin_parity_all_408():
     files = [f for f in sorted(glob.glob(os.path.join(SCHEMAS, "*.shex")))
              if os.path.exists(f[:-5] + ".json")]

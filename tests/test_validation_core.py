@@ -349,3 +349,46 @@ def test_deactivated_shape(spark):
     conf, report = run(spark, rows, shapes, [(EX + "x", "S")])
     assert conf[(EX + "x", "S")] is True
     assert report == []
+
+
+def test_literal_focus_has_no_arcs(spark):
+    """A literal focus term never inherits the arcs of an IRI subject
+    with the same spelling: a literal has no outgoing arcs. Checked for
+    each constraint family, over target rows (validate_kg) and over
+    candidate rows (the focus_filter path)."""
+    from shaclex_spark.pipeline import validate_kg
+
+    a = "http://ex/a"
+    t = triples_df(spark, [(a, EX + "p", *lit("x"))])
+    lit_tgt = {"kind": "targetNode", "value": a, "term_kind": "literal",
+               "dt": XSD_STRING}
+    only_literal = [{"label": "S", "targets": [lit_tgt],
+                     "constraints": [{"path": EX + "p", "minCount": 1}]}]
+    assert validate_kg(spark, t, only_literal).finish().conforms is False
+
+    both = [lit_tgt, {"kind": "targetNode", "value": a}]
+    shapes = [
+        {"label": "Simple", "targets": both,
+         "constraints": [{"path": EX + "p", "minCount": 1}]},
+        {"label": "Path", "targets": both,
+         "constraints": [{"path": {"kind": "alternative",
+                                   "steps": [EX + "p", EX + "q"]},
+                          "minCount": 1}]},
+        {"label": "Equals", "targets": both,
+         "constraints": [{"path": EX + "p", "equals": EX + "q"}]},
+        {"label": "Group", "targets": both,
+         "groupBlocks": [{"members": [{"path": EX + "p", "minCount": 1,
+                                       "maxCount": 1}]}]},
+    ]
+    # one IRI row and one literal row per shape; the literal's verdict
+    # is the opposite of the IRI's in every family (Equals: the IRI has
+    # p={"x"}, q={} and fails; the literal has neither and conforms)
+    focus_filter = spark.createDataFrame([(a,)], "node string")
+    for ff in (None, focus_filter):
+        res = validate_kg(spark, t, shapes, focus_filter=ff)
+        got: dict[str, list[bool]] = {}
+        for r in res.conformance.collect():
+            got.setdefault(r["shape"], []).append(r["conforms"])
+        assert {k: sorted(v) for k, v in got.items()} == {
+            lbl: [False, True] for lbl in ("Simple", "Path", "Equals",
+                                          "Group")}, (ff is None, got)

@@ -30,6 +30,8 @@ from shaclex_spark.sources.turtle import parse_turtle
 from shaclex_spark.triggers import target_focus
 from shaclex_spark.validation import ValidationEngine
 
+from conftest import needs_corpus
+
 CORPUS = "/root/reference/src/test/resources/shacl/tests"
 
 SKIP = {
@@ -127,6 +129,7 @@ def test_w3c_case(spark, case):
                         f"  expected {sorted(exp)}")
 
 
+@needs_corpus(CORPUS)
 def test_corpus_coverage_complete():
     """Every fixture in the vendored corpus is either exercised or in
     the justified SKIP list."""

@@ -8,9 +8,12 @@ from __future__ import annotations
 
 from shaclex_spark.shexc import parse_shexc
 
+from conftest import needs_corpus
+
 WEBINDEX = "/root/reference/examples/webindex/webindex.shex"
 
 
+@needs_corpus(WEBINDEX)
 def test_webindex_parses():
     schema, prefixes = parse_shexc(open(WEBINDEX).read())
     labels = {lbl.rsplit("/", 1)[-1] for lbl in schema.shapes}
