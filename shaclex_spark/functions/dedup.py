@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..scope import Scope
 from .text import tokens
 
 N_HASHES = 24
@@ -157,8 +158,8 @@ def lsh_candidates(docs: DataFrame, id_col: str, text_col: str,
             .select("a", "b").distinct())
 
 
-def prefix_filter_candidates(sh: DataFrame,
-                             threshold: float) -> DataFrame:
+def prefix_filter_candidates(sh: DataFrame, threshold: float, *,
+                             scope: Scope) -> DataFrame:
     """(a, b) candidate pairs for an EXACT Jaccard-join at
     ``threshold`` via prefix filtering (AllPairs/PPJoin family —
     public algorithm; Bayardo et al. 'Scaling Up All Pairs Similarity
@@ -189,8 +190,7 @@ def prefix_filter_candidates(sh: DataFrame,
     round-start plan). persist, NOT lazy localCheckpoint: a lazy
     checkpoint plans the whole subtree at construction time — pure
     driver latency (guide §1.2, measured ~0.5 s of the registry
-    query's build). The handle rides on the result as _sx_caches for
-    callers that manage cache lifetime."""
+    query's build). The persist goes into the caller's ``scope``."""
     from pyspark.sql import Window
 
     tok = sh.select("i", F.size("sh").alias("__sz"),
@@ -199,9 +199,9 @@ def prefix_filter_candidates(sh: DataFrame,
     w = Window.partitionBy("i").orderBy("__df", "s")
     ranked = (tok.join(dfreq, on="s")
               .withColumn("__rk", F.row_number().over(w)))
-    prefix = ranked.filter(
+    prefix = scope.persist(ranked.filter(
         F.col("__rk") <= F.col("__sz") - F.ceil(threshold * F.col("__sz"))
-        + 1).select("i", "s", "__rk", "__sz").persist()
+        + 1).select("i", "s", "__rk", "__sz"))
     left = prefix.select(F.col("s"), F.col("i").alias("a"),
                          F.col("__rk").alias("__ra"),
                          F.col("__sz").alias("__sa"))
@@ -229,7 +229,6 @@ def prefix_filter_candidates(sh: DataFrame,
                    & (ubound >= o))
            .select("a", "b", F.col("__sa").alias("sza"),
                    F.col("__sb").alias("szb")).distinct())
-    out._sx_caches = [prefix]
     return out
 
 
@@ -238,7 +237,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float,
                         shingle_k: int = 1,
                         n_bands: int = 24, rows_per_band: int = 1,
                         shingles: DataFrame | None = None,
-                        candidates: str = "prefix") -> DataFrame:
+                        candidates: str = "prefix", *,
+                        scope: Scope) -> DataFrame:
     """Near-duplicate pairs by word-shingle Jaccard ≥ threshold —
     EXACT (recall 1.0 vs a brute-force oracle).
 
@@ -249,12 +249,11 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float,
     for callers that already have signatures.
 
     The shingle relation is derived once and persisted — it feeds both
-    candidate generation and the exact-verify joins. Long-lived
-    callers should pass ``shingles`` (a persisted shingle_table) and
-    own its release; when omitted, the persist created here lives
-    until the session drops it (acceptable for one-shot jobs)."""
+    candidate generation and the exact-verify joins. Callers that share
+    it pass ``shingles`` (a persisted shingle_table); when omitted, it
+    is persisted into ``scope``, which owns every persist made here."""
     sh_str = shingles if shingles is not None else \
-        shingle_table(docs, id_col, text_col, shingle_k).persist()
+        scope.persist(shingle_table(docs, id_col, text_col, shingle_k))
     # PERF (r6): candidate generation + exact verification run on
     # xxhash64-hashed shingles — the doc-frequency groupBy, the window
     # sort, the token self-join and the per-pair array_intersect all
@@ -270,7 +269,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float,
                        F.transform("sh", lambda s: F.xxhash64(s)).alias("sh"))
     if candidates == "prefix":
         # sizes + the length filter come out of the prefix join itself
-        cands = prefix_filter_candidates(sh, threshold)
+        cands = prefix_filter_candidates(sh, threshold, scope=scope)
     else:
         cands = lsh_candidates(docs, id_col, text_col, n_bands,
                                rows_per_band, shingle_k, shingles=sh_str)
@@ -309,7 +308,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float,
                        / (F.col("sza") + F.col("szb") - F.col("__i")))
            .filter(F.col("jaccard") >= threshold)
            .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
-    out._sx_caches = getattr(cands, "_sx_caches", [])
     return out
 
 

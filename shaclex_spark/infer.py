@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .model import RDF_LANGSTRING
+from .scope import Scope
 
 RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
 
@@ -50,7 +51,7 @@ def decorate_labels(triples: DataFrame, inferred: DataFrame,
 
 
 def infer_shape(triples: DataFrame, focus_nodes: DataFrame,
-                label: str = "InferredShape") -> DataFrame:
+                label: str = "InferredShape", *, scope: Scope) -> DataFrame:
     """Profile the neighborhood of focus_nodes.
 
     Returns one row per predicate:
@@ -67,13 +68,12 @@ def infer_shape(triples: DataFrame, focus_nodes: DataFrame,
     # checkpoint converts the plan to an RDD at CONSTRUCTION time —
     # full analysis/optimization/physical planning as pure driver
     # latency before any job (measured 1.3 s of the registry query's
-    # build). The persisted handles ride on the result as _sx_caches
-    # for callers that manage cache lifetime (queries._LIVE_CACHES).
-    nodes = focus_nodes.select(
-        F.col(focus_nodes.columns[0]).alias("node")).distinct().persist()
+    # build). Both persists go into the caller's ``scope``.
+    nodes = scope.persist(focus_nodes.select(
+        F.col(focus_nodes.columns[0]).alias("node")).distinct())
 
-    arcs = nodes.join(triples, on=nodes["node"] == triples["subj"]) \
-        .drop("subj").persist()
+    arcs = scope.persist(
+        nodes.join(triples, on=nodes["node"] == triples["subj"]).drop("subj"))
 
     # PERF (r6, guide §2.3/§1.2): the lattice aggregation is pure long
     # counters — no countDistinct, no min over a string column. The old
@@ -136,7 +136,7 @@ def infer_shape(triples: DataFrame, focus_nodes: DataFrame,
     # otherwise {0,*} (missing nodes count 0 ⇒ min_card 0)
     exactly_one = (F.col("n_nodes") == F.col("__n_focus")) \
         & (F.col("min_cnt") == 1) & (F.col("max_cnt") == 1)
-    out = shape.select(
+    return shape.select(
         F.lit(label).alias("shape"),
         F.col("pred"),
         constraint.alias("constraint"),
@@ -144,15 +144,14 @@ def infer_shape(triples: DataFrame, focus_nodes: DataFrame,
         F.when(exactly_one, F.lit("1")).otherwise(F.lit("*")).alias("max_card"),
         "n_nodes", "n_values",
     )
-    out._sx_caches = [nodes, arcs]
-    return out
 
 
 def infer_schema(triples: DataFrame, focus_nodes: DataFrame,
                  label: str = "InferredShape",
                  follow_on: list[tuple[str, str]] | None = None,
                  max_follow_on: int = 1,
-                 add_label_lang: str | None = None) -> DataFrame:
+                 add_label_lang: str | None = None, *,
+                 scope: Scope) -> DataFrame:
     """Full inference with bounded followOn expansion.
 
     follow_on: [(pred_regex, sub_label)] — when a predicate of the
@@ -163,48 +162,42 @@ def infer_schema(triples: DataFrame, focus_nodes: DataFrame,
     (/root/reference/modules/schemaInfer/src/main/scala/es/weso/
     schemaInfer/SchemaInfer.scala:253-274, FollowOn.scala:16-55,
     visited guard SchemaInfer.scala:291-296).
+
+    Every profile's persists go into ``scope``.
     """
-    profiles = [infer_shape(triples, focus_nodes, label)]
-    if not follow_on:
-        out = profiles[0]
-        if add_label_lang is not None:
-            out = decorate_labels(triples, out, add_label_lang)
-        return out
-    visited = focus_nodes.select(
-        F.col(focus_nodes.columns[0]).alias("node")).distinct() \
-        .localCheckpoint(eager=True)
-    frontier: list[tuple[str, DataFrame]] = [(label, visited)]
-    for _ in range(max_follow_on):
-        next_frontier: list[tuple[str, DataFrame]] = []
-        for parent_label, nodes in frontier:
-            arcs = nodes.join(triples, on=nodes["node"] == triples["subj"])
-            for rx, sub_label in follow_on:
-                objs = (arcs.filter(F.col("pred").rlike(rx)
-                                    & (F.col("obj_kind") != "literal"))
-                        .select(F.col("obj_value").alias("node")).distinct())
-                new = objs.join(visited, on="node", how="left_anti") \
-                    .localCheckpoint(eager=True)
-                if new.isEmpty():
-                    continue
-                visited = visited.unionByName(new).localCheckpoint(eager=True)
-                profiles.append(infer_shape(triples, new, sub_label))
-                # parent constraint becomes a ref to the sub-shape
-                profiles[0] = None  # recomputed below with refs
-                next_frontier.append((sub_label, new))
-        frontier = next_frontier
-        if not frontier:
-            break
-    base = infer_shape(triples, focus_nodes, label)
+    out = infer_shape(triples, focus_nodes, label, scope=scope)
     if follow_on:
+        # parent constraints become refs to the sub-shapes
         ref_expr = F.col("constraint")
         for rx, sub_label in follow_on:
             ref_expr = F.when(F.col("pred").rlike(rx),
                               F.lit("@" + sub_label)).otherwise(ref_expr)
-        base = base.withColumn("constraint", ref_expr)
-    out = base
-    for p in profiles[1:]:
-        if p is not None:
-            out = out.unionByName(p)
+        out = out.withColumn("constraint", ref_expr)
+        visited = focus_nodes.select(
+            F.col(focus_nodes.columns[0]).alias("node")).distinct() \
+            .localCheckpoint(eager=True)
+        frontier: list[DataFrame] = [visited]
+        for _ in range(max_follow_on):
+            next_frontier: list[DataFrame] = []
+            for nodes in frontier:
+                arcs = nodes.join(triples, on=nodes["node"] == triples["subj"])
+                for rx, sub_label in follow_on:
+                    objs = (arcs.filter(F.col("pred").rlike(rx)
+                                        & (F.col("obj_kind") != "literal"))
+                            .select(F.col("obj_value").alias("node"))
+                            .distinct())
+                    new = objs.join(visited, on="node", how="left_anti") \
+                        .localCheckpoint(eager=True)
+                    if new.isEmpty():
+                        continue
+                    visited = visited.unionByName(new) \
+                        .localCheckpoint(eager=True)
+                    out = out.unionByName(
+                        infer_shape(triples, new, sub_label, scope=scope))
+                    next_frontier.append(new)
+            frontier = next_frontier
+            if not frontier:
+                break
     if add_label_lang is not None:
         out = decorate_labels(triples, out, add_label_lang)
     return out

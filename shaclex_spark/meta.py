@@ -32,7 +32,6 @@ def shacl_shacl_violations(spark=None) -> int:
     from .model import TRIPLES_SCHEMA
     from .shacl_reader import ShaclReader
     from .sources.turtle import parse_turtle
-    from .triggers import target_focus
     from .validation import ValidationEngine
 
     triples, _ = parse_turtle(open(FIXTURE).read())
@@ -40,15 +39,12 @@ def shacl_shacl_violations(spark=None) -> int:
     rows = [(s[1], p, o[0], o[1], o[2] if o[0] == "literal" else None, o[3])
             for s, p, o in triples]
     data = spark.createDataFrame(rows, TRIPLES_SCHEMA)
-    focus = target_focus(spark, schema, data)
-    engine = ValidationEngine(spark, schema, data)
-    res = engine.validate(focus)
-    n = res.report.count()
     # long-lived callers (the driver gate runs this inside its own
     # session): release the engine's persisted candidate/conformance
     # blocks once the count is materialized
-    engine.unpersist_all()
-    return n
+    engine = ValidationEngine(spark, schema, data)
+    with engine.scope:
+        return engine.validate().report.count()
 
 
 if __name__ == "__main__":

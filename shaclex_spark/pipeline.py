@@ -19,7 +19,7 @@ from .extraction import extract_triples
 from .linking import canonicalize_triples
 from .shapes import SchemaDict
 from .triggers import shape_map_focus, target_focus
-from .validation import ValidationEngine, ValidationResult
+from .validation import Graph, ValidationEngine, ValidationResult
 
 # Default shapes for transcript KGs: persons/courses from the extraction
 # vocabulary. Mirrors examples/clingo/paper.{shex,ttl,sm} semantics
@@ -85,7 +85,7 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
     focus = shape_map_focus(spark, plain, shape_map) if shape_map else None
     if focus_filter is not None:
         if focus is None:
-            focus = target_focus(spark, schema, plain)
+            focus = target_focus(spark, schema, engine.graph)
         focus = focus.join(focus_filter.select("node").distinct(),
                            on="node", how="left_semi")
     return engine.validate(focus)
@@ -261,11 +261,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                 # the subclass closure is GLOBAL: a dirty subClassOf
                 # arc can flip membership of nodes in clean buckets →
                 # whole-graph re-validation (rare: ontology edits)
-                from .model import RDFS
-                if dirty_all.filter(
-                        F.col("pred") == RDFS + "subClassOf") \
-                        .limit(1).count() > 0:
-                    can_incr = False
+                can_incr = not Graph(dirty_all).has_subclass
 
         if can_incr:
             def _nodes(df: DataFrame) -> DataFrame:

@@ -12,16 +12,18 @@ values with columns sorted by name).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .meta import FIXTURE as SHACL_META_FIXTURE
+from .scope import Scope
 from .shapes import SchemaDict
 from .shex_suite import SUITE_ROOT
 from .sources.kg import KG_TRIPLES_SQL, kg_triples
 from .triggers import target_focus
-from .validation import ValidationEngine
+from .validation import Graph, ValidationEngine
 
 EX = "http://example.org/"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -40,12 +42,17 @@ def query(name: str, oracle=None, corpus: str | None = None):
     an import side effect of this module). ``corpus``: the external
     corpus file the query or its oracle reads (see missing_corpus)."""
     def deco(fn):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+            SESSION.scope.close()  # the previous entry's persists
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = entry
         if oracle is not None:
             ORACLES[name] = oracle
         if corpus is not None:
             CORPORA[name] = corpus
-        return fn
+        return entry
     return deco
 
 
@@ -65,98 +72,78 @@ def resolve_oracles() -> dict[str, str]:
     return {k: v for k, v in ORACLES.items() if not callable(v)}
 
 
-# live caches of the most recent _validate call: the result DataFrames
-# are consumed lazily AFTER the registry entry returns, so we can't
-# unpersist inside the call — instead each new query releases the
-# previous one's caches so a long session holds at most one query's
-# worth of cached blocks.
-_LIVE_CACHES: list = []
+class _Session:
+    """The registry's cached state, one object per process.
+
+    ``scope`` holds the running entry's persists. Results are consumed
+    lazily AFTER an entry returns, so they cannot be released inside
+    the call: the @query registration closes the scope when the next
+    entry starts, and a long session holds at most one entry's worth
+    of cached blocks.
+
+    The session KG (graph()) is shared ACROSS entries of one
+    session+sf_dir: the triple union is the dominant repeated cost (a
+    14-way union over every TPC-H table), identical for every kg_*
+    entry, and read-only. It and its facts (the subclass probe, the
+    persisted class membership) live in ``kg_scope`` until the session
+    or sf_dir changes."""
+
+    def __init__(self) -> None:
+        self.scope = Scope()
+        self.kg_scope = Scope()
+        self._key: tuple[str, str] | None = None
+        self._kg: Graph | None = None
+
+    def graph(self, spark: SparkSession, sf_dir: str) -> Graph:
+        # keyed by applicationId, not id(spark): a stopped session's
+        # id() can be reused by a new session, which would hand out a
+        # stale persisted DataFrame bound to the dead context.
+        key = (spark.sparkContext.applicationId, sf_dir)
+        if key != self._key:
+            self.kg_scope.close()
+            # Cluster the cached relation by pred before persisting (guide
+            # §6: sort order on write determines reader skipping — the
+            # same rule applied to the in-memory columnar cache, whose
+            # batch-level min/max stats prune batches under filters,
+            # spark.sql.inMemoryColumnarStorage.partitionPruning). Every
+            # kg_* consumer scans this cache pred-filtered (constraint-arc
+            # scans, target markers, class membership, path steps); with
+            # the build-order layout each such scan decoded ALL ~865k rows
+            # per query — clustered, a pred filter decodes only its own
+            # batches. Layout: hash-partition on (pred, 16-way subj salt) —
+            # deterministic and ONE pass, where repartitionByRange paid an
+            # extra full sampling scan of the union at materialization —
+            # then sort within partitions so each pred is a contiguous run
+            # of near-pure batches. The salt splits heavy predicates
+            # across partitions (§2.5 skew: a pred-only key would put one
+            # pred's 150k rows in one partition) and bounds distinct
+            # (pred, salt) groups per partition to a handful, so batch
+            # purity survives. Width follows the session's parallelism,
+            # not a constant.
+            n_parts = max(spark.sparkContext.defaultParallelism, 16)
+            triples = (kg_triples(spark, sf_dir)
+                       .repartition(n_parts, F.col("pred"),
+                                    F.pmod(F.xxhash64("subj"), F.lit(16)))
+                       .sortWithinPartitions("pred", "subj"))
+            self._kg = Graph(self.kg_scope.persist(triples),
+                             scope=self.kg_scope)
+            self._key = key
+        return self._kg
+
+    def close(self) -> None:
+        """Release everything the registry holds, session KG included."""
+        self.scope.close()
+        self.kg_scope.close()
+        self._key = self._kg = None
 
 
-def _release_previous_caches() -> None:
-    while _LIVE_CACHES:
-        obj = _LIVE_CACHES.pop()
-        try:
-            if isinstance(obj, ValidationEngine):
-                obj.unpersist_all()
-            else:
-                obj.unpersist()
-        except Exception:
-            pass
+SESSION = _Session()
 
 
-# the KG triple union is shared ACROSS queries of one session+sf_dir:
-# it is the dominant repeated cost (a 14-way union over every TPC-H
-# table), identical for every kg_* query, and read-only — so it stays
-# cached for the whole session while per-query engine caches are
-# released by _release_previous_caches.
-_KG_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def _kg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed by applicationId, not id(spark): a stopped session's id()
-    # can be reused by a new session, which would hand out a stale
-    # persisted DataFrame bound to the dead context.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _KG_CACHE.get(key)
-    if df is None:
-        for old in list(_KG_CACHE.values()):
-            try:
-                old.unpersist()
-                derived = getattr(old, "_sx_type_arcs", None)
-                if derived is not None:
-                    derived.unpersist()
-            except Exception:
-                pass
-        _KG_CACHE.clear()
-        # Cluster the cached relation by pred before persisting (guide
-        # §6: sort order on write determines reader skipping — the
-        # same rule applied to the in-memory columnar cache, whose
-        # batch-level min/max stats prune batches under filters,
-        # spark.sql.inMemoryColumnarStorage.partitionPruning). Every
-        # kg_* consumer scans this cache pred-filtered (constraint-arc
-        # scans, target markers, class membership, path steps); with
-        # the build-order layout each such scan decoded ALL ~865k rows
-        # per query — clustered, a pred filter decodes only its own
-        # batches. Layout: hash-partition on (pred, 16-way subj salt) —
-        # deterministic and ONE pass, where repartitionByRange paid an
-        # extra full sampling scan of the union at materialization —
-        # then sort within partitions so each pred is a contiguous run
-        # of near-pure batches. The salt splits heavy predicates
-        # across partitions (§2.5 skew: a pred-only key would put one
-        # pred's 150k rows in one partition) and bounds distinct
-        # (pred, salt) groups per partition to a handful, so batch
-        # purity survives. Width follows the session's parallelism,
-        # not a constant.
-        n_parts = max(spark.sparkContext.defaultParallelism, 16)
-        df = (kg_triples(spark, sf_dir)
-              .repartition(n_parts, F.col("pred"),
-                           F.pmod(F.xxhash64("subj"), F.lit(16)))
-              .sortWithinPartitions("pred", "subj")
-              .persist())
-        # engines may attach session-shared derived relations (class
-        # membership, subclass probe) to this object — see
-        # ValidationEngine._type_arcs; released with the cache above
-        df._sx_share_derived = True
-        # kg_triples emits a FIXED predicate vocabulary (sources/kg.py)
-        # that never includes rdfs:subClassOf — pre-answering the probe
-        # saves a full-scan isEmpty that would otherwise serially
-        # materialize the cache before the first query's own job
-        df._sx_has_subclass = False
-        _KG_CACHE[key] = df
-    return df
-
-
-def _validate(spark: SparkSession, sf_dir: str, shapes: list[dict],
-              with_report: bool = False):
-    _release_previous_caches()
-    # persist: the demo KG is a 14-way union re-read by focus selection,
-    # candidate propagation and every constraint join — materialize once
-    # per session+sf_dir (shared across queries, see _KG_CACHE).
-    triples = _kg_cached(spark, sf_dir)
-    schema = SchemaDict.from_json(shapes)
-    engine = ValidationEngine(spark, schema, triples)
-    _LIVE_CACHES.append(engine)
+def _validate(spark: SparkSession, sf_dir: str, shapes: list[dict]):
+    engine = ValidationEngine(spark, SchemaDict.from_json(shapes),
+                              SESSION.graph(spark, sf_dir),
+                              scope=SESSION.scope)
     return engine.validate()
 
 
@@ -190,9 +177,8 @@ SELECT * FROM (
 )
 """)
 def kg_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    triples = _kg_cached(spark, sf_dir)
     schema = SchemaDict.from_json(_TARGET_SHAPES)
-    return target_focus(spark, schema, triples) \
+    return target_focus(spark, schema, SESSION.graph(spark, sf_dir)) \
         .select("node", "shape", "selector")
 
 
@@ -562,7 +548,8 @@ def kg_status_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("n_nationkey")).alias("node"))))
     focus = nodes.select("node", F.lit("CycleShape").alias("shape"),
                          F.lit("node").alias("selector"))
-    engine = ValidationEngine(spark, SchemaDict.from_json(shapes), triples)
+    engine = ValidationEngine(spark, SchemaDict.from_json(shapes), triples,
+                              scope=SESSION.scope)
     res = engine.validate(focus, with_status=True)
     return res.conformance.select("node", "shape", "conforms", "status")
 

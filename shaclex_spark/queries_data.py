@@ -22,7 +22,7 @@ from .functions.multimodal import decode_media_meta, synth_media
 from .functions.similarity import ann_lsh_topk, cosine_topk
 from .functions.text import TOKEN_RE, lang_id, text_profile
 from .infer import infer_shape
-from .queries import EX, RDF_TYPE, query
+from .queries import EX, RDF_TYPE, SESSION, query
 from .sources.kg import kg_triples
 
 
@@ -203,17 +203,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filter join (AllPairs/PPJoin): candidate recall is 1.0 by
     construction and candidate volume is bounded by token rarity, so
     the result hash-matches the brute-force oracle at every scale."""
-    from .functions.dedup import shingle_table
-    from .queries import _LIVE_CACHES, _release_previous_caches
-
-    _release_previous_caches()
     docs = _read_spread(spark, sf_dir, "documents")
-    sh = shingle_table(docs, "doc_id", "text", shingle_k=3).persist()
-    _LIVE_CACHES.append(sh)  # released by the next registry query
-    out = ngram_jaccard_pairs(docs, threshold=0.4, shingle_k=3,
-                              shingles=sh)
-    _LIVE_CACHES.extend(getattr(out, "_sx_caches", []))
-    return out
+    return ngram_jaccard_pairs(docs, threshold=0.4, shingle_k=3,
+                               scope=SESSION.scope)
 
 
 @query("data_curate", oracle=r"""
@@ -317,15 +309,12 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ngram_jaccard."""
     from .functions.dedup import shingle_table
     from .linking import MAX_BUCKET_SIZE
-    from .queries import _LIVE_CACHES, _release_previous_caches
 
-    _release_previous_caches()
     docs = _read_spread(spark, sf_dir, "documents")
-    sh = shingle_table(docs, "doc_id", "text", shingle_k=3).persist()
-    _LIVE_CACHES.append(sh)
+    sh = SESSION.scope.persist(
+        shingle_table(docs, "doc_id", "text", shingle_k=3))
     truth = ngram_jaccard_pairs(docs, threshold=0.9, shingle_k=3,
-                                shingles=sh)
-    _LIVE_CACHES.extend(getattr(truth, "_sx_caches", []))
+                                shingles=sh, scope=SESSION.scope)
     cands = lsh_candidates(docs, "doc_id", "text", n_bands=8,
                            rows_per_band=3, shingle_k=3,
                            max_bucket_size=MAX_BUCKET_SIZE, shingles=sh,
@@ -547,19 +536,12 @@ SELECT 'CustomerProfile' AS shape, pred,
 FROM shape
 """)
 def kg_infer_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries import _LIVE_CACHES, _kg_cached, _release_previous_caches
-
-    _release_previous_caches()
-    triples = _kg_cached(spark, sf_dir)
+    triples = SESSION.graph(spark, sf_dir).triples
     focus = (triples.filter((F.col("pred") == RDF_TYPE)
                             & (F.col("obj_value") == EX + "Customer"))
              .select("subj"))
-    out = infer_shape(triples, focus, label="CustomerProfile")
-    # infer_shape's shared intermediates (focus distinct + neighborhood
-    # arcs) are persisted, not checkpointed — release them with the
-    # next registry query like every other per-query cache
-    _LIVE_CACHES.extend(getattr(out, "_sx_caches", []))
-    return out
+    return infer_shape(triples, focus, label="CustomerProfile",
+                       scope=SESSION.scope)
 
 
 # ---------------------------------------------------------------------------
@@ -1059,21 +1041,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-one canonical selection (min doc_id per cluster). The oracle
     replays CC as a recursive-CTE min-label propagation. Every doc
     appears exactly once; downstream keeps is_canonical rows."""
-    from .functions.dedup import ngram_jaccard_pairs
     from .linking import connected_components
-    from .queries import _LIVE_CACHES, _release_previous_caches
 
-    _release_previous_caches()
     docs = _read_spread(spark, sf_dir, "documents")
-    from .functions.dedup import shingle_table
-
-    # shingle cache registered for release by the next registry query
-    # (the implicit in-function persist leaked until session end)
-    sh = shingle_table(docs, "doc_id", "text", 3).persist()
-    _LIVE_CACHES.append(sh)
     pairs = ngram_jaccard_pairs(docs, threshold=0.9, shingle_k=3,
-                                shingles=sh)
-    _LIVE_CACHES.extend(getattr(pairs, "_sx_caches", []))
+                                scope=SESSION.scope)
     # CC operates on strings; zero-pad so lexicographic min == numeric
     # min (doc_ids are non-negative and < 10^12)
     pad = lambda c: F.lpad(F.col(c).cast("string"), 12, "0")  # noqa: E731

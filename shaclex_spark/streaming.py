@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .extraction import extract_triples
 from .linking import apply_mapping, extract_mentions, link_mentions
 from .pipeline import bucket_col
+from .validation import Graph
 
 TRANSCRIPTS_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -256,9 +257,7 @@ def validate_streaming_incremental(spark: SparkSession, output_dir: str,
             changed.select(F.col("node").alias("obj_value")),
             on="obj_value", how="left_semi").select(*cols)
         dirty = d_new.unionByName(d_subj).unionByName(d_obj)
-        from .model import RDFS
-        if mode == "class" and dirty.filter(
-                F.col("pred") == RDFS + "subClassOf").limit(1).count() > 0:
+        if mode == "class" and Graph(dirty).has_subclass:
             result = validate_kg(spark, canonical, shapes_json)
             conf_df, report_df = result.conformance, result.report
             run_mode = "full"

@@ -81,20 +81,19 @@ def target_rows(triples: DataFrame, tgt: Target,
 
 
 def target_focus(spark: SparkSession, schema: SchemaDict,
-                 triples: DataFrame) -> DataFrame:
-    """TargetDeclarations: union of per-shape target selections."""
+                 triples) -> DataFrame:
+    """TargetDeclarations: union of per-shape target selections.
+    ``triples``: a DataFrame or a validation.Graph, whose class
+    membership targetClass selects from."""
+    from .validation import Graph
+
+    graph = Graph.of(triples)
     pieces: list[DataFrame] = []
-    membership = None  # lazy: only built when a targetClass exists
     for lbl, sh in schema.shapes.items():
         for t in sh.targets:
-            if t.kind == "targetClass" and membership is None:
-                # includes instances of rdfs:subClassOf* subclasses;
-                # membership_for reuses session-shared derived state /
-                # the pre-answered subclass probe instead of running
-                # class_membership's eager full-scan isEmpty here
-                from .validation import membership_for
-                membership = membership_for(triples)
-            pieces.append(_assoc(target_rows(triples, t, membership),
+            # targetClass includes instances of rdfs:subClassOf* subclasses
+            membership = graph.membership if t.kind == "targetClass" else None
+            pieces.append(_assoc(target_rows(graph.triples, t, membership),
                                  lbl, t.kind))
     if not pieces:
         return spark.createDataFrame([], FOCUS_SCHEMA)

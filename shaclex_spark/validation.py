@@ -39,6 +39,7 @@ from .model import (
     NODE_KINDS,
     NUMERIC_DATATYPES,
     RDF_TYPE,
+    RDFS,
     TEMPORAL_DATATYPES,
     XSD_BOOLEAN,
     XSD_DATE,
@@ -47,6 +48,7 @@ from .model import (
     XSD_STRING,
 )
 from .paths import path_pairs
+from .scope import Scope
 from .shapes import NodeExpr, PropertyConstraint, SchemaDict, Shape, ValueSpec
 from .triggers import target_focus, target_rows
 
@@ -417,55 +419,68 @@ def _collect_classes(e: NodeExpr) -> set[str]:
 
 
 
-def direct_membership(triples: DataFrame) -> DataFrame:
-    """Direct rdf:type (inst, cls) relation — class_membership minus
-    the subClassOf closure, for graphs known to carry no subclass
-    arcs."""
-    return (triples.filter((F.col("pred") == RDF_TYPE)
-                           & (F.col("obj_kind") == "iri"))
-            .select(F.col("subj").alias("inst"),
-                    F.col("obj_value").alias("cls"))
-            .distinct())
+def _subclass_arcs(triples: DataFrame) -> DataFrame:
+    return triples.filter((F.col("pred") == RDFS + "subClassOf")
+                          & (F.col("obj_kind") == "iri"))
 
 
-def membership_for(triples: DataFrame) -> DataFrame:
-    """Class-membership relation, reusing session-shared derived state
-    when the triples object carries it (queries._kg_cached): the
-    persisted membership if already built, the probe-free direct
-    relation when the subclass question is pre-answered False —
-    otherwise the full subClassOf* closure. Every avoided probe is a
-    full-scan isEmpty driver action off the caller's critical path
-    (guide §1.2 serial term; measured 15 core-s per target_focus call
-    on the sf0.1 KG cache)."""
-    shared = getattr(triples, "_sx_type_arcs", None)
-    if shared is not None:
-        return shared
-    if getattr(triples, "_sx_has_subclass", None) is False:
-        return direct_membership(triples)
-    return class_membership(triples)
+class Graph:
+    """A triples relation and the facts read from it, each at most
+    once: whether it carries rdfs:subClassOf arcs (one limit(1) probe,
+    a full-scan driver action when it carries none), and class
+    membership (built by class_membership on first use). The validation
+    engine and triggers.target_focus read both from here, so every
+    consumer of one Graph shares one probe and one membership relation.
+
+    ``scope``: when given, membership is persisted into it — for a
+    long-lived graph read by many queries (the registry's session KG);
+    otherwise membership stays an unpersisted sub-plan."""
+
+    def __init__(self, triples: DataFrame, scope: Scope | None = None):
+        self.triples = triples
+        self._scope = scope
+        self._has_subclass: bool | None = None
+        self._membership: DataFrame | None = None
+
+    @classmethod
+    def of(cls, triples: "Graph | DataFrame") -> "Graph":
+        return triples if isinstance(triples, Graph) else cls(triples)
+
+    @property
+    def has_subclass(self) -> bool:
+        if self._has_subclass is None:
+            self._has_subclass = \
+                not _subclass_arcs(self.triples).limit(1).isEmpty()
+        return self._has_subclass
+
+    @property
+    def membership(self) -> DataFrame:
+        """(inst, cls) class membership, see class_membership."""
+        if self._membership is None:
+            m = class_membership(self)
+            self._membership = m if self._scope is None \
+                else self._scope.persist(m)
+        return self._membership
 
 
-def class_membership(triples: DataFrame) -> DataFrame:
+def class_membership(graph: Graph) -> DataFrame:
     """(inst, cls) membership with rdfs:subClassOf* closure — SHACL
     sh:class and targetClass include instances of subclasses
     (exercised by shacl/tests/core/node/class-001.ttl). The subclass
     graph is schema-sized: its transitive closure is a short driver
     loop; when no subclass edges exist (the common transcript-KG case)
     this is exactly the direct rdf:type relation."""
-    from .model import RDFS
-
-    direct = (triples.filter((F.col("pred") == RDF_TYPE)
-                             & (F.col("obj_kind") == "iri"))
+    direct = (graph.triples.filter((F.col("pred") == RDF_TYPE)
+                                   & (F.col("obj_kind") == "iri"))
               .select(F.col("subj").alias("inst"),
                       F.col("obj_value").alias("cls"))
               .distinct())
-    sub = (triples.filter((F.col("pred") == RDFS + "subClassOf")
-                          & (F.col("obj_kind") == "iri"))
+    if not graph.has_subclass:
+        return direct
+    sub = (_subclass_arcs(graph.triples)
            .select(F.col("subj").alias("child"),
                    F.col("obj_value").alias("parent"))
            .distinct())
-    if sub.isEmpty():
-        return direct
     closure = sub.localCheckpoint(eager=True)
     frontier = closure
     for _ in range(MAX_FIXPOINT_ROUNDS):
@@ -519,7 +534,8 @@ class ValidationResult:
 
 
 class ValidationEngine:
-    """Validate a triples DataFrame against a SchemaDict.
+    """Validate a triples relation (DataFrame or Graph) against a
+    SchemaDict.
 
     Usage::
         engine = ValidationEngine(spark, schema, triples)
@@ -528,55 +544,22 @@ class ValidationEngine:
     """
 
     def __init__(self, spark: SparkSession, schema: SchemaDict,
-                 triples: DataFrame, cache: bool = True):
+                 triples: Graph | DataFrame, cache: bool = True,
+                 scope: Scope | None = None):
         self.spark = spark
         self.schema = schema
-        self.triples = triples
+        self.graph = Graph.of(triples)
+        self.triples = self.graph.triples
         # cache=False skips candidate/conformance persisting — for
         # micro-graph batch harnesses (ShEx suite) where recomputing a
         # five-row subtree is cheaper than cache bookkeeping.
         self.cache = cache
-        self._type_arcs_df: DataFrame | None = None
-        self._persisted: list[DataFrame] = []
-
-    @property
-    def _type_arcs(self) -> DataFrame:
-        """Class-membership relation used by sh:class / targetClass —
-        computed lazily on first use (its subClassOf closure costs a
-        driver action; schemas without class constraints never pay it),
-        then reused across shapes."""
-        if self._type_arcs_df is None:
-            shared = getattr(self.triples, "_sx_type_arcs", None)
-            if shared is not None:
-                self._type_arcs_df = shared
-                return shared
-            if not self._has_subclass:
-                # no rdfs:subClassOf arcs: membership IS the direct
-                # rdf:type relation — skip class_membership's own
-                # isEmpty probe (one full-scan driver action per
-                # engine, guide §1.2: every removed action is fixed
-                # serial latency off the query)
-                self._type_arcs_df = direct_membership(self.triples)
-            else:
-                self._type_arcs_df = membership_for(self.triples)
-            if getattr(self.triples, "_sx_share_derived", False):
-                # session-shared KG cache (queries._kg_cached): the
-                # membership distinct re-ran its exchange in EVERY
-                # class-constrained query of the session — persist it
-                # alongside the triple cache; released together with it
-                self._type_arcs_df = self._type_arcs_df.persist()
-                try:
-                    self.triples._sx_type_arcs = self._type_arcs_df
-                except Exception:
-                    pass
-        return self._type_arcs_df
+        # owner of the candidate/conformance persists: the caller's
+        # scope, or the engine's own — close it once results are read
+        self.scope = scope or Scope()
 
     def _maybe_persist(self, df: DataFrame) -> DataFrame:
-        if not self.cache:
-            return df
-        df = df.persist()
-        self._persisted.append(df)
-        return df
+        return self.scope.persist(df) if self.cache else df
 
     @property
     def _big_schema(self) -> bool:
@@ -596,18 +579,6 @@ class ValidationEngine:
         if self._big_schema:
             return df.localCheckpoint(eager=False)
         return df
-
-    def unpersist_all(self) -> None:
-        """Release every DataFrame this engine persisted (candidate
-        sets, per-shape conformance). Call after consuming results in
-        long-lived sessions — leftover cached blocks degrade later
-        jobs."""
-        for df in self._persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._persisted.clear()
 
     def _is_transparent_ref(self, cj: NodeExpr) -> bool:
         """Refs to transparent shapes (hoisted nested sh:property) do
@@ -746,7 +717,7 @@ class ValidationEngine:
                 F.col(prefix + "kind") != "literal", F.col(prefix + "value")))
         for i, cls in enumerate(sorted(classes)):
             cname = f"__cls_{i}"
-            rhs = (self._type_arcs.filter(F.col("cls") == cls)
+            rhs = (self.graph.membership.filter(F.col("cls") == cls)
                    .select(F.col("inst").alias("__jv"), F.lit(True).alias(cname)))
             df = df.join(rhs, on="__jv", how="left")
             cls_cols[cls] = F.col(cname)
@@ -945,9 +916,9 @@ class ValidationEngine:
         if not targets:
             return self.spark.createDataFrame(
                 [], ", ".join(f"{c} string" for c in FCOLS))
-        membership = (self._type_arcs
+        membership = (self.graph.membership
                       if any(t.kind == "targetClass" for t in targets)
-                      and self._has_subclass else None)
+                      and self.graph.has_subclass else None)
         pieces = [target_rows(self.triples, t, membership) for t in targets]
         out = pieces[0]
         for p in pieces[1:]:
@@ -1000,7 +971,7 @@ class ValidationEngine:
             for tgt in rows.targets:
                 if tgt.kind == "targetSubjectsOf":
                     c = F.col("pred") == tgt.value
-                elif tgt.kind == "targetClass" and not self._has_subclass:
+                elif tgt.kind == "targetClass" and not self.graph.has_subclass:
                     c = ((F.col("pred") == RDF_TYPE)
                          & (F.col("obj_kind") == "iri")
                          & (F.col("obj_value") == tgt.value))
@@ -1179,33 +1150,6 @@ class ValidationEngine:
             # cardinality / hasValue / uniqueLang report rows (per focus)
             self._card_reports(reports, report_grouped, shape, pc, names)
         return grouped, ok
-
-    @property
-    def _has_subclass(self) -> bool:
-        """Does the graph carry any rdfs:subClassOf arc? Decides
-        whether a targetClass marker can use the raw rdf:type filter
-        (the common case) or must go through the subClassOf* closure.
-        One limit(1) probe, memoized per engine — the same scan
-        class_membership pays on first use."""
-        if getattr(self, "_has_subclass_memo", None) is None:
-            # cross-engine memo rides on the (session-cached) triples
-            # DataFrame object: every kg_* registry query builds a new
-            # engine over the SAME cached relation, and each probe is a
-            # full-scan driver action (guide §1.2 serial term)
-            shared = getattr(self.triples, "_sx_has_subclass", None)
-            if shared is not None:
-                self._has_subclass_memo = shared
-                return shared
-            from .model import RDFS
-
-            self._has_subclass_memo = not self.triples.filter(
-                (F.col("pred") == RDFS + "subClassOf")
-                & (F.col("obj_kind") == "iri")).limit(1).isEmpty()
-            try:
-                self.triples._sx_has_subclass = self._has_subclass_memo
-            except Exception:
-                pass
-        return self._has_subclass_memo
 
     def _card_reports(self, reports: list, grouped: DataFrame,
                       shape: Shape, pc: PropertyConstraint, names: dict) -> None:
@@ -1679,7 +1623,7 @@ class ValidationEngine:
             nonlocal focus_df
             if focus_df is None:
                 focus_df = target_focus(self.spark, self.schema,
-                                        self.triples)
+                                        self.graph)
             return focus_df
 
         ref_free = not self._ref_edges()

@@ -15,6 +15,15 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def scope():
+    """A Scope owning the test's persists, closed when the test ends."""
+    from shaclex_spark.scope import Scope
+
+    with Scope() as s:
+        yield s
+
+
 def needs_corpus(path: str):
     """Skip marker for a test that reads an external shaclex corpus
     file or directory: an absent corpus is a named, counted skip, not a

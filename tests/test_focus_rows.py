@@ -30,8 +30,8 @@ def _assert_sources_agree(spark, shapes, triples):
         assert conf_a == Counter(b.conformance.collect())
         assert Counter(a.report.collect()) == Counter(b.report.collect())
     finally:
-        by_targets.unpersist_all()
-        by_cand.unpersist_all()
+        by_targets.scope.close()
+        by_cand.scope.close()
 
 
 @pytest.mark.parametrize("name", ["CUSTOMER_SHAPES", "ORDER_REGION",
@@ -39,7 +39,7 @@ def _assert_sources_agree(spark, shapes, triples):
                                   "ORDER_REF_SHAPES"])
 def test_registry_shapes(spark, name):
     _assert_sources_agree(spark, getattr(Q, name),
-                          Q._kg_cached(spark, SF_DIR))
+                          Q.SESSION.graph(spark, SF_DIR))
 
 
 def test_pipeline_default_shapes(spark):

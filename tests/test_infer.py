@@ -13,7 +13,7 @@ XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
 XSD_STR = "http://www.w3.org/2001/XMLSchema#string"
 
 
-def test_infer_lattice_and_cardinality(spark):
+def test_infer_lattice_and_cardinality(spark, scope):
     rows = [
         (EX + "a", EX + "name", "literal", "A", XSD_STR, None),
         (EX + "b", EX + "name", "literal", "B", XSD_STR, None),
@@ -25,7 +25,8 @@ def test_infer_lattice_and_cardinality(spark):
     ]
     t = triples_df(spark, rows)
     focus = spark.createDataFrame([(EX + "a",), (EX + "b",)], "node string")
-    prof = {r.pred: r for r in infer_shape(t, focus, "S").collect()}
+    prof = {r.pred: r
+            for r in infer_shape(t, focus, "S", scope=scope).collect()}
     assert prof[EX + "name"].constraint == XSD_STR
     assert (prof[EX + "name"].min_card, prof[EX + "name"].max_card) == (1, "1")
     assert prof[EX + "age"].max_card == "*"       # a has 2
@@ -33,13 +34,14 @@ def test_infer_lattice_and_cardinality(spark):
     assert prof[EX + "friend"].constraint == "IRI"
     assert prof[EX + "mixed"].constraint == "Any"
     js = inferred_to_shape_json(
-        [r.asDict() for r in infer_shape(t, focus, "S").collect()], "S")
+        [r.asDict()
+         for r in infer_shape(t, focus, "S", scope=scope).collect()], "S")
     assert js["label"] == "S"
     assert any(c["path"] == EX + "name" and c.get("maxCount") == 1
                for c in js["constraints"])
 
 
-def test_infer_follow_on(spark):
+def test_infer_follow_on(spark, scope):
     rows = [
         (EX + "a", EX + "derivedFrom", "iri", EX + "src1", None, None),
         (EX + "b", EX + "derivedFrom", "iri", EX + "src2", None, None),
@@ -49,7 +51,8 @@ def test_infer_follow_on(spark):
     t = triples_df(spark, rows)
     focus = spark.createDataFrame([(EX + "a",), (EX + "b",)], "node string")
     prof = infer_schema(t, focus, "Doc",
-                        follow_on=[("derivedFrom$", "SourceShape")])
+                        follow_on=[("derivedFrom$", "SourceShape")],
+                        scope=scope)
     rows_out = prof.collect()
     by_shape = {}
     for r in rows_out:
@@ -58,7 +61,7 @@ def test_infer_follow_on(spark):
     assert by_shape["SourceShape"][EX + "url"].constraint == XSD_STR
 
 
-def test_infer_label_decoration(spark):
+def test_infer_label_decoration(spark, scope):
     """rdfs:label decoration (InferredShape.scala:74-85, getLabel
     :108-125): the predicate IRI's rdfs:label in the requested
     language becomes an annotation; other languages are skipped."""
@@ -72,7 +75,8 @@ def test_infer_label_decoration(spark):
     ]
     t = triples_df(spark, rows)
     focus = spark.createDataFrame([(EX + "a",)], "node string")
-    dec = infer_schema(t, focus, "S", add_label_lang="en").collect()
+    dec = infer_schema(t, focus, "S", add_label_lang="en",
+                       scope=scope).collect()
     by_pred = {r.pred: r for r in dec}
     assert by_pred[EX + "name"].label == "name"          # en, not fr
     assert by_pred[EX + "age"].label is None             # unlabeled pred

@@ -218,7 +218,7 @@ def test_stratified_sample_plan_is_pure_filter(spark):
         assert bad not in plan, f"{bad} found in plan:\n{plan}"
 
 
-def test_dedup_cluster_transitive_chain(spark):
+def test_dedup_cluster_transitive_chain(spark, scope):
     """Near-dup clustering must be transitive: A~B and B~C put A,B,C
     in ONE cluster with min-id canonical even when A and C are not
     themselves a near-dup pair."""
@@ -232,7 +232,8 @@ def test_dedup_cluster_transitive_chain(spark):
     docs = spark.createDataFrame(
         [(5, a), (9, b), (7, c), (42, "totally different words here")],
         "doc_id long, text string")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.9, shingle_k=1)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.9, shingle_k=1,
+                                scope=scope)
     got_pairs = {(r["a"], r["b"]) for r in pairs.collect()}
     assert (5, 9) in got_pairs and (7, 9) in got_pairs
     assert (5, 7) not in got_pairs  # chain, not clique
