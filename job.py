@@ -19,8 +19,10 @@ Local smoke run:
 
 The batch mode is pipeline.run_pipeline (extract → link → validate →
 bucketed triples/conformance/report/lineage parquet with dynamic
-partition overwrite; --resume re-processes only dirty buckets and —
-for arc-local schemas — re-validates only affected nodes). The
+partition overwrite; --resume re-processes only dirty buckets, plus
+clean ones whose entity names drift when the stored mention dimension
+is re-linked, and — for arc-local schemas — re-validates only affected
+nodes). The
 streaming mode drains new files through streaming.run_streaming_
 pipeline (checkpointed, idempotent batch replay) and then validates
 the accumulated table.

@@ -511,6 +511,7 @@ def apply_mapping(triples: DataFrame, mapping: DataFrame,
 
 
 def canonicalize_triples(triples: DataFrame,
+                         mentions: DataFrame | None = None,
                          mention_prefix: str = MENTION_PREFIX,
                          entity_prefix: str = ENTITY_PREFIX,
                          threshold: float = JACCARD_THRESHOLD) -> tuple[DataFrame, DataFrame]:
@@ -521,9 +522,15 @@ def canonicalize_triples(triples: DataFrame,
     (distinct mentions ≪ triples) and is broadcast into the rewrite
     joins — per north_star 'broadcast of the shape/schema dictionary'
     applies equally here. Composition of extract_mentions →
-    link_mentions → apply_mapping (streaming reuses the pieces with an
-    ACCUMULATED mention relation for cross-batch consistency)."""
-    mentions = extract_mentions(triples, mention_prefix)
+    link_mentions → apply_mapping.
+
+    ``mentions``: the one-column (mention) relation of distinct mention
+    strings to link; defaults to the triples' own. Late-bound callers
+    pass a whole mention dimension (streaming's accumulated mentions,
+    batch resume's stored clean-bucket mentions plus the new ones), so
+    an entity is named as it would be over all of the input."""
+    if mentions is None:
+        mentions = extract_mentions(triples, mention_prefix)
     mapping, small_pairs = link_mentions(mentions, mention_prefix,
                                          entity_prefix, threshold)
     return apply_mapping(triples, mapping, small_pairs), mapping

@@ -13,10 +13,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extraction import extract_triples
-from .linking import canonicalize_triples
+from .linking import MENTION_PREFIX, canonicalize_triples, extract_mentions
+from .model import RDF_TYPE
+from .scope import Scope
 from .shapes import SchemaDict
 from .triggers import shape_map_focus, target_focus
 from .validation import Graph, ValidationEngine, ValidationResult
@@ -74,14 +77,17 @@ def build_kg(spark: SparkSession, transcripts: DataFrame,
 def validate_kg(spark: SparkSession, triples: DataFrame,
                 shapes_json: list[dict] | None = None,
                 shape_map: list[dict] | None = None,
-                focus_filter: DataFrame | None = None) -> ValidationResult:
+                focus_filter: DataFrame | None = None,
+                scope: Scope | None = None) -> ValidationResult:
     """``focus_filter``: optional one-column (node) relation; when set,
     only focus nodes in it are validated (incremental resume path —
-    the caller guarantees soundness via _arc_local_schema)."""
+    the caller guarantees soundness via _arc_local_schema).
+    ``scope``: owner of the engine's persists (default: the engine's
+    own, never released)."""
     schema = SchemaDict.from_json(shapes_json or DEFAULT_SHAPES)
     plain = triples.select("subj", "pred", "obj_kind", "obj_value",
                            "obj_dt", "obj_lang")
-    engine = ValidationEngine(spark, schema, plain)
+    engine = ValidationEngine(spark, schema, plain, scope=scope)
     focus = shape_map_focus(spark, plain, shape_map) if shape_map else None
     if focus_filter is not None:
         if focus is None:
@@ -127,6 +133,95 @@ def _arc_local_schema(shapes_json: list[dict] | None) -> str | bool:
     return mode
 
 
+ARC_COLS = ["subj", "pred", "obj_kind", "obj_value"]
+
+
+def relinked(prior: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Mapping drift: the rows of a stored mapping ``prior`` whose
+    mention ``mapping`` now links to another canonical IRI (clusters
+    merged, or their least variant came or went), with the old IRI
+    renamed ``prior_iri``."""
+    return (prior.withColumnRenamed("canonical_iri", "prior_iri")
+            .join(mapping, on="mention_iri")
+            .filter(F.col("prior_iri") != F.col("canonical_iri")))
+
+
+def _ends(arcs: DataFrame) -> DataFrame:
+    # subjects + ALL object terms: an iri/bnode object's in-arc
+    # neighbourhood changes too (inverse paths are arc-local-allowed),
+    # and a LITERAL object can itself be a focus term under
+    # targetObjectsOf (round-3 ADVICE soundness fix: a literal focus
+    # created or removed by the delta must (re)validate / drop its
+    # stale row). Non-focus literals only add cheap candidates that
+    # the focus semi-join discards.
+    return (arcs.select(F.col("subj").alias("node"))
+            .unionByName(arcs.select(F.col("obj_value").alias("node"))))
+
+
+def _incident(triples: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The arcs of ``triples`` with a node of the one-column (node)
+    relation ``nodes`` at either end: two semi-joins, cost ∝ the size
+    of ``nodes``, not of the graph."""
+    at_subj = triples.join(nodes.select(F.col("node").alias("subj")),
+                           on="subj", how="left_semi")
+    at_obj = triples.join(nodes.select(F.col("node").alias("obj_value")),
+                          on="obj_value", how="left_semi")
+    return at_subj.select(*ARC_COLS).unionByName(at_obj.select(*ARC_COLS))
+
+
+def revalidate(spark: SparkSession, triples: DataFrame,
+               shapes_json: list[dict] | None,
+               prior: tuple[DataFrame, DataFrame] | None,
+               dirty: DataFrame | None, drift: DataFrame | None,
+               scope: Scope) -> tuple[DataFrame, DataFrame, int | None]:
+    """Conformance and report of ``triples`` after a delta, and the
+    number of nodes re-validated (None: the whole graph was).
+
+    ``prior``: the (conformance, report) before the delta, or None.
+    The delta is ``dirty``, the arcs it added or removed, plus
+    ``drift`` (relinked): both IRIs of a re-linked mention are renamed
+    nodes, so their arcs are dirty too. Semi-naive: only nodes the
+    delta touches re-validate; all others keep their prior rows.
+    Sound under _arc_local_schema; in "class" mode a verdict also
+    reads the neighbours' rdf:type arcs, and a dirty rdfs:subClassOf
+    arc (the closure is global) falls back to the whole graph, as
+    does a missing prior."""
+    mode = prior is not None and _arc_local_schema(shapes_json)
+    if mode:
+        renamed = (drift.select(F.col("prior_iri").alias("node"))
+                   .unionByName(drift.select(F.col("canonical_iri")
+                                             .alias("node"))))
+        dirty = (dirty.select(*ARC_COLS)
+                 .unionByName(_incident(triples, renamed)))
+        if mode == "class" and Graph(dirty).has_subclass:
+            mode = False
+    if not mode:
+        result = validate_kg(spark, triples, shapes_json, scope=scope)
+        return result.conformance, result.report, None
+
+    affected = _ends(dirty).unionByName(renamed)
+    if mode == "class":
+        typed = (dirty.filter(F.col("pred") == RDF_TYPE)
+                 .select(F.col("subj").alias("node")))
+        affected = affected.unionByName(_ends(_incident(triples, typed)))
+    affected = affected.distinct().localCheckpoint(eager=True)
+    n_affected = affected.count()
+    # snapshot the prior tables: the caller overwrites them with the
+    # merged result, which would otherwise read the files it replaces
+    prior_conf, prior_report = (df.localCheckpoint(eager=True)
+                                for df in prior)
+    result = validate_kg(spark, triples, shapes_json,
+                         focus_filter=affected, scope=scope)
+    conformance = (prior_conf.join(affected, on="node", how="left_anti")
+                   .unionByName(result.conformance
+                                .select(*prior_conf.columns)))
+    report = (prior_report.join(
+        affected.withColumnRenamed("node", "focus_node"),
+        on="focus_node", how="left_anti")
+        .unionByName(result.report.select(*prior_report.columns)))
+    return conformance, report, n_affected
+
+
 N_BUCKETS = 64
 
 
@@ -146,16 +241,22 @@ def input_lineage(transcripts: DataFrame) -> DataFrame:
                  .alias("input_fingerprint")))
 
 
+def _read(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when there is none."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
 def dirty_buckets(spark: SparkSession, transcripts: DataFrame,
                   output_dir: str) -> DataFrame | None:
     """Buckets whose input changed since the last run (or None = all
     dirty: no previous lineage manifest). Idempotent-restart core
     (north_rule: 'resumable from checkpoint with per-partition
     lineage + metrics')."""
-    lineage_path = os.path.join(output_dir, "input_lineage")
-    try:
-        prev = spark.read.parquet(lineage_path)
-    except Exception:
+    prev = _read(spark, os.path.join(output_dir, "input_lineage"))
+    if prev is None:
         return None
     cur = input_lineage(transcripts)
     return (cur.join(prev.withColumnRenamed("input_fingerprint", "prev_fp")
@@ -172,10 +273,9 @@ def lineage_metrics(triples: DataFrame) -> DataFrame:
     """Per-partition lineage + triple-count metrics (north_rule):
     one row per conv_id partition bucket with triple count and a
     content fingerprint — the resume manifest. Bucketing key matches
-    the write partitioning (salted hash(conv_id))."""
-    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(64)).alias("bucket")
+    the write partitioning (bucket_col)."""
     return (triples
-            .groupBy(bucket)
+            .groupBy(bucket_col().alias("bucket"))
             .agg(F.count("*").alias("n_triples"),
                  F.countDistinct("conv_id").alias("n_convs"),
                  # order-independent content fingerprint per bucket
@@ -188,167 +288,127 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  shapes_json: list[dict] | None = None,
                  resume: bool = False) -> dict:
     """Full job. If output_dir is set, materializes triples + report +
-    lineage as parquet partitioned by bucket(conv_id-hash) — the
-    Iceberg-table stand-in available in this environment (same layout:
-    partition column + snapshot-style dynamic-partition overwrite).
+    lineage + the mention dimension as parquet partitioned by
+    bucket(conv_id-hash) — the Iceberg-table stand-in available in
+    this environment (same layout: partition column + snapshot-style
+    dynamic-partition overwrite) — and releases what it persisted once
+    the tables are written.
 
     resume=True: only buckets whose input lineage changed are
     re-extracted and overwritten (dynamic partition overwrite); clean
-    buckets keep their existing output — idempotent restart."""
-    n_skipped = 0
-    dirty_list: list | None = None
-    if resume and output_dir:
-        dirty = dirty_buckets(spark, transcripts, output_dir)
-        if dirty is not None:
-            dirty_list = [r.bucket for r in dirty.collect()]
-            n_skipped = N_BUCKETS - len(dirty_list)
-            transcripts = transcripts.filter(
-                bucket_col().isin(dirty_list) if dirty_list else F.lit(False))
-    triples, mapping = build_kg(spark, transcripts)
-    triples = triples.withColumn("bucket", bucket_col())
-    n_affected = None
-    if output_dir:
-        # triples land FIRST (dynamic partition overwrite touches only
-        # dirty buckets); validation + lineage then run over the FULL
-        # on-disk table, so on resume the conformance/report/lineage of
-        # CLEAN buckets is regenerated from their untouched triples
-        # instead of being clobbered by dirty-only output.
-        #
-        # Incremental re-validation: when the schema is ARC-LOCAL
-        # (_arc_local_schema — no refs/classes/multi-step paths), a
-        # node's verdict can change only if one of its incident arcs
-        # changed, so only nodes touching the dirty buckets' OLD or NEW
-        # triples re-validate; clean nodes keep their prior conformance
-        # and report rows. At 100 TB that turns a full-graph validation
-        # into one ∝ the dirty fraction (the per-constraint joins are
-        # candidate-driven, and the candidate set shrinks to the
-        # affected nodes). Schemas with refs fall back to whole-graph
-        # validation (cross-bucket dependencies make per-node reuse
-        # unsound).
-        tri_path = os.path.join(output_dir, "triples")
-        incr_mode = (_arc_local_schema(shapes_json)
-                     if resume and dirty_list is not None else False)
-        can_incr = bool(incr_mode)
-        old_dirty = prior_conf = prior_report = None
-        dirty_filter = (F.col("bucket").isin(dirty_list) if dirty_list
-                        else F.lit(False))
-        if can_incr:
-            try:
-                # snapshot BEFORE the overwrite (eager: the lazy plans
-                # would otherwise read the rewritten files)
-                old_dirty = (spark.read.parquet(tri_path)
-                             .filter(dirty_filter)
-                             .select("subj", "pred", "obj_kind",
-                                     "obj_value")
-                             .localCheckpoint(eager=True))
-                prior_conf = spark.read.parquet(
-                    os.path.join(output_dir, "conformance")) \
-                    .localCheckpoint(eager=True)
-                prior_report = spark.read.parquet(
-                    os.path.join(output_dir, "report")) \
-                    .localCheckpoint(eager=True)
-            except Exception:
-                can_incr = False
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        triples.write.mode("overwrite").partitionBy("bucket") \
-            .parquet(tri_path)
-        all_triples = spark.read.parquet(tri_path)
-        if can_incr:
-            new_dirty = all_triples.filter(dirty_filter) \
-                .select("subj", "pred", "obj_kind", "obj_value")
-            dirty_all = old_dirty.unionByName(new_dirty)
-            if incr_mode == "class":
-                # the subclass closure is GLOBAL: a dirty subClassOf
-                # arc can flip membership of nodes in clean buckets →
-                # whole-graph re-validation (rare: ontology edits)
-                can_incr = not Graph(dirty_all).has_subclass
-
-        if can_incr:
-            def _nodes(df: DataFrame) -> DataFrame:
-                # subjects + ALL object terms: an iri/bnode object's
-                # in-arc neighbourhood changes too (inverse paths are
-                # arc-local-allowed), and a LITERAL object can itself
-                # be a focus term under targetObjectsOf (round-3
-                # ADVICE soundness fix: a literal focus created or
-                # removed by a dirty bucket must (re)validate / drop
-                # its stale row). Non-focus literals only add cheap
-                # candidates that the focus semi-join discards.
-                return (df.select(F.col("subj").alias("node"))
-                        .unionByName(
-                            df.select(F.col("obj_value").alias("node"))))
-
-            affected = _nodes(dirty_all).distinct()
-            if incr_mode == "class":
-                # class constraints read the VALUE node's rdf:type
-                # arcs: a dirty type-arc on node t affects every node
-                # adjacent to t (out-path values t, inverse-path
-                # values t). Two semi-joins against the full table —
-                # cost ∝ dirty fraction, not graph size.
-                from .queries import RDF_TYPE
-                t_subj = (dirty_all.filter(F.col("pred") == RDF_TYPE)
-                          .select(F.col("subj").alias("node")).distinct())
-                in_nb = (all_triples
-                         .join(t_subj.select(F.col("node")
-                                             .alias("obj_value")),
-                               on="obj_value", how="left_semi")
-                         .select(F.col("subj").alias("node")))
-                out_nb = (all_triples
-                          .join(t_subj.select(F.col("node")
-                                              .alias("subj")),
-                                on="subj", how="left_semi")
-                          .select(F.col("obj_value").alias("node")))
-                affected = (affected.unionByName(t_subj)
-                            .unionByName(in_nb).unionByName(out_nb)
-                            .distinct())
-            affected = affected.localCheckpoint(eager=True)
-            n_affected = affected.count()
-            result = validate_kg(spark, all_triples, shapes_json,
-                                 focus_filter=affected)
-            conf_df = (prior_conf.join(affected, on="node", how="left_anti")
-                       .unionByName(result.conformance
-                                    .select(*prior_conf.columns)))
-            report_df = (prior_report.join(
-                affected.withColumnRenamed("node", "focus_node"),
-                on="focus_node", how="left_anti")
-                .unionByName(result.report.select(*prior_report.columns)))
-        else:
-            result = validate_kg(spark, all_triples, shapes_json)
-            conf_df, report_df = result.conformance, result.report
-        lineage = lineage_metrics(all_triples)
-    else:
-        all_triples = triples
+    buckets keep their existing output — idempotent restart. Linking
+    is late-bound, as in streaming: the stored mentions of the clean
+    buckets plus the dirty buckets' new ones are re-linked as a whole,
+    and a clean bucket holding a mention whose canonical IRI drifted
+    is rewritten too, so the result equals a build from scratch.
+    Validation then re-validates only what the rewritten buckets and
+    the drift touch (revalidate). An output with no manifest or no
+    mention dimension resumes as a full rebuild."""
+    if not output_dir:
+        triples, mapping = build_kg(spark, transcripts)
+        triples = triples.withColumn("bucket", bucket_col())
         result = validate_kg(spark, triples, shapes_json)
-        conf_df, report_df = result.conformance, result.report
-        lineage = lineage_metrics(triples)
-    out = {
-        "triples": all_triples,
+        return {"triples": triples, "mapping": mapping,
+                "conformance": result.conformance, "report": result.report,
+                "lineage": lineage_metrics(triples),
+                "n_buckets_skipped": 0, "n_affected_nodes": None}
+    with Scope() as scope:
+        return _build_into(spark, transcripts, output_dir, shapes_json,
+                           resume, scope)
+
+
+def _build_into(spark: SparkSession, transcripts: DataFrame,
+                output_dir: str, shapes_json: list[dict] | None,
+                resume: bool, scope: Scope) -> dict:
+    def path(table: str) -> str:
+        return os.path.join(output_dir, table)
+
+    # rewrite: the buckets to (re)build, None = all; kept: the mention
+    # dimension rows (bucket, mention_iri, canonical_iri) of the others
+    rewrite = kept = prior = None
+    if resume:
+        dirty = dirty_buckets(spark, transcripts, output_dir)
+        stored = _read(spark, path("mentions"))
+        if dirty is not None and stored is not None:
+            rewrite = [r.bucket for r in dirty.collect()]
+            # eager: the mentions table is overwritten below
+            kept = (stored.filter(~F.col("bucket").isin(rewrite))
+                    .localCheckpoint(eager=True))
+            conformance, report = (_read(spark, path("conformance")),
+                                   _read(spark, path("report")))
+            if conformance is not None and report is not None:
+                prior = (conformance, report)
+
+    def extract(buckets: list | None) -> DataFrame:
+        source = (transcripts if buckets is None
+                  else transcripts.filter(bucket_col().isin(buckets)))
+        return scope.persist(extract_triples(source))
+
+    candidates = extract(rewrite)
+    mentions = extract_mentions(candidates)
+    if kept is not None:
+        kept_mentions = kept.select(F.expr(
+            f"substr(mention_iri, {len(MENTION_PREFIX) + 1})")
+            .alias("mention"))
+        mentions = mentions.unionByName(kept_mentions).distinct()
+    canonical, mapping = canonicalize_triples(candidates, mentions)
+    drift = None
+    if kept is not None:
+        drift = relinked(kept, mapping)
+        drifted = [r.bucket for r in
+                   drift.select("bucket").distinct().collect()]
+        if drifted:
+            # a clean bucket that holds a drifted mention is dirty: its
+            # stored triples name the entity by its old IRI
+            rewrite += drifted
+            candidates = candidates.unionByName(extract(drifted))
+            canonical, mapping = canonicalize_triples(candidates, mentions)
+
+    tri_path = path("triples")
+    old = None
+    if prior is not None:
+        # the rewritten buckets' arcs BEFORE the overwrite (eager: the
+        # lazy plan would read the rewritten files)
+        old = (spark.read.parquet(tri_path)
+               .filter(F.col("bucket").isin(rewrite))
+               .select(*ARC_COLS).localCheckpoint(eager=True))
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    canonical.withColumn("bucket", bucket_col()).write.mode("overwrite") \
+        .partitionBy("bucket").parquet(tri_path)
+    # validation + lineage run over the FULL on-disk table, so on
+    # resume clean buckets keep their rows instead of being clobbered
+    # by rewrite-only output
+    triples = spark.read.parquet(tri_path)
+    dirty_arcs = None if old is None \
+        else old.unionByName(canonical.select(*ARC_COLS))
+    conformance, report, n_affected = revalidate(
+        spark, triples, shapes_json, prior, dirty_arcs, drift, scope)
+    conformance.write.mode("overwrite").parquet(path("conformance"))
+    report.write.mode("overwrite").parquet(path("report"))
+    # the mention dimension after the tables it names: a run that
+    # crashes before this point re-detects the same drift on resume
+    ends = candidates.select(bucket_col().alias("bucket"), F.explode(F.array(
+        "subj", F.when(F.col("obj_kind") == "iri", F.col("obj_value"))))
+        .alias("mention_iri"))
+    dimension = (ends.join(mapping, on="mention_iri")
+                 .select("bucket", "mention_iri", "canonical_iri").distinct())
+    if kept is not None:
+        dimension = dimension.unionByName(
+            kept.filter(~F.col("bucket").isin(rewrite)))
+    dimension.write.mode("overwrite").parquet(path("mentions"))
+    lineage = lineage_metrics(triples)
+    lineage.write.mode("overwrite").parquet(path("lineage"))
+    # input lineage manifest LAST: written only after the data lands,
+    # so a crashed run re-processes its buckets
+    input_lineage(transcripts).write.mode("overwrite") \
+        .parquet(path("input_lineage"))
+    return {
+        "triples": triples,
         "mapping": mapping,
-        "conformance": conf_df,
-        "report": report_df,
+        "conformance": spark.read.parquet(path("conformance")),
+        "report": spark.read.parquet(path("report")),
         "lineage": lineage,
-        "n_buckets_skipped": n_skipped,
+        "n_buckets_skipped": 0 if rewrite is None
+        else N_BUCKETS - len(rewrite),
         "n_affected_nodes": n_affected,
     }
-    if output_dir:
-        conf_df.write.mode("overwrite") \
-            .parquet(os.path.join(output_dir, "conformance"))
-        report_df.write.mode("overwrite") \
-            .parquet(os.path.join(output_dir, "report"))
-        out["lineage"].write.mode("overwrite") \
-            .parquet(os.path.join(output_dir, "lineage"))
-        # input lineage manifest LAST: written only after the data
-        # lands, so a crashed run re-processes its buckets
-        input_lineage_all = input_lineage(transcripts)
-        if resume:
-            try:
-                prev = spark.read.parquet(
-                    os.path.join(output_dir, "input_lineage"))
-                keep = prev.join(input_lineage_all.select("bucket"),
-                                 on="bucket", how="left_anti")
-                input_lineage_all = input_lineage_all.unionByName(keep)
-            except Exception:
-                pass
-        input_lineage_all = input_lineage_all.localCheckpoint(eager=True)
-        input_lineage_all.write.mode("overwrite") \
-            .parquet(os.path.join(output_dir, "input_lineage"))
-    return out

@@ -42,8 +42,9 @@ Reference mapping: the reference CLI is strictly batch
 (Main.scala:256-261 parses one file); this module is the
 Spark-native extension of SURVEY.md §3.1's lifecycle to continuous
 ingestion. Validation runs whole-graph over the canonical view, or
-incrementally via pipeline.validate_streaming_incremental (only nodes
-touched by new batches / re-linked mentions re-validate).
+incrementally via validate_streaming_incremental below (only nodes
+touched by new batches / re-linked mentions re-validate, through the
+same pipeline.revalidate as batch resume).
 """
 
 from __future__ import annotations
@@ -53,9 +54,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .extraction import extract_triples
-from .linking import apply_mapping, extract_mentions, link_mentions
-from .pipeline import bucket_col
-from .validation import Graph
+from .linking import canonicalize_triples, extract_mentions
+from .pipeline import bucket_col, relinked, revalidate
+from .scope import Scope
 
 TRANSCRIPTS_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -135,9 +136,7 @@ def read_canonical_triples(spark: SparkSession, output_dir: str
         mentions = spark.read.parquet(men_path)
     except Exception:
         return None, None  # zero input files: nothing landed
-    mapping, small_pairs = link_mentions(
-        mentions.select("mention").distinct())
-    return apply_mapping(raw, mapping, small_pairs), mapping
+    return canonicalize_triples(raw, mentions.select("mention").distinct())
 
 
 def run_streaming_pipeline(spark: SparkSession, input_dir: str,
@@ -190,121 +189,50 @@ def validate_streaming_incremental(spark: SparkSession, output_dir: str,
     judge task: per-batch validation scope ∝ batch size, output equal
     to whole-graph).
 
-    Soundness rides pipeline._arc_local_schema (same gate as batch
-    resume). The extra streaming hazard is mapping drift: a later
-    batch can merge clusters, renaming a canonical IRI that OLD
-    batches' triples resolve to — so the dirty arc set is (canonical
-    triples of new batches) ∪ (canonical triples incident to any
-    changed canonical IRI), and prior rows keyed by a superseded
-    canonical IRI are dropped. Schemas outside the gate (refs,
-    multi-step paths, dirty subClassOf arcs) fall back to whole-graph
-    validation. State under ``output_dir``: conformance/, report/,
-    val_mapping/ (mapping snapshot), val_batches/ (validated ids)."""
-    from .pipeline import _arc_local_schema, validate_kg
-
+    The delta fed to pipeline.revalidate (shared with batch resume,
+    same soundness gate) is the canonical triples of the new batches
+    plus the mapping drift: a later batch can merge clusters, renaming
+    a canonical IRI that OLD batches' triples resolve to, so both IRIs
+    of a re-linked mention re-validate with all their arcs, and prior
+    rows keyed by a superseded canonical IRI are dropped. State under
+    ``output_dir``: conformance/, report/, val_mapping/ (mapping
+    snapshot), val_batches/ (validated ids)."""
     canonical, mapping = read_canonical_triples(spark, output_dir)
     if canonical is None:
         return {"conformance": None, "report": None, "mode": "empty",
                 "n_affected": None}
-    canonical = canonical.persist()
     conf_path = os.path.join(output_dir, "conformance")
     rep_path = os.path.join(output_dir, "report")
     map_path = os.path.join(output_dir, "val_mapping")
     bat_path = os.path.join(output_dir, "val_batches")
 
-    mode = _arc_local_schema(shapes_json)
-    prior_conf = prior_report = prior_map = prior_batches = None
-    if mode:
+    with Scope() as scope:
+        canonical = scope.persist(canonical)
+        prior = dirty = drift = None
         try:
-            prior_conf = spark.read.parquet(conf_path) \
-                .localCheckpoint(eager=True)
-            prior_report = spark.read.parquet(rep_path) \
-                .localCheckpoint(eager=True)
+            prior = (spark.read.parquet(conf_path),
+                     spark.read.parquet(rep_path))
             prior_map = spark.read.parquet(map_path)
             prior_batches = spark.read.parquet(bat_path)
         except Exception:
-            prior_conf = None
-
-    n_affected = None
-    if prior_conf is None:
-        result = validate_kg(spark, canonical, shapes_json)
-        conf_df, report_df = result.conformance, result.report
-        run_mode = "full"
-    else:
-        new_ids = (canonical.select("batch_id").distinct()
-                   .join(prior_batches, on="batch_id", how="left_anti"))
-        # mapping drift: new mention, or same mention → new canonical
-        pm = (prior_map
-              .withColumnRenamed("canonical_iri", "prior_canon"))
-        drift = (mapping.join(pm, on="mention_iri", how="left")
-                 .filter(F.col("prior_canon").isNull()
-                         | (F.col("prior_canon")
-                            != F.col("canonical_iri"))))
-        changed_new = drift.select(F.col("canonical_iri").alias("node"))
-        changed_old = (drift.filter(F.col("prior_canon").isNotNull())
-                       .select(F.col("prior_canon").alias("node")))
-        changed = changed_new.unionByName(changed_old).distinct() \
-            .localCheckpoint(eager=True)
-        # dirty arcs: new batches' triples + all triples incident to a
-        # re-linked canonical node (two semi-joins ∝ changed fraction)
-        cols = ["subj", "pred", "obj_kind", "obj_value"]
-        d_new = canonical.join(new_ids, on="batch_id", how="left_semi") \
-            .select(*cols)
-        d_subj = canonical.join(
-            changed.select(F.col("node").alias("subj")),
-            on="subj", how="left_semi").select(*cols)
-        d_obj = canonical.join(
-            changed.select(F.col("node").alias("obj_value")),
-            on="obj_value", how="left_semi").select(*cols)
-        dirty = d_new.unionByName(d_subj).unionByName(d_obj)
-        if mode == "class" and Graph(dirty).has_subclass:
-            result = validate_kg(spark, canonical, shapes_json)
-            conf_df, report_df = result.conformance, result.report
-            run_mode = "full"
-        else:
-            affected = (dirty.select(F.col("subj").alias("node"))
-                        .unionByName(dirty.select(F.col("obj_value")
-                                                  .alias("node")))
-                        .unionByName(changed))
-            if mode == "class":
-                from .queries import RDF_TYPE
-                t_subj = (dirty.filter(F.col("pred") == RDF_TYPE)
-                          .select(F.col("subj").alias("node")).distinct())
-                in_nb = (canonical.join(
-                    t_subj.select(F.col("node").alias("obj_value")),
-                    on="obj_value", how="left_semi")
-                    .select(F.col("subj").alias("node")))
-                out_nb = (canonical.join(
-                    t_subj.select(F.col("node").alias("subj")),
-                    on="subj", how="left_semi")
-                    .select(F.col("obj_value").alias("node")))
-                affected = (affected.unionByName(t_subj)
-                            .unionByName(in_nb).unionByName(out_nb))
-            affected = affected.distinct().localCheckpoint(eager=True)
-            n_affected = affected.count()
-            result = validate_kg(spark, canonical, shapes_json,
-                                 focus_filter=affected)
-            conf_df = (prior_conf.join(affected, on="node",
-                                       how="left_anti")
-                       .unionByName(result.conformance
-                                    .select(*prior_conf.columns)))
-            report_df = (prior_report.join(
-                affected.withColumnRenamed("node", "focus_node"),
-                on="focus_node", how="left_anti")
-                .unionByName(result.report
-                             .select(*prior_report.columns)))
-            run_mode = "incremental"
-
-    conf_df = conf_df.localCheckpoint(eager=True)
-    report_df = report_df.localCheckpoint(eager=True)
-    conf_df.write.mode("overwrite").parquet(conf_path)
-    report_df.write.mode("overwrite").parquet(rep_path)
-    mapping.write.mode("overwrite").parquet(map_path)
-    canonical.select("batch_id").distinct().write.mode("overwrite") \
-        .parquet(bat_path)
-    canonical.unpersist()
+            prior = None
+        if prior is not None:
+            new_ids = (canonical.select("batch_id").distinct()
+                       .join(prior_batches, on="batch_id", how="left_anti"))
+            dirty = canonical.join(new_ids, on="batch_id", how="left_semi")
+            drift = relinked(prior_map, mapping)
+        conf_df, report_df, n_affected = revalidate(
+            spark, canonical, shapes_json, prior, dirty, drift, scope)
+        conf_df = conf_df.localCheckpoint(eager=True)
+        report_df = report_df.localCheckpoint(eager=True)
+        conf_df.write.mode("overwrite").parquet(conf_path)
+        report_df.write.mode("overwrite").parquet(rep_path)
+        mapping.write.mode("overwrite").parquet(map_path)
+        canonical.select("batch_id").distinct().write.mode("overwrite") \
+            .parquet(bat_path)
     return {"conformance": conf_df, "report": report_df,
-            "mode": run_mode, "n_affected": n_affected}
+            "mode": "full" if n_affected is None else "incremental",
+            "n_affected": n_affected}
 
 
 def turn_rate(transcripts: DataFrame, window: str = "1 hour",

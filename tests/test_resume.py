@@ -45,6 +45,10 @@ def test_resume_skips_clean_buckets(spark):
         first_buckets = {r.bucket for r in
                          first["lineage"].select("bucket").collect()}
         assert buckets == first_buckets
+        # one bucket definition: lineage and triples agree on its type
+        assert spark.read.parquet(f"{out_dir}/lineage").schema["bucket"] \
+            .dataType == spark.read.parquet(f"{out_dir}/triples") \
+            .schema["bucket"].dataType
         # incremental re-validation (arc-local DEFAULT_SHAPES): only
         # nodes incident to the dirty buckets' old/new triples were
         # re-validated — far fewer than the whole focus set
@@ -236,3 +240,109 @@ def test_literal_focus_resume_sound(spark):
                for r in full.conformance.collect()}
         assert incr == ref
         assert {n for n, _ in incr} == {"45", "31"}  # stale "44" dropped
+
+
+TRIPLE_COLS = ["subj", "pred", "obj_kind", "obj_value", "obj_dt", "obj_lang",
+               "conv_id", "turn_idx"]
+# "Iris P. Patel" (convA, bucket 47) is the least slug of the person's
+# variants, so a build over both conversations names the entity
+# entity/iris_p_patel — also in convB (bucket 35), which only says
+# "Iris Patel"
+LEAST_VARIANT_BASE = {
+    "convA": ["Iris P. Patel knows Bob Stone."],
+    "convB": ["Iris Patel is 30 years old."],
+}
+
+
+def _rows(df, cols):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+def _assert_resume_equals_scratch(spark, out_dir, edited):
+    """The resumed tables equal a from-scratch build of the edited
+    input and a whole-graph validation of the resumed triples."""
+    from shaclex_spark.pipeline import build_kg, validate_kg
+
+    resumed = spark.read.parquet(f"{out_dir}/triples")
+    scratch, _ = build_kg(spark, edited)
+    assert _rows(resumed, TRIPLE_COLS) == _rows(scratch, TRIPLE_COLS)
+    full = validate_kg(spark, resumed)
+    for name, df in (("conformance", full.conformance),
+                     ("report", full.report)):
+        cols = sorted(df.columns)
+        assert _rows(spark.read.parquet(f"{out_dir}/{name}"), cols) \
+            == _rows(df, cols), name
+
+
+def _age_subjects(spark, out_dir):
+    return {r.subj for r in spark.read.parquet(f"{out_dir}/triples")
+            .filter(F.col("pred") == EX + "age").collect()}
+
+
+def test_resume_least_variant_in_clean_bucket(spark):
+    """Re-linking only the dirty bucket's mentions named the entity
+    after "Iris Patel", the least variant of that bucket alone; late
+    binding re-links the whole mention dimension."""
+    base = _mk_transcripts(spark, LEAST_VARIANT_BASE)
+    edited = _mk_transcripts(spark, dict(
+        LEAST_VARIANT_BASE, convB=["Iris Patel is 31 years old."]))
+    with tempfile.TemporaryDirectory() as out_dir:
+        run_pipeline(spark, base, output_dir=out_dir)
+        out = run_pipeline(spark, edited, output_dir=out_dir, resume=True)
+        assert out["n_buckets_skipped"] == 63
+        assert out["n_affected_nodes"] is not None
+        assert _age_subjects(spark, out_dir) == \
+            {"http://example.org/entity/iris_p_patel"}
+        _assert_resume_equals_scratch(spark, out_dir, edited)
+
+
+def test_resume_rewrites_drifted_clean_bucket(spark):
+    """Removing the least variant renames the entity: the clean bucket
+    that still mentions it drifted and is rewritten too."""
+    base = _mk_transcripts(spark, LEAST_VARIANT_BASE)
+    edited = _mk_transcripts(spark, dict(
+        LEAST_VARIANT_BASE, convA=["Dave Kim knows Bob Stone."]))
+    with tempfile.TemporaryDirectory() as out_dir:
+        run_pipeline(spark, base, output_dir=out_dir)
+        out = run_pipeline(spark, edited, output_dir=out_dir, resume=True)
+        assert out["n_buckets_skipped"] == 62  # convA's and convB's
+        assert out["n_affected_nodes"] is not None
+        assert _age_subjects(spark, out_dir) == \
+            {"http://example.org/entity/iris_patel"}
+        _assert_resume_equals_scratch(spark, out_dir, edited)
+
+
+def test_resume_without_mention_dimension_rebuilds(spark):
+    """An output written before the mention dimension existed resumes
+    as a full rebuild."""
+    import shutil
+
+    base = _mk_transcripts(spark, LEAST_VARIANT_BASE)
+    edited = _mk_transcripts(spark, dict(
+        LEAST_VARIANT_BASE, convB=["Iris Patel is 31 years old."]))
+    with tempfile.TemporaryDirectory() as out_dir:
+        run_pipeline(spark, base, output_dir=out_dir)
+        shutil.rmtree(f"{out_dir}/mentions")
+        out = run_pipeline(spark, edited, output_dir=out_dir, resume=True)
+        assert out["n_buckets_skipped"] == 0
+        assert out["n_affected_nodes"] is None
+        _assert_resume_equals_scratch(spark, out_dir, edited)
+        # the rebuild wrote the dimension again: the next resume is
+        # incremental
+        again = run_pipeline(spark, edited, output_dir=out_dir, resume=True)
+        assert again["n_buckets_skipped"] == 64
+
+
+def test_run_pipeline_releases_its_persists(spark):
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    base = _mk_transcripts(spark, LEAST_VARIANT_BASE)
+    edited = _mk_transcripts(spark, dict(
+        LEAST_VARIANT_BASE, convA=["Dave Kim knows Bob Stone."]))
+    with tempfile.TemporaryDirectory() as out_dir:
+        run_pipeline(spark, base, output_dir=out_dir)
+        assert cache.isEmpty(), "the build leaked a persisted DataFrame"
+        run_pipeline(spark, edited, output_dir=out_dir, resume=True)
+        assert cache.isEmpty(), "the resume leaked a persisted DataFrame"
