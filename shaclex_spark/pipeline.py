@@ -83,7 +83,9 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
     only focus nodes in it are validated (incremental resume path —
     the caller guarantees soundness via _arc_local_schema).
     ``scope``: owner of the engine's persists (default: the engine's
-    own, never released)."""
+    own, never released), among them the result relation — callers
+    read both conformance and report, and persisting the relation
+    makes both read one evaluation."""
     schema = SchemaDict.from_json(shapes_json or DEFAULT_SHAPES)
     plain = triples.select("subj", "pred", "obj_kind", "obj_value",
                            "obj_dt", "obj_lang")
@@ -94,7 +96,8 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
             focus = target_focus(spark, schema, engine.graph)
         focus = focus.join(focus_filter.select("node").distinct(),
                            on="node", how="left_semi")
-    return engine.validate(focus)
+    result = engine.validate(focus)
+    return ValidationResult(engine.scope.persist(result.relation))
 
 
 def _arc_local_schema(shapes_json: list[dict] | None) -> str | bool:

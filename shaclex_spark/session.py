@@ -26,6 +26,13 @@ def default_driver_memory() -> str:
     return f"{max(1, min(56, kb // (2 * 1024 * 1024)))}g"
 
 
+def default_parallelism() -> int:
+    """$SPARK_GRAFT_CPUS, else the number of CPUs this process may run
+    on (its affinity mask, not the machine's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "shaclex_spark",
     parallelism: int | None = None,
@@ -34,13 +41,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
-    parallelism: local core count; defaults to $SPARK_GRAFT_CPUS or 32.
+    parallelism: local core count; defaults to default_parallelism().
     shuffle_partitions: defaults to max(parallelism, 32) locally; on a
     real cluster this is instead sized to total executor cores (AQE
     coalesces the excess at runtime).
     """
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = default_parallelism()
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 32)
     builder = (
@@ -61,8 +68,7 @@ def get_spark(
         # force a periodic GC so long sessions stay flat.
         .config("spark.cleaner.periodicGC.interval", "60s")
         # shuffle spill dir on tmpfs: the VM block device is throttled
-        # and makes shuffle-heavy stage times wildly variable; RAM is
-        # plentiful (125G) and shuffles here are a few GB.
+        # and makes shuffle-heavy stage times wildly variable.
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS",
                                                   "/dev/shm/spark-local"))
         # Broadcast threshold: shape dictionaries / focus dims are small;

@@ -40,6 +40,7 @@ from .model import (
     NUMERIC_DATATYPES,
     RDF_TYPE,
     RDFS,
+    REPORT_SCHEMA,
     TEMPORAL_DATATYPES,
     XSD_BOOLEAN,
     XSD_DATE,
@@ -47,7 +48,7 @@ from .model import (
     XSD_INTEGER,
     XSD_STRING,
 )
-from .paths import path_pairs
+from .paths import VAL_COLS, path_pairs
 from .scope import Scope
 from .shapes import NodeExpr, PropertyConstraint, SchemaDict, Shape, ValueSpec
 from .triggers import target_focus, target_rows
@@ -397,6 +398,29 @@ COMPONENT_NAMES = {
     "false": "FalseConstraintComponent",
 }
 
+# One report row past its (focus_node, source_shape): the element type
+# of a shape relation's ``violations`` array (see ValidationResult), as
+# a DDL string — a cast to it is one driver call.
+VIOLATION = "struct<" + ",".join(f"{f.name}:{f.dataType.simpleString()}"
+                                 for f in REPORT_SCHEMA.fields[2:]) + ">"
+
+
+def _violation(component: str, severity: str, value: Column, path: Column,
+               message: str | None) -> Column:
+    return F.struct(F.lit(component), F.lit(severity), value, path,
+                    F.lit(message)).cast(VIOLATION)
+
+
+def _violations(fails: list[Column] = (), lists: list[Column] = ()) -> Column:
+    """A never-null violations array: the non-null ``fails`` (per-focus
+    when(fail, _violation) columns) followed by the ``lists`` (arrays
+    of per-value violations collected in an aggregate)."""
+    parts = [F.array_compact(F.array(*fails))] if fails else []
+    parts += lists
+    if not parts:
+        return F.array().cast(f"array<{VIOLATION}>")
+    return parts[0] if len(parts) == 1 else F.concat(*parts)
+
 
 def _top_conjuncts(e: NodeExpr) -> list[NodeExpr]:
     """Flatten synthetic allOf conjunctions so each constraint reports
@@ -505,28 +529,33 @@ def class_membership(graph: Graph) -> DataFrame:
 
 
 class ValidationResult:
-    """conformance: (node, shape, conforms); report: REPORT_SCHEMA.
+    """One validation, read two ways (shaclex's Result: the result
+    shape map and the report are views of one evaluation).
 
-    The report relation is assembled LAZILY (r6, guide §1.2): its
-    pieces are hundreds of filter/select constructions — pure driver
-    py4j round-trips — and the hot consumers (the bench pipeline,
-    every conformance-only registry query) never read it. Building it
-    on first access moves that cost off the Amdahl serial term of
-    every validation that only consumes conformance."""
+    ``relation``: one row per (focus term, shape) — node, shape,
+    conforms[, node_kind, node_dt, node_lang][, status], asked, and
+    ``violations``, the array of VIOLATION structs the shape's
+    constraints found on that term (empty when it conforms). ``asked``
+    marks the pairs the trigger selected; the other rows are those of
+    transparent (nested sh:property) shapes, whose violations surface
+    in the report instead of at the outer focus.
 
-    def __init__(self, conformance: DataFrame,
-                 report: DataFrame | None = None,
-                 report_fn=None):
-        self.conformance = conformance
-        self._report = report
-        self._report_fn = report_fn
+    conformance: (node, shape, conforms, ...) — the asked rows;
+    report: REPORT_SCHEMA — every row's violations exploded.
+
+    Both are projections of the same relation: a consumer that reads
+    only conformance never computes a violation (Catalyst prunes the
+    unread aggregates), and a consumer that reads both persists the
+    relation once (pipeline.validate_kg) so the evaluation runs once."""
+
+    def __init__(self, relation: DataFrame):
+        self.relation = relation
+        self.conformance = relation.filter("asked") \
+            .drop("asked", "violations")
+        self.report = relation.select(F.col("node").alias("focus_node"),
+                                      F.col("shape").alias("source_shape"),
+                                      F.inline("violations"))
         self.conforms: bool | None = None
-
-    @property
-    def report(self) -> DataFrame:
-        if self._report is None:
-            self._report = self._report_fn()
-        return self._report
 
     def finish(self) -> "ValidationResult":
         self.conforms = self.report.limit(1).isEmpty()
@@ -731,35 +760,29 @@ class ValidationEngine:
         )
 
     def _evaluate_shape(self, shape: Shape, rows: FocusRows,
-                        conf: dict[str, DataFrame]
-                        ) -> tuple[DataFrame, list[DataFrame]]:
-        """Returns (conformance DF keyed by node_key, [report piece DFs]).
-
-        conformance columns: node_key, f_* , conforms.
-        """
-        reports: list[DataFrame] = []
-        sev = F.lit(shape.severity)
-        shp = F.lit(shape.label)
-        msg = F.lit(shape.message).cast("string")
-
+                        conf: dict[str, DataFrame]) -> DataFrame:
+        """The shape relation (KEY, *FCOLS, conforms, violations), one
+        row per focus term. Every constraint family yields its own
+        (KEY, conforms, violations) relation — families evaluated per
+        focus term also carry FCOLS, one row per term — and the
+        families combine by a join-back onto the candidates."""
         if shape.deactivated or (not shape.node_constraints
                                  and not shape.properties
                                  and not shape.one_of
                                  and not shape.group_blocks
                                  and not shape.repeat_alts
                                  and not shape.closed):
-            return self._cand(rows).withColumn("conforms", F.lit(True)), \
-                reports
+            return self._cand(rows).select(KEY, *FCOLS,
+                                           F.lit(True).alias("conforms"),
+                                           _violations().alias("violations"))
 
-        ok_flags: list[tuple[str, DataFrame]] = []  # (flag column name, keyed DF)
-        # flags whose DF ALREADY carries (KEY, *FCOLS, flag), one row per
-        # focus term: when a shape has exactly one such flag, its DF IS
-        # the conformance relation and the join-back onto cand is
+        # (family relation, carries FCOLS with one row per focus term):
+        # when a shape has exactly one family and it carries them, its
+        # relation IS the shape's and the join-back onto cand is
         # skipped (one exchange + join off the critical path)
-        full_flags: set[str] = set()
+        families: list[tuple[DataFrame, bool]] = []
 
         # ---- 1. focus-level node constraints -----------------------------
-        self_ok: Column | None = None
         if shape.node_constraints:
             refs: set[str] = set()
             classes: set[str] = set()
@@ -769,50 +792,35 @@ class ValidationEngine:
             df, ref_cols, cls_cols = self._join_term_bools(
                 self._cand(rows), "f_", refs, classes, conf)
             tc = self._term_cols("f_", ref_cols, cls_cols)
-            conjuncts: list[tuple[NodeExpr, Column]] = []
-            for ne in shape.node_constraints:
-                for cj in _top_conjuncts(ne):
-                    conjuncts.append((cj, compile_expr(cj, tc)))
-            ok_all = conjuncts[0][1]
-            for _, c in conjuncts[1:]:
+            conjuncts = [cj for ne in shape.node_constraints
+                         for cj in _top_conjuncts(ne)]
+            cols = [compile_expr(cj, tc) for cj in conjuncts]
+            ok_all = cols[0]
+            for c in cols[1:]:
                 ok_all = ok_all & c
-            node_conf = df.select(KEY, *FCOLS, ok_all.alias("__self_ok"))
-            full_flags.add("__self_ok")
-            # report rows per failing conjunct (thunked: report pieces
-            # are built only when the report relation is consumed)
-            for cj, col in conjuncts:
-                comp = COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent")
-                reports.append(
-                    lambda df=df, col=col, comp=comp: df.filter(~col).select(
-                        F.col("f_value").alias("focus_node"),
-                        shp.alias("source_shape"),
-                        F.lit(comp).alias("component"),
-                        sev.alias("severity"),
-                        F.col("f_value").alias("value"),
-                        F.lit(None).cast("string").alias("path"),
-                        msg.alias("message"),
-                    )
-                )
-            ok_flags.append(("__self_ok", node_conf))
+            # one violation per failing conjunct
+            fails = [F.when(~c, _violation(
+                COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
+                shape.severity, F.col("f_value"), F.lit(None),
+                shape.message)) for cj, c in zip(conjuncts, cols)]
+            families.append((df.select(
+                KEY, *FCOLS, ok_all.alias("conforms"),
+                _violations(fails).alias("violations")), True))
 
         # ---- 2. property constraints --------------------------------------
         simple = [pc for pc in shape.properties if pc.path.is_simple_pred]
         complexp = [pc for pc in shape.properties if not pc.path.is_simple_pred]
 
         if simple or shape.closed:
-            flag = "__props_ok"
-            dfp = self._eval_simple(shape, simple, rows, conf, flag, reports)
-            full_flags.add(flag)
-            ok_flags.append((flag, dfp))
+            families.append((self._eval_simple(shape, simple, rows, conf),
+                             True))
 
-        for i, pc in enumerate(complexp):
-            flag = f"__cpath_{i}_ok"
-            dfp = self._eval_cpath(shape, pc, rows, conf, flag, reports)
-            full_flags.add(flag)
-            ok_flags.append((flag, dfp))
+        for pc in complexp:
+            families.append((self._eval_cpath(shape, pc, rows, conf), True))
 
-        # ShEx OneOf: evaluate each group independently (inner reports
-        # discarded — the OneOf reports as a whole), then exactly-one.
+        # ShEx OneOf: evaluate each group independently (the members'
+        # violations are not read — the OneOf reports as a whole), then
+        # exactly-one.
         if shape.one_of:
             from dataclasses import replace as _dc_replace
 
@@ -821,91 +829,78 @@ class ValidationEngine:
                 gname = f"__oneof_{gi}"
                 simple_g = [pc for pc in group if pc.path.is_simple_pred]
                 complex_g = [pc for pc in group if not pc.path.is_simple_pred]
-                # each member family yields a (KEY, bool) relation; the
-                # group matches iff ALL members match (EachOf inside the
-                # chosen alternative). Non-simple paths (e.g. inverse
-                # ^p from ShExC) are evaluated via the complex-path
-                # evaluator — dropping them would make a group with a
-                # missing ^p arc spuriously 'match'.
+                # each member family yields a (KEY, conforms) relation;
+                # the group matches iff ALL members match (EachOf inside
+                # the chosen alternative). Non-simple paths (e.g.
+                # inverse ^p from ShExC) are evaluated via the
+                # complex-path evaluator — dropping them would make a
+                # group with a missing ^p arc spuriously 'match'.
                 member_flags: list[DataFrame] = []
                 if simple_g:
                     proxy = _dc_replace(shape, closed=False, one_of=[],
                                         node_constraints=[],
                                         properties=list(simple_g))
-                    gdf = self._eval_simple(proxy, simple_g, rows, conf,
-                                            "__m", [])
-                    member_flags.append(gdf.select(KEY, "__m"))
+                    member_flags.append(
+                        self._eval_simple(proxy, simple_g, rows, conf))
                 for pcx in complex_g:
-                    dfp = self._eval_cpath(shape, pcx, rows, conf, "__m", [])
-                    member_flags.append(dfp.select(KEY, "__m"))
+                    member_flags.append(
+                        self._eval_cpath(shape, pcx, rows, conf))
                 gmerged = self._cand(rows).select(KEY)
                 gcol = F.lit(True)
                 for mi, mdf in enumerate(member_flags):
-                    mdf = mdf.withColumnRenamed("__m", f"__m_{mi}")
-                    gmerged = gmerged.join(mdf, on=KEY, how="left")
+                    gmerged = gmerged.join(mdf.select(
+                        KEY, F.col("conforms").alias(f"__m_{mi}")),
+                        on=KEY, how="left")
                     gcol = gcol & F.coalesce(F.col(f"__m_{mi}"), F.lit(False))
                 group_flags.append(
                     gmerged.select(KEY, gcol.alias(gname)))
-            merged = self._cand(rows).select(KEY, "f_value")
+            merged = self._cand(rows).select(KEY)
             total = F.lit(0)
             for gi, gdf in enumerate(group_flags):
                 merged = merged.join(gdf, on=KEY, how="left")
                 total = total + F.coalesce(
                     F.col(f"__oneof_{gi}"), F.lit(False)).cast("int")
             one_ok = (total == 1)
-            reports.append(lambda merged=merged, one_ok=one_ok:
-                           merged.filter(~one_ok).select(
-                               F.col("f_value").alias("focus_node"),
-                               shp.alias("source_shape"),
-                               F.lit("OneOfConstraintComponent")
-                               .alias("component"),
-                               sev.alias("severity"),
-                               F.lit(None).cast("string").alias("value"),
-                               F.lit(None).cast("string").alias("path"),
-                               msg.alias("message"),
-                           ))
-            ok_flags.append(("__oneof_ok",
-                             merged.select(KEY, one_ok.alias("__oneof_ok"))))
+            families.append((merged.select(
+                KEY, one_ok.alias("conforms"), _violations([F.when(
+                    ~one_ok, _violation(
+                        "OneOfConstraintComponent", shape.severity,
+                        F.lit(None), F.lit(None), shape.message))])
+                .alias("violations")), False))
 
         # ShEx group-cardinality blocks ( TC... ){m,n}
-        for bi, blk in enumerate(shape.group_blocks):
-            flag = f"__grp_{bi}_ok"
-            dfg = self._eval_group_block(shape, self._cand(rows), conf, blk,
-                                         flag, reports)
-            ok_flags.append((flag, dfg))
+        for blk in shape.group_blocks:
+            families.append((self._eval_group_block(
+                shape, self._cand(rows), conf, blk), False))
 
         # ShEx repeated-predicate partition semantics (RepeatAlts)
         if shape.repeat_alts:
-            dfr = self._eval_repeat_alts(shape, self._cand(rows), conf,
-                                         "__repeat_ok", reports)
-            ok_flags.append(("__repeat_ok", dfr))
+            families.append((self._eval_repeat_alts(
+                shape, self._cand(rows), conf), False))
 
         # pairwise sibling constraints
-        for i, pc in enumerate(shape.properties):
+        for pc in shape.properties:
             if pc.equals or pc.disjoint or pc.less_than or pc.less_than_or_equals:
-                flag = f"__pair_{i}_ok"
-                dfp = self._eval_pairwise(shape, self._cand(rows), pc, flag,
-                                          reports)
-                full_flags.add(flag)
-                ok_flags.append((flag, dfp))
+                families.append(
+                    (self._eval_pairwise(shape, self._cand(rows), pc), True))
 
         # ---- 3. combine -----------------------------------------------------
-        if len(ok_flags) == 1 and ok_flags[0][0] in full_flags:
-            # single-flag shape whose flag relation has one row per
-            # focus term and the full term columns: it IS the
-            # conformance relation — skip the join-back onto cand.
-            flag, out = ok_flags[0]
-            out = out.select(
+        if len(families) == 1 and families[0][1]:
+            return families[0][0].select(
                 KEY, *FCOLS,
-                F.coalesce(F.col(flag), F.lit(True)).alias("conforms"))
-            return out, reports
+                F.coalesce(F.col("conforms"), F.lit(True)).alias("conforms"),
+                "violations")
         out = self._cand(rows)
         final_ok = F.lit(True)
-        for flag, dfk in ok_flags:
-            out = out.join(dfk.select(KEY, flag), on=KEY, how="left")
-            final_ok = final_ok & F.coalesce(F.col(flag), F.lit(True))
-        out = out.select(KEY, *FCOLS, final_ok.alias("conforms"))
-        return out, reports
+        lists = []
+        for i, (dfk, _) in enumerate(families):
+            out = out.join(dfk.select(KEY, F.col("conforms").alias(f"__ok_{i}"),
+                                      F.col("violations").alias(f"__v_{i}")),
+                           on=KEY, how="left")
+            final_ok = final_ok & F.coalesce(F.col(f"__ok_{i}"), F.lit(True))
+            lists.append(F.coalesce(F.col(f"__v_{i}"), _violations()))
+        return out.select(KEY, *FCOLS, final_ok.alias("conforms"),
+                          F.concat(*lists).alias("violations"))
 
     # -- focus row sources --------------------------------------------------
 
@@ -938,15 +933,15 @@ class ValidationEngine:
     # -- fused simple-predicate evaluator ----------------------------------
 
     def _eval_simple(self, shape: Shape, props: list[PropertyConstraint],
-                     rows: FocusRows, conf: dict[str, DataFrame], flag: str,
-                     reports: list[DataFrame]) -> DataFrame:
-        """(KEY, *FCOLS, flag), one row per focus term, in ONE grouped
-        pass: union(pred-filtered constraint arcs keyed by subject,
-        focus-marker rows keyed by term) → ONE groupBy(term) with
-        conditional aggregates for every simple-pred constraint + CLOSED
-        residue → filter(is-focus). Focus terms without arcs group from
-        their marker row alone and count 0; a literal focus term never
-        meets the subject-keyed arcs of an IRI with the same spelling.
+                     rows: FocusRows, conf: dict[str, DataFrame]) -> DataFrame:
+        """(KEY, *FCOLS, conforms, violations), one row per focus term,
+        in ONE grouped pass: union(pred-filtered constraint arcs keyed
+        by subject, focus-marker rows keyed by term) → ONE
+        groupBy(term) with conditional aggregates for every simple-pred
+        constraint + CLOSED residue → filter(is-focus). Focus terms
+        without arcs group from their marker row alone and count 0; a
+        literal focus term never meets the subject-keyed arcs of an IRI
+        with the same spelling.
 
         Target-driven rows fold subject-keyed targets (targetSubjectsOf;
         targetClass when the graph has no subClassOf arcs) into the arc
@@ -1001,26 +996,18 @@ class ValidationEngine:
                 *FCOLS, null_s.alias("pred"), null_s.alias("obj_kind"),
                 null_s.alias("obj_value"), null_s.alias("obj_dt"),
                 null_s.alias("obj_lang"), F.lit(True).alias("__tgt")))
-        grouped, ok = self._fused_agg(
-            shape, _with_key(arcs), conf, props, reports,
-            group_cols=[KEY, *FCOLS],
-            extra_aggs=(F.max("__tgt").alias("__is_focus"),),
-            focus_flag="__is_focus")
-        return grouped.filter(F.col("__is_focus")) \
-            .select(KEY, *FCOLS, ok.alias(flag))
+        return self._fused_agg(shape, _with_key(arcs), conf, props)
 
     def _fused_agg(self, shape: Shape, arcs: DataFrame,
                    conf: dict[str, DataFrame],
-                   props: list[PropertyConstraint],
-                   reports: list[DataFrame],
-                   group_cols: list,
-                   extra_aggs: tuple = (),
-                   focus_flag: str | None = None) -> tuple[DataFrame, Column]:
-        """Shared fused-aggregate builder: conditional aggregates + ok
-        expression + report pieces over an arc relation that carries
-        f_* focus-term columns and pred/obj_* arc columns (built by
-        _eval_simple). ``focus_flag``: column in the grouped relation
-        restricting card-reports to focus rows."""
+                   props: list[PropertyConstraint]) -> DataFrame:
+        """(KEY, *FCOLS, conforms, violations) of the focus terms of an
+        arc relation that carries f_* focus-term columns, pred/obj_* arc
+        columns and the __tgt marker flag (built by _eval_simple): ONE
+        groupBy(term) with conditional aggregates for every constraint.
+        Per-value violations are collected in the same aggregate (one
+        per arc row, as the arcs are not deduplicated); per-focus ones
+        read the grouped counts."""
         refs: set[str] = set()
         classes: set[str] = set()
         for pc in props:
@@ -1030,9 +1017,13 @@ class ValidationEngine:
             arcs, "obj_", refs, classes, conf)
         tc = self._term_cols("obj_", ref_cols, cls_cols)
 
-        aggs: list[Column] = []
-        checks: list[tuple[PropertyConstraint, dict[str, str]]] = []
-        report_value_filters: list[tuple[PropertyConstraint, NodeExpr, Column]] = []
+        aggs: list[Column] = [F.max("__tgt").alias("__is_focus")]
+        checks: list[tuple[PropertyConstraint, dict]] = []
+        lists: list[Column] = []
+
+        def collect(name: str, bad: Column, violation: Column) -> None:
+            aggs.append(F.collect_list(F.when(bad, violation)).alias(name))
+            lists.append(F.col(name))
 
         # first pass: per-constraint value predicates (needed up front so
         # qualifiedValueShapesDisjoint constraints can exclude values
@@ -1041,32 +1032,28 @@ class ValidationEngine:
         prepared = []
         for pc in props:
             conjs = _top_conjuncts(pc.node)
-            per_value = [c for c in conjs if c.kind != "hasValue"]
+            per_value = [(c, compile_expr(c, tc)) for c in conjs
+                         if c.kind != "hasValue"]
             existential = [c for c in conjs if c.kind == "hasValue"]
-            if per_value:
-                v_ok = compile_expr(per_value[0], tc)
-                for c in per_value[1:]:
-                    v_ok = v_ok & compile_expr(c, tc)
-            else:
-                v_ok = F.lit(True)
-            prepared.append((pc, conjs, existential, v_ok))
+            v_ok = F.lit(True)
+            for _, c_ok in per_value:
+                v_ok = v_ok & c_ok
+            prepared.append((pc, per_value, existential, v_ok))
 
-        for i, (pc, conjs, existential, v_ok) in enumerate(prepared):
+        for i, (pc, per_value, existential, v_ok) in enumerate(prepared):
             on_path = F.col("pred") == pc.path.iri
             count_ok = v_ok
             if pc.qualified and pc.qualified_disjoint:
                 for j, (pc2, _, _, v_ok2) in enumerate(prepared):
                     if j != i and pc2.qualified and pc2.qualified_disjoint:
                         count_ok = count_ok & ~v_ok2
-            names = {
-                "total": f"__n_{i}", "ok": f"__ok_{i}", "bad": f"__bad_{i}",
-            }
+            names = {"total": f"__n_{i}", "ok": f"__ok_{i}",
+                     "bad": f"__bad_{i}",
+                     "has": [f"__has_{i}_{j}" for j in range(len(existential))]}
             aggs.append(F.count(F.when(on_path, F.lit(1))).alias(names["total"]))
             aggs.append(F.count(F.when(on_path & count_ok, F.lit(1))).alias(names["ok"]))
             aggs.append(F.count(F.when(on_path & ~v_ok, F.lit(1))).alias(names["bad"]))
-            for j, ex in enumerate(existential):
-                nm = f"__has_{i}_{j}"
-                names[f"has_{j}"] = nm
+            for nm, ex in zip(names["has"], existential):
                 hit = _value_match(ex.values[0], tc)
                 aggs.append(F.count(F.when(on_path & hit, F.lit(1))).alias(nm))
             if pc.unique_lang:
@@ -1076,124 +1063,79 @@ class ValidationEngine:
                 aggs.append(F.countDistinct(
                     F.when(on_path & tc.lang.isNotNull(), F.lower(tc.lang))).alias(ndl))
             checks.append((pc, names))
-            # per-value violation report rows (qualified shapes report
-            # only their count components, never per-value)
-            for cj in conjs:
-                if (pc.qualified or cj.kind == "hasValue"
-                        or self._is_transparent_ref(cj)):
+            # per-value violations (qualified shapes report only their
+            # count components, never per-value)
+            for j, (cj, c_ok) in enumerate(per_value):
+                if pc.qualified or self._is_transparent_ref(cj):
                     continue
-                # filter built inside the report thunk: compile_expr is
-                # driver-side py4j work needed only when reports are read
-                report_value_filters.append((pc, cj, on_path))
+                collect(f"__viol_{i}_{j}", on_path & ~c_ok,
+                        _violation(COMPONENT_NAMES.get(
+                            cj.kind, "NodeConstraintComponent"),
+                            pc.severity, F.col("obj_value"),
+                            F.lit(pc.path.iri), pc.message or shape.message))
 
+        ok = F.lit(True)
         if shape.closed:
             # allowed = declared property paths + sh:ignoredProperties / EXTRA
             # (SURVEY.md §2.4 CLOSED: per-subject anti-count)
             allowed = shape.declared_preds() | set(shape.ignored)
             off_path = F.col("pred").isNotNull() & ~F.col("pred").isin(list(allowed))
             aggs.append(F.count(F.when(off_path, F.lit(1))).alias("__n_closed_bad"))
-            reports.append(
-                lambda arcs=arcs, off_path=off_path: arcs.filter(off_path)
-                .select(
-                    F.col("f_value").alias("focus_node"),
-                    F.lit(shape.label).alias("source_shape"),
-                    F.lit("ClosedConstraintComponent").alias("component"),
-                    F.lit(shape.severity).alias("severity"),
-                    F.col("obj_value").alias("value"),
-                    F.col("pred").alias("path"),
-                    F.lit(shape.message).cast("string").alias("message"),
-                )
-            )
-
-        # per-value violation reports (before aggregation; thunked)
-        for pc, cj, on_path in report_value_filters:
-            comp = COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent")
-            reports.append(
-                lambda arcs=arcs, cj=cj, on_path=on_path, comp=comp, pc=pc,
-                tc=tc:
-                arcs.filter(on_path & ~compile_expr(cj, tc)).select(
-                    F.col("f_value").alias("focus_node"),
-                    F.lit(shape.label).alias("source_shape"),
-                    F.lit(comp).alias("component"),
-                    F.lit(pc.severity).alias("severity"),
-                    F.col("obj_value").alias("value"),
-                    F.lit(pc.path.iri).alias("path"),
-                    F.lit(pc.message or shape.message).cast("string").alias("message"),
-                )
-            )
+            collect("__viol_closed", off_path, _violation(
+                "ClosedConstraintComponent", shape.severity,
+                F.col("obj_value"), F.col("pred"), shape.message))
+            ok = F.col("__n_closed_bad") == 0
 
         # group by the full term tuple: KEY is injective in (f_kind,
         # f_value, f_dt, f_lang), so cardinality is unchanged, the
         # exchange still hashes one key set, and the term columns ride
         # through - letting a pure simple-pred shape use this aggregate
-        # AS the conformance relation (no join-back onto cand).
-        grouped = arcs.groupBy(*group_cols).agg(*aggs, *extra_aggs)
-
-        report_grouped = (grouped.filter(F.col(focus_flag))
-                          if focus_flag else grouped)
-        ok = F.lit(True)
-        if shape.closed:
-            ok = ok & (F.col("__n_closed_bad") == 0)
+        # AS the shape relation (no join-back onto cand).
+        grouped = arcs.groupBy(KEY, *FCOLS).agg(*aggs) \
+            .filter(F.col("__is_focus"))
+        fails: list[Column] = []
         for pc, names in checks:
-            card_base = F.col(names["ok"]) if (pc.qualified or pc.exclusive) \
-                else F.col(names["total"])
-            c_ok = card_base >= pc.min_count
-            if pc.max_count is not None:
-                c_ok = c_ok & (card_base <= pc.max_count)
-            if not pc.qualified:
-                c_ok = c_ok & (F.col(names["bad"]) == 0)
-            for j in range(len([k for k in names if k.startswith("has_")])):
-                c_ok = c_ok & (F.col(names[f"has_{j}"]) >= 1)
-            if pc.unique_lang:
-                c_ok = c_ok & (F.col(names["nlang"]) == F.col(names["ndlang"]))
+            c_ok, c_fails = self._count_checks(shape, pc, names)
             ok = ok & c_ok
-            # cardinality / hasValue / uniqueLang report rows (per focus)
-            self._card_reports(reports, report_grouped, shape, pc, names)
-        return grouped, ok
+            fails += c_fails
+        return grouped.select(KEY, *FCOLS, ok.alias("conforms"),
+                              _violations(fails, lists).alias("violations"))
 
-    def _card_reports(self, reports: list, grouped: DataFrame,
-                      shape: Shape, pc: PropertyConstraint, names: dict) -> None:
-        """Appends report THUNKS (piece construction deferred to the
-        lazy report assembly)."""
-        def base_cols(comp, flt_fn):
-            return lambda: grouped.filter(flt_fn()).select(
-                F.col("f_value").alias("focus_node"),
-                F.lit(shape.label).alias("source_shape"),
-                F.lit(comp).alias("component"),
-                F.lit(pc.severity).alias("severity"),
-                F.lit(None).cast("string").alias("value"),
-                F.lit(pc.path.describe()).alias("path"),
-                F.lit(pc.message or shape.message).cast("string")
-                .alias("message"),
-            )
-
-        def card():
-            return F.col(names["ok"]) if (pc.qualified or pc.exclusive) \
-                else F.col(names["total"])
+    def _count_checks(self, shape: Shape, pc: PropertyConstraint,
+                      names: dict) -> tuple[Column, list[Column]]:
+        """One property constraint's verdict over its grouped counts
+        ``names`` (total / ok / bad / has / nlang+ndlang), and its
+        per-focus violations: cardinality, hasValue, uniqueLang."""
+        card = F.col(names["ok"]) if (pc.qualified or pc.exclusive) \
+            else F.col(names["total"])
+        q = "Qualified" if pc.qualified else ""
+        checks = []
         if pc.min_count > 0:
-            comp = ("QualifiedMinCountConstraintComponent" if pc.qualified
-                    else "MinCountConstraintComponent")
-            reports.append(base_cols(comp, lambda: card() < pc.min_count))
+            checks.append((card >= pc.min_count,
+                           q + "MinCountConstraintComponent"))
         if pc.max_count is not None:
-            comp = ("QualifiedMaxCountConstraintComponent" if pc.qualified
-                    else "MaxCountConstraintComponent")
-            reports.append(base_cols(comp, lambda: card() > pc.max_count))
-        for j in range(len([k for k in names if k.startswith("has_")])):
-            reports.append(base_cols(
-                "HasValueConstraintComponent",
-                lambda j=j: F.col(names[f"has_{j}"]) < 1))
-        if pc.unique_lang:
-            reports.append(base_cols(
-                "UniqueLangConstraintComponent",
-                lambda: F.col(names["nlang"]) != F.col(names["ndlang"])))
+            checks.append((card <= pc.max_count,
+                           q + "MaxCountConstraintComponent"))
+        checks += [(F.col(nm) >= 1, "HasValueConstraintComponent")
+                   for nm in names["has"]]
+        if "nlang" in names:
+            checks.append((F.col(names["nlang"]) == F.col(names["ndlang"]),
+                           "UniqueLangConstraintComponent"))
+        ok = F.lit(True) if pc.qualified else (F.col(names["bad"]) == 0)
+        for c, _ in checks:
+            ok = ok & c
+        path = F.lit(pc.path.describe())
+        return ok, [F.when(~c, _violation(comp, pc.severity, F.lit(None), path,
+                                          pc.message or shape.message))
+                    for c, comp in checks]
 
     # -- group-cardinality blocks ----------------------------------------------
 
     def _eval_group_block(self, shape: Shape, cand: DataFrame,
-                          conf: dict[str, DataFrame], blk,
-                          flag: str, reports: list[DataFrame]) -> DataFrame:
-        """( TC... ){m,n} — one left join on the block's predicates +
-        one grouped conditional aggregate (same physical shape as the
+                          conf: dict[str, DataFrame], blk) -> DataFrame:
+        """(KEY, conforms, violations) of a ( TC... ){m,n} block — one
+        left join on the block's predicates + one grouped conditional
+        aggregate (same physical shape as the
         fused simple-pred plan). Repetition count k:
           eachOf: every member consumes one arc per repetition ⇒ all
                   members' matching counts must be EQUAL (= k);
@@ -1225,7 +1167,7 @@ class ValidationEngine:
                         .alias(f"__gok_{i}"))
             aggs.append(F.count(F.when(on_path & ~v_ok, F.lit(1)))
                         .alias(f"__gbad_{i}"))
-        grouped = arcs.groupBy(KEY, "f_value").agg(*aggs)
+        grouped = arcs.groupBy(KEY).agg(*aggs)
 
         bad = F.lit(0)
         for i in range(len(blk.members)):
@@ -1245,27 +1187,22 @@ class ValidationEngine:
         if blk.max_count is not None:
             in_range = in_range & (k <= blk.max_count)
         ok = (bad == 0) & counts_consistent & in_range
-        reports.append(lambda grouped=grouped, ok=ok: grouped.filter(~ok).select(
-            F.col("f_value").alias("focus_node"),
-            F.lit(shape.label).alias("source_shape"),
-            F.lit("GroupCardinalityConstraintComponent").alias("component"),
-            F.lit(shape.severity).alias("severity"),
-            F.lit(None).cast("string").alias("value"),
-            F.lit("|".join(preds)).alias("path"),
-            F.lit(shape.message).cast("string").alias("message"),
-        ))
-        return grouped.select(KEY, ok.alias(flag))
+        return grouped.select(KEY, ok.alias("conforms"), _violations([F.when(
+            ~ok, _violation("GroupCardinalityConstraintComponent",
+                            shape.severity, F.lit(None),
+                            F.lit("|".join(preds)), shape.message))])
+            .alias("violations"))
 
     # -- repeated-predicate partition (RepeatAlts) -------------------------
 
     def _eval_repeat_alts(self, shape: Shape, cand: DataFrame,
-                          conf: dict[str, DataFrame],
-                          flag: str, reports: list[DataFrame]) -> DataFrame:
-        """ShEx partition semantics for repeated predicates: the focus
-        node's arcs over the mentioned predicates must be partitioned
-        among the triple constraints of SOME OneOf alternative, each TC
-        consuming a count within [min,max] (suite: PstarT / P2T2 /
-        nPlus1 / false-lead-excluding-value-shape families).
+                          conf: dict[str, DataFrame]) -> DataFrame:
+        """(KEY, conforms, violations) under ShEx partition semantics
+        for repeated predicates: the focus node's arcs over the
+        mentioned predicates must be partitioned among the triple
+        constraints of SOME OneOf alternative, each TC consuming a count
+        within [min,max] (suite: PstarT / P2T2 / nPlus1 /
+        false-lead-excluding-value-shape families).
 
         Physical shape: ONE left join on the mentioned predicates + ONE
         grouped conditional aggregate — identical to the fused
@@ -1341,7 +1278,7 @@ class ValidationEngine:
                         F.count(F.when(on_p & any_match & ~out_s, F.lit(1)))
                         .alias(f"__ra_{j}_{p_i}_only_{s}"))
 
-        grouped = arcs.groupBy(KEY, "f_value").agg(*aggs)
+        grouped = arcs.groupBy(KEY).agg(*aggs)
 
         feasible_any = F.lit(False)
         for j, by_pred in enumerate(alt_by_pred):
@@ -1367,30 +1304,25 @@ class ValidationEngine:
                             F.col(f"__ra_{j}_{p_i}_reach_{s}") >= need)
             feasible_any = feasible_any | cond
 
-        reports.append(lambda grouped=grouped, feasible_any=feasible_any:
-                       grouped.filter(~feasible_any).select(
-            F.col("f_value").alias("focus_node"),
-            F.lit(shape.label).alias("source_shape"),
-            F.lit("PartitionConstraintComponent").alias("component"),
-            F.lit(shape.severity).alias("severity"),
-            F.lit(None).cast("string").alias("value"),
-            F.lit("|".join(preds)).alias("path"),
-            F.lit(shape.message).cast("string").alias("message"),
-        ))
-        return grouped.select(KEY, feasible_any.alias(flag))
+        return grouped.select(
+            KEY, feasible_any.alias("conforms"), _violations([F.when(
+                ~feasible_any, _violation(
+                    "PartitionConstraintComponent", shape.severity,
+                    F.lit(None), F.lit("|".join(preds)), shape.message))])
+            .alias("violations"))
 
     # -- complex-path evaluator ---------------------------------------------
 
     def _eval_cpath(self, shape: Shape, pc: PropertyConstraint,
-                    rows: FocusRows, conf: dict[str, DataFrame], flag: str,
-                    reports: list[DataFrame]) -> DataFrame:
-        """(KEY, *FCOLS, flag), one row per focus term, for one complex
-        path (sequence / inverse / alternative / closure): union(per-pair
-        value-checked rows keyed by source node, focus-marker rows) →
-        ONE groupBy(term) → filter(is-focus). The path computation keeps
-        the focus semi-join restriction (path_pairs srcs), so at scale
-        the chain only expands the focus neighborhood; zero-pair focus
-        terms group from their marker row alone and count 0."""
+                    rows: FocusRows, conf: dict[str, DataFrame]) -> DataFrame:
+        """(KEY, *FCOLS, conforms, violations), one row per focus term,
+        for one complex path (sequence / inverse / alternative /
+        closure): union(per-pair value-checked rows keyed by source
+        node, focus-marker rows) → ONE groupBy(term) → filter(is-focus).
+        The path computation keeps the focus semi-join restriction
+        (path_pairs srcs), so at scale the chain only expands the focus
+        neighborhood; zero-pair focus terms group from their marker row
+        alone and count 0."""
         markers = (rows.cand.select(*FCOLS) if rows.targets is None
                    else self._marker_rows(rows.targets))
         srcs = markers.filter(F.col("f_kind") != "literal") \
@@ -1398,9 +1330,10 @@ class ValidationEngine:
         # Multiplicity-insensitive thresholds (minCount ≤ 1, no
         # maxCount: the aggregate only tests exists / none) let the
         # aggregate run on NON-deduped pairs — one exchange less on the
-        # critical path (r6, guide §2.4). Reports keep set semantics
-        # via an explicit dedup on their own (lazy) branch.
+        # critical path (r6, guide §2.4). The failing values are then
+        # collected as a set, so each (focus, value term) reports once.
         dedup_free = pc.min_count <= 1 and pc.max_count is None
+        collect = F.collect_set if dedup_free else F.collect_list
         pairs = path_pairs(self.triples, pc.path, srcs,
                            dedup=not dedup_free)
         refs = _collect_refs(pc.node)
@@ -1408,48 +1341,35 @@ class ValidationEngine:
         pairs, ref_cols, cls_cols = self._join_term_bools(
             pairs, "v_", refs, classes, conf)
         tc = self._term_cols("v_", ref_cols, cls_cols)
-        report_pairs = (pairs.dropDuplicates(["src", "v_kind", "v_value",
-                                              "v_dt", "v_lang"])
-                        if dedup_free else pairs)
         conjs = _top_conjuncts(pc.node)
-        per_value = [c for c in conjs if c.kind != "hasValue"]
+        per_value = [(c, compile_expr(c, tc)) for c in conjs
+                     if c.kind != "hasValue"]
         existential = [c for c in conjs if c.kind == "hasValue"]
         v_ok = F.lit(True)
-        for c in per_value:
-            v_ok = v_ok & compile_expr(c, tc)
-        for cj in per_value:
-            if (pc.qualified or cj.kind == "true"
-                    or self._is_transparent_ref(cj)):
-                continue
-            comp = COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent")
-            reports.append(
-                lambda cj=cj, comp=comp, report_pairs=report_pairs, tc=tc,
-                pc=pc: report_pairs.filter(~compile_expr(cj, tc)).select(
-                    F.col("src").alias("focus_node"),
-                    F.lit(shape.label).alias("source_shape"),
-                    F.lit(comp).alias("component"),
-                    F.lit(pc.severity).alias("severity"),
-                    F.col("v_value").alias("value"),
-                    F.lit(pc.path.describe()).alias("path"),
-                    F.lit(pc.message or shape.message).cast("string")
-                    .alias("message"),
-                ))
+        for _, c_ok in per_value:
+            v_ok = v_ok & c_ok
+        reported = [(cj, c_ok) for cj, c_ok in per_value
+                    if not (pc.qualified or cj.kind == "true"
+                            or self._is_transparent_ref(cj))]
         null_s = F.lit(None).cast("string")
         null_b = F.lit(None).cast("boolean")
         src_kind = F.when(F.col("src").startswith("_:"), F.lit("bnode")) \
             .otherwise(F.lit("iri"))
         hit_names = [f"__hit_{j}" for j in range(len(existential))]
+        bad_names = [f"__bad_{j}" for j in range(len(reported))]
         pair_rows = pairs.select(
             src_kind.alias("f_kind"), F.col("src").alias("f_value"),
-            null_s.alias("f_dt"), null_s.alias("f_lang"),
+            null_s.alias("f_dt"), null_s.alias("f_lang"), *VAL_COLS,
             v_ok.alias("__vok"),
             *[_value_match(ex.values[0], tc).alias(nm)
               for nm, ex in zip(hit_names, existential)],
+            *[(~c_ok).alias(nm) for nm, (_, c_ok) in zip(bad_names, reported)],
             F.lit(False).alias("__tgt"))
         marker_rows = markers.select(
             "f_kind", "f_value", "f_dt", "f_lang",
+            *[null_s.alias(c) for c in VAL_COLS],
             null_b.alias("__vok"),
-            *[null_b.alias(nm) for nm in hit_names],
+            *[null_b.alias(nm) for nm in hit_names + bad_names],
             F.lit(True).alias("__tgt"))
         un = _with_key(pair_rows.unionByName(marker_rows))
         is_pair = ~F.col("__tgt")
@@ -1461,36 +1381,36 @@ class ValidationEngine:
             .alias("__bad_n"),
             F.max("__tgt").alias("__is_focus"),
         ]
+        names = {"total": "__n", "ok": "__ok_n", "bad": "__bad_n", "has": []}
         for nm in hit_names:
+            names["has"].append(nm.replace("__hit_", "__has_"))
             aggs.append(F.count(F.when(is_pair & F.col(nm), F.lit(1)))
-                        .alias(nm.replace("__hit_", "__has_")))
-        grouped = un.groupBy(KEY, *FCOLS).agg(*aggs)
-        focus_g = grouped.filter(F.col("__is_focus"))
-        card = F.col("__ok_n") if (pc.qualified or pc.exclusive) \
-            else F.col("__n")
-        ok = card >= pc.min_count
-        if pc.max_count is not None:
-            ok = ok & (card <= pc.max_count)
-        if not pc.qualified:
-            ok = ok & (F.col("__bad_n") == 0)
-        for j in range(len(existential)):
-            ok = ok & (F.col(f"__has_{j}") >= 1)
-        # cardinality + hasValue reports (hasValue over a complex path:
+                        .alias(names["has"][-1]))
+        # the failing value terms per reported conjunct
+        aggs += [collect(F.when(F.col(nm), F.struct(*VAL_COLS))).alias(nm)
+                 for nm in bad_names]
+        grouped = un.groupBy(KEY, *FCOLS).agg(*aggs) \
+            .filter(F.col("__is_focus"))
+        # cardinality + hasValue checks (hasValue over a complex path:
         # zero-pair focus terms count 0 and must report — W3C
         # path-complex-001 targets nodes absent from the data)
-        names = {"total": "__n", "ok": "__ok_n", "bad": "__bad_n"}
-        for j in range(len(existential)):
-            names[f"has_{j}"] = f"__has_{j}"
-        self._card_reports(reports, focus_g, shape, pc, names)
-        return focus_g.select(KEY, *FCOLS, ok.alias(flag))
+        ok, fails = self._count_checks(shape, pc, names)
+        path = F.lit(pc.path.describe())
+        lists = [F.transform(F.col(nm), lambda v: _violation(
+            COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
+            pc.severity, v["v_value"], path, pc.message or shape.message))
+            for nm, (cj, _) in zip(bad_names, reported)]
+        return grouped.select(KEY, *FCOLS, ok.alias("conforms"),
+                              _violations(fails, lists).alias("violations"))
 
     # -- pairwise sibling-path constraints ------------------------------------
 
     def _eval_pairwise(self, shape: Shape, cand: DataFrame,
-                       pc: PropertyConstraint, flag: str,
-                       reports: list[DataFrame]) -> DataFrame:
+                       pc: PropertyConstraint) -> DataFrame:
         """equals / disjoint / lessThan(-OrEquals) against a sibling
-        predicate: per-focus set joins (SURVEY.md §2.5 rows)."""
+        predicate: per-focus set joins (SURVEY.md §2.5 rows). Each
+        violating (src, value) row is one violation, collected per src
+        by the aggregate that joins the verdict back onto cand."""
         srcs = cand.filter(F.col("f_kind") != "literal") \
                    .select(F.col("f_value").alias("n"))
         a = path_pairs(self.triples, pc.path, srcs).withColumn(
@@ -1530,35 +1450,27 @@ class ValidationEngine:
             viol_vals = theta.filter(
                 ~F.coalesce(good, F.lit(False))
             ).select("src", F.col("A.v_value").alias("value"))
-        reports.append(lambda viol_vals=viol_vals, comp_name=comp_name:
-                       viol_vals.select(
-            F.col("src").alias("focus_node"),
-            F.lit(shape.label).alias("source_shape"),
-            F.lit(comp_name).alias("component"),
-            F.lit(pc.severity).alias("severity"),
-            F.col("value"),
-            F.lit(pc.path.describe()).alias("path"),
-            F.lit(pc.message or shape.message).cast("string").alias("message"),
-        ))
-        bad_srcs = viol_vals.select("src").distinct().withColumn("__pair_bad", F.lit(True))
+        bad_srcs = viol_vals.groupBy("src").agg(F.collect_list(_violation(
+            comp_name, pc.severity, F.col("value"),
+            F.lit(pc.path.describe()), pc.message or shape.message))
+            .alias("__pair_v"))
         joined = cand.join(bad_srcs, on=_subject_of(cand, bad_srcs["src"]),
                            how="left")
         return joined.select(
-            KEY, *FCOLS,
-            (~F.coalesce(F.col("__pair_bad"), F.lit(False))).alias(flag))
+            KEY, *FCOLS, F.col("__pair_v").isNull().alias("conforms"),
+            F.coalesce(F.col("__pair_v"), _violations()).alias("violations"))
 
     # -- public entry ---------------------------------------------------------
 
     def _run_fixpoint(self, scc: list[str], rows: dict, conf: dict,
-                      start: bool) -> dict[str, list[DataFrame]]:
+                      start: bool) -> None:
         """Iterate a recursive SCC to a fixpoint from the given start
         value, mutating conf[lbl] for the SCC's labels in place.
         start=True  → GREATEST fixpoint (co-inductive, Unknown-as-ok —
                       ShapesMap.scala:19-23);
         start=False → LEAST fixpoint (inductive). Where the two
         disagree, the pair's status is genuinely Unknown (Val.scala's
-        4-valued lattice: decided only by the starting assumption).
-        Returns the final round's report pieces per label."""
+        4-valued lattice: decided only by the starting assumption)."""
         for lbl in scc:
             conf[lbl] = rows[lbl].cand.withColumn("conforms", F.lit(start)) \
                                       .localCheckpoint(eager=True)
@@ -1570,42 +1482,39 @@ class ValidationEngine:
         # rounds — equal cardinality implies an equal set, never an
         # equal-sized swap.
         prev_counts = {lbl: conf[lbl].filter("conforms").count() for lbl in scc}
-        last_reports: dict[str, list[DataFrame]] = {}
         for _ in range(MAX_FIXPOINT_ROUNDS):
             changed = False
             for lbl in scc:
-                c, reps = self._evaluate_shape(
+                c = self._evaluate_shape(
                     self.schema.shapes[lbl], rows[lbl], conf)
                 c = c.localCheckpoint(eager=True)
                 n = c.filter("conforms").count()
-                last_reports[lbl] = reps
                 conf[lbl] = c
                 if n != prev_counts[lbl]:
                     prev_counts[lbl] = n
                     changed = True
             if not changed:
                 break
-        return last_reports
 
     def validate(self, focus: DataFrame | None = None,
                  full_terms: bool = False,
                  with_status: bool = False) -> ValidationResult:
-        """Conformance + lazy report for the (node, shape) pairs the
-        trigger selects. The trigger decides only WHICH pairs are
-        checked: every shape runs the same evaluators over focus-marker
-        rows keyed by the full term (see FocusRows), whatever their
-        source.
+        """The shape relations of the (node, shape) pairs the trigger
+        selects, read as conformance and report (ValidationResult). The
+        trigger decides only WHICH pairs are checked: every shape runs
+        the same evaluators over focus-marker rows keyed by the full
+        term (see FocusRows), whatever their source.
 
         ``focus=None`` validates the schema's own target declarations.
         For ref-free schemas each shape then reads its marker rows
-        straight from its targets, and the target_focus relation is
-        built only if the report is read; schemas with shape refs seed
-        candidate propagation with it. A ``focus`` relation (node,
+        straight from its targets, and no target_focus relation is
+        built; schemas with shape refs seed candidate propagation with
+        it and keep its pairs. A ``focus`` relation (node,
         shape[, node_kind, node_dt, node_lang]) — a shape map, a
         filtered target selection — is the candidate relation instead.
 
         full_terms=True adds node_kind/node_dt/node_lang columns to
-        the conformance relation — needed when literal focus terms can
+        the relation — needed when literal focus terms can
         share a lexical value but differ in datatype/language (the ShEx
         suite's "ab"^^dt1 vs "ab"^^dt2 entries).
 
@@ -1648,20 +1557,18 @@ class ValidationEngine:
                     for lbl, c in self._propagate_candidates(_focus()).items()}
         conf: dict[str, DataFrame] = {}
         lfp_conf: dict[str, DataFrame] = {}  # per-label least-fixpoint verdicts
-        all_reports: list[DataFrame] = []
 
         for scc in self.schema.strata():
             if not self.schema.is_recursive(scc):
                 lbl = scc[0]
-                c, reps = self._evaluate_shape(self.schema.shapes[lbl],
-                                               rows[lbl], conf)
+                c = self._evaluate_shape(self.schema.shapes[lbl], rows[lbl],
+                                         conf)
                 if not ref_free:
                     # lazy persist: materialized on first action, reused
                     # by every ref join — no eager driver-side job per
-                    # shape (ref-free conformance is consumed once)
+                    # shape (ref-free shape relations are read once)
                     c = self._maybe_persist(self._maybe_flatten(c))
                 conf[lbl] = c
-                all_reports.extend(reps)
             else:
                 if with_status:
                     # least fixpoint first (into a scratch dict seeded
@@ -1670,15 +1577,13 @@ class ValidationEngine:
                     self._run_fixpoint(scc, rows, scratch, start=False)
                     for lbl in scc:
                         lfp_conf[lbl] = scratch[lbl]
-                last_reports = self._run_fixpoint(scc, rows, conf, start=True)
-                for reps in last_reports.values():
-                    all_reports.extend(reps)
+                self._run_fixpoint(scc, rows, conf, start=True)
 
-        conformance = None
         extra_cols = ([F.col("f_kind").alias("node_kind"),
                        F.col("f_dt").alias("node_dt"),
                        F.col("f_lang").alias("node_lang")]
                       if full_terms else [])
+        pieces: dict[str, DataFrame] = {}
         for lbl, c in conf.items():
             status_cols = []
             if with_status:
@@ -1695,60 +1600,37 @@ class ValidationEngine:
                     status_cols = [
                         F.when(F.col("conforms"), F.lit("conformant"))
                         .otherwise(F.lit("nonconformant")).alias("status")]
-            piece = c.select(
+            pieces[lbl] = c.select(
                 F.col("f_value").alias("node"),
                 F.lit(lbl).alias("shape"),
                 F.col("conforms"),
                 *extra_cols,
                 *status_cols,
+                "violations",
             )
-            conformance = piece if conformance is None else conformance.unionByName(piece)
-
-        def _assemble_report() -> DataFrame:
-            # pieces are thunks (lazy report, see ValidationResult):
-            # built only when a consumer actually reads the report
-            if all_reports:
-                report = all_reports[0]()
-                for r in all_reports[1:]:
-                    report = report.unionByName(r())
-            else:
-                from .model import REPORT_SCHEMA
-                return self.spark.createDataFrame([], REPORT_SCHEMA)
-            # report violations for the shapes' own focus plus
-            # everything a TRANSPARENT (nested sh:property) shape
-            # produced on derived candidates; opaque ref targets report
-            # only via the parent's NodeConstraintComponent (SHACL
-            # sh:node vs sh:property split).
-            focus_nodes = _focus().select(
-                F.col("node").alias("focus_node"),
-                F.col("shape").alias("source_shape")).distinct()
-            # NOTE: no broadcast hint — the focus set is data-sized
-            # (every instance of a targetClass: millions of rows at
-            # 100-TB scale); a forced broadcast would OOM the driver.
-            # AQE picks broadcast on its own when the set is small.
-            kept = report.join(focus_nodes,
-                               on=["focus_node", "source_shape"],
-                               how="left_semi")
-            transparent = [lbl for lbl, sh in self.schema.shapes.items()
-                           if sh.transparent]
-            if transparent:
-                kept = kept.unionByName(
-                    report.filter(F.col("source_shape").isin(transparent)))
-            return kept
-
+        relation = None
+        for piece in pieces.values():
+            relation = piece if relation is None else relation.unionByName(piece)
         if not ref_free:
             # ref schemas propagate candidates BEYOND the focus (values
-            # reachable via shape refs get their own conformance rows);
-            # restrict the output to the asked-for associations. For
-            # ref-free schemas conf == focus by construction (candidates
-            # ARE the focus split per shape), so the semi-join — and
-            # its full recomputation of the focus sub-plan — is skipped.
+            # reachable via shape refs get their own rows); keep the
+            # asked-for pairs, plus everything a TRANSPARENT (nested
+            # sh:property) shape found on derived candidates — opaque
+            # ref targets report only via the parent's
+            # NodeConstraintComponent (SHACL sh:node vs sh:property
+            # split). For ref-free schemas the rows ARE the focus split
+            # per shape, so the semi-join — and its full recomputation
+            # of the focus sub-plan — is skipped.
             focus_pairs = _focus().select("node", "shape").distinct()
-            conformance = conformance.join(focus_pairs,
-                                           on=["node", "shape"],
-                                           how="left_semi")
-        return ValidationResult(conformance=conformance,
-                                report_fn=_assemble_report)
+            relation = relation.join(focus_pairs, on=["node", "shape"],
+                                     how="left_semi")
+        relation = relation.withColumn("asked", F.lit(True))
+        for lbl, sh in self.schema.shapes.items():
+            if sh.transparent:
+                relation = relation.unionByName(
+                    pieces[lbl].withColumn("asked", F.lit(False)))
+        return ValidationResult(relation)
+
 
 
 def pred_pairs_for(triples: DataFrame, iri: str, srcs: DataFrame) -> DataFrame:

@@ -91,13 +91,43 @@ def test_target_driven_plans_stay_flat(spark):
     exchanges than the one-pass plans had when pinned (fixture session,
     parallelism 4): the fused simple-predicate pass shuffles once and
     broadcasts the class relation; the sequence path adds its step
-    joins."""
+    joins. A conformance-only query computes no violation: the
+    collect_list aggregates of the unread violations are pruned, and
+    the aggregates stay hash aggregates."""
     for name, max_exchanges in (("kg_conformance_customer", 2),
                                 ("kg_sequence_path", 6)):
         df = E.queries()[name](spark, SF)
-        assert "SortMergeJoin" not in \
-            df._jdf.queryExecution().executedPlan().toString(), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in plan, name
         nodes = _own_nodes(df)
         assert "SortMergeJoin" not in nodes, name
         assert sum("Exchange" in n for n in nodes) <= max_exchanges, \
             (name, nodes)
+        assert "collect_list" not in plan, name
+        assert "ObjectHashAggregate" not in nodes, name
+
+
+def test_report_reads_the_validated_relation(spark, scope):
+    """Conformance and report are two projections of one relation,
+    which validate_kg persists: once conformance has been read, the
+    report's own plan reads the cached relation and re-evaluates no
+    constraint — no exchange, no aggregate, no join. Covers a
+    ref-free schema over transcript triples and a schema with shape
+    references, whose focus restriction rides in the relation."""
+    from shaclex_spark.pipeline import DEFAULT_SHAPES, build_kg, validate_kg
+    from shaclex_spark.queries import ORDER_REF_SHAPES
+    from shaclex_spark.sources.kg import kg_triples
+    from shaclex_spark.transcripts import synth_transcripts
+
+    transcripts, _ = synth_transcripts(spark, 60, 1)
+    triples, _ = build_kg(spark, transcripts)
+    for name, kg, shapes in (("DEFAULT_SHAPES", triples, DEFAULT_SHAPES),
+                             ("ORDER_REF_SHAPES", kg_triples(spark, SF),
+                              ORDER_REF_SHAPES)):
+        res = validate_kg(spark, kg, shapes, scope=scope)
+        res.conformance.count()
+        nodes = _own_nodes(res.report)
+        assert not [n for n in nodes if "Exchange" in n
+                    or n.endswith("Aggregate") or n.endswith("Join")], \
+            (name, nodes)
+        assert res.report.count() > 0, name
