@@ -72,6 +72,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.streaming:
         from shaclex_spark.pipeline import validate_kg
+        from shaclex_spark.scope import Scope
         from shaclex_spark.streaming import run_streaming_pipeline
 
         out = run_streaming_pipeline(spark, args.input, args.output)
@@ -79,9 +80,11 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"status": "no_input"}))
             return 0
         base = args.output.rstrip("/")
-        res = validate_kg(spark, out["triples"], shapes)
-        res.conformance.write.mode("overwrite").parquet(base + "/conformance")
-        res.report.write.mode("overwrite").parquet(base + "/report")
+        with Scope() as scope:  # both tables read one evaluation
+            res = validate_kg(spark, out["triples"], shapes, scope=scope)
+            res.conformance.write.mode("overwrite").parquet(
+                base + "/conformance")
+            res.report.write.mode("overwrite").parquet(base + "/report")
         # counts from the written tables: counting the lazy canonical
         # view would re-link it. It rewrites the landed mention-form
         # triples one to one, so it has as many rows as triples_raw.

@@ -83,9 +83,10 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
     only focus nodes in it are validated (incremental resume path —
     the caller guarantees soundness via _arc_local_schema).
     ``scope``: owner of the engine's persists (default: the engine's
-    own, never released), among them the result relation — callers
-    read both conformance and report, and persisting the relation
-    makes both read one evaluation."""
+    own, never released). Given a scope, the result relation is
+    persisted into it too, so a caller that reads both conformance and
+    report evaluates the constraints once; without one the relation
+    stays lazy, and a conformance-only read computes no violation."""
     schema = SchemaDict.from_json(shapes_json or DEFAULT_SHAPES)
     plain = triples.select("subj", "pred", "obj_kind", "obj_value",
                            "obj_dt", "obj_lang")
@@ -97,7 +98,9 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
         focus = focus.join(focus_filter.select("node").distinct(),
                            on="node", how="left_semi")
     result = engine.validate(focus)
-    return ValidationResult(engine.scope.persist(result.relation))
+    if scope is None:
+        return result
+    return ValidationResult(scope.persist(result.relation))
 
 
 def _arc_local_schema(shapes_json: list[dict] | None) -> str | bool:

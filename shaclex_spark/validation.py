@@ -543,10 +543,17 @@ class ValidationResult:
     conformance: (node, shape, conforms, ...) — the asked rows;
     report: REPORT_SCHEMA — every row's violations exploded.
 
-    Both are projections of the same relation: a consumer that reads
-    only conformance never computes a violation (Catalyst prunes the
-    unread aggregates), and a consumer that reads both persists the
-    relation once (pipeline.validate_kg) so the evaluation runs once."""
+    Both are projections of the same relation. A consumer that reads
+    only conformance computes no violation of a shape whose relation
+    is read once (Catalyst prunes the unread aggregates); the
+    relations that are persisted or checkpointed because shape refs
+    read them again (referenced shapes, recursive rounds) carry their
+    violations. A consumer that reads both persists the relation into
+    its scope (pipeline.validate_kg), so the evaluation runs once.
+
+    A term's violations are one array in one row: a focus term with
+    very many failing values (a closed shape over a hub node) builds
+    them in one aggregation buffer."""
 
     def __init__(self, relation: DataFrame):
         self.relation = relation
@@ -1535,7 +1542,8 @@ class ValidationEngine:
                                         self.graph)
             return focus_df
 
-        ref_free = not self._ref_edges()
+        referenced = {dst for _, dst, _ in self._ref_edges()}
+        ref_free = not referenced
         if ref_free and focus is None:
             rows = {lbl: FocusRows(targets=sh.targets)
                     for lbl, sh in self.schema.shapes.items()}
@@ -1564,10 +1572,14 @@ class ValidationEngine:
                 c = self._evaluate_shape(self.schema.shapes[lbl], rows[lbl],
                                          conf)
                 if not ref_free:
+                    c = self._maybe_flatten(c)
+                if lbl in referenced:
                     # lazy persist: materialized on first action, reused
                     # by every ref join — no eager driver-side job per
-                    # shape (ref-free shape relations are read once)
-                    c = self._maybe_persist(self._maybe_flatten(c))
+                    # shape (an unreferenced shape's relation is read
+                    # once, so a conformance-only read prunes its
+                    # violations)
+                    c = self._maybe_persist(c)
                 conf[lbl] = c
             else:
                 if with_status:
@@ -1611,24 +1623,25 @@ class ValidationEngine:
         relation = None
         for piece in pieces.values():
             relation = piece if relation is None else relation.unionByName(piece)
-        if not ref_free:
-            # ref schemas propagate candidates BEYOND the focus (values
-            # reachable via shape refs get their own rows); keep the
-            # asked-for pairs, plus everything a TRANSPARENT (nested
-            # sh:property) shape found on derived candidates — opaque
-            # ref targets report only via the parent's
-            # NodeConstraintComponent (SHACL sh:node vs sh:property
-            # split). For ref-free schemas the rows ARE the focus split
-            # per shape, so the semi-join — and its full recomputation
-            # of the focus sub-plan — is skipped.
-            focus_pairs = _focus().select("node", "shape").distinct()
-            relation = relation.join(focus_pairs, on=["node", "shape"],
-                                     how="left_semi")
-        relation = relation.withColumn("asked", F.lit(True))
-        for lbl, sh in self.schema.shapes.items():
-            if sh.transparent:
-                relation = relation.unionByName(
-                    pieces[lbl].withColumn("asked", F.lit(False)))
+        if ref_free:
+            # the rows ARE the focus split per shape: every row is
+            # asked, and no join recomputes the focus sub-plan
+            return ValidationResult(relation.withColumn("asked", F.lit(True)))
+        # ref schemas propagate candidates BEYOND the focus (values
+        # reachable via shape refs get their own rows); keep the
+        # asked-for pairs, plus everything a TRANSPARENT (nested
+        # sh:property) shape found on derived candidates — opaque ref
+        # targets report only via the parent's NodeConstraintComponent
+        # (SHACL sh:node vs sh:property split). Each row is kept once.
+        focus_pairs = (_focus().select("node", "shape").distinct()
+                       .withColumn("asked", F.lit(True)))
+        transparent = [lbl for lbl, sh in self.schema.shapes.items()
+                       if sh.transparent]
+        relation = (relation.join(focus_pairs, on=["node", "shape"],
+                                  how="left")
+                    .withColumn("asked", F.coalesce("asked", F.lit(False)))
+                    .filter(F.col("asked")
+                            | F.col("shape").isin(transparent)))
         return ValidationResult(relation)
 
 

@@ -105,3 +105,37 @@ def test_term_keyed_targets(spark):
     }
     assert len(got) == len(expected) + 1        # + ("lit", "Inverse")
     assert {k: got[k] for k in expected} == expected
+
+
+def test_asked_transparent_shape_reports_once(spark):
+    """A transparent (nested sh:property) shape reports on the values
+    it reaches whether or not it is asked for. A shape map that asks
+    for one of its pairs adds the pair to the conformance; the pair's
+    violations still appear once in the report."""
+    from shaclex_spark.pipeline import validate_kg
+
+    from conftest import triples_df
+
+    ex = "http://example.org/"
+    triples = triples_df(spark, [(ex + "a", ex + "knows", "iri", ex + "b",
+                                  None, None)])
+    shapes = [
+        {"label": "Outer",
+         "targets": [{"kind": "targetNode", "value": ex + "a"}],
+         "constraints": [{"path": ex + "knows",
+                          "node": {"kind": "ref", "label": "Inner"}}]},
+        {"label": "Inner", "targets": [], "transparent": True,
+         "constraints": [{"path": ex + "name", "minCount": 1}]},
+    ]
+    outer = {"node": ex + "a", "shape": "Outer"}
+    inner = {"node": ex + "b", "shape": "Inner"}
+    for shape_map in (None, [outer], [outer, inner]):
+        res = validate_kg(spark, triples, shapes, shape_map=shape_map)
+        asked = {(a["node"], a["shape"]) for a in shape_map or [outer]}
+        assert {(r.node, r.shape) for r in res.conformance.collect()} \
+            == asked, shape_map
+        report = Counter((r.focus_node, r.source_shape, r.component)
+                         for r in res.report.collect())
+        assert report == Counter({(ex + "b", "Inner",
+                                   "MinCountConstraintComponent"): 1}), \
+            (shape_map, report)
