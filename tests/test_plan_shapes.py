@@ -109,9 +109,10 @@ def test_target_driven_plans_stay_flat(spark):
 
 def test_report_reads_the_validated_relation(spark, scope):
     """Conformance and report are two projections of one relation,
-    which validate_kg persists: once conformance has been read, the
-    report's own plan reads the cached relation and re-evaluates no
-    constraint — no exchange, no aggregate, no join. Covers a
+    which validate_kg persists into the caller's scope: once
+    conformance has been read, the report's own plan reads the cached
+    relation and re-evaluates no constraint — no exchange, no
+    aggregate, no join. Covers a
     ref-free schema over transcript triples and a schema with shape
     references, whose focus restriction rides in the relation."""
     from shaclex_spark.pipeline import DEFAULT_SHAPES, build_kg, validate_kg

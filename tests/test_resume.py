@@ -346,15 +346,11 @@ def test_run_pipeline_releases_its_persists(spark):
         assert cache.isEmpty(), "the build leaked a persisted DataFrame"
         run_pipeline(spark, edited, output_dir=out_dir, resume=True)
         assert cache.isEmpty(), "the resume leaked a persisted DataFrame"
-
-
-def test_scope_less_validation_persists_nothing(spark):
-    """Without an output directory run_pipeline has no scope to close:
-    validate_kg then leaves its relation lazy, so reading conformance
-    and report adds nothing to what build_kg's stage boundaries hold."""
-    spark.catalog.clearCache()
+    # without an output directory there is no scope to close: validate_kg
+    # leaves its relation lazy, so reading conformance and report adds
+    # nothing to what build_kg's stage boundaries hold
     held = spark.sparkContext._jsc.getPersistentRDDs
-    out = run_pipeline(spark, _mk_transcripts(spark, LEAST_VARIANT_BASE))
+    out = run_pipeline(spark, base)
     out["triples"].count()
     n_built = held().size()
     out["conformance"].count()
