@@ -21,7 +21,7 @@ ShapesMap.scala:19-23) via a greatest-fixpoint loop in validation.py.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Iterator, Optional
 
 # ------------------------------------------------------------------ paths
 
@@ -366,7 +366,8 @@ class RepeatAlts:
     is a transportation problem — arcs are supplies (grouped by which
     TCs their value satisfies), TCs are sinks with [min,max] bounds —
     decided by the Gale-Hoffman subset conditions (validation.py
-    _eval_repeat_alts), all as conditional aggregates in one groupBy.
+    _partition_check), as conditional aggregates in the shape's one
+    grouped pass.
 
     The reference engine reaches these semantics through its external
     shex partition matcher (suite entries PstarT / nPlus1 /
@@ -413,63 +414,45 @@ class Shape:
     # failure to the parent (SHACL sh:property nesting semantics)
     transparent: bool = False
 
-    def refs(self) -> list[tuple[str, bool]]:
-        out: list[tuple[str, bool]] = []
-        for ne in self.node_constraints:
-            out.extend(ne.refs())
+    def triple_constraints(self) -> Iterator[tuple[str, PropertyConstraint]]:
+        """Every triple constraint with the family it sits in:
+        'property', 'oneOf', 'group' (a group block's members) or
+        'repeat' (a repeat partition's TCs, once per alternative)."""
         for p in self.properties:
+            yield "property", p
+        for group in self.one_of:
+            for p in group:
+                yield "oneOf", p
+        for blk in self.group_blocks:
+            for p in blk.members:
+                yield "group", p
+        for alt in self.repeat_alts.alts if self.repeat_alts else ():
+            for p in alt:
+                yield "repeat", p
+
+    def refs(self) -> list[tuple[str, bool]]:
+        out = [r for ne in self.node_constraints for r in ne.refs()]
+        for family, p in self.triple_constraints():
             out.extend(p.refs())
             # SLang-mode shapes record ShEx EXTRA in `ignored` with the
             # TC kept exclusive: refs on an EXTRA'd predicate still
             # occur under EXTRA's implied negation, so add the negative
             # polarity here too (negativeStructure: Cycle2Extra).
-            if (self.ignored and not p.qualified
+            if (family == "property" and self.ignored and not p.qualified
                     and p.path.kind == "pred" and p.path.iri in self.ignored):
                 out.extend(p.node.refs(True))
-        for group in self.one_of:
-            for p in group:
-                out.extend(p.refs())
-        for blk in self.group_blocks:
-            for p in blk.members:
-                out.extend(p.refs())
-        if self.repeat_alts:
-            for alt in self.repeat_alts.alts:
-                for p in alt:
-                    out.extend(p.refs())
         return out
 
     def classes(self) -> set[str]:
-        out: set[str] = set()
-        for ne in self.node_constraints:
-            out |= ne.classes()
-        for p in self.properties:
-            out |= p.classes()
-        for group in self.one_of:
-            for p in group:
-                out |= p.classes()
-        for blk in self.group_blocks:
-            for p in blk.members:
-                out |= p.classes()
-        if self.repeat_alts:
-            for alt in self.repeat_alts.alts:
-                for p in alt:
-                    out |= p.classes()
-        return out
+        return set().union(*(ne.classes() for ne in self.node_constraints),
+                           *(p.classes() for _, p in self.triple_constraints()))
 
     def declared_preds(self) -> set[str]:
         """Predicates mentioned by simple forward property paths —
-        the CLOSED allowance set (SURVEY.md §2.4 CLOSED row)."""
-        out = set()
-        for p in self.properties:
-            if p.path.kind == "pred":
-                out.add(p.path.iri)
-        for group in self.one_of:
-            for p in group:
-                if p.path.kind == "pred":
-                    out.add(p.path.iri)
-        for blk in self.group_blocks:
-            for p in blk.members:
-                out.add(p.path.iri)
+        the CLOSED allowance set (SURVEY.md §2.4 CLOSED row); a repeat
+        partition contributes the predicates it mentions."""
+        out = {p.path.iri for family, p in self.triple_constraints()
+               if family != "repeat" and p.path.kind == "pred"}
         if self.repeat_alts:
             out |= set(self.repeat_alts.mentioned)
         return out

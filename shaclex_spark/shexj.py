@@ -334,7 +334,7 @@ class _Conv:
         predicates, no EXTRA on the repeated predicate — this compiles
         to a ``repeatAlts`` block (shapes.RepeatAlts): one TC list per
         OneOf alternative, decided per focus by transportation
-        feasibility (validation._eval_repeat_alts). Repeats involving
+        feasibility (validation._partition_check). Repeats involving
         group-cardinality blocks, inverse paths or EXTRA'd predicates
         stay out of the fragment and raise."""
 

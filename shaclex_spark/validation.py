@@ -14,14 +14,16 @@ second evaluator. Each shape gets focus-marker rows keyed by the full
 term — from its own target declarations, or from a candidate relation
 (shape map, filtered focus, ref-propagated candidates, closed shapes).
 Per shape, ONE union(constraint arcs keyed by subject, marker rows) →
-ONE groupBy(term) with fused conditional aggregates for every
-constraint sharing the simple-predicate path family (the FlatShape
-constraint-fusion idea, FlatShapeConversion.scala:27-87) →
-filter(is-focus); a marker row alone makes a zero-arc node count 0
+ONE groupBy(term) with fused conditional aggregates for every triple
+constraint over a simple predicate — property constraints, OneOf
+members, group blocks, repeat partitions, the CLOSED residue (the
+FlatShape constraint-fusion idea, FlatShapeConversion.scala:27-87) →
+filter(is-focus), with the node constraints computed on the grouped
+row; a marker row alone makes a zero-arc node count 0
 (SLang2Clingo.scala:164-168 makes the 0-case explicit). Each complex
-path runs the same union → groupBy over its path pairs. Sibling-path
-joins (equals, lessThan), group blocks and repeat partitions run as
-separate sub-aggregations joined back on the candidate key.
+path runs the same union → groupBy over its path pairs, and sibling-path
+constraints (equals, lessThan) group their violating pairs by source;
+both are left-joined onto the grouped row by the focus term.
 
 Recursion: stratified SCC order; cyclic strata run a greatest-fixpoint
 loop starting from all-conforming — the co-inductive Unknown-counts-
@@ -48,9 +50,10 @@ from .model import (
     XSD_INTEGER,
     XSD_STRING,
 )
-from .paths import VAL_COLS, path_pairs
+from .paths import VAL_COLS, path_pairs, pred_pairs
 from .scope import Scope
-from .shapes import NodeExpr, PropertyConstraint, SchemaDict, Shape, ValueSpec
+from .shapes import (NodeExpr, Path, PropertyConstraint, SchemaDict, Shape,
+                     ValueSpec)
 from .triggers import target_focus, target_rows
 
 MAX_FIXPOINT_ROUNDS = 50
@@ -97,13 +100,6 @@ def focus_to_candidates(focus: DataFrame) -> DataFrame:
     )).distinct()
 
 
-def _subject_of(cand: DataFrame, node: Column) -> Column:
-    """Join condition: ``node`` (a subject / path-source id) is the
-    candidate term. Literals are never subjects, so a literal candidate
-    must not inherit the arcs of an IRI with the same spelling."""
-    return (cand["f_kind"] != "literal") & (cand["f_value"] == node)
-
-
 def _with_key(df: DataFrame) -> DataFrame:
     return df.withColumn(KEY, node_key_col(F.col("f_kind"), F.col("f_value"),
                                            F.col("f_dt"), F.col("f_lang")))
@@ -117,9 +113,9 @@ class FocusRows:
              validation) — marker rows come from triggers.target_rows;
              None when the focus is a candidate relation;
     cand:    the candidate relation (KEY, *FCOLS, distinct) — a shape
-             map, a filtered focus, ref-propagated candidates. For a
-             target-driven shape it is built from the targets on first
-             use (ValidationEngine._cand).
+             map, a filtered focus, ref-propagated candidates; None for
+             a target-driven shape, whose focus terms are never gathered
+             into a relation of their own.
 
     Every evaluator reads the focus only as marker rows, so the trigger
     decides WHICH (node, shape) pairs are checked and never HOW."""
@@ -438,9 +434,14 @@ def _collect_refs(e: NodeExpr) -> set[str]:
     return {lbl for lbl, _ in e.refs()}
 
 
-def _collect_classes(e: NodeExpr) -> set[str]:
-    return e.classes()
+def _lookups(exprs: list[NodeExpr]) -> tuple[set[str], set[str]]:
+    """The shape labels and the classes that ``exprs`` look up."""
+    return (set().union(*(_collect_refs(e) for e in exprs)),
+            set().union(*(e.classes() for e in exprs)))
 
+
+_SUBCLASS_PLUS = Path("oneOrMore",
+                      steps=(Path("pred", iri=RDFS + "subClassOf"),))
 
 
 def _subclass_arcs(triples: DataFrame) -> DataFrame:
@@ -491,9 +492,11 @@ def class_membership(graph: Graph) -> DataFrame:
     """(inst, cls) membership with rdfs:subClassOf* closure — SHACL
     sh:class and targetClass include instances of subclasses
     (exercised by shacl/tests/core/node/class-001.ttl). The subclass
-    graph is schema-sized: its transitive closure is a short driver
-    loop; when no subclass edges exist (the common transcript-KG case)
-    this is exactly the direct rdf:type relation."""
+    graph is schema-sized: its closure is the oneOrMore path loop over
+    the arcs whose object is an IRI, so a bnode or literal parent is
+    neither a class nor traversed. When no subclass edges exist (the
+    common transcript-KG case) this is exactly the direct rdf:type
+    relation."""
     direct = (graph.triples.filter((F.col("pred") == RDF_TYPE)
                                    & (F.col("obj_kind") == "iri"))
               .select(F.col("subj").alias("inst"),
@@ -501,25 +504,11 @@ def class_membership(graph: Graph) -> DataFrame:
               .distinct())
     if not graph.has_subclass:
         return direct
-    sub = (_subclass_arcs(graph.triples)
-           .select(F.col("subj").alias("child"),
-                   F.col("obj_value").alias("parent"))
-           .distinct())
-    closure = sub.localCheckpoint(eager=True)
-    frontier = closure
-    for _ in range(MAX_FIXPOINT_ROUNDS):
-        step = (frontier.withColumnRenamed("parent", "mid")
-                .join(sub.withColumnRenamed("child", "mid"), on="mid")
-                .select("child", "parent"))
-        new = step.join(closure, on=["child", "parent"], how="left_anti") \
-            .distinct().localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    inherited = (direct.withColumnRenamed("cls", "child")
-                 .join(closure, on="child")
-                 .select("inst", F.col("parent").alias("cls")))
+    sub = _subclass_arcs(graph.triples)
+    closure = path_pairs(sub, _SUBCLASS_PLUS, srcs=sub.select("subj"))
+    inherited = (direct.withColumnRenamed("cls", "src")
+                 .join(closure, on="src")
+                 .select("inst", F.col("v_value").alias("cls")))
     return direct.unionByName(inherited).distinct()
 
 
@@ -626,31 +615,21 @@ class ValidationEngine:
     # -- candidate propagation --------------------------------------------
 
     def _ref_edges(self) -> list[tuple[str, str, PropertyConstraint | None]]:
-        """(shape A, referenced shape B, via-property-or-None)."""
+        """(shape A, referenced shape B, via-property-or-None); a repeat
+        partition's TCs give one edge per (predicate, ref)."""
         edges: list[tuple[str, str, PropertyConstraint | None]] = []
         for lbl, sh in self.schema.shapes.items():
             for ne in sh.node_constraints:
                 for ref in _collect_refs(ne):
                     edges.append((lbl, ref, None))
-            for pc in sh.properties:
+            seen: set[tuple[str, str]] = set()
+            for family, pc in sh.triple_constraints():
                 for ref in _collect_refs(pc.node):
+                    if family == "repeat":
+                        if (pc.path.iri, ref) in seen:
+                            continue
+                        seen.add((pc.path.iri, ref))
                     edges.append((lbl, ref, pc))
-            for group in sh.one_of:
-                for pc in group:
-                    for ref in _collect_refs(pc.node):
-                        edges.append((lbl, ref, pc))
-            for blk in sh.group_blocks:
-                for pc in blk.members:
-                    for ref in _collect_refs(pc.node):
-                        edges.append((lbl, ref, pc))
-            if sh.repeat_alts:
-                seen: set[tuple[str, str]] = set()
-                for alt in sh.repeat_alts.alts:
-                    for pc in alt:
-                        for ref in _collect_refs(pc.node):
-                            if (pc.path.iri, ref) not in seen:
-                                seen.add((pc.path.iri, ref))
-                                edges.append((lbl, ref, pc))
         return edges
 
     def _derive_candidates(self, fa: DataFrame,
@@ -769,145 +748,73 @@ class ValidationEngine:
     def _evaluate_shape(self, shape: Shape, rows: FocusRows,
                         conf: dict[str, DataFrame]) -> DataFrame:
         """The shape relation (KEY, *FCOLS, conforms, violations), one
-        row per focus term. Every constraint family yields its own
-        (KEY, conforms, violations) relation — families evaluated per
-        focus term also carry FCOLS, one row per term — and the
-        families combine by a join-back onto the candidates."""
-        if shape.deactivated or (not shape.node_constraints
-                                 and not shape.properties
-                                 and not shape.one_of
-                                 and not shape.group_blocks
-                                 and not shape.repeat_alts
-                                 and not shape.closed):
-            return self._cand(rows).select(KEY, *FCOLS,
-                                           F.lit(True).alias("conforms"),
-                                           _violations().alias("violations"))
+        row per focus term. One grouped pass (_eval_simple) checks every
+        triple constraint over the focus terms' own simple-predicate
+        arcs, and the node constraints on its grouped row. The families
+        that read other pairs — complex paths, OneOf members over
+        complex paths, pairwise — are left-joined onto that row by the
+        focus term. A shape that checks nothing but complex paths takes
+        its first path's relation, which has the same rows, as the
+        base."""
+        if shape.deactivated:  # checks nothing: every focus term conforms
+            shape = Shape(shape.label)
+        cpaths = [pc for pc in shape.properties if not pc.path.is_simple_pred]
+        only_paths = cpaths and len(cpaths) == len(shape.properties) and not (
+            shape.node_constraints or shape.closed or shape.one_of
+            or shape.group_blocks or shape.repeat_alts)
+        rels = [] if only_paths else [self._eval_simple(shape, rows, conf)]
+        rels += [self._eval_cpath(shape, pc, rows, conf) for pc in cpaths]
+        out, *others = rels
+        ok = F.coalesce(F.col("conforms"), F.lit(True))
+        lists = [F.col("violations")]
+        for i, rel in enumerate(others):
+            out = out.join(rel.select(
+                KEY, F.col("conforms").alias(f"__cp_ok_{i}"),
+                F.col("violations").alias(f"__cp_v_{i}")), on=KEY, how="left")
+            ok = ok & F.col(f"__cp_ok_{i}")
+            lists.append(F.col(f"__cp_v_{i}"))
 
-        # (family relation, carries FCOLS with one row per focus term):
-        # when a shape has exactly one family and it carries them, its
-        # relation IS the shape's and the join-back onto cand is
-        # skipped (one exchange + join off the critical path)
-        families: list[tuple[DataFrame, bool]] = []
-
-        # ---- 1. focus-level node constraints -----------------------------
-        if shape.node_constraints:
-            refs: set[str] = set()
-            classes: set[str] = set()
-            for ne in shape.node_constraints:
-                refs |= _collect_refs(ne)
-                classes |= _collect_classes(ne)
-            df, ref_cols, cls_cols = self._join_term_bools(
-                self._cand(rows), "f_", refs, classes, conf)
-            tc = self._term_cols("f_", ref_cols, cls_cols)
-            conjuncts = [cj for ne in shape.node_constraints
-                         for cj in _top_conjuncts(ne)]
-            cols = [compile_expr(cj, tc) for cj in conjuncts]
-            ok_all = cols[0]
-            for c in cols[1:]:
-                ok_all = ok_all & c
-            # one violation per failing conjunct
-            fails = [F.when(~c, _violation(
-                COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
-                shape.severity, F.col("f_value"), F.lit(None),
-                shape.message)) for cj, c in zip(conjuncts, cols)]
-            families.append((df.select(
-                KEY, *FCOLS, ok_all.alias("conforms"),
-                _violations(fails).alias("violations")), True))
-
-        # ---- 2. property constraints --------------------------------------
-        simple = [pc for pc in shape.properties if pc.path.is_simple_pred]
-        complexp = [pc for pc in shape.properties if not pc.path.is_simple_pred]
-
-        if simple or shape.closed:
-            families.append((self._eval_simple(shape, simple, rows, conf),
-                             True))
-
-        for pc in complexp:
-            families.append((self._eval_cpath(shape, pc, rows, conf), True))
-
-        # ShEx OneOf: evaluate each group independently (the members'
-        # violations are not read — the OneOf reports as a whole), then
-        # exactly-one.
+        # ShEx OneOf: exactly one group matches. A group matches iff all
+        # its members do (EachOf inside the chosen alternative): the
+        # simple members' verdict comes from the grouped pass, and a
+        # non-simple member (e.g. inverse ^p from ShExC) from its own
+        # path relation — dropping it would make a group with a missing
+        # ^p arc spuriously 'match'. The members' violations are not
+        # read: the OneOf reports as a whole.
         if shape.one_of:
-            from dataclasses import replace as _dc_replace
-
-            group_flags = []
-            for gi, group in enumerate(shape.one_of):
-                gname = f"__oneof_{gi}"
-                simple_g = [pc for pc in group if pc.path.is_simple_pred]
-                complex_g = [pc for pc in group if not pc.path.is_simple_pred]
-                # each member family yields a (KEY, conforms) relation;
-                # the group matches iff ALL members match (EachOf inside
-                # the chosen alternative). Non-simple paths (e.g.
-                # inverse ^p from ShExC) are evaluated via the
-                # complex-path evaluator — dropping them would make a
-                # group with a missing ^p arc spuriously 'match'.
-                member_flags: list[DataFrame] = []
-                if simple_g:
-                    proxy = _dc_replace(shape, closed=False, one_of=[],
-                                        node_constraints=[],
-                                        properties=list(simple_g))
-                    member_flags.append(
-                        self._eval_simple(proxy, simple_g, rows, conf))
-                for pcx in complex_g:
-                    member_flags.append(
-                        self._eval_cpath(shape, pcx, rows, conf))
-                gmerged = self._cand(rows).select(KEY)
-                gcol = F.lit(True)
-                for mi, mdf in enumerate(member_flags):
-                    gmerged = gmerged.join(mdf.select(
-                        KEY, F.col("conforms").alias(f"__m_{mi}")),
-                        on=KEY, how="left")
-                    gcol = gcol & F.coalesce(F.col(f"__m_{mi}"), F.lit(False))
-                group_flags.append(
-                    gmerged.select(KEY, gcol.alias(gname)))
-            merged = self._cand(rows).select(KEY)
             total = F.lit(0)
-            for gi, gdf in enumerate(group_flags):
-                merged = merged.join(gdf, on=KEY, how="left")
-                total = total + F.coalesce(
-                    F.col(f"__oneof_{gi}"), F.lit(False)).cast("int")
-            one_ok = (total == 1)
-            families.append((merged.select(
-                KEY, one_ok.alias("conforms"), _violations([F.when(
-                    ~one_ok, _violation(
-                        "OneOfConstraintComponent", shape.severity,
-                        F.lit(None), F.lit(None), shape.message))])
-                .alias("violations")), False))
+            for gi, group in enumerate(shape.one_of):
+                flag = F.col(f"__og_{gi}")
+                for mi, pc in enumerate(pc for pc in group
+                                        if not pc.path.is_simple_pred):
+                    name = f"__og_{gi}_{mi}"
+                    out = out.join(self._eval_cpath(shape, pc, rows, conf)
+                                   .select(KEY, F.col("conforms").alias(name)),
+                                   on=KEY, how="left")
+                    flag = flag & F.col(name)
+                total = total + flag.cast("int")
+            one_ok = total == 1
+            ok = ok & one_ok
+            lists.append(_violations([F.when(~one_ok, _violation(
+                "OneOfConstraintComponent", shape.severity, F.lit(None),
+                F.lit(None), shape.message))]))
 
-        # ShEx group-cardinality blocks ( TC... ){m,n}
-        for blk in shape.group_blocks:
-            families.append((self._eval_group_block(
-                shape, self._cand(rows), conf, blk), False))
-
-        # ShEx repeated-predicate partition semantics (RepeatAlts)
-        if shape.repeat_alts:
-            families.append((self._eval_repeat_alts(
-                shape, self._cand(rows), conf), False))
-
-        # pairwise sibling constraints
-        for pc in shape.properties:
-            if pc.equals or pc.disjoint or pc.less_than or pc.less_than_or_equals:
-                families.append(
-                    (self._eval_pairwise(shape, self._cand(rows), pc), True))
-
-        # ---- 3. combine -----------------------------------------------------
-        if len(families) == 1 and families[0][1]:
-            return families[0][0].select(
-                KEY, *FCOLS,
-                F.coalesce(F.col("conforms"), F.lit(True)).alias("conforms"),
-                "violations")
-        out = self._cand(rows)
-        final_ok = F.lit(True)
-        lists = []
-        for i, (dfk, _) in enumerate(families):
-            out = out.join(dfk.select(KEY, F.col("conforms").alias(f"__ok_{i}"),
-                                      F.col("violations").alias(f"__v_{i}")),
-                           on=KEY, how="left")
-            final_ok = final_ok & F.coalesce(F.col(f"__ok_{i}"), F.lit(True))
-            lists.append(F.coalesce(F.col(f"__v_{i}"), _violations()))
-        return out.select(KEY, *FCOLS, final_ok.alias("conforms"),
-                          F.concat(*lists).alias("violations"))
+        # pairwise sibling constraints, by source node: literals are
+        # never subjects, so a literal focus term never meets the
+        # violations of an IRI with the same spelling
+        for i, pc in enumerate(pc for pc in shape.properties
+                               if pc.equals or pc.disjoint or pc.less_than
+                               or pc.less_than_or_equals):
+            src, viol = f"__pw_src_{i}", f"__pw_v_{i}"
+            bad = self._eval_pairwise(shape, rows, pc).select(
+                F.col("src").alias(src), F.col("violations").alias(viol))
+            out = out.join(bad, on=(F.col("f_kind") != "literal")
+                           & (F.col("f_value") == F.col(src)), how="left")
+            ok = ok & F.col(viol).isNull()
+            lists.append(F.coalesce(F.col(viol), _violations()))
+        return out.select(KEY, *FCOLS, ok.alias("conforms"),
+                          lists[0] if len(lists) == 1
+                          else F.concat(*lists).alias("violations"))
 
     # -- focus row sources --------------------------------------------------
 
@@ -927,28 +834,25 @@ class ValidationEngine:
             out = out.unionByName(p)
         return out
 
-    def _cand(self, rows: FocusRows) -> DataFrame:
-        """The distinct candidate relation (KEY, *FCOLS) — the join-back
-        base of the families evaluated per candidate (node constraints,
-        OneOf, group blocks, repeat partitions, pairwise). Built from the
-        target markers on first use for target-driven shapes."""
-        if rows.cand is None:
-            rows.cand = self._maybe_persist(
-                _with_key(self._marker_rows(rows.targets)).distinct())
-        return rows.cand
+    def _markers(self, rows: FocusRows) -> DataFrame:
+        """A shape's focus-marker rows (*FCOLS): its candidate
+        relation's, or its target declarations' (_marker_rows)."""
+        return (rows.cand.select(*FCOLS) if rows.targets is None
+                else self._marker_rows(rows.targets))
 
     # -- fused simple-predicate evaluator ----------------------------------
 
-    def _eval_simple(self, shape: Shape, props: list[PropertyConstraint],
-                     rows: FocusRows, conf: dict[str, DataFrame]) -> DataFrame:
-        """(KEY, *FCOLS, conforms, violations), one row per focus term,
-        in ONE grouped pass: union(pred-filtered constraint arcs keyed
+    def _eval_simple(self, shape: Shape, rows: FocusRows,
+                     conf: dict[str, DataFrame]) -> DataFrame:
+        """(KEY, *FCOLS, conforms, violations[, __og_*]), one row per
+        focus term, in ONE grouped pass: union(pred-filtered arcs keyed
         by subject, focus-marker rows keyed by term) → ONE
-        groupBy(term) with conditional aggregates for every simple-pred
-        constraint + CLOSED residue → filter(is-focus). Focus terms
-        without arcs group from their marker row alone and count 0; a
-        literal focus term never meets the subject-keyed arcs of an IRI
-        with the same spelling.
+        groupBy(term) with conditional aggregates for every triple
+        constraint over a simple predicate + CLOSED residue →
+        filter(is-focus) (see _fused_agg). Focus terms without arcs
+        group from their marker row alone and count 0; a literal focus
+        term never meets the subject-keyed arcs of an IRI with the same
+        spelling.
 
         Target-driven rows fold subject-keyed targets (targetSubjectsOf;
         targetClass when the graph has no subClassOf arcs) into the arc
@@ -959,10 +863,13 @@ class ValidationEngine:
         targetNode, subclass-closed targetClass) union marker rows.
 
         Candidate rows — and always closed shapes, whose arc scan is the
-        UNFILTERED graph — left-semi-join the arc scan to the candidates'
-        non-literal terms first, so only the focus set's arcs shuffle
-        (the 100-TB-safe shape for sh:closed)."""
-        preds = {pc.path.iri for pc in props}
+        UNFILTERED graph — left-semi-join the arc scan to the focus
+        terms' non-literal values first, so only the focus set's arcs
+        shuffle (the 100-TB-safe shape for sh:closed)."""
+        preds = {pc.path.iri for _, pc in shape.triple_constraints()
+                 if pc.path.is_simple_pred}
+        if shape.repeat_alts:
+            preds.update(shape.repeat_alts.mentioned)
         null_s = F.lit(None).cast("string")
         subj_kind = F.when(F.col("subj").startswith("_:"), F.lit("bnode")) \
             .otherwise(F.lit("iri"))
@@ -985,13 +892,12 @@ class ValidationEngine:
                 arc_cond if marker_cond is None else (arc_cond | marker_cond))
             markers = self._marker_rows(term_targets) if term_targets else None
         else:
-            cand = self._cand(rows)
+            markers = self._markers(rows)
             scan = (self.triples if shape.closed
                     else self.triples.filter(arc_cond))
-            scan = scan.join(cand.filter(F.col("f_kind") != "literal")
+            scan = scan.join(markers.filter(F.col("f_kind") != "literal")
                              .select(F.col("f_value").alias("subj")),
                              on="subj", how="left_semi")
-            markers = cand.select(*FCOLS)
         arcs = scan.select(
             subj_kind.alias("f_kind"), F.col("subj").alias("f_value"),
             null_s.alias("f_dt"), null_s.alias("f_lang"),
@@ -1003,35 +909,97 @@ class ValidationEngine:
                 *FCOLS, null_s.alias("pred"), null_s.alias("obj_kind"),
                 null_s.alias("obj_value"), null_s.alias("obj_dt"),
                 null_s.alias("obj_lang"), F.lit(True).alias("__tgt")))
-        return self._fused_agg(shape, _with_key(arcs), conf, props)
+        return self._fused_agg(shape, _with_key(arcs), conf)
 
     def _fused_agg(self, shape: Shape, arcs: DataFrame,
-                   conf: dict[str, DataFrame],
-                   props: list[PropertyConstraint]) -> DataFrame:
-        """(KEY, *FCOLS, conforms, violations) of the focus terms of an
-        arc relation that carries f_* focus-term columns, pred/obj_* arc
-        columns and the __tgt marker flag (built by _eval_simple): ONE
-        groupBy(term) with conditional aggregates for every constraint.
-        Per-value violations are collected in the same aggregate (one
-        per arc row, as the arcs are not deduplicated); per-focus ones
-        read the grouped counts."""
-        refs: set[str] = set()
-        classes: set[str] = set()
-        for pc in props:
-            refs |= _collect_refs(pc.node)
-            classes |= _collect_classes(pc.node)
+                   conf: dict[str, DataFrame]) -> DataFrame:
+        """(KEY, *FCOLS, conforms, violations[, __og_*]) of the focus
+        terms of an arc relation that carries f_* focus-term columns,
+        pred/obj_* arc columns and the __tgt marker flag (built by
+        _eval_simple): ONE groupBy(term) with conditional aggregates for
+        the property constraints, the CLOSED residue, each OneOf group's
+        simple members (its verdict in column __og_<group>, read by
+        _evaluate_shape), the group blocks and the repeat partition; the
+        node constraints are then columns of the grouped row. Per-value
+        violations are collected in the same aggregate (one per arc
+        row, as the arcs are not deduplicated); per-focus ones read the
+        grouped counts."""
+        values = [pc.node for _, pc in shape.triple_constraints()
+                  if pc.path.is_simple_pred]
         arcs, ref_cols, cls_cols = self._join_term_bools(
-            arcs, "obj_", refs, classes, conf)
+            arcs, "obj_", *_lookups(values), conf)
         tc = self._term_cols("obj_", ref_cols, cls_cols)
 
         aggs: list[Column] = [F.max("__tgt").alias("__is_focus")]
-        checks: list[tuple[PropertyConstraint, dict]] = []
         lists: list[Column] = []
+        oks, fails = self._property_checks(
+            shape, [pc for pc in shape.properties if pc.path.is_simple_pred],
+            tc, "", aggs, lists)
+        ok = F.lit(True)
+        if shape.closed:
+            # allowed = declared property paths + sh:ignoredProperties / EXTRA
+            # (SURVEY.md §2.4 CLOSED: per-subject anti-count)
+            allowed = shape.declared_preds() | set(shape.ignored)
+            off_path = F.col("pred").isNotNull() & ~F.col("pred").isin(list(allowed))
+            aggs.append(F.count(F.when(off_path, F.lit(1))).alias("__n_closed_bad"))
+            aggs.append(F.collect_list(F.when(off_path, _violation(
+                "ClosedConstraintComponent", shape.severity,
+                F.col("obj_value"), F.col("pred"), shape.message)))
+                .alias("__viol_closed"))
+            lists.append(F.col("__viol_closed"))
+            ok = F.col("__n_closed_bad") == 0
+        for c in oks:
+            ok = ok & c
+        flags = []
+        for gi, group in enumerate(shape.one_of):
+            g_oks, _ = self._property_checks(
+                shape, [pc for pc in group if pc.path.is_simple_pred], tc,
+                f"o{gi}_", aggs, None)
+            flag = F.lit(True)
+            for c in g_oks:
+                flag = flag & c
+            flags.append(flag.alias(f"__og_{gi}"))
+        checks = [self._block_check(shape, blk, b, tc, aggs)
+                  for b, blk in enumerate(shape.group_blocks)]
+        if shape.repeat_alts:
+            checks.append(self._partition_check(shape, tc, aggs))
 
-        def collect(name: str, bad: Column, violation: Column) -> None:
-            aggs.append(F.collect_list(F.when(bad, violation)).alias(name))
-            lists.append(F.col(name))
+        # group by the full term tuple: KEY is injective in (f_kind,
+        # f_value, f_dt, f_lang), so cardinality is unchanged, the
+        # exchange still hashes one key set, and the term columns ride
+        # through - the grouped row IS the shape relation's row.
+        grouped = arcs.groupBy(KEY, *FCOLS).agg(*aggs) \
+            .filter(F.col("__is_focus"))
+        if shape.node_constraints:
+            grouped, ref_cols, cls_cols = self._join_term_bools(
+                grouped, "f_", *_lookups(shape.node_constraints), conf)
+            ftc = self._term_cols("f_", ref_cols, cls_cols)
+            # one violation per failing conjunct
+            for cj in (cj for ne in shape.node_constraints
+                       for cj in _top_conjuncts(ne)):
+                c = compile_expr(cj, ftc)
+                checks.append((c, _violation(
+                    COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
+                    shape.severity, F.col("f_value"), F.lit(None),
+                    shape.message)))
+        for c, violation in checks:
+            ok = ok & c
+            fails.append(F.when(~c, violation))
+        return grouped.select(KEY, *FCOLS, ok.alias("conforms"),
+                              _violations(fails, lists).alias("violations"),
+                              *flags)
 
+    def _property_checks(self, shape: Shape, props: list[PropertyConstraint],
+                         tc: TermCols, tag: str, aggs: list[Column],
+                         lists: list[Column] | None
+                         ) -> tuple[list[Column], list[Column]]:
+        """Property constraints over simple predicates, as conditional
+        aggregates appended to ``aggs`` (named with ``tag``): returns
+        each constraint's verdict over the grouped counts and the
+        per-focus violations. ``props`` are each other's siblings for
+        qualifiedValueShapesDisjoint. Per-value violations are
+        collected into ``lists``; None collects none (a OneOf member
+        reports as its OneOf)."""
         # first pass: per-constraint value predicates (needed up front so
         # qualifiedValueShapesDisjoint constraints can exclude values
         # matching a SIBLING qualified shape — ShEx2Shacl.scala:374-405;
@@ -1047,6 +1015,8 @@ class ValidationEngine:
                 v_ok = v_ok & c_ok
             prepared.append((pc, per_value, existential, v_ok))
 
+        oks: list[Column] = []
+        fails: list[Column] = []
         for i, (pc, per_value, existential, v_ok) in enumerate(prepared):
             on_path = F.col("pred") == pc.path.iri
             count_ok = v_ok
@@ -1054,9 +1024,10 @@ class ValidationEngine:
                 for j, (pc2, _, _, v_ok2) in enumerate(prepared):
                     if j != i and pc2.qualified and pc2.qualified_disjoint:
                         count_ok = count_ok & ~v_ok2
-            names = {"total": f"__n_{i}", "ok": f"__ok_{i}",
-                     "bad": f"__bad_{i}",
-                     "has": [f"__has_{i}_{j}" for j in range(len(existential))]}
+            names = {"total": f"__n_{tag}{i}", "ok": f"__ok_{tag}{i}",
+                     "bad": f"__bad_{tag}{i}",
+                     "has": [f"__has_{tag}{i}_{j}"
+                             for j in range(len(existential))]}
             aggs.append(F.count(F.when(on_path, F.lit(1))).alias(names["total"]))
             aggs.append(F.count(F.when(on_path & count_ok, F.lit(1))).alias(names["ok"]))
             aggs.append(F.count(F.when(on_path & ~v_ok, F.lit(1))).alias(names["bad"]))
@@ -1064,49 +1035,26 @@ class ValidationEngine:
                 hit = _value_match(ex.values[0], tc)
                 aggs.append(F.count(F.when(on_path & hit, F.lit(1))).alias(nm))
             if pc.unique_lang:
-                nl, ndl = f"__nlang_{i}", f"__ndlang_{i}"
+                nl, ndl = f"__nlang_{tag}{i}", f"__ndlang_{tag}{i}"
                 names["nlang"], names["ndlang"] = nl, ndl
                 aggs.append(F.count(F.when(on_path & tc.lang.isNotNull(), F.lit(1))).alias(nl))
                 aggs.append(F.countDistinct(
                     F.when(on_path & tc.lang.isNotNull(), F.lower(tc.lang))).alias(ndl))
-            checks.append((pc, names))
             # per-value violations (qualified shapes report only their
             # count components, never per-value)
             for j, (cj, c_ok) in enumerate(per_value):
-                if pc.qualified or self._is_transparent_ref(cj):
+                if lists is None or pc.qualified or self._is_transparent_ref(cj):
                     continue
-                collect(f"__viol_{i}_{j}", on_path & ~c_ok,
-                        _violation(COMPONENT_NAMES.get(
-                            cj.kind, "NodeConstraintComponent"),
-                            pc.severity, F.col("obj_value"),
-                            F.lit(pc.path.iri), pc.message or shape.message))
-
-        ok = F.lit(True)
-        if shape.closed:
-            # allowed = declared property paths + sh:ignoredProperties / EXTRA
-            # (SURVEY.md §2.4 CLOSED: per-subject anti-count)
-            allowed = shape.declared_preds() | set(shape.ignored)
-            off_path = F.col("pred").isNotNull() & ~F.col("pred").isin(list(allowed))
-            aggs.append(F.count(F.when(off_path, F.lit(1))).alias("__n_closed_bad"))
-            collect("__viol_closed", off_path, _violation(
-                "ClosedConstraintComponent", shape.severity,
-                F.col("obj_value"), F.col("pred"), shape.message))
-            ok = F.col("__n_closed_bad") == 0
-
-        # group by the full term tuple: KEY is injective in (f_kind,
-        # f_value, f_dt, f_lang), so cardinality is unchanged, the
-        # exchange still hashes one key set, and the term columns ride
-        # through - letting a pure simple-pred shape use this aggregate
-        # AS the shape relation (no join-back onto cand).
-        grouped = arcs.groupBy(KEY, *FCOLS).agg(*aggs) \
-            .filter(F.col("__is_focus"))
-        fails: list[Column] = []
-        for pc, names in checks:
+                name = f"__viol_{tag}{i}_{j}"
+                aggs.append(F.collect_list(F.when(on_path & ~c_ok, _violation(
+                    COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
+                    pc.severity, F.col("obj_value"), F.lit(pc.path.iri),
+                    pc.message or shape.message))).alias(name))
+                lists.append(F.col(name))
             c_ok, c_fails = self._count_checks(shape, pc, names)
-            ok = ok & c_ok
+            oks.append(c_ok)
             fails += c_fails
-        return grouped.select(KEY, *FCOLS, ok.alias("conforms"),
-                              _violations(fails, lists).alias("violations"))
+        return oks, fails
 
     def _count_checks(self, shape: Shape, pc: PropertyConstraint,
                       names: dict) -> tuple[Column, list[Column]]:
@@ -1138,12 +1086,11 @@ class ValidationEngine:
 
     # -- group-cardinality blocks ----------------------------------------------
 
-    def _eval_group_block(self, shape: Shape, cand: DataFrame,
-                          conf: dict[str, DataFrame], blk) -> DataFrame:
-        """(KEY, conforms, violations) of a ( TC... ){m,n} block — one
-        left join on the block's predicates + one grouped conditional
-        aggregate (same physical shape as the
-        fused simple-pred plan). Repetition count k:
+    def _block_check(self, shape: Shape, blk, b: int, tc: TermCols,
+                     aggs: list[Column]) -> tuple[Column, Column]:
+        """(verdict, violation) of the ``b``-th ( TC... ){m,n} block over
+        the fused pass's grouped counts, whose conditional aggregates it
+        appends to ``aggs``. Repetition count k:
           eachOf: every member consumes one arc per repetition ⇒ all
                   members' matching counts must be EQUAL (= k);
           oneOf:  each repetition consumes one arc of any member ⇒
@@ -1152,70 +1099,47 @@ class ValidationEngine:
         predicates (two-count semantics). shexTest 'skipped' (card `?`,
         zero arcs) passes through min=0, not a special case."""
         preds = [pc.path.iri for pc in blk.members]
-        ts = (self.triples.filter(F.col("pred").isin(preds))
-              .select("subj", "pred", "obj_kind", "obj_value",
-                      "obj_dt", "obj_lang"))
-        arcs = cand.join(ts, on=_subject_of(cand, ts["subj"]), how="left") \
-                   .drop("subj")
-        refs: set[str] = set()
-        classes: set[str] = set()
-        for pc in blk.members:
-            refs |= _collect_refs(pc.node)
-            classes |= _collect_classes(pc.node)
-        arcs, ref_cols, cls_cols = self._join_term_bools(
-            arcs, "obj_", refs, classes, conf)
-        tc = self._term_cols("obj_", ref_cols, cls_cols)
-
-        aggs: list[Column] = []
+        bad = F.lit(0)
+        oks = []
         for i, pc in enumerate(blk.members):
             on_path = F.col("pred") == pc.path.iri
             v_ok = compile_expr(pc.node, tc)
             aggs.append(F.count(F.when(on_path & v_ok, F.lit(1)))
-                        .alias(f"__gok_{i}"))
+                        .alias(f"__gok_{b}_{i}"))
             aggs.append(F.count(F.when(on_path & ~v_ok, F.lit(1)))
-                        .alias(f"__gbad_{i}"))
-        grouped = arcs.groupBy(KEY).agg(*aggs)
-
-        bad = F.lit(0)
-        for i in range(len(blk.members)):
-            bad = bad + F.col(f"__gbad_{i}")
-        oks = [F.col(f"__gok_{i}") for i in range(len(blk.members))]
-        if blk.kind == "oneOf":
-            k = oks[0]
-            for c in oks[1:]:
+                        .alias(f"__gbad_{b}_{i}"))
+            bad = bad + F.col(f"__gbad_{b}_{i}")
+            oks.append(F.col(f"__gok_{b}_{i}"))
+        k = oks[0]
+        ok = bad == 0
+        for c in oks[1:]:
+            if blk.kind == "oneOf":
                 k = k + c
-            counts_consistent = F.lit(True)
-        else:  # eachOf: all member counts equal
-            k = oks[0]
-            counts_consistent = F.lit(True)
-            for c in oks[1:]:
-                counts_consistent = counts_consistent & (c == k)
-        in_range = k >= blk.min_count
+            else:  # eachOf: all member counts equal
+                ok = ok & (c == oks[0])
+        ok = ok & (k >= blk.min_count)
         if blk.max_count is not None:
-            in_range = in_range & (k <= blk.max_count)
-        ok = (bad == 0) & counts_consistent & in_range
-        return grouped.select(KEY, ok.alias("conforms"), _violations([F.when(
-            ~ok, _violation("GroupCardinalityConstraintComponent",
-                            shape.severity, F.lit(None),
-                            F.lit("|".join(preds)), shape.message))])
-            .alias("violations"))
+            ok = ok & (k <= blk.max_count)
+        return ok, _violation("GroupCardinalityConstraintComponent",
+                              shape.severity, F.lit(None),
+                              F.lit("|".join(preds)), shape.message)
 
     # -- repeated-predicate partition (RepeatAlts) -------------------------
 
-    def _eval_repeat_alts(self, shape: Shape, cand: DataFrame,
-                          conf: dict[str, DataFrame]) -> DataFrame:
-        """(KEY, conforms, violations) under ShEx partition semantics
+    def _partition_check(self, shape: Shape, tc: TermCols,
+                         aggs: list[Column]) -> tuple[Column, Column]:
+        """(verdict, violation) under ShEx partition semantics
         for repeated predicates: the focus node's arcs over the
         mentioned predicates must be partitioned among the triple
         constraints of SOME OneOf alternative, each TC consuming a count
         within [min,max] (suite: PstarT / P2T2 / nPlus1 /
         false-lead-excluding-value-shape families).
 
-        Physical shape: ONE left join on the mentioned predicates + ONE
-        grouped conditional aggregate — identical to the fused
-        simple-pred plan, so it scales the same way. Feasibility per
-        (alternative, predicate) is a transportation problem decided by
-        the Gale–Hoffman subset conditions over arc classes:
+        Its conditional aggregates are appended to ``aggs``, the fused
+        pass's single groupBy, so it scales as that pass does.
+        Feasibility per (alternative, predicate) is a transportation
+        problem decided by the Gale–Hoffman subset conditions over arc
+        classes:
 
           * none  = arcs satisfying NO member TC ⇒ must be 0 (every
             matchable arc is consumed; the predicate is mentioned);
@@ -1231,22 +1155,6 @@ class ValidationEngine:
         failures stay skipped)."""
         ra = shape.repeat_alts
         preds = list(ra.mentioned)
-        ts = (self.triples.filter(F.col("pred").isin(preds))
-              .select("subj", "pred", "obj_kind", "obj_value",
-                      "obj_dt", "obj_lang"))
-        arcs = cand.join(ts, on=_subject_of(cand, ts["subj"]),
-                         how="left").drop("subj")
-        refs: set[str] = set()
-        classes: set[str] = set()
-        for alt in ra.alts:
-            for pc in alt:
-                refs |= _collect_refs(pc.node)
-                classes |= _collect_classes(pc.node)
-        arcs, ref_cols, cls_cols = self._join_term_bools(
-            arcs, "obj_", refs, classes, conf)
-        tc = self._term_cols("obj_", ref_cols, cls_cols)
-
-        aggs: list[Column] = []
         for p_i, p in enumerate(preds):
             aggs.append(F.count(F.when(F.col("pred") == p, F.lit(1)))
                         .alias(f"__rp_n_{p_i}"))
@@ -1285,8 +1193,6 @@ class ValidationEngine:
                         F.count(F.when(on_p & any_match & ~out_s, F.lit(1)))
                         .alias(f"__ra_{j}_{p_i}_only_{s}"))
 
-        grouped = arcs.groupBy(KEY).agg(*aggs)
-
         feasible_any = F.lit(False)
         for j, by_pred in enumerate(alt_by_pred):
             cond = F.lit(True)
@@ -1311,12 +1217,9 @@ class ValidationEngine:
                             F.col(f"__ra_{j}_{p_i}_reach_{s}") >= need)
             feasible_any = feasible_any | cond
 
-        return grouped.select(
-            KEY, feasible_any.alias("conforms"), _violations([F.when(
-                ~feasible_any, _violation(
-                    "PartitionConstraintComponent", shape.severity,
-                    F.lit(None), F.lit("|".join(preds)), shape.message))])
-            .alias("violations"))
+        return feasible_any, _violation(
+            "PartitionConstraintComponent", shape.severity, F.lit(None),
+            F.lit("|".join(preds)), shape.message)
 
     # -- complex-path evaluator ---------------------------------------------
 
@@ -1330,8 +1233,7 @@ class ValidationEngine:
         (path_pairs srcs), so at scale the chain only expands the focus
         neighborhood; zero-pair focus terms group from their marker row
         alone and count 0."""
-        markers = (rows.cand.select(*FCOLS) if rows.targets is None
-                   else self._marker_rows(rows.targets))
+        markers = self._markers(rows)
         srcs = markers.filter(F.col("f_kind") != "literal") \
             .select(F.col("f_value").alias("n"))
         # Multiplicity-insensitive thresholds (minCount ≤ 1, no
@@ -1343,10 +1245,8 @@ class ValidationEngine:
         collect = F.collect_set if dedup_free else F.collect_list
         pairs = path_pairs(self.triples, pc.path, srcs,
                            dedup=not dedup_free)
-        refs = _collect_refs(pc.node)
-        classes = _collect_classes(pc.node)
         pairs, ref_cols, cls_cols = self._join_term_bools(
-            pairs, "v_", refs, classes, conf)
+            pairs, "v_", *_lookups([pc.node]), conf)
         tc = self._term_cols("v_", ref_cols, cls_cols)
         conjs = _top_conjuncts(pc.node)
         per_value = [(c, compile_expr(c, tc)) for c in conjs
@@ -1412,19 +1312,19 @@ class ValidationEngine:
 
     # -- pairwise sibling-path constraints ------------------------------------
 
-    def _eval_pairwise(self, shape: Shape, cand: DataFrame,
+    def _eval_pairwise(self, shape: Shape, rows: FocusRows,
                        pc: PropertyConstraint) -> DataFrame:
         """equals / disjoint / lessThan(-OrEquals) against a sibling
         predicate: per-focus set joins (SURVEY.md §2.5 rows). Each
-        violating (src, value) row is one violation, collected per src
-        by the aggregate that joins the verdict back onto cand."""
-        srcs = cand.filter(F.col("f_kind") != "literal") \
-                   .select(F.col("f_value").alias("n"))
+        violating (src, value) row is one violation, collected per
+        source node: (src, violations), a row per violating src."""
+        srcs = self._markers(rows).filter(F.col("f_kind") != "literal") \
+            .select(F.col("f_value").alias("n"))
         a = path_pairs(self.triples, pc.path, srcs).withColumn(
             "akey", node_key_col(F.col("v_kind"), F.col("v_value"),
                                  F.col("v_dt"), F.col("v_lang")))
         sibling = pc.equals or pc.disjoint or pc.less_than or pc.less_than_or_equals
-        b = pred_pairs_for(self.triples, sibling, srcs).withColumn(
+        b = pred_pairs(self.triples, sibling, srcs).withColumn(
             "bkey", node_key_col(F.col("v_kind"), F.col("v_value"),
                                  F.col("v_dt"), F.col("v_lang")))
         if pc.equals:
@@ -1457,15 +1357,10 @@ class ValidationEngine:
             viol_vals = theta.filter(
                 ~F.coalesce(good, F.lit(False))
             ).select("src", F.col("A.v_value").alias("value"))
-        bad_srcs = viol_vals.groupBy("src").agg(F.collect_list(_violation(
+        return viol_vals.groupBy("src").agg(F.collect_list(_violation(
             comp_name, pc.severity, F.col("value"),
             F.lit(pc.path.describe()), pc.message or shape.message))
-            .alias("__pair_v"))
-        joined = cand.join(bad_srcs, on=_subject_of(cand, bad_srcs["src"]),
-                           how="left")
-        return joined.select(
-            KEY, *FCOLS, F.col("__pair_v").isNull().alias("conforms"),
-            F.coalesce(F.col("__pair_v"), _violations()).alias("violations"))
+            .alias("violations"))
 
     # -- public entry ---------------------------------------------------------
 
@@ -1559,7 +1454,7 @@ class ValidationEngine:
                     for lbl in self.schema.shapes}
         else:
             # candidate sets are reused by every constraint sub-plan of
-            # a shape (fused agg, complex paths, pairwise, reports):
+            # a shape (fused pass, complex paths, pairwise):
             # persist lazily so each materializes at most once.
             rows = {lbl: FocusRows(cand=self._maybe_persist(c))
                     for lbl, c in self._propagate_candidates(_focus()).items()}
@@ -1644,8 +1539,3 @@ class ValidationEngine:
                             | F.col("shape").isin(transparent)))
         return ValidationResult(relation)
 
-
-
-def pred_pairs_for(triples: DataFrame, iri: str, srcs: DataFrame) -> DataFrame:
-    from .paths import pred_pairs
-    return pred_pairs(triples, iri, srcs)

@@ -1,5 +1,5 @@
 """Property test for the partition-feasibility conditions behind
-validation._eval_repeat_alts (repeated-predicate semantics).
+validation._partition_check (repeated-predicate semantics).
 
 The engine decides "can the focus node's arcs be partitioned among k
 same-predicate TripleConstraints, each consuming a count within
@@ -31,7 +31,7 @@ from hypothesis import strategies as st
 def feasible_conditions(counts: dict[int, int],
                         bounds: list[tuple[int, int | None]]) -> bool:
     """The engine's subset conditions (pure-Python mirror of the
-    column expressions built in _eval_repeat_alts)."""
+    column expressions built in _partition_check)."""
     k = len(bounds)
     if counts.get(0, 0) > 0:
         return False

@@ -107,6 +107,58 @@ def test_target_driven_plans_stay_flat(spark):
         assert "ObjectHashAggregate" not in nodes, name
 
 
+def test_folded_families_plan_like_simple_only(spark):
+    """A node constraint, a OneOf, a group block and a repeat partition
+    over simple predicates fold into the one grouped pass of a
+    target-driven shape: its conformance plan has the simple-only
+    plan's shape — one exchange, no join, no cached relation — and
+    validating persists nothing."""
+    from collections import Counter
+
+    from shaclex_spark.model import XSD_INTEGER, XSD_STRING
+    from shaclex_spark.shapes import SchemaDict
+    from shaclex_spark.validation import ValidationEngine
+
+    from conftest import triples_df
+
+    ex = "http://example.org/"
+    triples = triples_df(spark, [
+        (ex + "a", ex + p, "literal", v, dt, None) for p, v, dt in (
+            ("name", "A", XSD_STRING), ("email", "e", XSD_STRING),
+            ("x", "1", XSD_STRING), ("y", "2", XSD_STRING),
+            ("tag", "1", XSD_INTEGER), ("tag", "t", XSD_STRING))]
+        + [(ex + "b", ex + "name", "literal", "B", XSD_STRING, None)])
+    simple = {"label": "S",
+              "targets": [{"kind": "targetSubjectsOf", "value": ex + "name"}],
+              "constraints": [{"path": ex + "name", "minCount": 1}]}
+    folded = dict(
+        simple,
+        nodeConstraints=[{"kind": "nodeKind", "value": "IRI"}],
+        oneOf=[[{"path": ex + "email", "minCount": 1}],
+               [{"path": ex + "phone", "minCount": 1}]],
+        groupBlocks=[{"kind": "eachOf", "members": [
+            {"path": ex + p, "minCount": 1, "maxCount": 1} for p in "xy"]}],
+        repeatAlts={"mentioned": [ex + "tag"], "alts": [[
+            {"path": ex + "tag", "minCount": 1, "maxCount": 1,
+             "node": {"kind": "datatype", "iri": dt}}
+            for dt in (XSD_INTEGER, XSD_STRING)]]})
+    shapes = []
+    for shape, verdicts in ((simple, {"a": True, "b": True}),
+                            (folded, {"a": True, "b": False})):
+        engine = ValidationEngine(spark, SchemaDict.from_json([shape]),
+                                  triples)
+        res = engine.validate()
+        assert {r.node: r.conforms for r in res.conformance.collect()} \
+            == {ex + n: ok for n, ok in verdicts.items()}
+        assert not engine.scope._held
+        nodes = _own_nodes(res.conformance)
+        shapes.append(Counter(n for n in nodes if "Exchange" in n
+                              or n.endswith("Join")
+                              or n == "InMemoryTableScan"))
+    assert shapes[1] == shapes[0], shapes
+    assert sum(shapes[1].values()) <= 1, shapes
+
+
 def test_report_reads_the_validated_relation(spark, scope):
     """Conformance and report are two projections of one relation,
     which validate_kg persists into the caller's scope: once

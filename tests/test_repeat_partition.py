@@ -1,5 +1,5 @@
 """Repeated-predicate partition semantics (shapes.RepeatAlts /
-validation._eval_repeat_alts — VERDICT r2 'Next round' #4).
+validation._partition_check — VERDICT r2 'Next round' #4).
 
 Same predicate in multiple TripleConstraints means the focus node's
 arcs must be PARTITIONED among the TC slots, each consuming a count

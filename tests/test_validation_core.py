@@ -155,6 +155,25 @@ def test_class_constraint(spark):
     assert conf[(EX + "y", "S")] is False
 
 
+def test_subclass_closure(spark):
+    """Class membership closes rdfs:subClassOf over any depth and
+    through cycles; a bnode parent is neither a class nor traversed."""
+    from shaclex_spark.model import RDFS
+    from shaclex_spark.validation import Graph
+
+    sub = RDFS + "subClassOf"
+    rows = [(EX + a, sub, "iri", EX + b, None, None) for a, b in (
+        ("A", "B"), ("B", "C"), ("C", "D"), ("X", "Y"), ("Y", "X"))]
+    rows += [(EX + "Z", sub, "bnode", "_:anon", None, None),
+             ("_:anon", sub, "iri", EX + "W", None, None)]
+    rows += [(EX + i, RDF_TYPE, "iri", EX + c, None, None)
+             for i, c in (("a", "A"), ("x", "X"), ("z", "Z"))]
+    got = {(r.inst, r.cls) for r in
+           Graph(triples_df(spark, rows)).membership.collect()}
+    assert got == {(EX + "a", EX + c) for c in "ABCD"} \
+        | {(EX + "x", EX + "X"), (EX + "x", EX + "Y"), (EX + "z", EX + "Z")}
+
+
 def test_logical_combinators(spark):
     """and-002 / or / xone / not over node constraints."""
     rows = [
