@@ -4,7 +4,8 @@
 clusters").
 
 Cluster usage (package the library, let spark-submit own the master/
-executor topology — the session builder sets NO master here):
+executor topology — session.get_spark keeps the launcher's master and
+sets no host-sized local setting under it):
 
     zip -r shaclex_spark.zip shaclex_spark
     spark-submit --py-files shaclex_spark.zip job.py \
@@ -52,18 +53,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from shaclex_spark.session import get_spark
 
-    b = SparkSession.builder.appName("shaclex_spark_kg")
-    if args.master:
-        b = b.master(args.master)
-    if args.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions",
-                     str(args.shuffle_partitions))
-    b = (b.config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC"))
-    spark = b.getOrCreate()
+    spark = get_spark("shaclex_spark_kg",
+                      shuffle_partitions=args.shuffle_partitions,
+                      extra_conf={"spark.master": args.master}
+                      if args.master else None)
 
     shapes = None
     if args.shapes:

@@ -5,8 +5,9 @@ ShEx→SHACL and SHACL→ShEx via converter cores
 (/root/reference/modules/converter/src/main/scala/es/weso/shacl/
 converter/ShEx2Shacl.scala:171-180, Shacl2ShEx.scala:112-123). Our
 unified SchemaDict makes conversion a pair of serializers: any parsed
-schema (from ShExC via shexc.py or SHACL Turtle via shacl_reader.py)
-can be re-emitted in either language. Driver-side, pure Python.
+schema (from ShExC via shexc2j.parse_shexc or SHACL Turtle via
+shacl_reader.py) can be re-emitted in either language. Driver-side,
+pure Python.
 """
 
 from __future__ import annotations
@@ -241,7 +242,7 @@ def schema_to_shacl_turtle(schema: SchemaDict) -> str:
 
 def shex_to_shacl(shexc_text: str) -> str:
     """ShExC schema text → SHACL Turtle (ShEx2Shacl analogue)."""
-    from .shexc import parse_shexc
+    from .shexc2j import parse_shexc
 
     schema, _ = parse_shexc(shexc_text)
     return schema_to_shacl_turtle(schema)

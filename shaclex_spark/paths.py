@@ -185,9 +185,13 @@ def _closure_pairs(triples: DataFrame, step: Path, srcs: DataFrame,
         )
         # null-safe anti-join: v_dt / v_lang are null for non-literals and
         # plain joins never match null keys, which would re-add the same
-        # pair every round and break convergence.
-        cond = [expanded[c].eqNullSafe(acc[c]) for c in PAIR_COLS]
-        new = expanded.join(acc, on=cond, how="left_anti").localCheckpoint(eager=True)
+        # pair every round and break convergence. Both sides aliased:
+        # in round 1 acc IS the frontier, so their columns are one.
+        cond = [F.col(f"e.{c}").eqNullSafe(F.col(f"a.{c}"))
+                for c in PAIR_COLS]
+        new = (expanded.alias("e").join(acc.alias("a"), on=cond,
+                                        how="left_anti")
+               .localCheckpoint(eager=True))
         if new.isEmpty():
             break
         acc = acc.unionByName(new).localCheckpoint(eager=True)

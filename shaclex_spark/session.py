@@ -33,6 +33,20 @@ def default_parallelism() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
+def _launcher_master() -> str | None:
+    """The master already set for this process — a running session's,
+    or spark-submit's (whose JVM is up before Python starts) — else
+    None. Launches no JVM of its own."""
+    from pyspark import SparkConf, SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        return SparkContext._active_spark_context.master
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
+
+
 def get_spark(
     app_name: str = "shaclex_spark",
     parallelism: int | None = None,
@@ -41,36 +55,29 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
-    parallelism: local core count; defaults to default_parallelism().
-    shuffle_partitions: defaults to max(parallelism, 32) locally; on a
-    real cluster this is instead sized to total executor cores (AQE
-    coalesces the excess at runtime).
+    Without a master set before it (by spark-submit, or a running
+    session), the session is local and sized from this host:
+    parallelism (default_parallelism()), driver heap and
+    spark.local.dir. With one, that master and its topology stand and
+    none of those is set. ``extra_conf`` is applied last, so it can
+    name the master itself.
+
+    shuffle_partitions: locally defaults to max(parallelism, 32); under
+    a launcher's master it is left to the cluster's conf unless given
+    (AQE coalesces the excess at runtime).
     """
-    if parallelism is None:
-        parallelism = default_parallelism()
-    if shuffle_partitions is None:
-        shuffle_partitions = max(parallelism, 32)
     builder = (
-        SparkSession.builder.master(f"local[{parallelism}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(parallelism))
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # local mode: big heaps GC rarely, so ContextCleaner (which
         # piggybacks on GC) never reclaims old shuffle/block state —
         # force a periodic GC so long sessions stay flat.
         .config("spark.cleaner.periodicGC.interval", "60s")
-        # shuffle spill dir on tmpfs: the VM block device is throttled
-        # and makes shuffle-heavy stage times wildly variable.
-        .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS",
-                                                  "/dev/shm/spark-local"))
         # Broadcast threshold: shape dictionaries / focus dims are small;
         # let Catalyst broadcast up to 64 MB before falling back to SMJ.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -88,9 +95,27 @@ def get_spark(
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    if _launcher_master() is None:
+        if parallelism is None:
+            parallelism = default_parallelism()
+        if shuffle_partitions is None:
+            shuffle_partitions = max(parallelism, 32)
+        builder = (
+            builder.master(f"local[{parallelism}]")
+            .config("spark.default.parallelism", str(parallelism))
+            .config("spark.driver.memory",
+                    os.environ.get("SPARK_DRIVER_MEM",
+                                   default_driver_memory()))
+            # shuffle spill dir on tmpfs: the VM block device is
+            # throttled and makes shuffle-heavy stage times wildly
+            # variable.
+            .config("spark.local.dir",
+                    os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")))
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions",
+                                 str(shuffle_partitions))
+    for k, v in (extra_conf or {}).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

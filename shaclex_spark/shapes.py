@@ -431,17 +431,8 @@ class Shape:
                 yield "repeat", p
 
     def refs(self) -> list[tuple[str, bool]]:
-        out = [r for ne in self.node_constraints for r in ne.refs()]
-        for family, p in self.triple_constraints():
-            out.extend(p.refs())
-            # SLang-mode shapes record ShEx EXTRA in `ignored` with the
-            # TC kept exclusive: refs on an EXTRA'd predicate still
-            # occur under EXTRA's implied negation, so add the negative
-            # polarity here too (negativeStructure: Cycle2Extra).
-            if (family == "property" and self.ignored and not p.qualified
-                    and p.path.kind == "pred" and p.path.iri in self.ignored):
-                out.extend(p.node.refs(True))
-        return out
+        return [r for ne in self.node_constraints for r in ne.refs()] + \
+            [r for _, p in self.triple_constraints() for r in p.refs()]
 
     def classes(self) -> set[str]:
         return set().union(*(ne.classes() for ne in self.node_constraints),

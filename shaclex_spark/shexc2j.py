@@ -1,12 +1,16 @@
-"""Complete ShExC → ShExJ translator.
+"""The one ShExC front end: ShExC → ShExJ, and ShExC → SchemaDict.
 
 Parses the full ShEx Compact syntax (the W3C ShEx 2.1 grammar,
 shex.io — public spec) and emits the ShExJ JSON AST, byte-compatible
-with the vendored suite's ``.json`` twins
-(/root/reference/src/test/resources/shexTest/schemas/*.json), so a
-bare ``.shex`` file flows through the SAME shexj.py conversion path as
-ShExJ input — one downstream semantics, two concrete syntaxes, exactly
-like the reference (ShExSchema.scala:29-41 lists ShExC first).
+with the W3C suite's ``.json`` twins, so a bare ``.shex`` file flows
+through the SAME shexj.py conversion path as ShExJ input — one
+downstream semantics, two concrete syntaxes, exactly like the
+reference (ShExSchema.scala:29-41 lists ShExC first).
+
+``parse_shexc`` is the SLang reading of a ShExC schema: the ShExJ AST
+with every Shape closed over the predicates it mentions
+(ShEx2SLang.scala:95-101), then shexj.py's mapping. ``shexc_to_shexj``
+keeps the spec's open shapes (the ShEx suite reads that).
 
 The reference parses ShExC with an ANTLR grammar
 (modules/shex/.../compact/Parser.scala); this is an original
@@ -19,6 +23,9 @@ flattening happens in shexj.py).
 from __future__ import annotations
 
 import re
+
+from .shapes import SchemaDict, SchemaError
+from .shexj import UnsupportedShExJ, parse_shexj
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -321,15 +328,15 @@ class _Lexer:
 
 # ------------------------------------------------------------ parser
 
-def _strip_paren(x) -> None:
-    """Drop the internal '_paren' grouping markers in place."""
+def _dicts(x):
+    """Every dict in a JSON tree, parents first."""
     if isinstance(x, dict):
-        x.pop("_paren", None)
+        yield x
         for v in x.values():
-            _strip_paren(v)
+            yield from _dicts(v)
     elif isinstance(x, list):
         for v in x:
-            _strip_paren(v)
+            yield from _dicts(v)
 
 
 def _resolve(base: str | None, ref: str) -> str:
@@ -423,7 +430,8 @@ class _Parser:
             schema["startActs"] = start_acts
         if shapes:
             schema["shapes"] = shapes
-        _strip_paren(schema)
+        for d in _dicts(schema):
+            d.pop("_paren", None)  # internal grouping marker
         return schema
 
     def sem_act(self) -> dict:
@@ -530,7 +538,7 @@ class _Parser:
             # (grammar: 'nonLitNodeConstraint shapeOrRef?'); a datatype
             # / value set / LITERAL form ends the atom
             nxt = self.lx.peek()
-            if was_nonlit and (
+            if was_nonlit and not self._at_repeat_range() and (
                     nxt.kind in ("at_pname", "@", "{")
                     or (nxt.kind == "kw"
                         and nxt.value in ("closed", "extra", "extends",
@@ -936,30 +944,34 @@ class _Parser:
             self.lx.next(); return (1, -1)
         if tok.kind == "?":
             self.lx.next(); return (0, 1)
-        if tok.kind == "{":
-            # REPEAT_RANGE needs INTEGER right after '{'
-            nxt = self.lx.peek(1)
-            if nxt.kind == "number" and re.fullmatch(r"\d+", nxt.value):
-                after = self.lx.peek(2)
-                if after.kind in (",", "}"):
-                    self.lx.next()
-                    mn = int(self.lx.next().value)
-                    if self._eat(","):
-                        t2 = self.lx.peek()
-                        if t2.kind == "number":
-                            mx = int(self.lx.next().value)
-                        elif t2.kind == "*":
-                            self.lx.next(); mx = -1
-                        elif t2.kind == "}":   # {m,} = m-or-more
-                            mx = -1
-                        else:
-                            raise self._err("bad repeat range")
-                    else:
-                        mx = mn
-                    if not self._eat("}"):
-                        raise self._err("expected '}' closing repeat")
-                    return (mn, mx)
+        if self._at_repeat_range():
+            self.lx.next()
+            mn = int(self.lx.next().value)
+            if self._eat(","):
+                t2 = self.lx.peek()
+                if t2.kind == "number":
+                    mx = int(self.lx.next().value)
+                elif t2.kind == "*":
+                    self.lx.next(); mx = -1
+                elif t2.kind == "}":   # {m,} = m-or-more
+                    mx = -1
+                else:
+                    raise self._err("bad repeat range")
+            else:
+                mx = mn
+            if not self._eat("}"):
+                raise self._err("expected '}' closing repeat")
+            return (mn, mx)
         return None
+
+    def _at_repeat_range(self) -> bool:
+        """'{' INTEGER (',' | '}') is one REPEAT_RANGE terminal, never
+        the start of a shape, so `IRI {2}` is a kind and a cardinality."""
+        if not self._at("{"):
+            return False  # look no further: a semAct reads raw code
+        nxt = self.lx.peek(1)
+        return (nxt.kind == "number" and re.fullmatch(r"\d+", nxt.value)
+                is not None and self.lx.peek(2).kind in (",", "}"))
 
     def _predicate(self) -> str:
         if self._eat("a"):
@@ -1010,9 +1022,20 @@ class _Parser:
 
 def shexc_to_shexj(text: str, base: str | None = None) -> dict:
     """Parse a ShExC document into the ShExJ JSON AST (dict)."""
-    p = _Parser(text, base)
+    return _Parser(text, base).parse()
+
+
+def parse_shexc(text: str) -> tuple[SchemaDict, dict[str, str]]:
+    """ShExC document → (SchemaDict, prefixes), compiled the way SLang
+    compiles ShEx: every Shape closes over the predicates it mentions
+    (ShEx2SLang.scala:95-101); the rest is shexj.py's mapping. A
+    construct outside the engine's fragment raises SchemaError."""
+    p = _Parser(text)
     schema = p.parse()
-    tok = p.lx.peek()
-    if tok.kind != "eof":
-        raise ShExCError(f"trailing input: {tok!r}")
-    return schema
+    for d in _dicts(schema):
+        if d.get("type") == "Shape":
+            d["closed"] = True
+    try:
+        return parse_shexj(schema)[0], p.prefixes
+    except UnsupportedShExJ as e:
+        raise SchemaError(f"unsupported ShEx construct: {e.feature}") from e

@@ -7,7 +7,8 @@ almost every .shex schema
 (/root/reference/src/test/resources/shexTest/schemas/*.json), and the
 JSON form sidesteps ShExC tokenizer edge cases entirely.
 
-Spec-faithful fragment mapping (vs the SLang compilation in shexc.py):
+Spec-faithful fragment mapping (shexc2j.parse_shexc adds the SLang
+reading: every Shape closed over its mentioned predicates):
 
 - Shape { expression } is OPEN over unmentioned predicates (the ShEx
   spec's neighbourhood-partition semantics only constrains arcs whose

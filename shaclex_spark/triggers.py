@@ -11,6 +11,8 @@ on the triples DF — the fix IS the compilation.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .model import FOCUS_SCHEMA, RDF_TYPE
@@ -105,6 +107,39 @@ def target_focus(spark: SparkSession, schema: SchemaDict,
     for p in pieces[1:]:
         out = out.unionByName(p)
     return out.distinct()
+
+
+def parse_shape_map(text: str, prefixes: dict[str, str]) -> list[dict]:
+    """Compact shape map → shape_map_focus associations
+    (doc/grammars/shapeMapGrammar.bnf:19-31): `<n>@<S>`, `pfx:n@<S>`,
+    `{FOCUS p _}@S`, `{_ p FOCUS}@S`. ``prefixes``: the schema's, as
+    shexc2j.parse_shexc returns them."""
+
+    def resolve(tok: str) -> str:
+        tok = tok.strip()
+        if tok.startswith("<"):
+            return tok[1:-1]
+        pfx, local = tok.split(":", 1)
+        return prefixes[pfx] + local
+
+    out = []
+    for part in re.split(r",(?![^{]*\})", text):
+        part = part.strip()
+        if not part:
+            continue
+        m = re.fullmatch(r"\{\s*(FOCUS|_)\s+(\S+)\s+(FOCUS|_)\s*\}@(\S+)", part)
+        if m:
+            key = ("focusSubjectsOf" if m.group(1) == "FOCUS"
+                   else "focusObjectsOf")
+            out.append({key: resolve(m.group(2)),
+                        "shape": resolve(m.group(4))})
+            continue
+        m = re.fullmatch(r"(\S+)@(\S+)", part)
+        if not m:
+            raise ValueError(f"bad shape-map association: {part!r}")
+        out.append({"node": resolve(m.group(1)),
+                    "shape": resolve(m.group(2))})
+    return out
 
 
 def shape_map_focus(spark: SparkSession, triples: DataFrame,

@@ -9,7 +9,7 @@ from shaclex_spark.convert import (
     shex_to_shacl,
 )
 from shaclex_spark.shacl_reader import schema_from_turtle
-from shaclex_spark.shexc import parse_shexc
+from shaclex_spark.shexc2j import parse_shexc
 
 from conftest import needs_corpus
 

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from shaclex_spark.shexc import parse_shexc
+from shaclex_spark.shexc2j import parse_shexc
 from shaclex_spark.validation import ValidationEngine
 
 from conftest import focus_df, triples_df

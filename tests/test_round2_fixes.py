@@ -335,7 +335,7 @@ def test_group_cardinality_blocks(spark):
     """ShEx `( TC... ){m,n}` (shapes.GroupBlock): eachOf groups need
     EQUAL per-member match counts in [m,n]; oneOf groups need the SUM
     in [m,n]; two-count semantics still rejects non-matching arcs."""
-    from shaclex_spark.shexc import parse_shexc
+    from shaclex_spark.shexc2j import parse_shexc
 
     schema, _ = parse_shexc("""
 <http://e/S> { ( <http://e/a> .; <http://e/b> . ){2,3} }

@@ -39,7 +39,7 @@ def test_corpora_present():
 @pytest.mark.parametrize(
     "path", NEG_SYNTAX, ids=[os.path.basename(p) for p in NEG_SYNTAX])
 def test_negative_syntax_rejected(path):
-    from shaclex_spark.shexc import parse_shexc
+    from shaclex_spark.shexc2j import parse_shexc
 
     with open(path, encoding="utf-8") as fh:
         text = fh.read()
@@ -56,7 +56,7 @@ def test_negative_syntax_rejected(path):
     "path", NEG_STRUCTURE, ids=[os.path.basename(p) for p in NEG_STRUCTURE])
 def test_negative_structure_rejected(path):
     from shaclex_spark.shapes import SchemaError  # noqa: F401
-    from shaclex_spark.shexc import parse_shexc
+    from shaclex_spark.shexc2j import parse_shexc
 
     with open(path, encoding="utf-8") as fh:
         text = fh.read()

@@ -3,9 +3,9 @@
 
 from __future__ import annotations
 
-from shaclex_spark.shexc import parse_shexc, parse_shape_map
+from shaclex_spark.shexc2j import parse_shexc
 from shaclex_spark.sources.turtle import turtle_to_rows
-from shaclex_spark.triggers import shape_map_focus
+from shaclex_spark.triggers import parse_shape_map, shape_map_focus
 from shaclex_spark.validation import ValidationEngine
 
 from conftest import needs_corpus, triples_df

@@ -6,7 +6,7 @@ reference's own flattener rejects — FlatShapeConversion.scala:27-87.)"""
 
 from __future__ import annotations
 
-from shaclex_spark.shexc import parse_shexc
+from shaclex_spark.shexc2j import parse_shexc
 
 from conftest import needs_corpus
 
