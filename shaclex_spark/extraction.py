@@ -21,11 +21,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .model import TRIPLES_PROV_SCHEMA, XSD_INTEGER, XSD_STRING
+from .model import (EX, FOAF_KNOWS, RDF_TYPE, TRIPLES_PROV_SCHEMA,
+                    XSD_INTEGER, XSD_STRING)
 
-EX = "http://example.org/"
-FOAF_KNOWS = "http://xmlns.com/foaf/0.1/knows"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 MENTION = EX + "mention/"
 
 # (pattern, pred, obj handling, literal keyword)

@@ -43,6 +43,8 @@ XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 SH = "http://www.w3.org/ns/shacl#"
+EX = "http://example.org/"
+FOAF_KNOWS = "http://xmlns.com/foaf/0.1/knows"
 
 XSD_STRING = XSD + "string"
 XSD_INTEGER = XSD + "integer"
@@ -170,16 +172,5 @@ REPORT_SCHEMA = T.StructType(
         T.StructField("value", T.StringType(), True),
         T.StructField("path", T.StringType(), True),
         T.StructField("message", T.StringType(), True),
-    ]
-)
-
-TRANSCRIPTS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), False),
     ]
 )

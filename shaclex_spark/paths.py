@@ -37,7 +37,7 @@ PAIR_COLS = ["src"] + VAL_COLS
 MAX_CLOSURE_ROUNDS = 50
 
 
-def _node_kind(col):
+def node_kind(col):
     """Infer the kind of a node id column: bnode ids use the '_:' prefix."""
     return F.when(col.startswith("_:"), F.lit("bnode")).otherwise(F.lit("iri"))
 
@@ -68,7 +68,7 @@ def inverse_pairs(triples: DataFrame, iri: str, srcs: DataFrame | None = None) -
     t = _restrict(t, srcs, "obj_value")
     return t.select(
         F.col("obj_value").alias("src"),
-        _node_kind(F.col("subj")).alias("v_kind"),
+        node_kind(F.col("subj")).alias("v_kind"),
         F.col("subj").alias("v_value"),
         F.lit(None).cast("string").alias("v_dt"),
         F.lit(None).cast("string").alias("v_lang"),
@@ -81,7 +81,7 @@ def identity_pairs(srcs: DataFrame) -> DataFrame:
     c = F.col(srcs.columns[0])
     return srcs.select(
         c.alias("src"),
-        _node_kind(c).alias("v_kind"),
+        node_kind(c).alias("v_kind"),
         c.alias("v_value"),
         F.lit(None).cast("string").alias("v_dt"),
         F.lit(None).cast("string").alias("v_lang"),
@@ -112,7 +112,7 @@ def path_pairs(triples: DataFrame, path: Path, srcs: DataFrame | None = None,
         inner = path_pairs(triples, path.steps[0], None)
         swapped = inner.select(
             F.col("v_value").alias("src"),
-            _node_kind(F.col("src")).alias("v_kind"),
+            node_kind(F.col("src")).alias("v_kind"),
             F.col("src").alias("v_value"),
             F.lit(None).cast("string").alias("v_dt"),
             F.lit(None).cast("string").alias("v_lang"),

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extraction import extract_triples
 from .linking import MENTION_PREFIX, canonicalize_triples, extract_mentions
-from .model import RDF_TYPE
+from .model import EX, FOAF_KNOWS, RDF_TYPE, XSD_INTEGER, XSD_STRING
 from .scope import Scope
 from .shapes import SchemaDict
 from .triggers import shape_map_focus, target_focus
@@ -27,10 +27,6 @@ from .validation import Graph, ValidationEngine, ValidationResult
 # Default shapes for transcript KGs: persons/courses from the extraction
 # vocabulary. Mirrors examples/clingo/paper.{shex,ttl,sm} semantics
 # (User shape with age integer {1,1}, knows refs, enrolledIn refs).
-EX = "http://example.org/"
-FOAF_KNOWS = "http://xmlns.com/foaf/0.1/knows"
-XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 DEFAULT_SHAPES = [
     {
@@ -59,19 +55,20 @@ DEFAULT_SHAPES = [
 
 
 def build_kg(spark: SparkSession, transcripts: DataFrame,
-             link: bool = True) -> tuple[DataFrame, DataFrame]:
+             scope: Scope | None = None) -> tuple[DataFrame, DataFrame]:
     """transcripts → (canonical triples with provenance, mention mapping).
 
     Stage boundaries persist: extraction output is read by mention
     collection (×2) and the rewrite joins, canonical triples by focus
     selection + every constraint join — without persistence the
     pandas-UDF extraction re-executes once per consumer. (At cluster
-    scale the same boundary is an Iceberg table write.)"""
-    candidates = extract_triples(transcripts).persist()
-    if not link:
-        return candidates, None
+    scale the same boundary is an Iceberg table write.) ``scope``:
+    owner of both persists, which the caller releases once the results
+    are read (default: a scope of its own, never released)."""
+    scope = scope or Scope()
+    candidates = scope.persist(extract_triples(transcripts))
     canonical, mapping = canonicalize_triples(candidates)
-    return canonical.persist(), mapping
+    return scope.persist(canonical), mapping
 
 
 def validate_kg(spark: SparkSession, triples: DataFrame,
@@ -128,14 +125,9 @@ def _arc_local_schema(shapes_json: list[dict] | None) -> str | bool:
     for sh in schema.shapes.values():
         if sh.classes() or any(t.kind == "targetClass" for t in sh.targets):
             mode = "class"
-        all_props = (list(sh.properties)
-                     + [p for g in sh.one_of for p in g]
-                     + [m for b in sh.group_blocks for m in b.members]
-                     + ([p for alt in sh.repeat_alts.alts for p in alt]
-                        if sh.repeat_alts else []))
-        for pc in all_props:
-            if pc.path.kind not in ("pred", "inverse"):
-                return False
+        if any(pc.path.kind not in ("pred", "inverse")
+               for _, pc in sh.triple_constraints()):
+            return False
     return mode
 
 

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .meta import FIXTURE as SHACL_META_FIXTURE
+from .model import EX, RDF_TYPE, XSD_DECIMAL, XSD_STRING
 from .scope import Scope
 from .shapes import SchemaDict
 from .shex_suite import SUITE_ROOT
@@ -25,10 +26,6 @@ from .sources.kg import KG_TRIPLES_SQL, kg_triples
 from .triggers import target_focus
 from .validation import Graph, ValidationEngine
 
-EX = "http://example.org/"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-XSD_DECIMAL = "http://www.w3.org/2001/XMLSchema#decimal"
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}

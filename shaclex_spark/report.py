@@ -20,9 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-SH = "http://www.w3.org/ns/shacl#"
+from .model import SH
 
-_COMPONENT_IRI = "http://www.w3.org/ns/shacl#{}"
+_COMPONENT_IRI = SH + "{}"
 
 
 def _term(val: str | None) -> str:

@@ -23,10 +23,9 @@ import re
 
 from collections import defaultdict
 
-from .model import RDF, RDFS, SH, XSD_STRING
+from .model import RDF, RDF_TYPE, RDFS, SH, XSD_STRING
 from .shapes import SchemaDict
 
-RDF_TYPE = RDF + "type"
 RDF_FIRST = RDF + "first"
 RDF_REST = RDF + "rest"
 RDF_NIL = RDF + "nil"

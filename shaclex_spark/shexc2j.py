@@ -24,11 +24,9 @@ from __future__ import annotations
 
 import re
 
+from .model import RDF_TYPE, XSD
 from .shapes import SchemaDict, SchemaError
 from .shexj import UnsupportedShExJ, parse_shexj
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD = "http://www.w3.org/2001/XMLSchema#"
 
 
 class ShExCError(ValueError):

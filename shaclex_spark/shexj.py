@@ -34,9 +34,8 @@ import json
 import os
 from typing import Any
 
+from .model import XSD
 from .shapes import SchemaDict
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
 
 _KIND_MAP = {"iri": "IRI", "bnode": "BlankNode", "literal": "Literal",
              "nonliteral": "BlankNodeOrIRI"}

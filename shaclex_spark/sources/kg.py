@@ -19,12 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-EX = "http://example.org/"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
-XSD_DECIMAL = "http://www.w3.org/2001/XMLSchema#decimal"
-XSD_DATETIME = "http://www.w3.org/2001/XMLSchema#dateTime"
+from ..model import (EX, RDF_TYPE, XSD_DATETIME, XSD_DECIMAL, XSD_INTEGER,
+                     XSD_STRING)
 
 
 def _t(subj, pred, obj_kind, obj_value, obj_dt=None):

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..model import RDF_LANGSTRING, XSD_STRING
+
 # subject: IRI or bnode; predicate: IRI; object: IRI, bnode, or literal
 # with optional datatype/lang. Whitespace-tolerant; comments/blank
 # lines skipped.
@@ -19,9 +21,6 @@ _S = r"(?:<([^>]*)>|(_:[A-Za-z0-9]+))"
 _P = r"<([^>]*)>"
 _O = r"""(?:<([^>]*)>|(_:[A-Za-z0-9]+)|"((?:[^"\\]|\\.)*)"(?:\^\^<([^>]*)>|@([A-Za-z0-9-]+))?)"""
 NT_LINE = rf"^\s*{_S}\s+{_P}\s+{_O}\s*\.\s*$"
-
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
 
 def parse_ntriples_lines(lines: DataFrame, col: str = "value") -> DataFrame:

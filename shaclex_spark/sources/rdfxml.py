@@ -24,17 +24,15 @@ from __future__ import annotations
 import re
 import xml.etree.ElementTree as ET
 
-from ..model import RDF
+from ..model import RDF, RDF_TYPE
 
-RDF_TYPE = RDF + "type"
 RDF_FIRST = RDF + "first"
 RDF_REST = RDF + "rest"
 RDF_NIL = RDF + "nil"
 
-_RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _XML_NS = "http://www.w3.org/XML/1998/namespace"
 
-_A = lambda local: "{" + _RDF_NS + "}" + local  # noqa: E731
+_A = lambda local: "{" + RDF + "}" + local  # noqa: E731
 _X = lambda local: "{" + _XML_NS + "}" + local  # noqa: E731
 
 _ABS_IRI_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*:")
@@ -101,11 +99,11 @@ class _Parser:
         lang = el.get(_X("lang"), lang)
         subj = self._subject_of(el, base)
         tag = self._expand(el.tag)
-        if tag != _RDF_NS + "Description":
+        if tag != RDF + "Description":
             self.triples.append((subj, RDF_TYPE, _iri(tag)))
         # property attributes (literal shorthand)
         for k, v in el.attrib.items():
-            if k in _NON_PROP_ATTRS or k.startswith("{" + _RDF_NS + "}"):
+            if k in _NON_PROP_ATTRS or k.startswith("{" + RDF + "}"):
                 continue
             if not k.startswith("{"):
                 continue  # unnamespaced attr: XML-internal, skip
@@ -119,7 +117,7 @@ class _Parser:
         base = el.get(_X("base"), base)
         lang = el.get(_X("lang"), lang)
         pred = self._expand(el.tag)
-        if pred == _RDF_NS + "li":
+        if pred == RDF + "li":
             raise RdfXmlError("rdf:li containers are not supported")
         pt = el.get(_A("parseType"))
         if pt == "Collection":
@@ -182,7 +180,7 @@ def parse_rdfxml(text: str) -> list[tuple]:
     p = _Parser()
     base = root.get(_X("base"), "")
     lang = root.get(_X("lang"))
-    if p._expand(root.tag) == _RDF_NS + "RDF":
+    if p._expand(root.tag) == RDF + "RDF":
         for child in root:
             p.node_element(child, base, lang)
     else:

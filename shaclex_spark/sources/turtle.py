@@ -17,13 +17,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..model import RDF, TRIPLES_SCHEMA, XSD_BOOLEAN, XSD_DECIMAL, XSD_INTEGER, XSD_STRING
+from ..model import (RDF, RDF_LANGSTRING, TRIPLES_SCHEMA, XSD_BOOLEAN,
+                     XSD_DECIMAL, XSD_DOUBLE, XSD_INTEGER, XSD_STRING)
 
 RDF_FIRST = RDF + "first"
 RDF_REST = RDF + "rest"
 RDF_NIL = RDF + "nil"
-RDF_LANGSTRING = RDF + "langString"
-XSD_DOUBLE = "http://www.w3.org/2001/XMLSchema#double"
 
 
 class TurtleError(ValueError):

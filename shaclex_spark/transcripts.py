@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .model import EX, FOAF_KNOWS, XSD_INTEGER, XSD_STRING
+
 # canonical_slug -> surface variants (exactly 3 each, for flat indexing)
 PEOPLE: list[tuple[str, list[str]]] = [
     ("alice_moore", ["Alice Moore", "alice moore", "Alice M. Moore"]),
@@ -42,11 +44,6 @@ COURSES = [f"cs{100 + 7 * i}" for i in range(12)]
 TOPICS = ["Programming", "Databases", "Networks", "Algorithms", "Statistics",
           "Compilers", "Graphics", "Security"]
 ORGS = [f"org{chr(97 + i)}" for i in range(8)]
-
-EX = "http://example.org/"
-FOAF_KNOWS = "http://xmlns.com/foaf/0.1/knows"
-XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 N_TEMPLATES = 6  # 0..4 carry a triple, 5 is filler
 

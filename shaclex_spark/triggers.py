@@ -16,6 +16,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .model import FOCUS_SCHEMA, RDF_TYPE
+from .paths import node_kind
 from .shapes import SchemaDict, Target
 
 
@@ -23,9 +24,8 @@ def _subject_rows(df: DataFrame, col: str) -> DataFrame:
     """Node-id column → focus-term rows; the kind follows the '_:'
     bnode prefix convention."""
     c = F.col(col)
-    kind = F.when(c.startswith("_:"), F.lit("bnode")).otherwise(F.lit("iri"))
     null_s = F.lit(None).cast("string")
-    return df.select(kind.alias("f_kind"), c.alias("f_value"),
+    return df.select(node_kind(c).alias("f_kind"), c.alias("f_value"),
                      null_s.alias("f_dt"), null_s.alias("f_lang"))
 
 

@@ -13,17 +13,19 @@ Physical shape (SURVEY.md §4.3): the focus is a ROW SOURCE, not a
 second evaluator. Each shape gets focus-marker rows keyed by the full
 term — from its own target declarations, or from a candidate relation
 (shape map, filtered focus, ref-propagated candidates, closed shapes).
-Per shape, ONE union(constraint arcs keyed by subject, marker rows) →
-ONE groupBy(term) with fused conditional aggregates for every triple
-constraint over a simple predicate — property constraints, OneOf
-members, group blocks, repeat partitions, the CLOSED residue (the
-FlatShape constraint-fusion idea, FlatShapeConversion.scala:27-87) →
+Per shape, ONE union(constraint arcs keyed by subject, each complex
+path's (source, value) pairs keyed by source, marker rows) → ONE
+groupBy(term) with fused conditional aggregates for every triple
+constraint, whatever its path — property constraints, OneOf members,
+group blocks, repeat partitions, the CLOSED residue (the FlatShape
+constraint-fusion idea, FlatShapeConversion.scala:27-87) →
 filter(is-focus), with the node constraints computed on the grouped
 row; a marker row alone makes a zero-arc node count 0
-(SLang2Clingo.scala:164-168 makes the 0-case explicit). Each complex
-path runs the same union → groupBy over its path pairs, and sibling-path
-constraints (equals, lessThan) group their violating pairs by source;
-both are left-joined onto the grouped row by the focus term.
+(SLang2Clingo.scala:164-168 makes the 0-case explicit, and its
+countPropShape counts per (node, path, shape) whatever the path kind).
+Only sibling-path constraints (equals, lessThan) group their violating
+pairs by source in a pass of their own, left-joined onto the grouped
+row by the focus term.
 
 Recursion: stratified SCC order; cyclic strata run a greatest-fixpoint
 loop starting from all-conforming — the co-inductive Unknown-counts-
@@ -50,7 +52,7 @@ from .model import (
     XSD_INTEGER,
     XSD_STRING,
 )
-from .paths import VAL_COLS, path_pairs, pred_pairs
+from .paths import VAL_COLS, node_kind, path_pairs, pred_pairs
 from .scope import Scope
 from .shapes import (NodeExpr, Path, PropertyConstraint, SchemaDict, Shape,
                      ValueSpec)
@@ -60,6 +62,7 @@ MAX_FIXPOINT_ROUNDS = 50
 
 KEY = "node_key"
 FCOLS = ["f_kind", "f_value", "f_dt", "f_lang"]
+OBJ_COLS = ["obj_kind", "obj_value", "obj_dt", "obj_lang"]
 
 
 def node_key_col(kind: Column, value: Column, dt: Column, lang: Column) -> Column:
@@ -82,8 +85,7 @@ def focus_to_candidates(focus: DataFrame) -> DataFrame:
     node_lang — emitted by triggers for literal targetNode terms),
     they are honored; otherwise the kind is inferred from the '_:'
     bnode prefix convention."""
-    inferred = F.when(F.col("node").startswith("_:"), F.lit("bnode")) \
-        .otherwise(F.lit("iri"))
+    inferred = node_kind(F.col("node"))
     if "node_kind" in focus.columns:
         kind = F.coalesce(F.col("node_kind"), inferred)
         dt = F.col("node_dt")
@@ -166,11 +168,12 @@ def _well_formed(dt_iri: str, value: Column) -> Column:
     return ok
 
 
-def _numeric_value(tc: TermCols) -> Column:
-    """Typed comparable rendering of a literal for range constraints."""
-    return F.when(tc.dt.isin(list(TEMPORAL_DATATYPES)),
-                  tc.value.try_cast("timestamp").cast("double")
-                  ).otherwise(tc.value.try_cast("double"))
+def _numeric_value(value: Column, dt: Column) -> Column:
+    """Typed comparable rendering of a literal for range constraints
+    and lessThan."""
+    return F.when(dt.isin(sorted(TEMPORAL_DATATYPES)),
+                  value.try_cast("timestamp").cast("double")
+                  ).otherwise(value.try_cast("double"))
 
 
 _TZ_RE = r"(Z|[+-]\d\d:\d\d)$"
@@ -182,13 +185,13 @@ def _range_check(e: NodeExpr, tc: TermCols) -> Column:
     dec_cmp = None
     try:
         bound = F.lit(float(lit_raw))
-        val = _numeric_value(tc)
+        val = _numeric_value(tc.value, tc.dt)
         # value comparison is defined on numeric datatypes only: a
         # castable-but-non-numeric literal (e.g. "5"^^xsd:string) is a
         # type error ⇒ violation (SPARQL '<' semantics / ShEx numeric
         # facets). NULL dt never compares.
         tz_guard = F.coalesce(
-            tc.dt.isin(list(NUMERIC_DATATYPES | TEMPORAL_DATATYPES)),
+            tc.dt.isin(sorted(NUMERIC_DATATYPES | TEMPORAL_DATATYPES)),
             F.lit(False))
         # exact decimal comparison when both sides fit decimal(38,15):
         # doubles lose integer precision past 2^53, so
@@ -209,7 +212,7 @@ def _range_check(e: NodeExpr, tc: TermCols) -> Column:
         val = tc.value.try_cast("timestamp").cast("double")
         bound_has_tz = bool(_re.search(_TZ_RE, lit_raw))
         tz_guard = ((tc.value.rlike(_TZ_RE) == F.lit(bound_has_tz))
-                    & F.coalesce(tc.dt.isin(list(TEMPORAL_DATATYPES)),
+                    & F.coalesce(tc.dt.isin(sorted(TEMPORAL_DATATYPES)),
                                  F.lit(False)))
 
     def _op(v, b):
@@ -290,7 +293,7 @@ def compile_expr(e: NodeExpr, tc: TermCols) -> Column:
                 & (F.coalesce(tc.dt, F.lit(XSD_STRING)) == e.iri)
                 & _well_formed(e.iri, tc.value))
     if k == "nodeKind":
-        return tc.kind.isin(list(NODE_KINDS[e.enum]))
+        return tc.kind.isin(sorted(NODE_KINDS[e.enum]))
     if k == "in":
         out = _value_match(e.values[0], tc)
         for v in e.values[1:]:
@@ -331,7 +334,7 @@ def compile_expr(e: NodeExpr, tc: TermCols) -> Column:
         # "1.2345"^^xsd:integer is malformed, so the facet fails
         # (suite 1literalTotaldigits_fail-malformedxsd_integer-1_2345)
         lex_ok = F.when(
-            tc.dt.isin(list(INTEGER_DATATYPES)), tc.value.rlike(r"^[+-]?\d+$")
+            tc.dt.isin(sorted(INTEGER_DATATYPES)), tc.value.rlike(r"^[+-]?\d+$")
         ).otherwise(tc.value.rlike(r"^[+-]?(\d+(\.\d*)?|\.\d+)$"))
         no_sign = F.regexp_replace(tc.value, r"^[+-]", "")
         int_part = F.regexp_replace(
@@ -343,7 +346,7 @@ def compile_expr(e: NodeExpr, tc: TermCols) -> Column:
         else:
             cnt = F.length(frac_part)
         return ((tc.kind == "literal")
-                & F.coalesce(tc.dt.isin(list(decimal_family)), F.lit(False))
+                & F.coalesce(tc.dt.isin(sorted(decimal_family)), F.lit(False))
                 & lex_ok & (cnt <= e.num))
     if k == "languageIn":
         return _lang_in(e.langs, tc.lang)
@@ -438,6 +441,22 @@ def _lookups(exprs: list[NodeExpr]) -> tuple[set[str], set[str]]:
     """The shape labels and the classes that ``exprs`` look up."""
     return (set().union(*(_collect_refs(e) for e in exprs)),
             set().union(*(e.classes() for e in exprs)))
+
+
+def _path_tokens(shape: Shape) -> dict[Path, str]:
+    """The pred value of each complex path's pair rows in a shape's
+    grouped pass, one per distinct path: '<' is no IRI character, so no
+    arc's predicate takes it."""
+    paths = dict.fromkeys(pc.path for _, pc in shape.triple_constraints()
+                          if not pc.path.is_simple_pred)
+    return {path: f"<path {i}>" for i, path in enumerate(paths)}
+
+
+def _dedup_free(pc: PropertyConstraint) -> bool:
+    """Whether pc's checks read its path's values without their
+    multiplicity: minCount ≤ 1, no maxCount (the counts only test
+    exists / none) and no uniqueLang (which counts tagged values)."""
+    return pc.min_count <= 1 and pc.max_count is None and not pc.unique_lang
 
 
 _SUBCLASS_PLUS = Path("oneOrMore",
@@ -748,56 +767,16 @@ class ValidationEngine:
     def _evaluate_shape(self, shape: Shape, rows: FocusRows,
                         conf: dict[str, DataFrame]) -> DataFrame:
         """The shape relation (KEY, *FCOLS, conforms, violations), one
-        row per focus term. One grouped pass (_eval_simple) checks every
-        triple constraint over the focus terms' own simple-predicate
-        arcs, and the node constraints on its grouped row. The families
-        that read other pairs — complex paths, OneOf members over
-        complex paths, pairwise — are left-joined onto that row by the
-        focus term. A shape that checks nothing but complex paths takes
-        its first path's relation, which has the same rows, as the
-        base."""
+        row per focus term. One grouped pass (_eval_grouped) checks every
+        triple constraint, whatever its path, and the node constraints
+        on its grouped row. Pairwise constraints, which compare the
+        values of two paths, are left-joined onto that row by the focus
+        term."""
         if shape.deactivated:  # checks nothing: every focus term conforms
             shape = Shape(shape.label)
-        cpaths = [pc for pc in shape.properties if not pc.path.is_simple_pred]
-        only_paths = cpaths and len(cpaths) == len(shape.properties) and not (
-            shape.node_constraints or shape.closed or shape.one_of
-            or shape.group_blocks or shape.repeat_alts)
-        rels = [] if only_paths else [self._eval_simple(shape, rows, conf)]
-        rels += [self._eval_cpath(shape, pc, rows, conf) for pc in cpaths]
-        out, *others = rels
-        ok = F.coalesce(F.col("conforms"), F.lit(True))
+        out = self._eval_grouped(shape, rows, conf)
+        ok = F.col("conforms")
         lists = [F.col("violations")]
-        for i, rel in enumerate(others):
-            out = out.join(rel.select(
-                KEY, F.col("conforms").alias(f"__cp_ok_{i}"),
-                F.col("violations").alias(f"__cp_v_{i}")), on=KEY, how="left")
-            ok = ok & F.col(f"__cp_ok_{i}")
-            lists.append(F.col(f"__cp_v_{i}"))
-
-        # ShEx OneOf: exactly one group matches. A group matches iff all
-        # its members do (EachOf inside the chosen alternative): the
-        # simple members' verdict comes from the grouped pass, and a
-        # non-simple member (e.g. inverse ^p from ShExC) from its own
-        # path relation — dropping it would make a group with a missing
-        # ^p arc spuriously 'match'. The members' violations are not
-        # read: the OneOf reports as a whole.
-        if shape.one_of:
-            total = F.lit(0)
-            for gi, group in enumerate(shape.one_of):
-                flag = F.col(f"__og_{gi}")
-                for mi, pc in enumerate(pc for pc in group
-                                        if not pc.path.is_simple_pred):
-                    name = f"__og_{gi}_{mi}"
-                    out = out.join(self._eval_cpath(shape, pc, rows, conf)
-                                   .select(KEY, F.col("conforms").alias(name)),
-                                   on=KEY, how="left")
-                    flag = flag & F.col(name)
-                total = total + flag.cast("int")
-            one_ok = total == 1
-            ok = ok & one_ok
-            lists.append(_violations([F.when(~one_ok, _violation(
-                "OneOfConstraintComponent", shape.severity, F.lit(None),
-                F.lit(None), shape.message))]))
 
         # pairwise sibling constraints, by source node: literals are
         # never subjects, so a literal focus term never meets the
@@ -840,19 +819,19 @@ class ValidationEngine:
         return (rows.cand.select(*FCOLS) if rows.targets is None
                 else self._marker_rows(rows.targets))
 
-    # -- fused simple-predicate evaluator ----------------------------------
+    # -- the fused grouped pass ---------------------------------------------
 
-    def _eval_simple(self, shape: Shape, rows: FocusRows,
+    def _eval_grouped(self, shape: Shape, rows: FocusRows,
                      conf: dict[str, DataFrame]) -> DataFrame:
-        """(KEY, *FCOLS, conforms, violations[, __og_*]), one row per
-        focus term, in ONE grouped pass: union(pred-filtered arcs keyed
-        by subject, focus-marker rows keyed by term) → ONE
-        groupBy(term) with conditional aggregates for every triple
-        constraint over a simple predicate + CLOSED residue →
-        filter(is-focus) (see _fused_agg). Focus terms without arcs
-        group from their marker row alone and count 0; a literal focus
-        term never meets the subject-keyed arcs of an IRI with the same
-        spelling.
+        """(KEY, *FCOLS, conforms, violations), one row per focus term,
+        in ONE grouped pass: union(pred-filtered arcs keyed by subject,
+        each complex path's pairs keyed by source, focus-marker rows
+        keyed by term) → ONE groupBy(term) with conditional aggregates
+        for every triple constraint + CLOSED residue → filter(is-focus)
+        (see _fused_agg). Focus terms without arcs group from their
+        marker row alone and count 0; a literal focus term never meets
+        the subject-keyed arcs of an IRI with the same spelling, and
+        never starts a path.
 
         Target-driven rows fold subject-keyed targets (targetSubjectsOf;
         targetClass when the graph has no subClassOf arcs) into the arc
@@ -865,15 +844,22 @@ class ValidationEngine:
         Candidate rows — and always closed shapes, whose arc scan is the
         UNFILTERED graph — left-semi-join the arc scan to the focus
         terms' non-literal values first, so only the focus set's arcs
-        shuffle (the 100-TB-safe shape for sh:closed)."""
+        shuffle (the 100-TB-safe shape for sh:closed).
+
+        A complex path's pairs (path_pairs from the focus terms'
+        non-literal values, so the path expands only the focus
+        neighbourhood) enter as arcs whose pred is the path's token
+        (_path_tokens). They are deduplicated unless every constraint on
+        the path reads them multiplicity-insensitively (minCount ≤ 1, no
+        maxCount, no uniqueLang: the counts only test exists / none),
+        which saves an exchange of the pair relation (r6, guide §2.4)."""
+        tokens = _path_tokens(shape)
         preds = {pc.path.iri for _, pc in shape.triple_constraints()
                  if pc.path.is_simple_pred}
         if shape.repeat_alts:
             preds.update(shape.repeat_alts.mentioned)
         null_s = F.lit(None).cast("string")
-        subj_kind = F.when(F.col("subj").startswith("_:"), F.lit("bnode")) \
-            .otherwise(F.lit("iri"))
-        arc_cond = F.col("pred").isin(list(preds)) if preds else F.lit(False)
+        arc_cond = F.col("pred").isin(sorted(preds)) if preds else F.lit(False)
         marker_cond = None
         if rows.targets is not None and not shape.closed:
             term_targets: list = []
@@ -899,48 +885,62 @@ class ValidationEngine:
                              .select(F.col("f_value").alias("subj")),
                              on="subj", how="left_semi")
         arcs = scan.select(
-            subj_kind.alias("f_kind"), F.col("subj").alias("f_value"),
+            node_kind(F.col("subj")).alias("f_kind"),
+            F.col("subj").alias("f_value"),
             null_s.alias("f_dt"), null_s.alias("f_lang"),
-            "pred", "obj_kind", "obj_value", "obj_dt", "obj_lang",
+            "pred", *OBJ_COLS,
             (F.lit(False) if marker_cond is None else marker_cond)
             .alias("__tgt"))
         if markers is not None:
             arcs = arcs.unionByName(markers.select(
-                *FCOLS, null_s.alias("pred"), null_s.alias("obj_kind"),
-                null_s.alias("obj_value"), null_s.alias("obj_dt"),
-                null_s.alias("obj_lang"), F.lit(True).alias("__tgt")))
-        return self._fused_agg(shape, _with_key(arcs), conf)
+                *FCOLS, null_s.alias("pred"),
+                *[null_s.alias(c) for c in OBJ_COLS],
+                F.lit(True).alias("__tgt")))
+        if tokens:
+            srcs = self._markers(rows).filter(F.col("f_kind") != "literal") \
+                .select(F.col("f_value").alias("n"))
+        for path, token in tokens.items():
+            dedup = not all(_dedup_free(pc)
+                            for _, pc in shape.triple_constraints()
+                            if pc.path == path)
+            pairs = path_pairs(self.triples, path, srcs, dedup=dedup)
+            arcs = arcs.unionByName(pairs.select(
+                node_kind(F.col("src")).alias("f_kind"),
+                F.col("src").alias("f_value"),
+                null_s.alias("f_dt"), null_s.alias("f_lang"),
+                F.lit(token).alias("pred"),
+                *[F.col(v).alias(o) for v, o in zip(VAL_COLS, OBJ_COLS)],
+                F.lit(False).alias("__tgt")))
+        return self._fused_agg(shape, _with_key(arcs), conf, tokens)
 
     def _fused_agg(self, shape: Shape, arcs: DataFrame,
-                   conf: dict[str, DataFrame]) -> DataFrame:
-        """(KEY, *FCOLS, conforms, violations[, __og_*]) of the focus
-        terms of an arc relation that carries f_* focus-term columns,
-        pred/obj_* arc columns and the __tgt marker flag (built by
-        _eval_simple): ONE groupBy(term) with conditional aggregates for
-        the property constraints, the CLOSED residue, each OneOf group's
-        simple members (its verdict in column __og_<group>, read by
-        _evaluate_shape), the group blocks and the repeat partition; the
-        node constraints are then columns of the grouped row. Per-value
-        violations are collected in the same aggregate (one per arc
-        row, as the arcs are not deduplicated); per-focus ones read the
-        grouped counts."""
-        values = [pc.node for _, pc in shape.triple_constraints()
-                  if pc.path.is_simple_pred]
+                   conf: dict[str, DataFrame],
+                   tokens: dict[Path, str]) -> DataFrame:
+        """(KEY, *FCOLS, conforms, violations) of the focus terms of an
+        arc relation that carries f_* focus-term columns, pred/obj_* arc
+        columns and the __tgt marker flag (built by _eval_grouped): ONE
+        groupBy(term) with conditional aggregates for the property
+        constraints, the CLOSED residue, the OneOf groups, the group
+        blocks and the repeat partition; the node constraints are then
+        columns of the grouped row. Per-value violations are collected
+        in the same aggregate; per-focus ones read the grouped counts."""
+        values = [pc.node for _, pc in shape.triple_constraints()]
         arcs, ref_cols, cls_cols = self._join_term_bools(
             arcs, "obj_", *_lookups(values), conf)
         tc = self._term_cols("obj_", ref_cols, cls_cols)
 
         aggs: list[Column] = [F.max("__tgt").alias("__is_focus")]
         lists: list[Column] = []
-        oks, fails = self._property_checks(
-            shape, [pc for pc in shape.properties if pc.path.is_simple_pred],
-            tc, "", aggs, lists)
+        oks, fails = self._property_checks(shape, shape.properties, tc, "",
+                                           aggs, lists, tokens)
         ok = F.lit(True)
         if shape.closed:
             # allowed = declared property paths + sh:ignoredProperties / EXTRA
-            # (SURVEY.md §2.4 CLOSED: per-subject anti-count)
-            allowed = shape.declared_preds() | set(shape.ignored)
-            off_path = F.col("pred").isNotNull() & ~F.col("pred").isin(list(allowed))
+            # (SURVEY.md §2.4 CLOSED: per-subject anti-count); a path
+            # pair is no arc of the focus node
+            allowed = (shape.declared_preds() | set(shape.ignored)
+                       | set(tokens.values()))
+            off_path = F.col("pred").isNotNull() & ~F.col("pred").isin(sorted(allowed))
             aggs.append(F.count(F.when(off_path, F.lit(1))).alias("__n_closed_bad"))
             aggs.append(F.collect_list(F.when(off_path, _violation(
                 "ClosedConstraintComponent", shape.severity,
@@ -950,19 +950,25 @@ class ValidationEngine:
             ok = F.col("__n_closed_bad") == 0
         for c in oks:
             ok = ok & c
-        flags = []
-        for gi, group in enumerate(shape.one_of):
-            g_oks, _ = self._property_checks(
-                shape, [pc for pc in group if pc.path.is_simple_pred], tc,
-                f"o{gi}_", aggs, None)
-            flag = F.lit(True)
-            for c in g_oks:
-                flag = flag & c
-            flags.append(flag.alias(f"__og_{gi}"))
         checks = [self._block_check(shape, blk, b, tc, aggs)
                   for b, blk in enumerate(shape.group_blocks)]
         if shape.repeat_alts:
             checks.append(self._partition_check(shape, tc, aggs))
+        if shape.one_of:
+            # ShEx OneOf: exactly one group matches, and a group matches
+            # iff all its members do (EachOf inside the chosen
+            # alternative). The members' own violations are not read:
+            # the OneOf reports as a whole.
+            total = F.lit(0)
+            for gi, group in enumerate(shape.one_of):
+                flag = F.lit(True)
+                for c in self._property_checks(shape, group, tc, f"o{gi}_",
+                                               aggs, None, tokens)[0]:
+                    flag = flag & c
+                total = total + flag.cast("int")
+            checks.append((total == 1, _violation(
+                "OneOfConstraintComponent", shape.severity, F.lit(None),
+                F.lit(None), shape.message)))
 
         # group by the full term tuple: KEY is injective in (f_kind,
         # f_value, f_dt, f_lang), so cardinality is unchanged, the
@@ -986,17 +992,18 @@ class ValidationEngine:
             ok = ok & c
             fails.append(F.when(~c, violation))
         return grouped.select(KEY, *FCOLS, ok.alias("conforms"),
-                              _violations(fails, lists).alias("violations"),
-                              *flags)
+                              _violations(fails, lists).alias("violations"))
 
     def _property_checks(self, shape: Shape, props: list[PropertyConstraint],
                          tc: TermCols, tag: str, aggs: list[Column],
-                         lists: list[Column] | None
+                         lists: list[Column] | None,
+                         tokens: dict[Path, str]
                          ) -> tuple[list[Column], list[Column]]:
-        """Property constraints over simple predicates, as conditional
-        aggregates appended to ``aggs`` (named with ``tag``): returns
-        each constraint's verdict over the grouped counts and the
-        per-focus violations. ``props`` are each other's siblings for
+        """Property constraints, as conditional aggregates over the arcs
+        of their path (``tokens``: a complex path's pred column value)
+        appended to ``aggs`` (named with ``tag``): returns each
+        constraint's verdict over the grouped counts and the per-focus
+        violations. ``props`` are each other's siblings for
         qualifiedValueShapesDisjoint. Per-value violations are
         collected into ``lists``; None collects none (a OneOf member
         reports as its OneOf)."""
@@ -1018,7 +1025,7 @@ class ValidationEngine:
         oks: list[Column] = []
         fails: list[Column] = []
         for i, (pc, per_value, existential, v_ok) in enumerate(prepared):
-            on_path = F.col("pred") == pc.path.iri
+            on_path = F.col("pred") == tokens.get(pc.path, pc.path.iri)
             count_ok = v_ok
             if pc.qualified and pc.qualified_disjoint:
                 for j, (pc2, _, _, v_ok2) in enumerate(prepared):
@@ -1042,15 +1049,29 @@ class ValidationEngine:
                     F.when(on_path & tc.lang.isNotNull(), F.lower(tc.lang))).alias(ndl))
             # per-value violations (qualified shapes report only their
             # count components, never per-value)
+            path = F.lit(pc.path.describe())
             for j, (cj, c_ok) in enumerate(per_value):
                 if lists is None or pc.qualified or self._is_transparent_ref(cj):
                     continue
                 name = f"__viol_{tag}{i}_{j}"
-                aggs.append(F.collect_list(F.when(on_path & ~c_ok, _violation(
-                    COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
-                    pc.severity, F.col("obj_value"), F.lit(pc.path.iri),
-                    pc.message or shape.message))).alias(name))
-                lists.append(F.col(name))
+                fail = on_path & ~c_ok
+
+                def violation(value: Column) -> Column:
+                    return _violation(
+                        COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
+                        pc.severity, value, path, pc.message or shape.message)
+
+                if pc.path.is_simple_pred:
+                    aggs.append(F.collect_list(F.when(
+                        fail, violation(F.col("obj_value")))).alias(name))
+                    lists.append(F.col(name))
+                else:
+                    # a value term that several walks reach (pairs kept
+                    # undeduplicated) reports once
+                    aggs.append(F.collect_set(F.when(
+                        fail, F.struct(*OBJ_COLS))).alias(name))
+                    lists.append(F.transform(
+                        F.col(name), lambda v: violation(v["obj_value"])))
             c_ok, c_fails = self._count_checks(shape, pc, names)
             oks.append(c_ok)
             fails += c_fails
@@ -1221,95 +1242,6 @@ class ValidationEngine:
             "PartitionConstraintComponent", shape.severity, F.lit(None),
             F.lit("|".join(preds)), shape.message)
 
-    # -- complex-path evaluator ---------------------------------------------
-
-    def _eval_cpath(self, shape: Shape, pc: PropertyConstraint,
-                    rows: FocusRows, conf: dict[str, DataFrame]) -> DataFrame:
-        """(KEY, *FCOLS, conforms, violations), one row per focus term,
-        for one complex path (sequence / inverse / alternative /
-        closure): union(per-pair value-checked rows keyed by source
-        node, focus-marker rows) → ONE groupBy(term) → filter(is-focus).
-        The path computation keeps the focus semi-join restriction
-        (path_pairs srcs), so at scale the chain only expands the focus
-        neighborhood; zero-pair focus terms group from their marker row
-        alone and count 0."""
-        markers = self._markers(rows)
-        srcs = markers.filter(F.col("f_kind") != "literal") \
-            .select(F.col("f_value").alias("n"))
-        # Multiplicity-insensitive thresholds (minCount ≤ 1, no
-        # maxCount: the aggregate only tests exists / none) let the
-        # aggregate run on NON-deduped pairs — one exchange less on the
-        # critical path (r6, guide §2.4). The failing values are then
-        # collected as a set, so each (focus, value term) reports once.
-        dedup_free = pc.min_count <= 1 and pc.max_count is None
-        collect = F.collect_set if dedup_free else F.collect_list
-        pairs = path_pairs(self.triples, pc.path, srcs,
-                           dedup=not dedup_free)
-        pairs, ref_cols, cls_cols = self._join_term_bools(
-            pairs, "v_", *_lookups([pc.node]), conf)
-        tc = self._term_cols("v_", ref_cols, cls_cols)
-        conjs = _top_conjuncts(pc.node)
-        per_value = [(c, compile_expr(c, tc)) for c in conjs
-                     if c.kind != "hasValue"]
-        existential = [c for c in conjs if c.kind == "hasValue"]
-        v_ok = F.lit(True)
-        for _, c_ok in per_value:
-            v_ok = v_ok & c_ok
-        reported = [(cj, c_ok) for cj, c_ok in per_value
-                    if not (pc.qualified or cj.kind == "true"
-                            or self._is_transparent_ref(cj))]
-        null_s = F.lit(None).cast("string")
-        null_b = F.lit(None).cast("boolean")
-        src_kind = F.when(F.col("src").startswith("_:"), F.lit("bnode")) \
-            .otherwise(F.lit("iri"))
-        hit_names = [f"__hit_{j}" for j in range(len(existential))]
-        bad_names = [f"__bad_{j}" for j in range(len(reported))]
-        pair_rows = pairs.select(
-            src_kind.alias("f_kind"), F.col("src").alias("f_value"),
-            null_s.alias("f_dt"), null_s.alias("f_lang"), *VAL_COLS,
-            v_ok.alias("__vok"),
-            *[_value_match(ex.values[0], tc).alias(nm)
-              for nm, ex in zip(hit_names, existential)],
-            *[(~c_ok).alias(nm) for nm, (_, c_ok) in zip(bad_names, reported)],
-            F.lit(False).alias("__tgt"))
-        marker_rows = markers.select(
-            "f_kind", "f_value", "f_dt", "f_lang",
-            *[null_s.alias(c) for c in VAL_COLS],
-            null_b.alias("__vok"),
-            *[null_b.alias(nm) for nm in hit_names + bad_names],
-            F.lit(True).alias("__tgt"))
-        un = _with_key(pair_rows.unionByName(marker_rows))
-        is_pair = ~F.col("__tgt")
-        aggs = [
-            F.count(F.when(is_pair, F.lit(1))).alias("__n"),
-            F.count(F.when(is_pair & F.col("__vok"), F.lit(1)))
-            .alias("__ok_n"),
-            F.count(F.when(is_pair & ~F.col("__vok"), F.lit(1)))
-            .alias("__bad_n"),
-            F.max("__tgt").alias("__is_focus"),
-        ]
-        names = {"total": "__n", "ok": "__ok_n", "bad": "__bad_n", "has": []}
-        for nm in hit_names:
-            names["has"].append(nm.replace("__hit_", "__has_"))
-            aggs.append(F.count(F.when(is_pair & F.col(nm), F.lit(1)))
-                        .alias(names["has"][-1]))
-        # the failing value terms per reported conjunct
-        aggs += [collect(F.when(F.col(nm), F.struct(*VAL_COLS))).alias(nm)
-                 for nm in bad_names]
-        grouped = un.groupBy(KEY, *FCOLS).agg(*aggs) \
-            .filter(F.col("__is_focus"))
-        # cardinality + hasValue checks (hasValue over a complex path:
-        # zero-pair focus terms count 0 and must report — W3C
-        # path-complex-001 targets nodes absent from the data)
-        ok, fails = self._count_checks(shape, pc, names)
-        path = F.lit(pc.path.describe())
-        lists = [F.transform(F.col(nm), lambda v: _violation(
-            COMPONENT_NAMES.get(cj.kind, "NodeConstraintComponent"),
-            pc.severity, v["v_value"], path, pc.message or shape.message))
-            for nm, (cj, _) in zip(bad_names, reported)]
-        return grouped.select(KEY, *FCOLS, ok.alias("conforms"),
-                              _violations(fails, lists).alias("violations"))
-
     # -- pairwise sibling-path constraints ------------------------------------
 
     def _eval_pairwise(self, shape: Shape, rows: FocusRows,
@@ -1347,12 +1279,8 @@ class ValidationEngine:
             comp_name = ("LessThanConstraintComponent" if pc.less_than
                          else "LessThanOrEqualsConstraintComponent")
             theta = a.alias("A").join(b.alias("B"), on="src")
-            avc = F.when(F.col("A.v_dt").isin(list(TEMPORAL_DATATYPES)),
-                         F.col("A.v_value").try_cast("timestamp").cast("double")
-                         ).otherwise(F.col("A.v_value").try_cast("double"))
-            bvc = F.when(F.col("B.v_dt").isin(list(TEMPORAL_DATATYPES)),
-                         F.col("B.v_value").try_cast("timestamp").cast("double")
-                         ).otherwise(F.col("B.v_value").try_cast("double"))
+            avc = _numeric_value(F.col("A.v_value"), F.col("A.v_dt"))
+            bvc = _numeric_value(F.col("B.v_value"), F.col("B.v_dt"))
             good = (avc < bvc) if pc.less_than else (avc <= bvc)
             viol_vals = theta.filter(
                 ~F.coalesce(good, F.lit(False))

@@ -184,3 +184,35 @@ def test_report_reads_the_validated_relation(spark, scope):
                     or n.endswith("Aggregate") or n.endswith("Join")], \
             (name, nodes)
         assert res.report.count() > 0, name
+
+
+def test_plan_text_does_not_follow_the_hash_seed():
+    """Every IN list is built in sorted order, so a query's plan text is
+    the same in two processes whose string hashes differ
+    (PYTHONHASHSEED); set iteration order would otherwise leak into it.
+    Plans are compared with their expression and plan ids stripped."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import sys
+sys.path[:0] = [{root!r}, {os.path.join(root, "tools")!r}]
+import __spark_entry__ as E
+from dump_plans import strip_ids
+from shaclex_spark.session import get_spark
+spark = get_spark("hash_seed", parallelism=1, shuffle_partitions=1)
+df = E.queries()["kg_closed_nation"](spark, {SF!r})
+print(strip_ids(df._jdf.queryExecution().optimizedPlan().toString()))
+spark.stop()
+"""
+    plans = []
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed, SPARK_DRIVER_MEM="1g")
+        out = subprocess.run([sys.executable, "-c", code], env=env,
+                             capture_output=True, text=True, timeout=600,
+                             check=True)
+        plans.append(out.stdout)
+    assert "Filter" in plans[0]
+    assert plans[0] == plans[1]

@@ -7,7 +7,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from shaclex_spark.pipeline import run_pipeline
+from shaclex_spark.pipeline import build_kg, run_pipeline
+from shaclex_spark.scope import Scope
 from shaclex_spark.transcripts import synth_transcripts
 
 
@@ -357,3 +358,16 @@ def test_run_pipeline_releases_its_persists(spark):
     out["report"].count()
     assert held().size() == n_built, "the validation persisted a relation"
     spark.catalog.clearCache()
+
+
+def test_build_kg_persists_into_the_callers_scope(spark):
+    """build_kg's stage boundaries belong to the caller's scope: once
+    it is closed, the persisted RDDs are those held before the call."""
+    held = spark.sparkContext._jsc.getPersistentRDDs
+    before = held().size()
+    with Scope() as scope:
+        triples, _ = build_kg(
+            spark, _mk_transcripts(spark, LEAST_VARIANT_BASE), scope=scope)
+        triples.count()
+        assert held().size() > before
+    assert held().size() == before

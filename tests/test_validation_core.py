@@ -333,6 +333,61 @@ def test_unique_lang(spark):
     assert any(r.component == "UniqueLangConstraintComponent" for r in report)
 
 
+def test_unique_lang_over_sequence_path(spark):
+    """uniqueLang counts the values a complex path reaches as it counts
+    a predicate's."""
+    rows = [
+        (EX + "x", EX + "b", "iri", EX + "bx", None, None),
+        (EX + "bx", EX + "label", *lit("one", None, "en")),
+        (EX + "bx", EX + "label", *lit("two", None, "en")),
+        (EX + "y", EX + "b", "iri", EX + "by", None, None),
+        (EX + "by", EX + "label", *lit("one", None, "en")),
+        (EX + "by", EX + "label", *lit("uno", None, "es")),
+    ]
+    shapes = [{
+        "label": "S",
+        "constraints": [{"path": {"kind": "sequence",
+                                  "steps": [EX + "b", EX + "label"]},
+                         "uniqueLang": True}],
+    }]
+    conf, report = run(spark, rows, shapes, [(EX + "x", "S"), (EX + "y", "S")])
+    assert conf == {(EX + "x", "S"): False, (EX + "y", "S"): True}
+    assert [(r.focus_node, r.component, r.path) for r in report] == [
+        (EX + "x", "UniqueLangConstraintComponent",
+         f"{EX}b/{EX}label")]
+
+
+def test_qualified_disjoint_sibling_on_inverse_path(spark):
+    """qualifiedValueShapesDisjoint: a value that conforms to a
+    sibling's qualified shape does not count, whatever the sibling's
+    path; here the sibling walks ^q (or q, for comparison)."""
+    rows = [
+        (EX + "x", EX + "p", "iri", EX + "v", None, None),
+        (EX + "v", RDF_TYPE, "iri", EX + "A", None, None),
+        (EX + "v", RDF_TYPE, "iri", EX + "B", None, None),
+        (EX + "y", EX + "p", "iri", EX + "w", None, None),
+        (EX + "w", RDF_TYPE, "iri", EX + "A", None, None),
+    ]
+    for sibling in ({"kind": "inverse", "iri": EX + "q"}, EX + "q"):
+        shapes = [{
+            "label": "S",
+            "constraints": [
+                {"path": EX + "p", "minCount": 1, "qualified": True,
+                 "qualifiedDisjoint": True,
+                 "node": {"kind": "class", "iri": EX + "A"}},
+                {"path": sibling, "qualified": True,
+                 "qualifiedDisjoint": True,
+                 "node": {"kind": "class", "iri": EX + "B"}},
+            ],
+        }]
+        conf, report = run(spark, rows, shapes,
+                           [(EX + "x", "S"), (EX + "y", "S")])
+        assert conf == {(EX + "x", "S"): False, (EX + "y", "S"): True}, \
+            sibling
+        assert [(r.focus_node, r.component) for r in report] == [
+            (EX + "x", "QualifiedMinCountConstraintComponent")], sibling
+
+
 def test_equals_disjoint_lessthan(spark):
     rows = [
         # equals: ok node has same values on both preds
