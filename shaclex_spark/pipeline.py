@@ -27,7 +27,6 @@ from .validation import Graph, ValidationEngine, ValidationResult
 # Default shapes for transcript KGs: persons/courses from the extraction
 # vocabulary. Mirrors examples/clingo/paper.{shex,ttl,sm} semantics
 # (User shape with age integer {1,1}, knows refs, enrolledIn refs).
-
 DEFAULT_SHAPES = [
     {
         "label": "PersonShape",
