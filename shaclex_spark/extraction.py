@@ -1,11 +1,11 @@
 """Triple extraction: transcript turns → candidate (subj, pred, obj)
-triples, via a vectorized Arrow-batched extractor (mapInPandas).
+triples, via a vectorized Arrow-batched extractor (mapInArrow).
 
 This replaces the reference's "parse RDF file" ingestion
 (/root/reference/src/main/scala/es/weso/shaclex/Main.scala:256-261)
 with the north-star extraction stage: batched regex mention/relation
-detection over turn text (no per-row Python UDF — pandas .str ops run
-C-side over whole Arrow batches).
+detection over turn text (no per-row Python UDF — pyarrow.compute
+kernels run C-side over whole Arrow batches).
 
 Determinism: pure function of the text; mention IRIs are slugged
 surface forms under the mention/ namespace, later canonicalized by
@@ -15,10 +15,6 @@ linking.py. Provenance (conv_id, turn_idx) is carried on every triple
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .model import (EX, FOAF_KNOWS, RDF_TYPE, TRIPLES_PROV_SCHEMA,
@@ -28,13 +24,13 @@ MENTION = EX + "mention/"
 
 # (pattern, pred, obj handling, literal keyword)
 # Patterns mirror the synthetic templates in transcripts.py; a real
-# deployment swaps in an NER/RE model inside the same mapInPandas hook.
+# deployment swaps in an NER/RE model inside the same mapInArrow hook.
 # The keyword is a LITERAL substring of the pattern: rows are
-# prefiltered with a plain C-side substring scan (pandas
-# str.contains(regex=False)) so the expensive anchored regex runs only
-# on candidate rows — with 6 disjoint templates this cuts the regex
+# prefiltered with a plain C-side substring scan (pyarrow.compute
+# match_substring) so the expensive anchored regex runs only on
+# candidate rows — with 6 disjoint templates this cuts the regex
 # work ~6x without changing any result (non-matching rows extract to
-# NaN either way).
+# null either way).
 NAME = r"[A-Za-z][A-Za-z.]*(?: [A-Za-z][A-Za-z.]*){0,2}"
 RULES: list[tuple[str, str, str, str]] = [
     (rf"^(?P<s>{NAME}) is enrolled in (?P<o>[a-z]{{2}}\d+)\.$",
@@ -54,79 +50,16 @@ RULES: list[tuple[str, str, str, str]] = [
     (rf"^(?P<s>{NAME}) is a (?P<o>[A-Z][A-Za-z]*)\.$", RDF_TYPE, "class",
      " is a "),
 ]
-_COMPILED = [(re.compile(p), pred, objmode, kw)
-             for p, pred, objmode, kw in RULES]
-
-_SLUG_RE = re.compile(r"[^a-z0-9]+")
-
-
-def slug(series: pd.Series) -> pd.Series:
-    return series.str.lower().str.replace(_SLUG_RE, "_", regex=True).str.strip("_")
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    outs = []
-    text = pdf["text"]
-    for rx, pred, objmode, kw in _COMPILED:
-        # na=False: a NULL text row yields NaN from str.contains, and
-        # boolean-indexing with an NA mask raises — null rows simply
-        # don't match any template.
-        cand = text[text.str.contains(kw, regex=False, na=False)]
-        if cand.empty:
-            continue
-        m = cand.str.extract(rx)
-        hit = m["s"].notna()
-        if not hit.any():
-            continue
-        hit = hit[hit].index
-        sub = pdf.loc[hit, ["conv_id", "turn_idx"]].copy()
-        subj_is_course = pred == EX + "hasSubject"
-        if subj_is_course:
-            sub["subj"] = EX + "course/" + m.loc[hit, "s"]
-        else:
-            sub["subj"] = MENTION + slug(m.loc[hit, "s"])
-        sub["pred"] = pred
-        o = m.loc[hit, "o"]
-        if objmode == "course":
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "iri", EX + "course/" + o, None
-        elif objmode == "order":
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "iri", EX + "o/" + o, None
-        elif objmode == "org":
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "iri", EX + "org/" + o, None
-        elif objmode == "class":
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "iri", EX + "class/" + o, None
-        elif objmode == "mention":
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "iri", MENTION + slug(o), None
-        elif objmode == "int":
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "literal", o, XSD_INTEGER
-        else:  # plain string literal
-            sub["obj_kind"], sub["obj_value"], sub["obj_dt"] = \
-                "literal", o, XSD_STRING
-        sub["obj_lang"] = None
-        outs.append(sub)
-    if not outs:
-        return pd.DataFrame(columns=[f.name for f in TRIPLES_PROV_SCHEMA.fields])
-    out = pd.concat(outs, ignore_index=True)
-    return out[["subj", "pred", "obj_kind", "obj_value", "obj_dt", "obj_lang",
-                "conv_id", "turn_idx"]]
-
-
 def _extract_batch_arrow(batch):
     """Arrow-native extractor for one RecordBatch (columns conv_id,
     turn_idx, text): substring prefilter + RE2 regex via
     pyarrow.compute — the whole batch runs through C++ kernels, no
-    per-row Python objects (guide §4.2; measured 2.1x over the pandas
-    str.extract path at 3.6M turns, output multiset-identical).
+    per-row Python objects (guide §4.2; measured 2.1x over a pandas
+    str.extract extractor at 3.6M turns, output multiset-identical).
     RE2 supports this rule set exactly (named groups, bounded repeats,
     no backreferences); anchored-match semantics agree with Python re.
-    Null text: match_substring yields null → fill_null(False) → row
-    matches no template, same as the pandas na=False path."""
+    Null text: match_substring yields null → fill_null(False) → the
+    row matches no template."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

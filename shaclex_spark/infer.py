@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .fixpoint import semi_naive
 from .model import RDF_LANGSTRING
 from .scope import Scope
 
@@ -157,8 +158,9 @@ def infer_schema(triples: DataFrame, focus_nodes: DataFrame,
     follow_on: [(pred_regex, sub_label)] — when a predicate of the
     profiled shape matches, its (non-literal) objects become a new
     focus set profiled as sub_label, and the parent constraint becomes
-    a shape ref ('@sub_label'). Bounded by max_follow_on rounds with a
-    visited-set guard (anti-join), mirroring SchemaInfer.followOn
+    a shape ref ('@sub_label'). The walk is a ``fixpoint.semi_naive``
+    over (node, hop, rule) keyed on node — the visited-set guard —
+    truncated at max_follow_on hops, mirroring SchemaInfer.followOn
     (/root/reference/modules/schemaInfer/src/main/scala/es/weso/
     schemaInfer/SchemaInfer.scala:253-274, FollowOn.scala:16-55,
     visited guard SchemaInfer.scala:291-296).
@@ -173,31 +175,38 @@ def infer_schema(triples: DataFrame, focus_nodes: DataFrame,
             ref_expr = F.when(F.col("pred").rlike(rx),
                               F.lit("@" + sub_label)).otherwise(ref_expr)
         out = out.withColumn("constraint", ref_expr)
-        visited = focus_nodes.select(
-            F.col(focus_nodes.columns[0]).alias("node")).distinct() \
-            .localCheckpoint(eager=True)
-        frontier: list[DataFrame] = [visited]
-        for _ in range(max_follow_on):
-            next_frontier: list[DataFrame] = []
-            for nodes in frontier:
-                arcs = nodes.join(triples, on=nodes["node"] == triples["subj"])
-                for rx, sub_label in follow_on:
-                    objs = (arcs.filter(F.col("pred").rlike(rx)
-                                        & (F.col("obj_kind") != "literal"))
-                            .select(F.col("obj_value").alias("node"))
-                            .distinct())
-                    new = objs.join(visited, on="node", how="left_anti") \
-                        .localCheckpoint(eager=True)
-                    if new.isEmpty():
-                        continue
-                    visited = visited.unionByName(new) \
-                        .localCheckpoint(eager=True)
-                    out = out.unionByName(
-                        infer_shape(triples, new, sub_label, scope=scope))
-                    next_frontier.append(new)
-            frontier = next_frontier
-            if not frontier:
-                break
+        # the rule an arc follows: the first follow_on entry whose
+        # regex matches its predicate
+        rule = F.lit(None).cast("int")
+        for i in reversed(range(len(follow_on))):
+            rule = F.when(F.col("pred").rlike(follow_on[i][0]),
+                          F.lit(i)).otherwise(rule)
+
+        def step(frontier: DataFrame) -> DataFrame:
+            below = frontier.filter(F.col("hop") < max_follow_on)
+            return (below.join(triples, on=below["node"] == triples["subj"])
+                    .filter(F.col("obj_kind") != "literal")
+                    .select(F.col("obj_value").alias("node"),
+                            (F.col("hop") + 1).alias("hop"),
+                            rule.alias("rule"))
+                    .filter(F.col("rule").isNotNull())
+                    # a node two rules reach in one round goes to the
+                    # earlier rule
+                    .groupBy("node").agg(F.min("hop").alias("hop"),
+                                         F.min("rule").alias("rule")))
+
+        seed = focus_nodes.select(
+            F.col(focus_nodes.columns[0]).alias("node"),
+            F.lit(0).alias("hop"), F.lit(None).cast("int").alias("rule"))
+        reached = semi_naive(seed, step, ["node"],
+                             max_follow_on + 1).filter(F.col("hop") > 0)
+        # one profile per (round, rule) that reached any node
+        for hop, i in sorted(reached.select("hop", "rule")
+                             .distinct().collect()):
+            nodes = reached.filter((F.col("hop") == hop)
+                                   & (F.col("rule") == i)).select("node")
+            out = out.unionByName(
+                infer_shape(triples, nodes, follow_on[i][1], scope=scope))
     if add_label_lang is not None:
         out = decorate_labels(triples, out, add_label_lang)
     return out

@@ -11,9 +11,11 @@ path row):
     alternative  union + distinct
     zeroOrOne    identity ∪ step
     zeroOrMore / oneOrMore
-                 semi-naive iterative closure with localCheckpoint per
-                 round (driver loop) — frontier-only joins so each round
-                 shuffles only NEW pairs, not the accumulated closure.
+                 fixpoint.semi_naive over the one-step pairs: each round
+                 joins only the NEW pairs with one more step, so it
+                 shuffles the frontier, not the accumulated closure;
+                 a closure that needs more than MAX_CLOSURE_ROUNDS
+                 rounds raises fixpoint.FixpointError.
 
 Every builder takes ``srcs`` (a single-column DF of candidate source
 node ids) and restricts computation to paths starting there — the
@@ -27,13 +29,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .fixpoint import semi_naive
 from .shapes import Path
 
 VAL_COLS = ["v_kind", "v_value", "v_dt", "v_lang"]
 PAIR_COLS = ["src"] + VAL_COLS
 
-# Iteration cap for unbounded closures — a safety net against
-# pathological graphs; real fixpoints converge in O(diameter) rounds.
+# Round cap for unbounded closures: a closure from a source converges
+# in (longest shortest path from it) rounds; one deeper than this
+# raises instead of returning a partial set.
 MAX_CLOSURE_ROUNDS = 50
 
 
@@ -121,23 +125,7 @@ def path_pairs(triples: DataFrame, path: Path, srcs: DataFrame | None = None,
     if path.kind == "sequence":
         cur = path_pairs(triples, path.steps[0], srcs)
         for step in path.steps[1:]:
-            # intermediate nodes: only iri/bnode can take another step
-            cur_mid = (cur.filter(F.col("v_kind") != "literal")
-                       .select("src", F.col("v_value").alias("mid")))
-            if step.kind in ("pred", "inverse") and step.iri is not None:
-                # simple step: the equi-join on mid IS the restriction —
-                # a mids-distinct + semi-join first would restrict the
-                # same relation twice (two extra shuffles per step,
-                # measured ~2x on the 3-step bench sequence)
-                nxt = path_pairs(triples, step, None)
-            else:
-                # complex step (closure/alternative): restrict its
-                # internal expansion to reachable seeds
-                mids = cur_mid.select(F.col("mid")).distinct()
-                nxt = path_pairs(triples, step, mids)
-            cur = (cur_mid
-                   .join(nxt.withColumnRenamed("src", "mid"), on="mid")
-                   .select(*PAIR_COLS))
+            cur = _then(triples, cur, step)
         return cur.distinct() if dedup else cur
     if path.kind == "alternative":
         parts = [path_pairs(triples, s, srcs) for s in path.steps]
@@ -158,44 +146,38 @@ def path_pairs(triples: DataFrame, path: Path, srcs: DataFrame | None = None,
     raise ValueError(f"unknown path kind {path.kind}")
 
 
+def _then(triples: DataFrame, cur: DataFrame, step: Path) -> DataFrame:
+    """Extend the pairs ``cur`` by one ``step``: (src, mid) ⋈ step(mid, v).
+    Only iri/bnode intermediate nodes can take another step."""
+    cur_mid = (cur.filter(F.col("v_kind") != "literal")
+               .select("src", F.col("v_value").alias("mid")))
+    if step.kind in ("pred", "inverse") and step.iri is not None:
+        # simple step: the equi-join on mid IS the restriction — a
+        # mids-distinct + semi-join first would restrict the same
+        # relation twice (two extra shuffles per step, measured ~2x on
+        # the 3-step bench sequence)
+        nxt = path_pairs(triples, step, None)
+    else:
+        # complex step (closure/alternative): restrict its internal
+        # expansion to reachable seeds
+        mids = cur_mid.select(F.col("mid")).distinct()
+        nxt = path_pairs(triples, step, mids)
+    return (cur_mid.join(nxt.withColumnRenamed("src", "mid"), on="mid")
+            .select(*PAIR_COLS))
+
+
 def _closure_pairs(triples: DataFrame, step: Path, srcs: DataFrame,
                    include_zero: bool) -> DataFrame:
-    """Transitive closure of ``step`` from ``srcs`` — semi-naive
-    iteration: each round expands only the frontier (pairs discovered
-    last round), anti-joined against the accumulated closure, with
-    localCheckpoint to cut lineage (SURVEY.md §4.2 custom work #1)."""
-    one = path_pairs(triples, step, srcs).distinct().localCheckpoint(eager=True)
-    acc = one
-    frontier = one
-    simple_step = step.kind in ("pred", "inverse") and step.iri is not None
-    for _ in range(MAX_CLOSURE_ROUNDS):
-        frontier_mid = (frontier.filter(F.col("v_kind") != "literal")
-                        .select("src", F.col("v_value").alias("mid")))
-        if simple_step:
-            # the frontier equi-join restricts by itself (see sequence)
-            nxt = path_pairs(triples, step, None)
-        else:
-            mids = frontier_mid.select(F.col("mid")).distinct()
-            nxt = path_pairs(triples, step, mids)
-        expanded = (
-            frontier_mid
-            .join(nxt.withColumnRenamed("src", "mid"), on="mid")
-            .select(*PAIR_COLS)
-            .distinct()
-        )
-        # null-safe anti-join: v_dt / v_lang are null for non-literals and
-        # plain joins never match null keys, which would re-add the same
-        # pair every round and break convergence. Both sides aliased:
-        # in round 1 acc IS the frontier, so their columns are one.
-        cond = [F.col(f"e.{c}").eqNullSafe(F.col(f"a.{c}"))
-                for c in PAIR_COLS]
-        new = (expanded.alias("e").join(acc.alias("a"), on=cond,
-                                        how="left_anti")
-               .localCheckpoint(eager=True))
-        if new.isEmpty():
-            break
-        acc = acc.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
+    """Transitive closure of ``step`` from ``srcs``: the one-step pairs
+    are the seed of ``fixpoint.semi_naive``, and each round extends
+    only the pairs the last round found by one more step (``_then``),
+    keyed on the whole pair. The v_dt / v_lang of a non-literal value
+    are null, so the key must match null-safely or the same pair would
+    come back every round. A closure deeper than MAX_CLOSURE_ROUNDS
+    raises ``fixpoint.FixpointError``."""
+    acc = semi_naive(path_pairs(triples, step, srcs),
+                     lambda frontier: _then(triples, frontier, step),
+                     PAIR_COLS, MAX_CLOSURE_ROUNDS)
     if include_zero:
         acc = identity_pairs(srcs).unionByName(acc).distinct()
     return acc

@@ -666,7 +666,7 @@ FROM trx
 WHERE regexp_matches(text, '^Customer#[0-9]+ placed order [0-9]+\\.$')
 """)
 def trx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL mapInPandas extractor over transcripts derived from the
+    """The REAL mapInArrow extractor over transcripts derived from the
     orders table — extraction itself is oracle-checked."""
     from pyspark.sql import Window
 

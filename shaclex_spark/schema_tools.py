@@ -8,7 +8,7 @@ Reference parity:
   /root/reference/modules/converter/src/main/scala/es/weso/shex/linter/ShExLinter.scala:9-52,
   CountUsages.scala:10-14) — subplan inlining before codegen
 - Graph.traverse BFS closure (SLang2Clingo.scala:220-228 callsite) —
-  iterative frontier joins (SURVEY.md §2.7)
+  fixpoint.semi_naive frontier joins (SURVEY.md §2.7)
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ from dataclasses import replace
 
 from pyspark.sql import DataFrame, functions as F
 
+from .fixpoint import semi_naive
 from .shapes import NodeExpr, SchemaDict, SchemaError
 
 
@@ -86,22 +87,19 @@ def inline_single_use_shapes(schema: SchemaDict) -> SchemaDict:
 
 def traverse(triples: DataFrame, start_nodes: DataFrame,
              max_hops: int = 20) -> DataFrame:
-    """BFS closure of nodes reachable from start_nodes over any
-    predicate — iterative frontier joins with localCheckpoint, the
-    set-at-a-time Graph.traverse."""
-    visited = start_nodes.select(
-        F.col(start_nodes.columns[0]).alias("node")).distinct() \
-        .localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(max_hops):
-        step = (frontier.join(triples, on=frontier["node"] == triples["subj"])
+    """Nodes reachable from start_nodes over any predicate within
+    ``max_hops`` hops, as one ``node`` column — the set-at-a-time
+    Graph.traverse, a ``fixpoint.semi_naive`` BFS. Each row carries the
+    hop that first reached it, and the step extends only rows below
+    ``max_hops``: a deeper graph is truncated at that depth, not an
+    error."""
+    def step(frontier: DataFrame) -> DataFrame:
+        below = frontier.filter(F.col("hop") < max_hops)
+        return (below.join(triples, on=below["node"] == triples["subj"])
                 .filter(F.col("obj_kind") != "literal")
-                .select(F.col("obj_value").alias("node"))
-                .distinct())
-        new = step.join(visited, on="node", how="left_anti") \
-            .localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    return visited
+                .select(F.col("obj_value").alias("node"),
+                        (F.col("hop") + 1).alias("hop")))
+
+    seed = start_nodes.select(F.col(start_nodes.columns[0]).alias("node"),
+                              F.lit(0).alias("hop"))
+    return semi_naive(seed, step, ["node"], max_hops + 1).select("node")

@@ -7,10 +7,10 @@ per-entry runner in
 /root/reference/src/main/scala/es/weso/shaclex/ShExTestRunner.scala:16-34
 (schema + data + focus + shape → conforms?). This module is the
 PySpark-native equivalent: entries are grouped by (schema, data) so
-each group costs ONE engine construction, and groups run concurrently
-on a thread pool (Spark's scheduler handles concurrent job submission
-from threads — the idiomatic local[N] way to amortize tiny-job
-latency).
+each group costs ONE engine construction, and groups are split over
+worker processes, each with its own lean Spark session
+(``run_suite_mp``: driver work serializes on the py4j gateway, so
+threads in one driver do not run groups in parallel).
 
 Skip policy is FEATURE-based, never result-based: an entry is skipped
 only when its traits or its schema's AST use a construct outside the
@@ -27,7 +27,6 @@ from __future__ import annotations
 import json
 import os
 import re
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 SUITE_ROOT = "/root/reference/src/test/resources/shexTest"
@@ -351,73 +350,6 @@ def _build_group(spark, gid: int, schema_path: str, data_path: str,
         F.lit(gid).alias("gid"), "node", "shape", "conforms",
         "node_dt", "node_lang")
     return outs, conf, runnable, resolved
-
-
-def _collect_batch(dfs: list):
-    merged = dfs[0]
-    for d in dfs[1:]:
-        merged = merged.unionByName(d)
-    return merged.collect()
-
-
-def run_suite(spark, root: str = SUITE_ROOT, max_workers: int = 12,
-              names: set[str] | None = None,
-              batch_size: int = 36) -> list[Outcome]:
-    entries = load_manifest(root)
-    if names is not None:
-        entries = [e for e in entries if e.name in names]
-    pre_skipped = [Outcome(e.name, e.expected, None, skip=e.skip)
-                   for e in entries if e.skip]
-    todo = [e for e in entries if not e.skip]
-    groups: dict[tuple, list[Entry]] = {}
-    for e in todo:
-        groups.setdefault((e.schema, e.data), []).append(e)
-    results: list[Outcome] = list(pre_skipped)
-
-    # phase 1: build plans concurrently (driver-side py4j work)
-    built: list[tuple] = []  # (gid, conf_df, runnable, resolved)
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futs = {pool.submit(_build_group, spark, gid, s, d, g): gid
-                for gid, ((s, d), g) in enumerate(groups.items())}
-        for f in futs:
-            outs, conf, runnable, resolved = f.result()
-            results.extend(outs)
-            if conf is not None:
-                built.append((futs[f], conf, runnable, resolved))
-
-    # phase 2: execute in unioned batches — one Spark action per
-    # ~batch_size groups instead of one per group.
-    by_gid: dict[int, tuple] = {gid: (conf, run, res)
-                                for gid, conf, run, res in built}
-    gids = sorted(by_gid)
-    batches = [gids[i:i + batch_size] for i in range(0, len(gids), batch_size)]
-    with ThreadPoolExecutor(max_workers=max(1, max_workers // 2)) as pool:
-        futs2 = {pool.submit(
-            _collect_batch, [by_gid[g][0] for g in batch]): batch
-            for batch in batches}
-        for f in futs2:
-            rows = f.result()
-            conf_map = {(r["gid"], r["node"], r["node_dt"], r["node_lang"],
-                         r["shape"]): r["conforms"] for r in rows}
-            for g in futs2[f]:
-                _, runnable, resolved = by_gid[g]
-                for e_ in runnable:
-                    if e_.assoc is not None:
-                        gots = [conf_map.get((g, n, None, None, shp))
-                                for n, shp, _ in e_.assoc]
-                        if any(x is None for x in gots):
-                            got = None
-                        else:
-                            got = all(x == exp for x, (_, _, exp)
-                                      in zip(gots, e_.assoc))
-                        results.append(Outcome(e_.name, e_.expected, got))
-                        continue
-                    label = resolved[e_.name]
-                    k, v, dt, lang = e_.focus
-                    got = conf_map.get(
-                        (g, v, dt if k == "literal" else None, lang, label))
-                    results.append(Outcome(e_.name, e_.expected, got))
-    return results
 
 
 # ------------------------------------------------------- multiprocess runner

@@ -52,6 +52,7 @@ from .model import (
     XSD_INTEGER,
     XSD_STRING,
 )
+from .fixpoint import FixpointError, cut, semi_naive
 from .paths import VAL_COLS, node_kind, path_pairs, pred_pairs
 from .scope import Scope
 from .shapes import (NodeExpr, Path, PropertyConstraint, SchemaDict, Shape,
@@ -675,16 +676,28 @@ class ValidationEngine:
         Acyclic schemas (the common case): ONE lazy pass over shapes in
         dependents-first order — no driver actions, no checkpoints; the
         whole propagation folds into the evaluation plan. Recursive
-        schemas: semi-naive frontier loop with localCheckpoint."""
-        cands: dict[str, DataFrame] = {}
+        schemas: one fixpoint.semi_naive over all labels at once."""
         base = focus_to_candidates(focus)
-        for lbl in self.schema.shapes:
-            cands[lbl] = base.filter(F.col("shape") == lbl).drop("shape")
-
         edges = self._ref_edges()
         sccs = self.schema.strata()  # dependencies first
         recursive = any(self.schema.is_recursive(scc) for scc in sccs)
 
+        if recursive:
+            # one relation (shape, KEY, *FCOLS): each round derives
+            # along every ref edge from the candidates the last round
+            # added
+            def step(frontier: DataFrame) -> DataFrame:
+                derived = [self._derive_candidates(
+                    frontier.filter(F.col("shape") == a), pc)
+                    .withColumn("shape", F.lit(b)) for a, b, pc in edges]
+                out = derived[0]
+                for d in derived[1:]:
+                    out = out.unionByName(d)
+                return out
+
+            base = semi_naive(base, step, ["shape", KEY], MAX_FIXPOINT_ROUNDS)
+        cands = {lbl: base.filter(F.col("shape") == lbl).drop("shape")
+                 for lbl in self.schema.shapes}
         if not recursive:
             by_src: dict[str, list] = {}
             for a, b, pc in edges:
@@ -696,31 +709,6 @@ class ValidationEngine:
                     derived = self._derive_candidates(cands[a], pc)
                     cands[b] = self._maybe_flatten(
                         cands[b].unionByName(derived).dropDuplicates([KEY]))
-            return cands
-
-        for lbl in self.schema.shapes:
-            cands[lbl] = cands[lbl].localCheckpoint(eager=True)
-        frontier = {lbl: cands[lbl] for lbl in self.schema.shapes}
-        for _ in range(MAX_FIXPOINT_ROUNDS):
-            new_frontier: dict[str, list[DataFrame]] = {}
-            for a, b, pc in edges:
-                fa = frontier.get(a)
-                if fa is None or fa.isEmpty():
-                    continue
-                derived = self._derive_candidates(fa, pc)
-                new = derived.join(cands[b].select(KEY), on=KEY, how="left_anti")
-                new_frontier.setdefault(b, []).append(new)
-            frontier = {}
-            for b, parts in new_frontier.items():
-                merged = parts[0]
-                for p in parts[1:]:
-                    merged = merged.unionByName(p)
-                merged = merged.dropDuplicates([KEY]).localCheckpoint(eager=True)
-                if not merged.isEmpty():
-                    cands[b] = cands[b].unionByName(merged).localCheckpoint(eager=True)
-                    frontier[b] = merged
-            if not frontier:
-                break
         return cands
 
     # -- shape evaluation ---------------------------------------------------
@@ -1300,10 +1288,15 @@ class ValidationEngine:
                       ShapesMap.scala:19-23);
         start=False → LEAST fixpoint (inductive). Where the two
         disagree, the pair's status is genuinely Unknown (Val.scala's
-        4-valued lattice: decided only by the starting assumption)."""
-        for lbl in scc:
-            conf[lbl] = rows[lbl].cand.withColumn("conforms", F.lit(start)) \
-                                      .localCheckpoint(eager=True)
+        4-valued lattice: decided only by the starting assumption). An
+        SCC whose counts still change after MAX_FIXPOINT_ROUNDS rounds
+        raises fixpoint.FixpointError."""
+        def cut_count(lbl: str, c: DataFrame) -> int:
+            # one action: the count of conforming rows materializes the
+            # cut it reads
+            conf[lbl] = cut(c)
+            return conf[lbl].filter("conforms").count()
+
         # Convergence detection by per-label conforms COUNTS is sound
         # only because negated reference cycles are rejected up front
         # (SchemaDict.check_well_formed): within an SCC every operator
@@ -1311,20 +1304,21 @@ class ValidationEngine:
         # (greatest fixpoint) or grows (least) monotonically between
         # rounds — equal cardinality implies an equal set, never an
         # equal-sized swap.
-        prev_counts = {lbl: conf[lbl].filter("conforms").count() for lbl in scc}
+        prev_counts = {lbl: cut_count(lbl, rows[lbl].cand.withColumn(
+            "conforms", F.lit(start))) for lbl in scc}
         for _ in range(MAX_FIXPOINT_ROUNDS):
             changed = False
             for lbl in scc:
-                c = self._evaluate_shape(
-                    self.schema.shapes[lbl], rows[lbl], conf)
-                c = c.localCheckpoint(eager=True)
-                n = c.filter("conforms").count()
-                conf[lbl] = c
+                n = cut_count(lbl, self._evaluate_shape(
+                    self.schema.shapes[lbl], rows[lbl], conf))
                 if n != prev_counts[lbl]:
                     prev_counts[lbl] = n
                     changed = True
             if not changed:
-                break
+                return
+        raise FixpointError(
+            f"shapes {scc} did not converge within {MAX_FIXPOINT_ROUNDS} "
+            f"rounds")
 
     def validate(self, focus: DataFrame | None = None,
                  full_terms: bool = False,

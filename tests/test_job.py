@@ -47,3 +47,40 @@ def test_job_counts_are_the_written_tables(spark, tmp_path, capsys):
         rows(batch, "triples")
     assert got["n_violations"] == rows(streamed, "report") == \
         rows(batch, "report")
+
+
+def test_job_main_under_master_flag(spark, tmp_path):
+    """``--master local[2]`` names the master of the job's session. The
+    flag shows only in a fresh process: in this one the test session
+    already exists."""
+    import subprocess
+    import sys
+
+    from shaclex_spark.transcripts import synth_transcripts
+
+    transcripts, _ = synth_transcripts(spark, 8, 1)
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    transcripts.write.parquet(src)
+    root = os.path.dirname(os.path.abspath(job.__file__))
+    code = ("import sys, job\n"
+            "from pyspark.sql import SparkSession\n"
+            "rc = job.main(sys.argv[1:])\n"
+            "s = SparkSession.getActiveSession()\n"
+            "print(s.sparkContext.master)\n"
+            "s.stop()\n"
+            "sys.exit(rc)\n")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        filter(None, [root, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, "-c", code, "--input", src, "--output", out,
+         "--master", "local[2]"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=900)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.strip().splitlines()
+    assert lines[-1] == "local[2]"
+    got = json.loads(lines[-2])
+    assert got["mode"] == "batch"
+    assert got["n_triples"] == spark.read.parquet(
+        os.path.join(out, "triples")).count() > 0
+    assert got["n_violations"] == spark.read.parquet(
+        os.path.join(out, "report")).count()

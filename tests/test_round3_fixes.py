@@ -15,7 +15,6 @@
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from shaclex_spark.validation import node_key_col
@@ -57,16 +56,18 @@ def test_node_key_lang_vs_dt_slot(spark):
 
 
 def test_extract_batch_tolerates_null_text():
-    from shaclex_spark.extraction import _extract_batch
+    import pyarrow as pa
 
-    pdf = pd.DataFrame({
+    from shaclex_spark.extraction import _extract_batch_arrow
+
+    batch = pa.RecordBatch.from_pydict({
         "conv_id": ["c1", "c2", "c3"],
-        "turn_idx": [0, 0, 1],
+        "turn_idx": pa.array([0, 0, 1], pa.int32()),
         "text": ["Alice knows Bob.", None, "Alice is 30 years old."],
     })
-    out = _extract_batch(pdf)
-    assert len(out) == 2
-    assert set(out["conv_id"]) == {"c1", "c3"}
+    out = pa.Table.from_batches(_extract_batch_arrow(batch))
+    assert out.num_rows == 2
+    assert set(out.column("conv_id").to_pylist()) == {"c1", "c3"}
 
 
 def test_cc_distributed_when_many_isolated_vertices(spark):
