@@ -35,7 +35,9 @@ def semi_naive(seed: DataFrame, step: Callable[[DataFrame], DataFrame],
                key: list[str], max_rounds: int) -> DataFrame:
     """Least fixpoint of ``acc = seed ∪ step(acc)``, computed
     semi-naively: ``step`` sees only the rows the previous round added
-    (the frontier) and returns rows with the seed's columns.
+    (the frontier) and returns rows with the seed's columns. That is
+    exact because every caller's step works row by row (joins and
+    filters), so it distributes over union.
 
     Rows are identified by ``key`` (null-safe: a null key field matches
     a null). Each round deduplicates ``step(frontier)`` on it,

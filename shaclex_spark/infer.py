@@ -169,18 +169,16 @@ def infer_schema(triples: DataFrame, focus_nodes: DataFrame,
     """
     out = infer_shape(triples, focus_nodes, label, scope=scope)
     if follow_on:
-        # parent constraints become refs to the sub-shapes
-        ref_expr = F.col("constraint")
-        for rx, sub_label in follow_on:
-            ref_expr = F.when(F.col("pred").rlike(rx),
-                              F.lit("@" + sub_label)).otherwise(ref_expr)
-        out = out.withColumn("constraint", ref_expr)
-        # the rule an arc follows: the first follow_on entry whose
-        # regex matches its predicate
+        # the rule a predicate follows: the first follow_on entry whose
+        # regex matches it
         rule = F.lit(None).cast("int")
         for i in reversed(range(len(follow_on))):
             rule = F.when(F.col("pred").rlike(follow_on[i][0]),
                           F.lit(i)).otherwise(rule)
+        # parent constraints become refs to the sub-shapes
+        refs = F.array(*[F.lit("@" + sub) for _, sub in follow_on])
+        out = out.withColumn("constraint", F.coalesce(
+            F.element_at(refs, rule + 1), F.col("constraint")))
 
         def step(frontier: DataFrame) -> DataFrame:
             below = frontier.filter(F.col("hop") < max_follow_on)

@@ -125,7 +125,7 @@ def path_pairs(triples: DataFrame, path: Path, srcs: DataFrame | None = None,
     if path.kind == "sequence":
         cur = path_pairs(triples, path.steps[0], srcs)
         for step in path.steps[1:]:
-            cur = _then(triples, cur, step)
+            cur = _extend(triples, cur, step)
         return cur.distinct() if dedup else cur
     if path.kind == "alternative":
         parts = [path_pairs(triples, s, srcs) for s in path.steps]
@@ -146,7 +146,7 @@ def path_pairs(triples: DataFrame, path: Path, srcs: DataFrame | None = None,
     raise ValueError(f"unknown path kind {path.kind}")
 
 
-def _then(triples: DataFrame, cur: DataFrame, step: Path) -> DataFrame:
+def _extend(triples: DataFrame, cur: DataFrame, step: Path) -> DataFrame:
     """Extend the pairs ``cur`` by one ``step``: (src, mid) ⋈ step(mid, v).
     Only iri/bnode intermediate nodes can take another step."""
     cur_mid = (cur.filter(F.col("v_kind") != "literal")
@@ -170,13 +170,13 @@ def _closure_pairs(triples: DataFrame, step: Path, srcs: DataFrame,
                    include_zero: bool) -> DataFrame:
     """Transitive closure of ``step`` from ``srcs``: the one-step pairs
     are the seed of ``fixpoint.semi_naive``, and each round extends
-    only the pairs the last round found by one more step (``_then``),
+    only the pairs the last round found by one more step (``_extend``),
     keyed on the whole pair. The v_dt / v_lang of a non-literal value
     are null, so the key must match null-safely or the same pair would
     come back every round. A closure deeper than MAX_CLOSURE_ROUNDS
     raises ``fixpoint.FixpointError``."""
     acc = semi_naive(path_pairs(triples, step, srcs),
-                     lambda frontier: _then(triples, frontier, step),
+                     lambda frontier: _extend(triples, frontier, step),
                      PAIR_COLS, MAX_CLOSURE_ROUNDS)
     if include_zero:
         acc = identity_pairs(srcs).unionByName(acc).distinct()

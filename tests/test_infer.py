@@ -84,3 +84,53 @@ def test_infer_label_decoration(spark, scope):
     ann = [c for c in js["constraints"] if c["path"] == EX + "name"][0]
     assert ann["annotations"] == [
         {"predicate": RDFS_LABEL, "object": "name"}]
+
+
+def _profiles(rows_out) -> set[tuple]:
+    return {(r.shape, r.pred.rsplit("/", 1)[-1], r.n_nodes)
+            for r in rows_out}
+
+
+def test_infer_follow_on_two_rules_two_hops(spark, scope):
+    """Each (hop, rule) is profiled once. x is reached by both rules in
+    hop 1 and goes to the earlier one; s2 is two hops out, so
+    max_follow_on=1 leaves it unprofiled."""
+    rows = [
+        (EX + "a", EX + "derivedFrom", "iri", EX + "s1", None, None),
+        (EX + "a", EX + "derivedFrom", "iri", EX + "x", None, None),
+        (EX + "a", EX + "citedBy", "iri", EX + "c1", None, None),
+        (EX + "a", EX + "citedBy", "iri", EX + "x", None, None),
+        (EX + "s1", EX + "derivedFrom", "iri", EX + "s2", None, None),
+        (EX + "x", EX + "tag", "literal", "t", XSD_STR, None),
+        (EX + "s2", EX + "url", "literal", "u", XSD_STR, None),
+        (EX + "c1", EX + "url", "literal", "v", XSD_STR, None),
+    ]
+    t = triples_df(spark, rows)
+    focus = spark.createDataFrame([(EX + "a",)], "node string")
+    rules = [("derivedFrom$", "SourceShape"), ("citedBy$", "CiteShape")]
+    hop1 = {("Doc", "derivedFrom", 1), ("Doc", "citedBy", 1),
+            ("SourceShape", "derivedFrom", 1), ("SourceShape", "tag", 1),
+            ("CiteShape", "url", 1)}
+    got = _profiles(infer_schema(t, focus, "Doc", follow_on=rules,
+                                 scope=scope).collect())
+    assert got == hop1
+    got = _profiles(infer_schema(t, focus, "Doc", follow_on=rules,
+                                 max_follow_on=2, scope=scope).collect())
+    assert got == hop1 | {("SourceShape", "url", 1)}
+
+
+def test_infer_follow_on_ref_names_the_profiling_rule(spark, scope):
+    """Two rules match derivedFrom: the parent's ref and the profile of
+    its objects both follow the earlier one."""
+    rows = [
+        (EX + "a", EX + "derivedFrom", "iri", EX + "s1", None, None),
+        (EX + "s1", EX + "url", "literal", "u", XSD_STR, None),
+    ]
+    t = triples_df(spark, rows)
+    focus = spark.createDataFrame([(EX + "a",)], "node string")
+    prof = infer_schema(t, focus, "Doc",
+                        follow_on=[("derivedFrom$", "SourceShape"),
+                                   ("From$", "FromShape")],
+                        scope=scope).collect()
+    assert {(r.shape, r.constraint) for r in prof} == {
+        ("Doc", "@SourceShape"), ("SourceShape", XSD_STR)}
