@@ -268,16 +268,13 @@ def load_data_rows(path: str) -> list[tuple]:
 # ------------------------------------------------------------------- runner
 
 
-def _build_group(spark, gid: int, schema_path: str, data_path: str,
+def _build_group(spark, schema_path: str, data_path: str,
                  group: list[Entry]):
     """Build the (lazy) conformance plan for one (schema, data) group.
 
     Returns (pre_outcomes, conf_df | None, runnable, resolved) where
     resolved maps entry name → shape label actually validated, and conf_df has
-    columns (gid, node, shape, conforms). Nothing executes here for
-    acyclic schemas — execution is batched across groups so one Spark
-    action amortizes job-scheduling latency over dozens of groups."""
-    from pyspark.sql import functions as F
+    columns (node, shape, conforms, node_dt, node_lang)."""
 
     from .model import TRIPLES_SCHEMA
     from .validation import ValidationEngine
@@ -347,8 +344,7 @@ def _build_group(spark, gid: int, schema_path: str, data_path: str,
                                 skip=f"engine-error:{type(e).__name__}")
                         for e_ in runnable], None, [], {})
     conf = res.conformance.select(
-        F.lit(gid).alias("gid"), "node", "shape", "conforms",
-        "node_dt", "node_lang")
+        "node", "shape", "conforms", "node_dt", "node_lang")
     return outs, conf, runnable, resolved
 
 
@@ -370,10 +366,10 @@ _WORKER_SPARK_CONF = {
 }
 
 
-def _run_group_collect(spark, gid: int, schema_path: str, data_path: str,
+def _run_group_collect(spark, schema_path: str, data_path: str,
                        group: list[Entry]) -> list[Outcome]:
     outs, conf, runnable, resolved = _build_group(
-        spark, gid, schema_path, data_path, group)
+        spark, schema_path, data_path, group)
     if conf is None:
         return outs
     try:
@@ -419,14 +415,14 @@ def _worker_main(idx: int, in_path: str, out_path: str) -> None:
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     outs: list[Outcome] = []
-    for gid, s, d, group_dicts in items:
+    for s, d, group_dicts in items:
         group = [Entry(**g) for g in group_dicts]
         for e_ in group:
             e_.focus = tuple(e_.focus)
             if e_.assoc is not None:
                 e_.assoc = [tuple(a) for a in e_.assoc]
         try:
-            outs.extend(_run_group_collect(spark, gid, s, d, group))
+            outs.extend(_run_group_collect(spark, s, d, group))
         except Exception as e:  # never lose a group silently
             outs.extend(Outcome(e_.name, e_.expected, None,
                                 skip=f"worker-error:{type(e).__name__}")
@@ -460,8 +456,8 @@ def run_suite_mp(root: str = SUITE_ROOT, nproc: int = 8,
     groups: dict[tuple, list[Entry]] = {}
     for e in todo:
         groups.setdefault((e.schema, e.data), []).append(e)
-    items = [(gid, s, d, [asdict(e) for e in g])
-             for gid, ((s, d), g) in enumerate(groups.items())]
+    items = [(s, d, [asdict(e) for e in g])
+             for (s, d), g in groups.items()]
     nproc = max(1, min(nproc, len(items)))
     buckets: list[list] = [[] for _ in range(nproc)]
     for i, it in enumerate(items):       # round-robin balance
@@ -486,7 +482,7 @@ def run_suite_mp(root: str = SUITE_ROOT, nproc: int = 8,
         for p, outp, bucket in procs:
             rc = p.wait(timeout=1800)
             if rc != 0 or not os.path.exists(outp):
-                for _, _, _, group_dicts in bucket:
+                for _, _, group_dicts in bucket:
                     results.extend(
                         Outcome(g["name"], g["expected"], None,
                                 skip=f"worker-exit:{rc}")
