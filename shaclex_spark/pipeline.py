@@ -96,7 +96,12 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
     result = engine.validate(focus)
     if scope is None:
         return result
-    return ValidationResult(scope.persist(result.relation))
+    # AQE does not coalesce a cached plan's output partitions
+    # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
+    # off), so the persisted relation would keep shuffle.partitions
+    # per shape, and every read or write of it one task per partition
+    return ValidationResult(scope.persist(result.relation.coalesce(
+        spark.sparkContext.defaultParallelism)))
 
 
 def _arc_local_schema(shapes_json: list[dict] | None) -> str | bool:
@@ -369,13 +374,20 @@ def _build_into(spark: SparkSession, transcripts: DataFrame,
         old = (spark.read.parquet(tri_path)
                .filter(F.col("bucket").isin(rewrite))
                .select(*ARC_COLS).localCheckpoint(eager=True))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    canonical.withColumn("bucket", bucket_col()).write.mode("overwrite") \
-        .partitionBy("bucket").parquet(tri_path)
-    # validation + lineage run over the FULL on-disk table, so on
-    # resume clean buckets keep their rows instead of being clobbered
-    # by rewrite-only output
-    triples = spark.read.parquet(tri_path)
+    fresh = canonical.withColumn("bucket", bucket_col())
+    # one file per bucket: rebalance sends each bucket to one task (AQE
+    # merges small ones and splits a skewed one), where a plain write
+    # lands one file per extraction task in every bucket. A resume
+    # replaces only the rewritten buckets; a full build the table.
+    (fresh.hint("rebalance", "bucket").write.mode("overwrite")
+     .option("partitionOverwriteMode",
+             "static" if rewrite is None else "dynamic")
+     .partitionBy("bucket").parquet(tri_path))
+    table = spark.read.parquet(tri_path)
+    # validation + lineage run over the rows this run holds, plus, on
+    # resume, the clean buckets' rows on disk: the table as written
+    triples = fresh if rewrite is None else fresh.unionByName(
+        table.filter(~F.col("bucket").isin(rewrite)))
     dirty_arcs = None if old is None \
         else old.unionByName(canonical.select(*ARC_COLS))
     conformance, report, n_affected = revalidate(
@@ -393,18 +405,19 @@ def _build_into(spark: SparkSession, transcripts: DataFrame,
         dimension = dimension.unionByName(
             kept.filter(~F.col("bucket").isin(rewrite)))
     dimension.write.mode("overwrite").parquet(path("mentions"))
-    lineage = lineage_metrics(triples)
-    lineage.write.mode("overwrite").parquet(path("lineage"))
+    lineage_metrics(triples).write.mode("overwrite").parquet(path("lineage"))
     # input lineage manifest LAST: written only after the data lands,
     # so a crashed run re-processes its buckets
     input_lineage(transcripts).write.mode("overwrite") \
         .parquet(path("input_lineage"))
+    # whole-table reads: ``triples`` reads the extraction this run
+    # persisted, which its scope releases on return
     return {
-        "triples": triples,
+        "triples": table,
         "mapping": mapping,
         "conformance": spark.read.parquet(path("conformance")),
         "report": spark.read.parquet(path("report")),
-        "lineage": lineage,
+        "lineage": spark.read.parquet(path("lineage")),
         "n_buckets_skipped": 0 if rewrite is None
         else N_BUCKETS - len(rewrite),
         "n_affected_nodes": n_affected,

@@ -682,13 +682,13 @@ def trx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.concat(F.col("c_name"), F.lit(" placed order "),
                         F.col("o_orderkey"), F.lit(".")).alias("text"),
            ))
-    # pin the extractor's width (guide §2.5): the window exchange is a
-    # few MB, so AQE's byte-based coalescing handed the CPU-dense RE2
-    # stage ~6 of 32 cores (measured 5 core-s over 6 tasks ≈ 0.8 s
-    # wall); explicit repartition is exempt from coalescing and moves
-    # only the short transcript rows
-    trx = trx.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")))
+    # pin the extractor's width to the cores (guide §2.5): the window
+    # exchange is a few MB, so AQE's byte-based coalescing handed the
+    # CPU-dense extraction stage ~6 of 32 cores on a 32-core host;
+    # explicit repartition is exempt from coalescing and moves only the
+    # short transcript rows. One task per core, not per shuffle
+    # partition: each Python task costs ~0.15 s whatever its rows
+    trx = trx.repartition(spark.sparkContext.defaultParallelism)
     out = extract_triples(trx)
     return out.select("subj", "pred", "obj_value", "conv_id", "turn_idx")
 

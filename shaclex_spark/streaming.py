@@ -94,11 +94,12 @@ def _process_batch(spark: SparkSession, output_dir: str):
                .withColumn("bucket", bucket_col())
                .withColumn("batch_id", F.lit(batch_id)))
         # idempotent replay: dynamic overwrite scoped to THIS batch's
-        # partitions — a replayed batch rewrites only itself
+        # partitions — a replayed batch rewrites only itself; one file
+        # per partition, as in the batch pipeline's triples write
         spark.conf.set("spark.sql.sources.partitionOverwriteMode",
                        "dynamic")
-        out.write.mode("overwrite").partitionBy("batch_id", "bucket") \
-            .parquet(raw_path)
+        out.hint("rebalance", "batch_id", "bucket").write.mode("overwrite") \
+            .partitionBy("batch_id", "bucket").parquet(raw_path)
         # mention dimension delta, same idempotent layout (read side
         # distincts across batches; at scale a left_anti against the
         # accumulated dimension would shrink re-landed duplicates, but

@@ -102,3 +102,17 @@ def test_validate_kg_targets(spark):
     rate = conf.filter("shape = 'PersonShape' and conforms").count() / \
         max(conf.filter("shape = 'PersonShape'").count(), 1)
     assert rate > 0.9
+
+
+def test_validated_relation_is_sized_to_the_cores(spark, scope):
+    """validate_kg persists its relation at the session's parallelism:
+    a cached plan keeps its shuffle partitions (AQE does not coalesce
+    it), one per shape and shuffle partition."""
+    from shaclex_spark.pipeline import build_kg
+
+    transcripts, _ = synth_transcripts(spark, 60, 1)
+    triples, _ = build_kg(spark, transcripts, scope=scope)
+    res = validate_kg(spark, triples, scope=scope)
+    assert res.relation.rdd.getNumPartitions() \
+        <= spark.sparkContext.defaultParallelism
+    assert res.conformance.count() > 0

@@ -3,6 +3,7 @@ buckets reprocess (north_rule idempotent restart)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -19,6 +20,9 @@ def test_resume_skips_clean_buckets(spark):
         n_triples_first = spark.read.parquet(f"{out_dir}/triples").count()
         assert n_triples_first > 0
         assert first["n_buckets_skipped"] == 0
+        # read before the resumes below overwrite the lineage table
+        first_buckets = {r.bucket for r in
+                         first["lineage"].select("bucket").collect()}
 
         # identical input → all buckets clean, nothing reprocessed
         second = run_pipeline(spark, transcripts, output_dir=out_dir,
@@ -43,8 +47,6 @@ def test_resume_skips_clean_buckets(spark):
         buckets = {r.bucket for r in
                    spark.read.parquet(f"{out_dir}/triples")
                    .select("bucket").distinct().collect()}
-        first_buckets = {r.bucket for r in
-                         first["lineage"].select("bucket").collect()}
         assert buckets == first_buckets
         # one bucket definition: lineage and triples agree on its type
         assert spark.read.parquet(f"{out_dir}/lineage").schema["bucket"] \
@@ -334,6 +336,42 @@ def test_resume_without_mention_dimension_rebuilds(spark):
         # incremental
         again = run_pipeline(spark, edited, output_dir=out_dir, resume=True)
         assert again["n_buckets_skipped"] == 64
+
+
+def _data_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_build_writes_one_file_per_bucket(spark):
+    """Each triples bucket lands as one file; conformance and report,
+    written from the validated relation, as at most one file per core."""
+    transcripts, _ = synth_transcripts(spark, 60, 1)
+    with tempfile.TemporaryDirectory() as out_dir:
+        run_pipeline(spark, transcripts, output_dir=out_dir)
+        tri = os.path.join(out_dir, "triples")
+        buckets = [d for d in os.listdir(tri) if d.startswith("bucket=")]
+        assert buckets
+        assert {d: len(_data_files(os.path.join(tri, d)))
+                for d in buckets} == {d: 1 for d in buckets}
+        for table in ("conformance", "report"):
+            assert 1 <= len(_data_files(os.path.join(out_dir, table))) \
+                <= spark.sparkContext.defaultParallelism, table
+
+
+def test_returned_lineage_is_the_written_table(spark):
+    """run_pipeline returns the lineage manifest it wrote, read back
+    whole, not a plan over the extraction its scope has released."""
+    transcripts, _ = synth_transcripts(spark, 60, 1)
+    with tempfile.TemporaryDirectory() as out_dir:
+        out = run_pipeline(spark, transcripts, output_dir=out_dir)
+        lin_path = os.path.join(out_dir, "lineage")
+        written = spark.read.parquet(lin_path)
+        cols = sorted(written.columns)
+        assert sorted(out["lineage"].columns) == cols
+        assert _rows(out["lineage"], cols) == _rows(written, cols)
+        assert out["lineage"].count() > 0
+        files = out["lineage"].inputFiles()
+        assert files and all("/lineage/" in f for f in files), files
 
 
 def test_run_pipeline_releases_its_persists(spark):

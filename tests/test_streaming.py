@@ -57,6 +57,7 @@ def test_streaming_resume_processes_only_new_files(spark, dirs):
 
     # new files → exactly the delta processed, prior batches untouched
     _land(spark, 10, 2, in_dir)
+    _land(spark, 10, 3, in_dir)
     out3 = run_streaming_pipeline(spark, in_dir, out_dir)
     batches3 = {r.batch_id for r in out3["lineage"].collect()}
     assert batches1 < batches3
@@ -65,6 +66,14 @@ def test_streaming_resume_processes_only_new_files(spark, dirs):
     old_rows = out3["triples"].filter(
         out3["triples"].batch_id.isin(list(batches1))).count()
     assert old_rows == n1
+    # one file per (batch_id, bucket), though the last batch read two
+    raw = os.path.join(out_dir, "triples_raw")
+    n_files = {(b, k): len([f for f in os.listdir(os.path.join(raw, b, k))
+                            if f.endswith(".parquet")])
+               for b in os.listdir(raw) if b.startswith("batch_id=")
+               for k in os.listdir(os.path.join(raw, b))
+               if k.startswith("bucket=")}
+    assert n_files and set(n_files.values()) == {1}, n_files
 
 
 def test_streaming_output_validates_like_batch(spark, dirs):
