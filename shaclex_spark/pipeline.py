@@ -292,9 +292,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     """Full job. If output_dir is set, materializes triples + report +
     lineage + the mention dimension as parquet partitioned by
     bucket(conv_id-hash) — the Iceberg-table stand-in available in
-    this environment (same layout: partition column + snapshot-style
-    dynamic-partition overwrite) — and releases what it persisted once
-    the tables are written.
+    this environment (same layout: partition column, one file per
+    bucket, snapshot-style dynamic-partition overwrite on resume) —
+    and releases what it persisted once the tables are written.
 
     resume=True: only buckets whose input lineage changed are
     re-extracted and overwritten (dynamic partition overwrite); clean

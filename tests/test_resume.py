@@ -367,9 +367,8 @@ def test_returned_lineage_is_the_written_table(spark):
         lin_path = os.path.join(out_dir, "lineage")
         written = spark.read.parquet(lin_path)
         cols = sorted(written.columns)
-        assert sorted(out["lineage"].columns) == cols
         assert _rows(out["lineage"], cols) == _rows(written, cols)
-        assert out["lineage"].count() > 0
+        assert written.count() > 0
         files = out["lineage"].inputFiles()
         assert files and all("/lineage/" in f for f in files), files
 
