@@ -21,13 +21,10 @@ def shacl_shacl_violations(spark=None) -> int:
     """Run the meta-validation; returns the violation count (0 =
     conforms, matching the fixture's expected report)."""
     if spark is None:
-        from pyspark.sql import SparkSession
-        spark = (SparkSession.builder.master("local[8]")
-                 .appName("shacl_shacl_meta")
-                 .config("spark.sql.shuffle.partitions", "2")
-                 .config("spark.sql.codegen.wholeStage", "false")
-                 .config("spark.ui.enabled", "false")
-                 .getOrCreate())
+        from .session import get_spark
+        spark = get_spark("shacl_shacl_meta", parallelism=8,
+                          shuffle_partitions=2,
+                          extra_conf={"spark.sql.codegen.wholeStage": "false"})
         spark.sparkContext.setLogLevel("ERROR")
     from .model import TRIPLES_SCHEMA
     from .shacl_reader import ShaclReader

@@ -476,7 +476,7 @@ SELECT * FROM (VALUES
 def shex_suite_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shex_suite import run_suite_mp, scorecard
 
-    sc = scorecard(run_suite_mp(nproc=10))
+    sc = scorecard(run_suite_mp())
     rows = [(k, sc[k]) for k in ("correct", "wrong", "error", "skipped")]
     return spark.createDataFrame(rows, "status string, n long")
 

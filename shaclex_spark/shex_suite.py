@@ -352,17 +352,19 @@ def _build_group(spark, schema_path: str, data_path: str,
 #
 # PySpark driver work serializes on the py4j gateway: threads give ~1.0x
 # (measured), so the only way to parallelize ~900 micro-validations is
-# separate driver PROCESSES, each with its own lean JVM. 8 workers ×
-# local[3] fits the 32-core box; per-group cost ≈0.9 s with whole-stage
-# codegen off (Janino compilation dominates micro-plan latency).
+# separate driver PROCESSES, each with its own lean JVM of WORKER_CORES
+# cores, as many as the host's cores hold; per-group cost ≈0.9 s with
+# whole-stage codegen off (Janino compilation dominates micro-plan
+# latency). A worker's heap is Spark's 1 GB default, not the half of
+# the host that get_spark gives one session.
 
+WORKER_CORES = 3
 _WORKER_SPARK_CONF = {
     "spark.sql.shuffle.partitions": "1",
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.adaptive.enabled": "false",
     "spark.default.parallelism": "2",
-    "spark.ui.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
+    "spark.driver.memory": "1g",
 }
 
 
@@ -404,15 +406,12 @@ def _run_group_collect(spark, schema_path: str, data_path: str,
 def _worker_main(idx: int, in_path: str, out_path: str) -> None:
     """Subprocess entry: run a chunk of groups on a private lean
     SparkSession, write outcomes as JSON."""
-    from pyspark.sql import SparkSession
+    from .session import get_spark
 
     with open(in_path, encoding="utf-8") as fh:
         items = json.load(fh)
-    b = (SparkSession.builder.master("local[3]")
-         .appName(f"shex_suite_w{idx}"))
-    for k, v in _WORKER_SPARK_CONF.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    spark = get_spark(f"shex_suite_w{idx}", parallelism=WORKER_CORES,
+                      extra_conf=_WORKER_SPARK_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     outs: list[Outcome] = []
     for s, d, group_dicts in items:
@@ -432,10 +431,12 @@ def _worker_main(idx: int, in_path: str, out_path: str) -> None:
     spark.stop()
 
 
-def run_suite_mp(root: str = SUITE_ROOT, nproc: int = 8,
+def run_suite_mp(root: str = SUITE_ROOT, nproc: int | None = None,
                  names: set[str] | None = None) -> list[Outcome]:
     """Full-suite runner on a pool of plain subprocesses (one lean
     SparkSession per worker, `python -m shaclex_spark.shex_suite`).
+    ``nproc`` defaults to as many workers of WORKER_CORES cores as
+    session.default_parallelism() holds.
 
     Plain subprocess, not multiprocessing: PySpark driver work
     serializes on the py4j gateway so threads don't scale, and
@@ -458,6 +459,9 @@ def run_suite_mp(root: str = SUITE_ROOT, nproc: int = 8,
         groups.setdefault((e.schema, e.data), []).append(e)
     items = [(s, d, [asdict(e) for e in g])
              for (s, d), g in groups.items()]
+    if nproc is None:
+        from .session import default_parallelism
+        nproc = default_parallelism() // WORKER_CORES
     nproc = max(1, min(nproc, len(items)))
     buckets: list[list] = [[] for _ in range(nproc)]
     for i, it in enumerate(items):       # round-robin balance

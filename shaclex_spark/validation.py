@@ -23,9 +23,9 @@ filter(is-focus), with the node constraints computed on the grouped
 row; a marker row alone makes a zero-arc node count 0
 (SLang2Clingo.scala:164-168 makes the 0-case explicit, and its
 countPropShape counts per (node, path, shape) whatever the path kind).
-Only sibling-path constraints (equals, lessThan) group their violating
-pairs by source in a pass of their own, left-joined onto the grouped
-row by the focus term.
+Pairwise constraints (equals, disjoint, lessThan) collect the value
+terms of their path and of its sibling predicate in the same groupBy
+and compare the two on the grouped row.
 
 Recursion: stratified SCC order; cyclic strata run a greatest-fixpoint
 loop starting from all-conforming — the co-inductive Unknown-counts-
@@ -53,7 +53,7 @@ from .model import (
     XSD_STRING,
 )
 from .fixpoint import FixpointError, cut, semi_naive
-from .paths import VAL_COLS, node_kind, path_pairs, pred_pairs
+from .paths import VAL_COLS, node_kind, path_pairs
 from .scope import Scope
 from .shapes import (NodeExpr, Path, PropertyConstraint, SchemaDict, Shape,
                      ValueSpec)
@@ -411,7 +411,7 @@ def _violation(component: str, severity: str, value: Column, path: Column,
                     F.lit(message)).cast(VIOLATION)
 
 
-def _violations(fails: list[Column] = (), lists: list[Column] = ()) -> Column:
+def _violations(fails: list[Column], lists: list[Column]) -> Column:
     """A never-null violations array: the non-null ``fails`` (per-focus
     when(fail, _violation) columns) followed by the ``lists`` (arrays
     of per-value violations collected in an aggregate)."""
@@ -451,6 +451,12 @@ def _path_tokens(shape: Shape) -> dict[Path, str]:
     paths = dict.fromkeys(pc.path for _, pc in shape.triple_constraints()
                           if not pc.path.is_simple_pred)
     return {path: f"<path {i}>" for i, path in enumerate(paths)}
+
+
+def _sibling(pc: PropertyConstraint) -> str | None:
+    """The sibling predicate a pairwise constraint compares pc's path
+    with, or None."""
+    return pc.equals or pc.disjoint or pc.less_than or pc.less_than_or_equals
 
 
 def _dedup_free(pc: PropertyConstraint) -> bool:
@@ -619,11 +625,9 @@ class ValidationEngine:
         return len(self.schema.shapes) >= 8 or n_constraints >= 24
 
     def _maybe_flatten(self, df: DataFrame) -> DataFrame:
-        """Cut logical-plan depth (lazy localCheckpoint: flattens the
-        plan to a LogicalRDD immediately, computes on first action)."""
-        if self._big_schema:
-            return df.localCheckpoint(eager=False)
-        return df
+        """Cut logical-plan depth (fixpoint.cut: flattens the plan to a
+        LogicalRDD immediately, computes on first action)."""
+        return cut(df) if self._big_schema else df
 
     def _is_transparent_ref(self, cj: NodeExpr) -> bool:
         """Refs to transparent shapes (hoisted nested sh:property) do
@@ -752,37 +756,6 @@ class ValidationEngine:
             ref_cols=ref_cols, cls_cols=cls_cols,
         )
 
-    def _evaluate_shape(self, shape: Shape, rows: FocusRows,
-                        conf: dict[str, DataFrame]) -> DataFrame:
-        """The shape relation (KEY, *FCOLS, conforms, violations), one
-        row per focus term. One grouped pass (_eval_grouped) checks every
-        triple constraint, whatever its path, and the node constraints
-        on its grouped row. Pairwise constraints, which compare the
-        values of two paths, are left-joined onto that row by the focus
-        term."""
-        if shape.deactivated:  # checks nothing: every focus term conforms
-            shape = Shape(shape.label)
-        out = self._eval_grouped(shape, rows, conf)
-        ok = F.col("conforms")
-        lists = [F.col("violations")]
-
-        # pairwise sibling constraints, by source node: literals are
-        # never subjects, so a literal focus term never meets the
-        # violations of an IRI with the same spelling
-        for i, pc in enumerate(pc for pc in shape.properties
-                               if pc.equals or pc.disjoint or pc.less_than
-                               or pc.less_than_or_equals):
-            src, viol = f"__pw_src_{i}", f"__pw_v_{i}"
-            bad = self._eval_pairwise(shape, rows, pc).select(
-                F.col("src").alias(src), F.col("violations").alias(viol))
-            out = out.join(bad, on=(F.col("f_kind") != "literal")
-                           & (F.col("f_value") == F.col(src)), how="left")
-            ok = ok & F.col(viol).isNull()
-            lists.append(F.coalesce(F.col(viol), _violations()))
-        return out.select(KEY, *FCOLS, ok.alias("conforms"),
-                          lists[0] if len(lists) == 1
-                          else F.concat(*lists).alias("violations"))
-
     # -- focus row sources --------------------------------------------------
 
     def _marker_rows(self, targets: list) -> DataFrame:
@@ -840,10 +813,17 @@ class ValidationEngine:
         (_path_tokens). They are deduplicated unless every constraint on
         the path reads them multiplicity-insensitively (minCount ≤ 1, no
         maxCount, no uniqueLang: the counts only test exists / none),
-        which saves an exchange of the pair relation (r6, guide §2.4)."""
+        which saves an exchange of the pair relation (r6, guide §2.4).
+
+        A pairwise constraint adds its sibling predicate's arcs to the
+        scan; its own path is scanned like any other. A deactivated
+        shape checks nothing: every focus term conforms."""
+        if shape.deactivated:
+            shape = Shape(shape.label)
         tokens = _path_tokens(shape)
         preds = {pc.path.iri for _, pc in shape.triple_constraints()
                  if pc.path.is_simple_pred}
+        preds.update(_sibling(pc) for pc in shape.properties if _sibling(pc))
         if shape.repeat_alts:
             preds.update(shape.repeat_alts.mentioned)
         null_s = F.lit(None).cast("string")
@@ -907,9 +887,9 @@ class ValidationEngine:
         """(KEY, *FCOLS, conforms, violations) of the focus terms of an
         arc relation that carries f_* focus-term columns, pred/obj_* arc
         columns and the __tgt marker flag (built by _eval_grouped): ONE
-        groupBy(term) with conditional aggregates for the property
-        constraints, the CLOSED residue, the OneOf groups, the group
-        blocks and the repeat partition; the node constraints are then
+        groupBy(term) with conditional aggregates for the property and
+        pairwise constraints, the CLOSED residue, the OneOf groups, the
+        group blocks and the repeat partition; the node constraints are then
         columns of the grouped row. Per-value violations are collected
         in the same aggregate; per-focus ones read the grouped counts."""
         values = [pc.node for _, pc in shape.triple_constraints()]
@@ -921,6 +901,9 @@ class ValidationEngine:
         lists: list[Column] = []
         oks, fails = self._property_checks(shape, shape.properties, tc, "",
                                            aggs, lists, tokens)
+        for i, pc in enumerate(pc for pc in shape.properties if _sibling(pc)):
+            lists.append(self._pairwise_check(shape, pc, i, aggs, tokens))
+            oks.append(F.size(lists[-1]) == 0)
         ok = F.lit(True)
         if shape.closed:
             # allowed = declared property paths + sh:ignoredProperties / EXTRA
@@ -1232,51 +1215,54 @@ class ValidationEngine:
 
     # -- pairwise sibling-path constraints ------------------------------------
 
-    def _eval_pairwise(self, shape: Shape, rows: FocusRows,
-                       pc: PropertyConstraint) -> DataFrame:
-        """equals / disjoint / lessThan(-OrEquals) against a sibling
-        predicate: per-focus set joins (SURVEY.md §2.5 rows). Each
-        violating (src, value) row is one violation, collected per
-        source node: (src, violations), a row per violating src."""
-        srcs = self._markers(rows).filter(F.col("f_kind") != "literal") \
-            .select(F.col("f_value").alias("n"))
-        a = path_pairs(self.triples, pc.path, srcs).withColumn(
-            "akey", node_key_col(F.col("v_kind"), F.col("v_value"),
-                                 F.col("v_dt"), F.col("v_lang")))
-        sibling = pc.equals or pc.disjoint or pc.less_than or pc.less_than_or_equals
-        b = pred_pairs(self.triples, sibling, srcs).withColumn(
-            "bkey", node_key_col(F.col("v_kind"), F.col("v_value"),
-                                 F.col("v_dt"), F.col("v_lang")))
-        if pc.equals:
-            comp_name = "EqualsConstraintComponent"
-            lhs = a.select(F.col("src"), F.col("akey").alias("k"),
-                           F.col("v_value").alias("av"))
-            rhs = b.select(F.col("src"), F.col("bkey").alias("k"),
-                           F.col("v_value").alias("bv"))
-            full = lhs.join(rhs, on=["src", "k"], how="full_outer")
-            viol = full.filter(F.col("av").isNull() | F.col("bv").isNull())
-            viol_vals = viol.select(
-                "src", F.coalesce(F.col("av"), F.col("bv")).alias("value"))
-        elif pc.disjoint:
-            comp_name = "DisjointConstraintComponent"
-            viol_vals = a.select("src", F.col("akey").alias("k"),
-                                 F.col("v_value").alias("value")) \
-                .join(b.select("src", F.col("bkey").alias("k")), on=["src", "k"]) \
-                .select("src", "value")
-        else:
-            comp_name = ("LessThanConstraintComponent" if pc.less_than
-                         else "LessThanOrEqualsConstraintComponent")
-            theta = a.alias("A").join(b.alias("B"), on="src")
-            avc = _numeric_value(F.col("A.v_value"), F.col("A.v_dt"))
-            bvc = _numeric_value(F.col("B.v_value"), F.col("B.v_dt"))
-            good = (avc < bvc) if pc.less_than else (avc <= bvc)
-            viol_vals = theta.filter(
-                ~F.coalesce(good, F.lit(False))
-            ).select("src", F.col("A.v_value").alias("value"))
-        return viol_vals.groupBy("src").agg(F.collect_list(_violation(
-            comp_name, pc.severity, F.col("value"),
-            F.lit(pc.path.describe()), pc.message or shape.message))
-            .alias("violations"))
+    def _pairwise_check(self, shape: Shape, pc: PropertyConstraint, i: int,
+                        aggs: list[Column], tokens: dict[Path, str]) -> Column:
+        """The violations of the ``i``-th pairwise constraint ``pc``
+        (equals / disjoint / lessThan(OrEquals)) on the grouped row:
+        two aggregates appended to ``aggs`` collect the value terms
+        (key, value, datatype) of pc's path and of its sibling
+        predicate, and higher-order functions pair them up (SURVEY.md
+        §2.5 rows). As in _property_checks, a predicate's duplicate
+        arcs each report and a complex path's values report as a set.
+        The constraint holds iff the array is empty."""
+        def side(pred: str, name: str, collect) -> Column:
+            aggs.append(collect(F.when(F.col("pred") == pred, F.struct(
+                node_key_col(*[F.col(c) for c in OBJ_COLS]).alias("k"),
+                F.col("obj_value").alias("v"), F.col("obj_dt").alias("dt"))))
+                .alias(name))
+            return F.col(name)
+
+        a = side(tokens.get(pc.path, pc.path.iri), f"__pw_a_{i}",
+                 F.collect_list if pc.path.is_simple_pred else F.collect_set)
+        b = side(_sibling(pc), f"__pw_b_{i}", F.collect_list)
+        comp = ("EqualsConstraintComponent" if pc.equals
+                else "DisjointConstraintComponent" if pc.disjoint
+                else "LessThanConstraintComponent" if pc.less_than
+                else "LessThanOrEqualsConstraintComponent")
+
+        def violation(x: Column) -> Column:
+            return _violation(comp, pc.severity, x["v"],
+                              F.lit(pc.path.describe()),
+                              pc.message or shape.message)
+
+        def unmatched(xs: Column, ys: Column) -> Column:
+            return F.filter(xs, lambda x: ~F.exists(
+                ys, lambda y: y["k"] == x["k"]))
+
+        if pc.equals:  # each value whose term the other side lacks
+            return F.transform(F.concat(unmatched(a, b), unmatched(b, a)),
+                               violation)
+        if pc.disjoint:  # each value once per sibling value of its term
+            def clash(x: Column, y: Column) -> Column:
+                return y["k"] == x["k"]
+        else:  # each value once per sibling value it is not below
+            def clash(x: Column, y: Column) -> Column:
+                xv = _numeric_value(x["v"], x["dt"])
+                yv = _numeric_value(y["v"], y["dt"])
+                return ~F.coalesce(xv < yv if pc.less_than else xv <= yv,
+                                   F.lit(False))
+        return F.flatten(F.transform(a, lambda x: F.transform(
+            F.filter(b, lambda y: clash(x, y)), lambda _: violation(x))))
 
     # -- public entry ---------------------------------------------------------
 
@@ -1309,7 +1295,7 @@ class ValidationEngine:
         for _ in range(MAX_FIXPOINT_ROUNDS):
             changed = False
             for lbl in scc:
-                n = cut_count(lbl, self._evaluate_shape(
+                n = cut_count(lbl, self._eval_grouped(
                     self.schema.shapes[lbl], rows[lbl], conf))
                 if n != prev_counts[lbl]:
                     prev_counts[lbl] = n
@@ -1375,9 +1361,9 @@ class ValidationEngine:
                                    .drop("shape"))
                     for lbl in self.schema.shapes}
         else:
-            # candidate sets are reused by every constraint sub-plan of
-            # a shape (fused pass, complex paths, pairwise):
-            # persist lazily so each materializes at most once.
+            # candidate sets are reused by every sub-plan of a shape
+            # (the arc scan's semi-join, the marker rows, complex
+            # paths): persist lazily so each materializes at most once.
             rows = {lbl: FocusRows(cand=self._maybe_persist(c))
                     for lbl, c in self._propagate_candidates(_focus()).items()}
         conf: dict[str, DataFrame] = {}
@@ -1386,7 +1372,7 @@ class ValidationEngine:
         for scc in self.schema.strata():
             if not self.schema.is_recursive(scc):
                 lbl = scc[0]
-                c = self._evaluate_shape(self.schema.shapes[lbl], rows[lbl],
+                c = self._eval_grouped(self.schema.shapes[lbl], rows[lbl],
                                          conf)
                 if not ref_free:
                     c = self._maybe_flatten(c)

@@ -108,11 +108,11 @@ def test_target_driven_plans_stay_flat(spark):
 
 
 def test_folded_families_plan_like_simple_only(spark):
-    """A node constraint, a OneOf, a group block and a repeat partition
-    over simple predicates fold into the one grouped pass of a
-    target-driven shape: its conformance plan has the simple-only
-    plan's shape — one exchange, no join, no cached relation — and
-    validating persists nothing."""
+    """A node constraint, a OneOf, a group block, a repeat partition
+    and equals / disjoint / lessThan members over simple predicates
+    fold into the one grouped pass of a target-driven shape: its
+    conformance plan has the simple-only plan's shape — one exchange,
+    no join, no cached relation — and validating persists nothing."""
     from collections import Counter
 
     from shaclex_spark.model import XSD_INTEGER, XSD_STRING
@@ -126,13 +126,19 @@ def test_folded_families_plan_like_simple_only(spark):
         (ex + "a", ex + p, "literal", v, dt, None) for p, v, dt in (
             ("name", "A", XSD_STRING), ("email", "e", XSD_STRING),
             ("x", "1", XSD_STRING), ("y", "2", XSD_STRING),
-            ("tag", "1", XSD_INTEGER), ("tag", "t", XSD_STRING))]
+            ("tag", "1", XSD_INTEGER), ("tag", "t", XSD_STRING),
+            ("twin", "A", XSD_STRING), ("lo", "1", XSD_INTEGER),
+            ("hi", "2", XSD_INTEGER))]
         + [(ex + "b", ex + "name", "literal", "B", XSD_STRING, None)])
     simple = {"label": "S",
               "targets": [{"kind": "targetSubjectsOf", "value": ex + "name"}],
               "constraints": [{"path": ex + "name", "minCount": 1}]}
     folded = dict(
         simple,
+        constraints=simple["constraints"] + [
+            {"path": ex + "name", "equals": ex + "twin"},
+            {"path": ex + "name", "disjoint": ex + "email"},
+            {"path": ex + "lo", "lessThan": ex + "hi"}],
         nodeConstraints=[{"kind": "nodeKind", "value": "IRI"}],
         oneOf=[[{"path": ex + "email", "minCount": 1}],
                [{"path": ex + "phone", "minCount": 1}]],

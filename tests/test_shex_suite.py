@@ -68,7 +68,7 @@ def test_full_suite_zero_wrong():
     """The headline gate: run every attemptable entry through the
     engine (subprocess pool, own lean SparkSessions) and require a
     perfect verdict record."""
-    outs = run_suite_mp(nproc=10)
+    outs = run_suite_mp()
     sc = scorecard(outs)
     wrong = [o.name for o in outs if o.status == "wrong"]
     errors = [(o.name, o.skip) for o in outs if o.status == "error"]
@@ -88,7 +88,7 @@ def test_full_suite_shexc_native_identical(monkeypatch):
     produce the identical scorecard: two concrete syntaxes, one
     semantics (reference parity: ShExSchema.scala:29-41)."""
     monkeypatch.setenv("SHACLEX_SHEX_SOURCE", "shexc")
-    outs = run_suite_mp(nproc=10)
+    outs = run_suite_mp()
     sc = scorecard(outs)
     wrong = [o.name for o in outs if o.status == "wrong"]
     errors = [(o.name, o.skip) for o in outs if o.status == "error"]

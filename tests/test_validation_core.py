@@ -388,32 +388,126 @@ def test_qualified_disjoint_sibling_on_inverse_path(spark):
             (EX + "x", "QualifiedMinCountConstraintComponent")], sibling
 
 
-def test_equals_disjoint_lessthan(spark):
-    rows = [
-        # equals: ok node has same values on both preds
-        (EX + "e1", EX + "a", *lit("v")),
-        (EX + "e1", EX + "b", *lit("v")),
-        (EX + "e2", EX + "a", *lit("v")),
-        (EX + "e2", EX + "b", *lit("w")),
-        # lessThan
-        (EX + "l1", EX + "lo", *lit("1", XSD_INTEGER)),
-        (EX + "l1", EX + "hi", *lit("2", XSD_INTEGER)),
-        (EX + "l2", EX + "lo", *lit("5", XSD_INTEGER)),
-        (EX + "l2", EX + "hi", *lit("2", XSD_INTEGER)),
-    ]
+def pairwise_fixture():
+    """(rows, shapes) covering every pairwise component: equals both
+    ways, a language-tagged twin, node-level ``self``, disjoint,
+    lessThan against two sibling values, equal values, dateTime and a
+    non-numeric value, an inverse and a sequence path, a literal focus
+    term spelled like a failing IRI, a closed shape, duplicated arcs on
+    both sides, and a hub with 2,000 values and no sibling value."""
+    dt = "http://www.w3.org/2001/XMLSchema#dateTime"
+    iri = lambda n: ("iri", EX + n, None, None)  # noqa: E731
+    arcs = {
+        "e1": [("a", lit("v")), ("b", lit("v"))],
+        "e2": [("a", lit("v")), ("b", lit("w"))],
+        "e3": [("a", lit("v", lang="en")), ("b", lit("v"))],
+        "e4": [("a", lit("v")), ("a", lit("v")), ("b", lit("w")),
+               ("b", lit("w"))],
+        "e5": [("a", lit("v")), ("a", lit("v")), ("b", lit("v"))],
+        "n1": [("same", iri("n1"))],
+        "n2": [("same", iri("n1"))],
+        "d1": [("a", lit("x")), ("b", lit("y"))],
+        "d2": [("a", lit("x")), ("b", lit("x"))],
+        "d3": [("a", lit("x")), ("a", lit("x")), ("b", lit("x")),
+               ("b", lit("x"))],
+        "l1": [("lo", lit("1", XSD_INTEGER)), ("hi", lit("2", XSD_INTEGER))],
+        "l2": [("lo", lit("5", XSD_INTEGER)), ("hi", lit("2", XSD_INTEGER)),
+               ("hi", lit("7", XSD_INTEGER))],
+        "l3": [("lo", lit("3", XSD_INTEGER)), ("hi", lit("3", XSD_INTEGER))],
+        "l4": [("lo", lit("2020-01-01T00:00:00", dt)),
+               ("hi", lit("2021-01-01T00:00:00", dt))],
+        "l5": [("lo", lit("2021-01-01T00:00:00", dt)),
+               ("hi", lit("2020-01-01T00:00:00", dt))],
+        "l6": [("lo", lit("abc")), ("hi", lit("2", XSD_INTEGER))],
+        "s1": [("r", iri("t1")), ("r", iri("t2"))],
+        "s2": [("r", iri("t2"))],
+        "t1": [("q", iri("s1"))],
+        "t2": [("q", iri("s1"))],
+        "q1": [("p1", iri("m1")), ("hi", lit("2", XSD_INTEGER))],
+        "m1": [("p2", lit("1", XSD_INTEGER))],
+        "q2": [("p1", iri("m2")), ("hi", lit("2", XSD_INTEGER))],
+        "m2": [("p2", lit("9", XSD_INTEGER))],
+        "hub": [("a", lit(f"h{i}")) for i in range(2000)],
+    }
+    rows = [(EX + s, EX + p, *o) for s, pos in arcs.items() for p, o in pos]
+
+    def shape(label, nodes, path, key, sibling, **extra):
+        return {"label": label,
+                "targets": [{"kind": "targetNode", "value": EX + n}
+                            for n in nodes] + extra.pop("targets", []),
+                "constraints": [{"path": path, key: EX + sibling}], **extra}
+
+    literal_e2 = {"kind": "targetNode", "value": EX + "e2",
+                  "term_kind": "literal", "dt": XSD_STRING}
     shapes = [
-        {"label": "Eq",
-         "constraints": [{"path": EX + "a", "equals": EX + "b"}]},
-        {"label": "Lt",
-         "constraints": [{"path": EX + "lo", "lessThan": EX + "hi"}]},
+        shape("Eq", ["e1", "e2", "e3", "e4", "e5", "hub"], EX + "a",
+              "equals", "b", targets=[literal_e2]),
+        shape("EqSelf", ["n1", "n2"], {"kind": "self"}, "equals", "same"),
+        shape("Disj", ["d1", "d2", "d3"], EX + "a", "disjoint", "b"),
+        shape("Lt", ["l1", "l2", "l3", "l4", "l5", "l6"], EX + "lo",
+              "lessThan", "hi"),
+        shape("Lte", ["l1", "l2", "l3"], EX + "lo", "lessThanOrEquals", "hi"),
+        shape("InvEq", ["t1", "t2"], {"kind": "inverse", "iri": EX + "r"},
+              "equals", "q"),
+        shape("SeqLt", ["q1", "q2"],
+              {"kind": "sequence", "steps": [EX + "p1", EX + "p2"]},
+              "lessThan", "hi"),
+        shape("ClosedEq", ["e1", "e2"], EX + "a", "equals", "b", closed=True),
     ]
-    conf, _ = run(spark, rows, shapes,
-                  [(EX + "e1", "Eq"), (EX + "e2", "Eq"),
-                   (EX + "l1", "Lt"), (EX + "l2", "Lt")])
-    assert conf[(EX + "e1", "Eq")] is True
-    assert conf[(EX + "e2", "Eq")] is False
-    assert conf[(EX + "l1", "Lt")] is True
-    assert conf[(EX + "l2", "Lt")] is False
+    return rows, shapes
+
+
+def test_equals_disjoint_lessthan(spark):
+    """Conformance and the report multiset of every pairwise component
+    (pairwise_fixture), validated by the shapes' targets and by an
+    explicit focus relation. A predicate's duplicate arcs report once
+    per arc; the hub reports each of its 2,000 values without a
+    sibling. The expected rows were taken from the engine that
+    evaluated pairwise constraints as joins of their own, before they
+    became aggregates of the grouped pass."""
+    from collections import Counter
+
+    from shaclex_spark.triggers import target_focus
+
+    rows, shapes = pairwise_fixture()
+    t = triples_df(spark, rows)
+    schema = SchemaDict.from_json(shapes)
+    lt, lte = "LessThanConstraintComponent", \
+        "LessThanOrEqualsConstraintComponent"
+    eq, dj = "EqualsConstraintComponent", "DisjointConstraintComponent"
+    closed = "ClosedConstraintComponent"
+    expected = Counter(
+        [("e2", "Eq", eq, "v", "a"), ("e2", "Eq", eq, "w", "a"),
+         ("e3", "Eq", eq, "v", "a"), ("e3", "Eq", eq, "v", "a"),
+         ("e4", "Eq", eq, "v", "a"), ("e4", "Eq", eq, "v", "a"),
+         ("e4", "Eq", eq, "w", "a"), ("e4", "Eq", eq, "w", "a"),
+         ("n2", "EqSelf", eq, EX + "n2", "."),
+         ("n2", "EqSelf", eq, EX + "n1", "."),
+         ("d2", "Disj", dj, "x", "a")] + [("d3", "Disj", dj, "x", "a")] * 4
+        + [("l2", "Lt", lt, "5", "lo"), ("l3", "Lt", lt, "3", "lo"),
+           ("l5", "Lt", lt, "2021-01-01T00:00:00", "lo"),
+           ("l6", "Lt", lt, "abc", "lo"), ("l2", "Lte", lte, "5", "lo"),
+           ("t2", "InvEq", eq, EX + "s2", "^" + EX + "r"),
+           ("q2", "SeqLt", lt, "9", "p1/p2"),
+           ("e1", "ClosedEq", closed, "v", "b"),
+           ("e2", "ClosedEq", closed, "w", "b"),
+           ("e2", "ClosedEq", eq, "v", "a"), ("e2", "ClosedEq", eq, "w", "a")]
+        + [("hub", "Eq", eq, f"h{i}", "a") for i in range(2000)])
+    failing = {(n, s) for n, s, *_ in expected}
+    want_conf = Counter(
+        (tgt["value"], sh["label"],
+         tgt.get("term_kind") == "literal"
+         or (tgt["value"].removeprefix(EX), sh["label"]) not in failing)
+        for sh in shapes for tgt in sh["targets"])
+    for focus in (None, target_focus(spark, schema, t)):
+        res = ValidationEngine(spark, schema, t).validate(focus)
+        assert Counter((r.node, r.shape, r.conforms)
+                       for r in res.conformance.collect()) == want_conf
+        report = Counter(
+            (r.focus_node.removeprefix(EX), r.source_shape, r.component,
+             r.value, r.path.removeprefix(EX).replace("/" + EX, "/"))
+            for r in res.report.collect())
+        assert report == expected, focus
 
 
 def test_deactivated_shape(spark):
