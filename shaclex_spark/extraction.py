@@ -17,10 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .linking import MENTION_PREFIX
 from .model import (EX, FOAF_KNOWS, RDF_TYPE, TRIPLES_PROV_SCHEMA,
                     XSD_INTEGER, XSD_STRING)
-
-MENTION = EX + "mention/"
 
 # (pattern, pred, obj handling, literal keyword)
 # Patterns mirror the synthetic templates in transcripts.py; a real
@@ -89,7 +88,7 @@ def _extract_batch_arrow(batch):
         s, o = pc.struct_field(ext, "s"), pc.struct_field(ext, "o")
         n = len(vidx)
         subj = (cat(EX + "course/", s) if pred == EX + "hasSubject"
-                else cat(MENTION, slug_a(s)))
+                else cat(MENTION_PREFIX, slug_a(s)))
         null_arr = pa.nulls(n, pa.string())
         if objmode == "course":
             ok, ov, od = "iri", cat(EX + "course/", o), None
@@ -100,7 +99,7 @@ def _extract_batch_arrow(batch):
         elif objmode == "class":
             ok, ov, od = "iri", cat(EX + "class/", o), None
         elif objmode == "mention":
-            ok, ov, od = "iri", cat(MENTION, slug_a(o)), None
+            ok, ov, od = "iri", cat(MENTION_PREFIX, slug_a(o)), None
         elif objmode == "int":
             ok, ov, od = "literal", o, XSD_INTEGER
         else:  # plain string literal

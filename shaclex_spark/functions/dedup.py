@@ -1,10 +1,10 @@
 """Deduplication suite over the documents table.
 
 - exact:          hash-groupBy on full text (md5), canonical = min doc_id
-- ngram Jaccard:  word-shingle set similarity with LSH-banded minhash
+- ngram Jaccard:  word-shingle set similarity with prefix-filter
                   blocking + exact Jaccard verification
-- MinHash+LSH:    signature/band/bucket-join (shared with linking.py’s
-                  machinery, here over word shingles)
+- MinHash+LSH:    linking.lsh_pairs, the one signature/band/bucket-join
+                  blocker, here over word shingles
 - SimHash:        64-bit hyperplane-free sketch from token hashes
 - embedding:      cosine near-dup over the embeddings table
 
@@ -19,10 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..linking import lsh_pairs
 from ..scope import Scope
 from .text import tokens
-
-N_HASHES = 24
 
 
 def word_shingles(col: Column, k: int = 1) -> Column:
@@ -56,17 +55,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .select("doc_id", "content_hash", "canonical_id", "group_size"))
 
 
-def minhash_sig(shingles: Column, n_hashes: int = N_HASHES) -> Column:
-    """Inline minhash signature expression. NOTE: higher-order
-    functions are interpreted (no codegen / subexpression elimination)
-    — fine for small dims like mention strings; for document-scale
-    corpora use minhash_signatures() below (explode + groupBy)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
-
 def shingle_table(docs: DataFrame, id_col: str, text_col: str,
                   shingle_k: int) -> DataFrame:
     """(i, sh: array<string>) — the tokenization+shingling pass, split
@@ -96,33 +84,14 @@ def shingle_table(docs: DataFrame, id_col: str, text_col: str,
     return toked.select("i", sh.alias("sh"))
 
 
-def minhash_signatures(docs: DataFrame, id_col: str, text_col: str,
-                       n_hashes: int, shingle_k: int = 1,
-                       shingles: DataFrame | None = None) -> DataFrame:
-    """(i, h0..h{n-1}) minhash signature table via explode + groupBy
-    min-aggregates: whole-stage-codegen'd, map-side partial
-    aggregation, exactly one shuffle on the doc id — the scale path
-    (the inline higher-order-function variant re-evaluates the whole
-    tokenize→shingle tree once per hash per row).
-
-    ``shingles``: optional precomputed shingle_table(docs, ...) —
-    pass it (persisted) when the caller also needs the shingle sets."""
-    if shingles is None:
-        shingles = shingle_table(docs, id_col, text_col, shingle_k)
-    sh = shingles.select("i", F.explode("sh").alias("s"))
-    aggs = [F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"h{i}")
-            for i in range(n_hashes)]
-    return sh.groupBy("i").agg(*aggs)
-
-
 def lsh_candidates(docs: DataFrame, id_col: str, text_col: str,
                    n_bands: int, rows_per_band: int,
                    shingle_k: int = 1,
                    max_bucket_size: int | None = None,
-                   verbose: bool = False,
                    shingles: DataFrame | None = None,
                    salt_hot_buckets: bool = False) -> DataFrame:
-    """(a, b) candidate pairs sharing ≥1 minhash band bucket.
+    """(a, b) candidate pairs sharing ≥1 minhash band bucket: the
+    word-shingle table through linking.lsh_pairs.
 
     Shuffles: one groupBy(id) for signatures, one band-bucket self-join
     (bounded by bucket sizes, never all-pairs).
@@ -131,31 +100,14 @@ def lsh_candidates(docs: DataFrame, id_col: str, text_col: str,
     docs whose identical signatures put the whole corpus in one bucket,
     making the per-bucket self-join quadratic). Default None = exact
     LSH recall (oracle-parity configuration); production callers should
-    cap (linking.MAX_BUCKET_SIZE is the shared default)."""
-    n_hashes = n_bands * rows_per_band
-    sig = minhash_signatures(docs, id_col, text_col, n_hashes, shingle_k,
-                             shingles=shingles)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(F.concat_ws(
-                ",", *[F.col(f"h{b * rows_per_band + r}").cast("string")
-                       for r in range(rows_per_band)]), F.lit(b)).alias("bucket"),
-        )
-        for b in range(n_bands)
-    ]
-    bands = sig.select(
-        "i", F.explode(F.array(*band_cols)).alias("bb"),
-    ).select("i", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if max_bucket_size:
-        from ..linking import _cap_buckets
-        bands = _cap_buckets(bands, max_bucket_size, verbose,
-                             salt=salt_hot_buckets)
-    left = bands.select("band", "bucket", F.col("i").alias("a"))
-    right = bands.select("band", "bucket", F.col("i").alias("b"))
-    return (left.join(right, on=["band", "bucket"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b").distinct())
+    cap (linking.MAX_BUCKET_SIZE is the shared default).
+
+    ``shingles``: optional precomputed shingle_table(docs, ...) —
+    pass it (persisted) when the caller also needs the shingle sets."""
+    if shingles is None:
+        shingles = shingle_table(docs, id_col, text_col, shingle_k)
+    return lsh_pairs(shingles, n_bands, rows_per_band, max_bucket_size,
+                     salt=salt_hot_buckets)
 
 
 def prefix_filter_candidates(sh: DataFrame, threshold: float, *,
@@ -235,18 +187,12 @@ def prefix_filter_candidates(sh: DataFrame, threshold: float, *,
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float,
                         id_col: str = "doc_id", text_col: str = "text",
                         shingle_k: int = 1,
-                        n_bands: int = 24, rows_per_band: int = 1,
-                        shingles: DataFrame | None = None,
-                        candidates: str = "prefix", *,
+                        shingles: DataFrame | None = None, *,
                         scope: Scope) -> DataFrame:
     """Near-duplicate pairs by word-shingle Jaccard ≥ threshold —
-    EXACT (recall 1.0 vs a brute-force oracle).
-
-    ``candidates='prefix'`` (default): prefix-filter join — exact
-    candidate generation whose volume is bounded by token rarity, the
-    100-TB path. ``candidates='lsh'``: r=1 minhash banding
-    (1-(1-J)^bands recall ≈ 1 at 24 bands) — kept for comparison and
-    for callers that already have signatures.
+    EXACT (recall 1.0 vs a brute-force oracle): prefix-filter candidate
+    generation, whose volume is bounded by token rarity, then exact
+    verification.
 
     The shingle relation is derived once and persisted — it feeds both
     candidate generation and the exact-verify joins. Callers that share
@@ -267,26 +213,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float,
     # already accepts).
     sh = sh_str.select("i",
                        F.transform("sh", lambda s: F.xxhash64(s)).alias("sh"))
-    if candidates == "prefix":
-        # sizes + the length filter come out of the prefix join itself
-        cands = prefix_filter_candidates(sh, threshold, scope=scope)
-    else:
-        cands = lsh_candidates(docs, id_col, text_col, n_bands,
-                               rows_per_band, shingle_k, shingles=sh_str)
-        # EXACT-safe size prefilter BEFORE any array is shuffled:
-        # J(A,B) ≥ t requires |A∩B| ≥ t·|A∪B| and |A∩B| ≤ min(|A|,|B|),
-        # |A∪B| ≥ max(|A|,|B|) ⇒ min ≥ t·max. r=1 banding floods the
-        # candidate set with low-J pairs (anything sharing one minhash);
-        # pruning on two ints avoids carrying both shingle arrays through
-        # the join for pairs that cannot clear the threshold.
-        sizes = sh.select("i", F.size("sh").alias("sz"))
-        cands = (cands
-                 .join(sizes.select(F.col("i").alias("a"),
-                                    F.col("sz").alias("sza")), on="a")
-                 .join(sizes.select(F.col("i").alias("b"),
-                                    F.col("sz").alias("szb")), on="b")
-                 .filter(F.least("sza", "szb").cast("double")
-                         >= threshold * F.greatest("sza", "szb")))
+    # sizes + the length filter come out of the prefix join itself
+    cands = prefix_filter_candidates(sh, threshold, scope=scope)
     # Pin the verify stage's parallelism (r6, guide §2.5): the
     # candidate relation is a few MB of (a, b, sizes) ints, so AQE's
     # byte-based partition coalescing folded the whole array-intersect

@@ -26,55 +26,19 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def word_count(col: Column) -> Column:
-    return F.size(F.regexp_extract_all(col, F.lit(r"([A-Za-z0-9]+)"), 1))
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = F.transform(tokens(col), lambda t: F.lower(t))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return n_stop / F.greatest(F.size(toks), F.lit(1))
-
-
-def punct_ratio(col: Column) -> Column:
-    n_punct = F.size(F.regexp_extract_all(col, F.lit(r"([^A-Za-z0-9\s])"), 1))
-    return n_punct / F.greatest(F.length(col), F.lit(1))
-
-
-def mean_word_len(col: Column) -> Column:
-    words = F.regexp_extract_all(col, F.lit(r"([A-Za-z0-9]+)"), 1)
-    total = F.aggregate(words, F.lit(0), lambda acc, w: acc + F.length(w))
-    return total / F.greatest(F.size(words), F.lit(1))
-
-
-def quality_score(col: Column) -> Column:
-    """Deterministic [0,1] quality heuristic: long enough, not too
-    punctuation-heavy, reasonable word lengths, some stopwords."""
-    len_ok = F.least(F.length(col) / F.lit(200.0), F.lit(1.0))
-    punct_ok = F.lit(1.0) - F.least(punct_ratio(col) * 5, F.lit(1.0))
-    mwl = mean_word_len(col)
-    wl_ok = F.when((mwl >= 3) & (mwl <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
-    stop_ok = F.least(stopword_ratio(col) * 10, F.lit(1.0))
-    return (len_ok + punct_ok + wl_ok + stop_ok) / 4
-
-
-def doc_fingerprint(col: Column) -> Column:
-    """Order-independent content fingerprint: md5 over the sorted
-    distinct token set (bag fingerprint — near-dup resistant to
-    reordering)."""
-    toks = F.array_sort(F.array_distinct(
-        F.transform(tokens(col), lambda t: F.lower(t))))
-    return F.md5(F.array_join(toks, " "))
-
-
 def text_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-scan profile. PERF (r6): the tokenizer/word/punct regex
-    subtrees are bound to columns in their own projections — the
-    inline composition re-evaluated each regex up to 4x per row
-    (interpreted higher-order functions have no common-subexpression
-    elimination, and CollapseProject keeps multi-referenced non-cheap
-    aliases bound instead of inlining them). Results are expression-
-    identical to the old composition, just evaluated once."""
+    """One-scan profile: token and word counts, stopword and
+    punctuation ratios, mean word length, the [0,1] quality heuristic
+    (long enough, not too punctuation-heavy, reasonable word lengths,
+    some stopwords) and an order-independent fingerprint (md5 over the
+    sorted distinct lowercase token set).
+
+    PERF (r6): the tokenizer/word/punct regex subtrees are bound to
+    columns in their own projections — an inline composition
+    re-evaluates each regex up to 4x per row (interpreted higher-order
+    functions have no common-subexpression elimination, and
+    CollapseProject keeps multi-referenced non-cheap aliases bound
+    instead of inlining them)."""
     c = F.col(text_col)
     base = docs.select(
         "doc_id",

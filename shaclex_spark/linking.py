@@ -2,13 +2,14 @@
 
 North-star stage (BASELINE.json): MinHash-LSH blocking + Jaccard
 scoring + connected-components canonicalization. All native DataFrame
-ops — the MinHash signature is computed with higher-order array
-functions (transform/array_min over xxhash64), LSH banding via
-posexplode, verification by shingle-set Jaccard, and connected
-components by alternating large-star/small-star label propagation
-(the map-reduce CC algorithm of Kiveris et al., "Connected Components
-in MapReduce and Beyond" — public algorithm), a driver loop with
-localCheckpoint per round.
+ops — ``lsh_pairs`` is the package's one MinHash-LSH blocker (explode
++ groupBy-min signatures, hashed bands, hot-bucket cap, per-bucket
+self-join), shared with document dedup (functions/dedup.py);
+verification by shingle-set Jaccard, and connected components by
+alternating large-star/small-star label propagation (the map-reduce
+CC algorithm of Kiveris et al., "Connected Components in MapReduce
+and Beyond" — public algorithm), a driver loop with localCheckpoint
+per round.
 
 Determinism: canonical id = min member id per component (SURVEY.md
 §7.3 'canonical IRI assignment must be order-independent').
@@ -31,22 +32,14 @@ JACCARD_THRESHOLD = 0.55
 MAX_CC_ROUNDS = 30
 
 
-def _shingles(col, k: int = SHINGLE_K):
-    """Distinct character k-shingles of a padded string, as array<string>."""
+def _shingles(col):
+    """Distinct character SHINGLE_K-shingles of a padded string, as
+    array<string>."""
     padded = F.concat(F.lit("^"), col, F.lit("$"))
-    n = F.greatest(F.length(padded) - (k - 1), F.lit(1))
+    n = F.greatest(F.length(padded) - (SHINGLE_K - 1), F.lit(1))
     idx = F.sequence(F.lit(1), n)
-    return F.array_distinct(F.transform(idx, lambda i: padded.substr(i, F.lit(k))))
-
-
-def minhash_signature(col, n_hashes: int = N_HASHES):
-    """array<long> minhash signature over character shingles.
-    sig[i] = min_{s in shingles} xxhash64(s, i) — all JVM-side."""
-    sh = _shingles(col)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, i))),
-    )
+    return F.array_distinct(
+        F.transform(idx, lambda i: padded.substr(i, F.lit(SHINGLE_K))))
 
 
 MAX_BUCKET_SIZE = 2000  # hot-bucket cap: a degenerate bucket of size s
@@ -58,7 +51,7 @@ MAX_BUCKET_SIZE = 2000  # hot-bucket cap: a degenerate bucket of size s
 
 
 def _cap_buckets(bands: DataFrame, max_bucket_size: int | None,
-                 verbose: bool = False, salt: bool = False) -> DataFrame:
+                 salt: bool = False) -> DataFrame:
     """Bound the per-bucket self-join cost of (band, bucket) groups
     larger than the cap. Hot buckets are few by definition ⇒ the
     over-cap list (with sizes) is broadcast; the sizes aggregation is
@@ -84,13 +77,6 @@ def _cap_buckets(bands: DataFrame, max_bucket_size: int | None,
     id_col = next(c for c in bands.columns if c not in key)
     hot = (bands.groupBy(*key).agg(F.count("*").alias("__sz"))
            .filter(F.col("__sz") > max_bucket_size))
-    if verbose:
-        import logging
-        dropped = hot.agg(F.coalesce(F.sum("__sz"), F.lit(0)).alias("n")) \
-            .collect()[0]["n"]
-        logging.getLogger(__name__).warning(
-            "LSH hot-bucket cap %d: %s %d band-rows", max_bucket_size,
-            "salting" if salt else "dropping", dropped)
     if not salt:
         return bands.join(F.broadcast(hot.select(*key)), on=key,
                           how="left_anti")
@@ -106,43 +92,60 @@ def _cap_buckets(bands: DataFrame, max_bucket_size: int | None,
                          salted_bucket.alias("bucket"))
 
 
-def candidate_pairs(mentions: DataFrame, id_col: str = "mention",
-                    n_bands: int = N_BANDS,
-                    max_bucket_size: int | None = MAX_BUCKET_SIZE,
-                    verbose: bool = False,
-                    salt_hot_buckets: bool = False) -> DataFrame:
-    """LSH banding: mentions sharing any band bucket become candidate
-    pairs (a < b). Output: (a, b) distinct.
+def lsh_pairs(shingles: DataFrame, n_bands: int, rows_per_band: int,
+              max_bucket_size: int | None, salt: bool) -> DataFrame:
+    """The MinHash-LSH blocker: distinct (a, b), a < b, over the ids of
+    an (i, sh: array<string>) shingle relation whose signatures share
+    any band bucket.
 
-    Scale note: the band-bucket groupBy is the only shuffle; the pair
-    join is per-bucket, and ``max_bucket_size`` caps degenerate buckets
-    (e.g. many near-empty surface forms hashing to one band value)
-    whose s² self-join would otherwise re-introduce the quadratic
-    blow-up LSH exists to avoid."""
-    r = N_HASHES // n_bands
-    sig = mentions.select(
-        F.col(id_col).alias("m"),
-        minhash_signature(F.col(id_col)).alias("sig"),
-    )
+    Signatures: h[j] = min over sh of xxhash64(s, j), as explode +
+    groupBy min-aggregates — whole-stage-codegen'd, map-side partial
+    aggregation, one shuffle on the id (an inline higher-order-function
+    signature is interpreted, with no codegen and no common-
+    subexpression elimination). Band b's bucket is
+    xxhash64(concat_ws(',', its rows_per_band hashes), b).
+
+    Scale note: the band-bucket self-join is per bucket, never
+    all-pairs, and ``max_bucket_size`` caps degenerate buckets (e.g.
+    many near-empty strings hashing to one band value) whose s²
+    self-join would otherwise re-introduce the quadratic blow-up LSH
+    exists to avoid; ``salt`` splits them instead of dropping them
+    (see _cap_buckets)."""
+    n_hashes = n_bands * rows_per_band
+    sh = shingles.select("i", F.explode("sh").alias("s"))
+    sig = sh.groupBy("i").agg(*[
+        F.min(F.xxhash64(F.col("s"), F.lit(j))).alias(f"h{j}")
+        for j in range(n_hashes)])
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.concat_ws(
+                ",", *[F.col(f"h{b * rows_per_band + r}").cast("string")
+                       for r in range(rows_per_band)]), F.lit(b)).alias("bucket"),
+        )
+        for b in range(n_bands)
+    ]
     bands = sig.select(
-        "m",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.xxhash64(F.concat_ws(",", F.slice(F.col("sig"), b * r + 1, r)), b),
-            )
-        ).alias("band", "bucket"),
-    )
-    bands = _cap_buckets(bands, max_bucket_size, verbose,
-                         salt=salt_hot_buckets)
-    left = bands.select("band", "bucket", F.col("m").alias("a"))
-    right = bands.select("band", "bucket", F.col("m").alias("b"))
-    return (
-        left.join(right, on=["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+        "i", F.explode(F.array(*band_cols)).alias("bb"),
+    ).select("i", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    bands = _cap_buckets(bands, max_bucket_size, salt=salt)
+    left = bands.select("band", "bucket", F.col("i").alias("a"))
+    right = bands.select("band", "bucket", F.col("i").alias("b"))
+    return (left.join(right, on=["band", "bucket"])
+            .filter(F.col("a") < F.col("b"))
+            .select("a", "b").distinct())
+
+
+def candidate_pairs(mentions: DataFrame,
+                    max_bucket_size: int | None = MAX_BUCKET_SIZE,
+                    salt_hot_buckets: bool = False) -> DataFrame:
+    """(a, b) candidate pairs of a one-column (mention) relation: the
+    character-shingle sets through lsh_pairs at N_BANDS bands of
+    N_HASHES / N_BANDS rows."""
+    sh = mentions.select(F.col("mention").alias("i"),
+                         _shingles(F.col("mention")).alias("sh"))
+    return lsh_pairs(sh, N_BANDS, N_HASHES // N_BANDS, max_bucket_size,
+                     salt=salt_hot_buckets)
 
 
 def jaccard_verify(pairs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
@@ -301,9 +304,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
     return (labels, rounds) if return_rounds else labels
 
 
-def _driver_link(mentions: list[str], threshold: float,
-                 n_hashes: int = N_HASHES, n_bands: int = N_BANDS,
-                 k: int = SHINGLE_K) -> list[tuple]:
+def _driver_link(mentions: list[str]) -> list[tuple]:
     """Driver-side mirror of candidate_pairs→jaccard_verify→CC for a
     small mention vocabulary: vectorized minhash (one crc32 base hash
     per DISTINCT shingle + an affine uint64 hash family applied as one
@@ -319,10 +320,11 @@ def _driver_link(mentions: list[str], threshold: float,
 
     def shingles(m: str) -> frozenset:
         p = "^" + m + "$"
-        return frozenset(p[i:i + k] for i in range(max(len(p) - k + 1, 1)))
+        return frozenset(p[i:i + SHINGLE_K]
+                         for i in range(max(len(p) - SHINGLE_K + 1, 1)))
 
     sh = {m: shingles(m) for m in mentions}
-    r = n_hashes // n_bands
+    r = N_HASHES // N_BANDS
     # shingle vocabulary: hash each distinct shingle ONCE
     vocab: dict[str, int] = {}
     flat: list[int] = []      # shingle ids, grouped by mention
@@ -336,22 +338,22 @@ def _driver_link(mentions: list[str], threshold: float,
     # constant — multiply-shift universal hashing); parameters derived
     # from md5 so the family is process-independent
     A = np.array([int.from_bytes(hashlib.md5(b"A%d" % j).digest()[:8],
-                                 "big") | 1 for j in range(n_hashes)],
+                                 "big") | 1 for j in range(N_HASHES)],
                  dtype=np.uint64)
     Bc = np.array([int.from_bytes(hashlib.md5(b"B%d" % j).digest()[:8],
-                                  "big") for j in range(n_hashes)],
+                                  "big") for j in range(N_HASHES)],
                   dtype=np.uint64)
     with np.errstate(over="ignore"):
         hf = base[np.array(flat, dtype=np.int64)]      # (instances,)
         offs = np.array(offsets[:-1], dtype=np.int64)
-        sigs = np.empty((len(mentions), n_hashes), dtype=np.uint64)
-        for j in range(n_hashes):
+        sigs = np.empty((len(mentions), N_HASHES), dtype=np.uint64)
+        for j in range(N_HASHES):
             sigs[:, j] = np.minimum.reduceat(hf * A[j] + Bc[j], offs) \
                 if len(hf) else np.empty(0, dtype=np.uint64)
     buckets: dict[tuple, list] = {}
     for i, m in enumerate(mentions):
         row = sigs[i]
-        for b in range(n_bands):
+        for b in range(N_BANDS):
             key = (b, row[b * r:(b + 1) * r].tobytes())
             buckets.setdefault(key, []).append(m)
     edges = []
@@ -367,29 +369,24 @@ def _driver_link(mentions: list[str], threshold: float,
                 seen.add((a, b))
                 inter = len(sh[a] & sh[b])
                 union = len(sh[a] | sh[b])
-                if union and inter / union >= threshold:
+                if union and inter / union >= JACCARD_THRESHOLD:
                     edges.append((a, b))
     return _driver_union_find(edges, mentions)
 
 
-def extract_mentions(triples: DataFrame,
-                     mention_prefix: str = MENTION_PREFIX) -> DataFrame:
+def extract_mentions(triples: DataFrame) -> DataFrame:
     """Distinct mention strings (prefix stripped) in subj or iri-obj
     position — the linking dimension. One scan + one distinct shuffle."""
-    mlen = len(mention_prefix)
-    subj_m = triples.filter(F.col("subj").startswith(mention_prefix)) \
+    mlen = len(MENTION_PREFIX)
+    subj_m = triples.filter(F.col("subj").startswith(MENTION_PREFIX)) \
         .select(F.col("subj").substr(F.lit(mlen + 1), F.lit(10_000)).alias("mention"))
     obj_m = triples.filter((F.col("obj_kind") == "iri")
-                           & F.col("obj_value").startswith(mention_prefix)) \
+                           & F.col("obj_value").startswith(MENTION_PREFIX)) \
         .select(F.col("obj_value").substr(F.lit(mlen + 1), F.lit(10_000)).alias("mention"))
     return subj_m.unionByName(obj_m).distinct()
 
 
-def link_mentions(mentions: DataFrame,
-                  mention_prefix: str = MENTION_PREFIX,
-                  entity_prefix: str = ENTITY_PREFIX,
-                  threshold: float = JACCARD_THRESHOLD
-                  ) -> tuple[DataFrame, list | None]:
+def link_mentions(mentions: DataFrame) -> tuple[DataFrame, list | None]:
     """Link a one-column (mention) relation into a canonical mapping
     (mention_iri, canonical_iri). Returns (mapping, small_pairs) where
     small_pairs is the driver-sized pair list when the vocabulary is
@@ -423,8 +420,8 @@ def link_mentions(mentions: DataFrame,
         # geometry). One collect instead of ~7 eager Spark barriers,
         # each of which lands in Amdahl's serial term on a local run.
         rows = head.tolist()
-        comp_rows = _driver_link(rows, threshold)
-        pairs_list = [(mention_prefix + n, entity_prefix + c)
+        comp_rows = _driver_link(rows)
+        pairs_list = [(MENTION_PREFIX + n, ENTITY_PREFIX + c)
                       for n, c in comp_rows]
         mapping = spark.createDataFrame(
             pairs_list, "mention_iri string, canonical_iri string")
@@ -441,15 +438,15 @@ def link_mentions(mentions: DataFrame,
         big = mentions.coalesce(n_parts) \
             if n_parts < mentions.rdd.getNumPartitions() else mentions
         pairs = candidate_pairs(big)
-        edges = jaccard_verify(pairs, threshold)
+        edges = jaccard_verify(pairs)
         comps = connected_components(edges, big.select(F.col("mention")))
         # persist: the mapping is read twice by the rewrite joins; the
         # cache prevents re-running CC. Materialize it NOW so the
         # mention cache can be released (CC is already checkpointed;
         # only the final label join still reads the mention relation).
         mapping = comps.select(
-            F.concat(F.lit(mention_prefix), F.col("node")).alias("mention_iri"),
-            F.concat(F.lit(entity_prefix), F.col("comp")).alias("canonical_iri"),
+            F.concat(F.lit(MENTION_PREFIX), F.col("node")).alias("mention_iri"),
+            F.concat(F.lit(ENTITY_PREFIX), F.col("comp")).alias("canonical_iri"),
         ).persist()
         mapping.count()
         mentions.unpersist()
@@ -511,10 +508,8 @@ def apply_mapping(triples: DataFrame, mapping: DataFrame,
 
 
 def canonicalize_triples(triples: DataFrame,
-                         mentions: DataFrame | None = None,
-                         mention_prefix: str = MENTION_PREFIX,
-                         entity_prefix: str = ENTITY_PREFIX,
-                         threshold: float = JACCARD_THRESHOLD) -> tuple[DataFrame, DataFrame]:
+                         mentions: DataFrame | None = None
+                         ) -> tuple[DataFrame, DataFrame]:
     """Rewrite mention IRIs in subj/obj to canonical entity IRIs.
 
     Returns (canonical_triples, mapping) where mapping =
@@ -530,7 +525,6 @@ def canonicalize_triples(triples: DataFrame,
     batch resume's stored clean-bucket mentions plus the new ones), so
     an entity is named as it would be over all of the input."""
     if mentions is None:
-        mentions = extract_mentions(triples, mention_prefix)
-    mapping, small_pairs = link_mentions(mentions, mention_prefix,
-                                         entity_prefix, threshold)
+        mentions = extract_mentions(triples)
+    mapping, small_pairs = link_mentions(mentions)
     return apply_mapping(triples, mapping, small_pairs), mapping

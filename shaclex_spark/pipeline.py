@@ -84,8 +84,11 @@ def validate_kg(spark: SparkSession, triples: DataFrame,
     report evaluates the constraints once; without one the relation
     stays lazy, and a conformance-only read computes no violation."""
     schema = SchemaDict.from_json(shapes_json or DEFAULT_SHAPES)
+    # the provenance rows repeat a triple once per turn that states it;
+    # the graph is the set of triples, so a count constraint counts
+    # each (s, p, o) once, as a complex path already does
     plain = triples.select("subj", "pred", "obj_kind", "obj_value",
-                           "obj_dt", "obj_lang")
+                           "obj_dt", "obj_lang").distinct()
     engine = ValidationEngine(spark, schema, plain, scope=scope)
     focus = shape_map_focus(spark, plain, shape_map) if shape_map else None
     if focus_filter is not None:

@@ -455,10 +455,9 @@ def _scorecard_oracle_sql() -> str:
     the manifest / skip list does, not be a hand-committed constant).
     Expected: every non-skipped entry is attempted AND correct —
     wrong/error pinned to 0 is precisely the gate."""
-    from .shex_suite import _skip_strategy_conflicts, load_manifest
+    from .shex_suite import load_manifest
 
-    entries = load_manifest()
-    _skip_strategy_conflicts(entries)
+    entries = load_manifest()  # strategy conflicts already skipped
     n_skip = sum(1 for e in entries if e.skip)
     n_attempted = len(entries) - n_skip
     return f"""

@@ -224,14 +224,13 @@ def validate_streaming_incremental(spark: SparkSession, output_dir: str,
             drift = relinked(prior_map, mapping)
         conf_df, report_df, n_affected = revalidate(
             spark, canonical, shapes_json, prior, dirty, drift, scope)
-        conf_df = conf_df.localCheckpoint(eager=True)
-        report_df = report_df.localCheckpoint(eager=True)
         conf_df.write.mode("overwrite").parquet(conf_path)
         report_df.write.mode("overwrite").parquet(rep_path)
         mapping.write.mode("overwrite").parquet(map_path)
         canonical.select("batch_id").distinct().write.mode("overwrite") \
             .parquet(bat_path)
-    return {"conformance": conf_df, "report": report_df,
+    return {"conformance": spark.read.parquet(conf_path),
+            "report": spark.read.parquet(rep_path),
             "mode": "full" if n_affected is None else "incremental",
             "n_affected": n_affected}
 

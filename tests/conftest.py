@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -45,3 +46,12 @@ def focus_df(spark, rows):
         [(n, s, "node") for n, s in rows],
         "node string, shape string, selector string",
     )
+
+
+def pair_digest(pairs) -> tuple[int, str]:
+    """(count, sha256) of an (a, b) pair relation's sorted rows, each
+    written ``a<TAB>b`` and joined by newlines: pins a pair set exactly
+    in one short literal."""
+    rows = sorted((str(r["a"]), str(r["b"])) for r in pairs.collect())
+    text = "\n".join(f"{a}\t{b}" for a, b in rows)
+    return len(rows), hashlib.sha256(text.encode()).hexdigest()

@@ -116,3 +116,29 @@ def test_validated_relation_is_sized_to_the_cores(spark, scope):
     assert res.relation.rdd.getNumPartitions() \
         <= spark.sparkContext.defaultParallelism
     assert res.conformance.count() > 0
+
+
+def test_validate_kg_counts_each_triple_once(spark):
+    """The provenance rows state cs100's subject "Algorithms" twice.
+    With maxCount 6, its number of distinct values, the verdict over the
+    predicate must equal the verdict over the path p|p, which counts
+    distinct values."""
+    from shaclex_spark.model import EX
+    from shaclex_spark.pipeline import build_kg
+
+    t, _ = synth_transcripts(spark, 60, seed=1)
+    triples, _ = build_kg(spark, t)
+    cs100 = EX + "course/cs100"
+    subj = EX + "hasSubject"
+
+    def conforms(path) -> bool:
+        shapes = [{"label": "S",
+                   "targets": [{"kind": "targetNode", "value": cs100}],
+                   "constraints": [{"path": path, "maxCount": 6}]}]
+        rows = validate_kg(spark, triples, shapes).conformance.collect()
+        assert len(rows) == 1
+        return rows[0]["conforms"]
+
+    assert conforms(subj) is conforms(
+        {"kind": "alternative", "steps": [subj, subj]}) is True
+    triples.unpersist()

@@ -16,13 +16,14 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from shaclex_spark.model import RDF_TYPE, XSD_STRING
 from shaclex_spark.shapes import SchemaDict
 from shaclex_spark.validation import ValidationEngine
 
-from conftest import focus_df, triples_df
+from conftest import focus_df, pair_digest, triples_df
 
 EX = "http://example.org/"
 LANGSTR = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -232,6 +233,36 @@ def test_lsh_hot_bucket_cap_degenerate_corpus(spark):
     assert uncapped.count() == 10  # C(5,2)
 
 
+# Expected (count, sha256) pairs were taken from lsh_candidates as it
+# stood before the linking and dedup blockers became one (lsh_pairs).
+@pytest.mark.parametrize("kw, want", [
+    ({"max_bucket_size": 50},
+     (655, "3f3a119e3e5db4ab1e7f41efc458cd65"
+           "154f89dbda797067353cf7f4c99bbda8")),
+    ({"max_bucket_size": None},
+     (3815, "e7dd726765eed470b755bb7d8f06c166"
+            "14bf3717848985173697a75a1729aec3")),
+    ({"max_bucket_size": 50, "salt_hot_buckets": True},
+     (3601, "f76532b773fd55019df8299ad6b9f347"
+            "7d9fcd2c81c4c39faca1cefe48d9edd9")),
+], ids=["cap50-drop", "uncapped", "cap50-salt"])
+def test_lsh_candidates_pinned(spark, kw, want):
+    """80 identical boilerplate docs (one hot bucket per band) and 40
+    rotations of an 8-word vocabulary, half with an extra token."""
+    from shaclex_spark.functions.dedup import lsh_candidates
+
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
+             "golf", "hotel"]
+    docs = spark.createDataFrame(
+        [(i, "the same boilerplate text") for i in range(80)]
+        + [(100 + i, " ".join(words[(i + j) % 8] for j in range(6))
+            + (" x" if i % 2 else "")) for i in range(40)],
+        "doc_id long, text string")
+    got = lsh_candidates(docs, "doc_id", "text", n_bands=4, rows_per_band=2,
+                         **kw)
+    assert pair_digest(got) == want
+
+
 def test_cap_buckets_drops_only_hot(spark):
     from shaclex_spark.linking import _cap_buckets
 
@@ -282,7 +313,7 @@ def test_unknown_status_on_recursive_cycle(spark):
     }]
     from shaclex_spark.shapes import SchemaDict
     from shaclex_spark.validation import ValidationEngine
-    from conftest import focus_df, triples_df
+    from conftest import focus_df, pair_digest, triples_df
 
     t = triples_df(spark, rows)
     engine = ValidationEngine(spark, SchemaDict.from_json(shapes), t)

@@ -15,9 +15,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from shaclex_spark.validation import node_key_col
+
+from conftest import pair_digest
 
 
 def _keys(spark, rows):
@@ -126,3 +129,43 @@ def test_salted_buckets_bound_pair_cost(spark):
     salted = candidate_pairs(mentions, max_bucket_size=8,
                              salt_hot_buckets=True).count()
     assert salted < uncapped
+
+
+_NAMES = ["Alice Smith", "Alice Smith.", "alice smith", "Alice Smyth",
+          "Bob Jones", "Bob  Jones", "Robert Jones", "Carol White",
+          "Carol Whyte", "Dan Brown", "Daniel Brown", "Eve Black",
+          "Eve Blacke", "Frank Green", "Grace Hopper", "G. Hopper"]
+
+
+# Expected (count, sha256) pairs were taken from candidate_pairs as it
+# stood before the linking and dedup blockers became one (lsh_pairs):
+# the merged blocker must give the same pairs under every cap setting.
+@pytest.mark.parametrize("names, kw, want", [
+    ((), {}, (1770, "5924a98cdd3195e19f6f4a945620dd59"
+                    "ece9733ac88717b6f7801177517ed5ba")),
+    ((), {"max_bucket_size": None},
+     (1770, "5924a98cdd3195e19f6f4a945620dd59"
+            "ece9733ac88717b6f7801177517ed5ba")),
+    ((), {"max_bucket_size": 8},
+     (0, "e3b0c44298fc1c149afbf4c8996fb924"
+         "27ae41e4649b934ca495991b7852b855")),
+    ((), {"max_bucket_size": 8, "salt_hot_buckets": True},
+     (1355, "1c0dc3133fc5cb3729f3c34b4481db3d"
+            "a03d3eff62173783204e92d2c4c84167")),
+    (_NAMES, {}, (1782, "1fb4a223f8586b1cdb05c84144afba0b"
+                        "3f605902c41c2da3a87b47e00dcb164f")),
+    (_NAMES, {"max_bucket_size": 8},
+     (12, "35f10418af6c72b7844b3417887d99d5"
+          "691458769ad7aeadf9b69e2aba35dd21")),
+    (_NAMES, {"max_bucket_size": 8, "salt_hot_buckets": True},
+     (1367, "ac73271aa85b8d335484e7eb8c835e84"
+            "df5bfd2cc4a1645e3f19d5363ca19b3c")),
+], ids=["cap-default", "uncapped", "cap8-drop", "cap8-salt",
+        "names-cap-default", "names-cap8-drop", "names-cap8-salt"])
+def test_candidate_pairs_pinned(spark, names, kw, want):
+    from shaclex_spark.linking import candidate_pairs
+
+    base = "shared boilerplate sentence that dominates the shingles "
+    rows = [(base + f"{i:03d}",) for i in range(60)] + [(n,) for n in names]
+    mentions = spark.createDataFrame(rows, "mention string")
+    assert pair_digest(candidate_pairs(mentions, **kw)) == want
