@@ -313,7 +313,7 @@ def test_unknown_status_on_recursive_cycle(spark):
     }]
     from shaclex_spark.shapes import SchemaDict
     from shaclex_spark.validation import ValidationEngine
-    from conftest import focus_df, pair_digest, triples_df
+    from conftest import focus_df, triples_df
 
     t = triples_df(spark, rows)
     engine = ValidationEngine(spark, SchemaDict.from_json(shapes), t)
